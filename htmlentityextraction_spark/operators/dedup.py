@@ -154,6 +154,11 @@ def minhash_lsh_pairs(
     band join is the only shuffle that grows with corpus size; its
     keys are sketch hashes, so it spreads evenly (no skew from
     popular text).
+
+    Eager: the signature frame is materialized with ``localCheckpoint``
+    when this function is CALLED, not when the result is consumed — so
+    building the returned DataFrame already runs the signature jobs,
+    and a caller that composes but never acts on it still pays them.
     """
     rows_per_band = num_hashes // bands
     # localCheckpoint, NOT cache(): both are one materialization within

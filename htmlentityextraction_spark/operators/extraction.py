@@ -18,24 +18,27 @@ at `:22-27`:
 
 Spark-first shape: positional regex over large strings is the one
 place built-ins genuinely can't express the semantics
-(``regexp_extract_all`` drops positions), so this is an Arrow-batched
-pandas UDF returning ARRAY<STRUCT>, exploded afterwards (SURVEY.md §7
-M3 — sanctioned UDF island #1). At 100 TB: shrink/normalize the html
-columnar-side FIRST (`functions.text.shrink_string`) exactly as the
-reference does, so the Python boundary crosses the smallest possible
-bytes; the UDF is a narrow map — no shuffle, scales linearly with
-input splits.
+(``regexp_extract_all`` drops positions), so this is ONE flat
+``mapInArrow`` over (url, html, page_length) that emits the six
+candidate columns directly (SURVEY.md §7 M3 — sanctioned UDF island
+#1): no nested ARRAY<STRUCT> result to ``explode`` back into rows.
+At 100 TB: the html is shrunk/normalized columnar-side FIRST
+(`functions.text.shrink_string`) exactly as the reference does, so the
+Python boundary crosses the smallest possible bytes; the map is narrow
+— no shuffle, scales linearly with input splits.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from htmlentityextraction_spark.schemas import PRICE_CANDIDATE_SCHEMA
 
 NUM_PATTERN = re.compile(r"([0-9,.]*[0-9])(?:[^0-9,.])")
 # r5's hot-path scan: NUM_PATTERN + the "must contain . or ," rejection
@@ -79,21 +82,13 @@ PRICE_TEXT = re.compile("price|Price|PRICE")
 # one scan instead of two: the snippet gate is a plain boolean OR
 CURRENCY_OR_PRICE = re.compile(CURRENCY.pattern + "|price|Price|PRICE")
 
-CANDIDATE_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("candidate", T.StringType()),
-            T.StructField("location", T.IntegerType()),
-            T.StructField("text_before", T.StringType()),
-            T.StructField("text_after", T.StringType()),
-        ]
-    )
-)
+# Arrow twin of PRICE_CANDIDATE_SCHEMA: the mapInArrow output batches
+_ARROW_CANDIDATES = to_arrow_schema(PRICE_CANDIDATE_SCHEMA)
 
 
 def extract_candidates_py(html: str, snippet_size: int = 150) -> list[dict]:
-    """Plain-Python reference implementation (used by the UDF per cell
-    and unit-testable without Spark)."""
+    """Plain-Python reference implementation (called per page by
+    ``extract_candidates`` and unit-testable without Spark)."""
     if html is None:
         return []
     out = []
@@ -133,15 +128,23 @@ def extract_candidates_py(html: str, snippet_size: int = 150) -> list[dict]:
     return out
 
 
-def candidates_udf(snippet_size: int = 150):
-    """Arrow-batched UDF: html → ARRAY<STRUCT<candidate,location,
-    text_before,text_after>>."""
-
-    @pandas_udf(CANDIDATE_TYPE)
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(lambda h: extract_candidates_py(h, snippet_size))
-
-    return _extract
+def _candidate_batches(
+    batches: Iterator[pa.RecordBatch], snippet_size: int
+) -> Iterator[pa.RecordBatch]:
+    """(url, __html, page_length) page batches → flat candidate
+    batches: one output row per surviving candidate, none for a null,
+    empty or candidate-free page."""
+    for batch in batches:
+        url, cand, loc, before, after, length = cols = [[] for _ in _ARROW_CANDIDATES]
+        for u, html, n in zip(*(c.to_pylist() for c in batch.columns)):
+            for c in extract_candidates_py(html, snippet_size):
+                url.append(u)
+                cand.append(c["candidate"])
+                loc.append(c["location"])
+                before.append(c["text_before"])
+                after.append(c["text_after"])
+                length.append(n)
+        yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_CANDIDATES)
 
 
 def extract_candidates(
@@ -149,32 +152,31 @@ def extract_candidates(
     html_col: str = "html",
     url_col: str = "url",
     snippet_size: int = 150,
-    shrink: bool = True,
 ) -> DataFrame:
-    """Page rows → candidate rows (url, candidate, location,
-    text_before, text_after, page_length). ``shrink`` pre-normalizes
-    the html columnar-side (JVM) before the Python boundary, as
-    `utils/Utils.scala:131-145` (``htmlsToCandidsPipe``) does."""
+    """Page rows → candidate rows (PRICE_CANDIDATE_SCHEMA: url,
+    candidate, location, text_before, text_after, page_length). The
+    html is pre-normalized columnar-side (JVM) before the Python
+    boundary, as `utils/Utils.scala:131-145` (``htmlsToCandidsPipe``)
+    does."""
     from htmlentityextraction_spark.functions.text import shrink_string
 
-    html = shrink_string(F.col(html_col)) if shrink else F.col(html_col)
+    html = shrink_string(F.col(html_col))
     pages = df.select(
         F.col(url_col).alias("url"),
         html.alias("__html"),
     ).withColumn("page_length", F.length("__html"))
-    exploded = pages.select(
-        "url",
-        "page_length",
-        F.explode(candidates_udf(snippet_size)(F.col("__html"))).alias("c"),
+    return pages.mapInArrow(
+        lambda batches: _candidate_batches(batches, snippet_size),
+        PRICE_CANDIDATE_SCHEMA,
     )
-    return exploded.select(
-        "url",
-        F.col("c.candidate").alias("candidate"),
-        F.col("c.location").alias("location"),
-        F.col("c.text_before").alias("text_before"),
-        F.col("c.text_after").alias("text_after"),
-        "page_length",
-    )
+
+
+def norm_location() -> Column:
+    """Candidate offset normalized by its page length
+    (`data/DataSchema.scala:6-8`); an empty page divides by 1."""
+    return F.col("location").cast("double") / F.greatest(
+        F.col("page_length"), F.lit(1)
+    ).cast("double")
 
 
 def parse_price(c: Column) -> Column:
@@ -198,7 +200,4 @@ def label_candidates(
         (num.isNotNull()
          & (num == F.col(price_col))
          & (num == F.col("updated_price"))).cast("boolean"),
-    ).withColumn(
-        "norm_location",
-        F.col("location").cast("double") / F.greatest(F.col("page_length"), F.lit(1)).cast("double"),
-    )
+    ).withColumn("norm_location", norm_location())

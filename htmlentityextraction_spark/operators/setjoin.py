@@ -40,6 +40,8 @@ case, same contract as ``dedup.ngram_jaccard_pairs``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -120,8 +122,6 @@ def prefix_jaccard_pairs(
         # whenever the screen cannot rule a hot block out, so the
         # error contract is unchanged. Kill switch:
         # SPARK_GRAFT_SETSIM_GUARD=exact.
-        import os
-
         mx = None
         if os.environ.get("SPARK_GRAFT_SETSIM_GUARD", "screen") != "exact":
             mx = dfreq.agg(F.max("df").alias("mx")).collect()[0]["mx"]

@@ -58,36 +58,16 @@ HISTORICAL_PRICE_SCHEMA = T.StructType(
 )
 
 
-def parse_page_messages(
-    raw: DataFrame, json_col: str = "value", fields: list[str] | None = None
-) -> DataFrame:
+def parse_page_messages(raw: DataFrame, json_col: str = "value") -> DataFrame:
     """Kafka-boundary parse: bytes/string JSON → typed columns +
     `is_corrupt` flag (the reference's try/catch-null-filter,
     `emr/SeedsDistinctS3ToKafka.scala:50-59`, made explicit). Corrupt
     rows keep their payload for the error side output instead of
-    vanishing.
-
-    ``fields``: optional subset of PAGE_MESSAGE_SCHEMA field names to
-    parse — a consumer that reads 3 of the 15 fields hands
-    ``from_json`` a pruned schema so Jackson skips materializing
-    (and, for timestamps, string-parsing) the rest. Corruption
-    semantics NARROW with the subset: malformed JSON documents are
-    still flagged regardless, but a type-corrupt VALUE inside an
-    excluded field (e.g. a non-timestamp string in a pruned timestamp
-    column) is no longer parsed and therefore no longer marks the row
-    corrupt — callers who route on field-level corruption must parse
-    those fields. (One reason the serve path keeps the full schema by
-    default; the other is that pruning measured as a non-win,
-    THROUGHPUT.md round 9.)"""
+    vanishing."""
     # PERMISSIVE from_json yields an all-null struct for bad input, so
     # corruption is detected via the dedicated corrupt-record column
-    keep = (
-        PAGE_MESSAGE_SCHEMA.fields
-        if fields is None
-        else [f for f in PAGE_MESSAGE_SCHEMA.fields if f.name in set(fields)]
-    )
     schema_with_corrupt = T.StructType(
-        keep + [T.StructField("_corrupt_record", T.StringType())]
+        PAGE_MESSAGE_SCHEMA.fields + [T.StructField("_corrupt_record", T.StringType())]
     )
     parsed = raw.withColumn(
         "__m",
@@ -98,7 +78,7 @@ def parse_page_messages(
         ),
     )
     return parsed.select(
-        *[F.col(f"__m.{f.name}") for f in keep],
+        *[F.col(f"__m.{f.name}") for f in PAGE_MESSAGE_SCHEMA.fields],
         F.col(json_col).cast("string").alias("raw_payload"),
         F.col("__m._corrupt_record").isNotNull().alias("is_corrupt"),
     )

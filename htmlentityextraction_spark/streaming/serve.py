@@ -43,11 +43,11 @@ def score_pages_batch(pages: DataFrame, registry_rows: list) -> DataFrame:
     # (url, domain) to the driver EVERY micro-batch to build the
     # broadcast — measured 0.79 s vs 0.45 s per batch here, and a
     # driver-memory hazard at real batch sizes.
-    cand = cand.withColumn("domain", get_domain(F.col("url"))).withColumn(
-        "norm_location",
-        F.col("location").cast("double")
-        / F.greatest(F.col("page_length"), F.lit(1)).cast("double"),
-    ).withColumn("label", F.lit(0))
+    cand = (
+        cand.withColumn("domain", get_domain(F.col("url")))
+        .withColumn("norm_location", ex.norm_location())
+        .withColumn("label", F.lit(0))
+    )
     feats = md.featurize_candidates(cand)
     scored = md.score_candidates(feats, registry_rows)
     picked = md.pick_model_price(scored)
@@ -67,24 +67,11 @@ def score_pages_batch(pages: DataFrame, registry_rows: list) -> DataFrame:
     )
 
 
-#: the only PAGE_MESSAGE fields the serve pipeline reads — url (join
-#: key + domain), html (extraction), updatedPrice (status/final
-#: price). A pruned from_json schema over these was MEASURED against
-#: the full 15-field parse (tools/serve_throughput.py --ab-full-parse,
-#: THROUGHPUT.md round 9) and LOST: −5% on the text fixture, noise on
-#: tiny/digit — Jackson still scans the whole document and html
-#: dominates the bytes, so skipping the 12 small fields moves nothing.
-#: Kept as an opt-in knob; the default stays the full typed schema.
-SERVE_PARSE_FIELDS = ["url", "html", "updatedPrice"]
-
-
 def serve_stream(
     spark: SparkSession,
     raw_stream: DataFrame,
     registry: DataFrame | list,
     out_dir: str,
-    parse_fields: list | None = None,
-    sink_files: int | str | None = None,
 ) -> StreamingQueryHolder:
     """Run the serve path over a stream of raw JSON page messages,
     fanning out to historical/ (all), realtime/ (passing), logs/
@@ -92,38 +79,12 @@ def serve_stream(
     messages (payload preserved — the reference's error topic routing,
     `utils/Utils.scala:442-460`, not a silent drop).
 
-    ``parse_fields``: optional field subset handed to the boundary
-    ``from_json`` (e.g. ``SERVE_PARSE_FIELDS``); default parses the
-    full PAGE_MESSAGE_SCHEMA — the measured A/B showed pruning is not
-    a win on this path (see SERVE_PARSE_FIELDS note).
-
-    ``sink_files``: optional cap on part files for the FILTERED
-    sinks (realtime/logs) — each trigger otherwise commits
-    source-parallelism files per sink. The coalesce applies only
-    AFTER the historical write has materialized the cached result at
-    full parallelism, so the compute pipeline never narrows;
-    historical (the bulk sink) keeps source parallelism. Pass
-    ``"auto"`` for max(4, parallelism // 8). DEFAULT OFF: the
-    order-controlled ABBA A/B (THROUGHPUT.md round 10) measured a
-    tie on local fs — the naive A/B's apparent −12–19% was run-order
-    confound — so on THIS box the lever does not clear the landing
-    bar. It remains the right knob on an object store, where each of
-    the 96-per-trigger file commits is a round-trip PUT; enable it
-    there."""
+    Every sink writes one file per partition of the micro-batch, and
+    the boundary ``from_json`` parses the full PAGE_MESSAGE_SCHEMA:
+    a coalesce of the filtered sinks and a pruned 3-field parse both
+    measured as ties on this path (THROUGHPUT.md rounds 9-10)."""
     registry_rows = registry.collect() if isinstance(registry, DataFrame) else list(registry)
-
     want_parallelism = spark.sparkContext.defaultParallelism
-    if sink_files == "auto":
-        sink_files = max(4, want_parallelism // 8)
-    # Fail at call time, not inside the first trigger's foreachBatch:
-    # a stray string ("8") or non-positive count would otherwise
-    # surface as an opaque streaming-query failure.
-    if sink_files is not None and (
-        not isinstance(sink_files, int) or isinstance(sink_files, bool) or sink_files < 1
-    ):
-        raise ValueError(
-            f"sink_files must be None, a positive int, or 'auto'; got {sink_files!r}"
-        )
 
     def batch_fn(batch: DataFrame, batch_id: int) -> None:
         # A micro-batch inherits the SOURCE's partitioning (Kafka topic
@@ -137,7 +98,7 @@ def serve_stream(
         # provision topic partitions >= fleet cores and this is free).
         if batch.rdd.getNumPartitions() < want_parallelism:
             batch = batch.repartition(want_parallelism)
-        parsed = schemas.parse_page_messages(batch, fields=parse_fields)
+        parsed = schemas.parse_page_messages(batch)
         # the corrupt side output reads raw_payload only for corrupt
         # rows, yet the cache below would otherwise materialize the
         # FULL json payload (html-dominated — roughly the size of all
@@ -164,15 +125,10 @@ def serve_stream(
                 "raw_payload", F.lit("corruptMessage").alias("status")
             ).write.mode("append").parquet(os.path.join(out_dir, "logs_corrupt"))
             result.write.mode("append").parquet(os.path.join(out_dir, "historical"))
-            # the historical write above materialized the cache at
-            # full parallelism; the filtered sinks now read hot cache,
-            # so a coalesce here caps their file commits without
-            # narrowing any compute
-            routed = result.coalesce(sink_files) if sink_files else result
-            routed.filter(F.col("status").isin(*PASSING)).write.mode("append").parquet(
+            result.filter(F.col("status").isin(*PASSING)).write.mode("append").parquet(
                 os.path.join(out_dir, "realtime")
             )
-            routed.filter(~F.col("status").isin(*PASSING)).write.mode("append").parquet(
+            result.filter(~F.col("status").isin(*PASSING)).write.mode("append").parquet(
                 os.path.join(out_dir, "logs")
             )
         finally:

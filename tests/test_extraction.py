@@ -5,9 +5,23 @@ the reference's effective correctness oracle is `PriceParcer.test` —
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.functions.text import shrink_string
 from htmlentityextraction_spark.operators import extraction as ex
+
+# page text biased toward the tricky cases: digit runs, separators,
+# currency marks, the price words, and boundary junk
+PAGE_TEXTS = st.lists(
+    st.sampled_from(
+        ["0", "1", "23", "9", ".", ",", "..", ",.", "$", "€", "price",
+         "Price", "PRICE", " ", "x", "<b>", "\n", "¥"]
+    ),
+    min_size=0,
+    max_size=40,
+).map("".join)
 
 
 # --- plain-python semantics (no Spark needed) ---
@@ -73,6 +87,40 @@ def test_extract_candidates_dataframe(spark):
     assert r.page_length == len("see price 710.00 now")
 
 
+def test_spark_extraction_matches_python_reference(spark):
+    # the grouped-map equivalence pattern: the Spark operator and the
+    # per-page reference run over the same pages and must agree row for
+    # row. None, empty and candidate-free pages yield no rows; batches
+    # of 3 records split the corpus mid-page-list.
+    fixed = [None, "", "no digits here", "id 1234 only", "price 7.50 x",
+             "$1.00 $2.00 $3.00 $4.50 x"]
+
+    @settings(max_examples=8, deadline=None)
+    @given(st.lists(PAGE_TEXTS, min_size=0, max_size=12))
+    def check(texts):
+        pages = spark.createDataFrame(
+            [(f"u{i}", h) for i, h in enumerate(fixed + texts)], "url string, html string"
+        )
+        got = sorted(tuple(r) for r in ex.extract_candidates(pages, snippet_size=7).collect())
+        shrunk = pages.select("url", shrink_string(F.col("html")).alias("h")).collect()
+        want = sorted(
+            (url, c["candidate"], c["location"], c["text_before"], c["text_after"], len(h))
+            for url, h in shrunk
+            for c in ex.extract_candidates_py(h, 7)
+        )
+        assert got == want
+        # u0..u3: the None, empty and two candidate-free fixed pages
+        assert not {r[0] for r in got} & {"u0", "u1", "u2", "u3"}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        check()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_shrink_strips_thousands_commas_before_extraction(spark):
     # '1,234.56' shrinks to '1234.56' (comma between digits dropped)
     df = spark.createDataFrame([("u", "price 1,234.56 now")], "url string, html string")
@@ -126,24 +174,10 @@ def _reference_extract(html: str, snippet_size: int = 150) -> list[dict]:
     return out
 
 
-def test_fast_scan_equivalence_property():
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    # alphabet biased toward the tricky cases: digit runs, separators,
-    # currency marks, the price words, and boundary junk
-    atoms = st.sampled_from(
-        ["0", "1", "23", "9", ".", ",", "..", ",.", "$", "€", "price",
-         "Price", "PRICE", " ", "x", "<b>", "\n", "¥"]
-    )
-    texts = st.lists(atoms, min_size=0, max_size=40).map("".join)
-
-    @settings(max_examples=500, deadline=None)
-    @given(texts)
-    def check(html):
-        assert ex.extract_candidates_py(html, 7) == _reference_extract(html, 7)
-
-    check()
+@settings(max_examples=500, deadline=None)
+@given(PAGE_TEXTS)
+def test_fast_scan_equivalence_property(html):
+    assert ex.extract_candidates_py(html, 7) == _reference_extract(html, 7)
 
 
 def test_fast_scan_equivalence_fixed_quirks():

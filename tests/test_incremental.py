@@ -633,12 +633,13 @@ def test_merge_join_strategy_gate_and_equivalence(spark, tmp_path, monkeypatch):
         return orig(self, df, version)
 
     monkeypatch.setattr(inc.ParquetMergeTable, "_write_buckets", capturing)
+    production_budget = inc._SHJ_BUILD_BYTES_PER_PART
 
     def run(arm: str):
         # arm "0" = force sort-merge by shrinking the hash-build budget
         # to nothing; arm "1" = the production gate
         monkeypatch.setattr(
-            inc, "_SHJ_BUILD_BYTES_PER_PART", 0 if arm == "0" else 8 * 1024 * 1024
+            inc, "_SHJ_BUILD_BYTES_PER_PART", 0 if arm == "0" else production_budget
         )
         tbl = _mk_table(
             spark, tmp_path / f"arm{arm}", [(i, float(i)) for i in range(40)]

@@ -57,6 +57,15 @@ def test_dau_wau_trailing_window_is_equi_not_nlj(spark):
     assert "Explode" in plan or "Generate" in plan
 
 
+def test_extraction_is_one_flat_map_in_arrow(spark):
+    # candidates come straight out of one mapInArrow: no scalar Arrow
+    # UDF returning a nested array, no explode after it
+    plan = _plan(spark, "price_candidate_extraction")
+    assert "MapInArrow" in plan
+    assert "ArrowEvalPython" not in plan
+    assert "Generate" not in plan
+
+
 def test_whole_stage_codegen_present(spark):
     # the relational core must stay inside codegen (no interpreted
     # projections in the hot path)

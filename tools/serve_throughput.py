@@ -12,7 +12,7 @@ construction (`queries/serve_q._page_messages`):
   run scan).
 
 Then drives the FULL streaming serve path (json parse -> extraction
-UDF -> broadcast-registry scoring -> per-url argmax -> status ->
+mapInArrow -> broadcast-registry scoring -> per-url argmax -> status ->
 multiplexed sinks) over each, twice (run 1 = cold), and prints one
 JSON line with pages/s, MB/s, and the marginal per-byte rate
 
@@ -81,20 +81,13 @@ def build_fixture(spark, sf_dir: str, kind: str, pages: int, files: int, dst: st
     return n, int(total_bytes)
 
 
-def run_serve(
-    spark, src: str, registry_rows, parse_fields="default", sink_files=None
-) -> float:
+def run_serve(spark, src: str, registry_rows) -> float:
     from htmlentityextraction_spark.streaming import serve
 
-    kw = {} if parse_fields == "default" else {"parse_fields": parse_fields}
-    if sink_files is not None:
-        # 0 = explicitly OFF (the pre-r10 one-file-per-partition
-        # shape, for regression A/Bs against the now-default coalesce)
-        kw["sink_files"] = sink_files or None
     out = tempfile.mkdtemp(prefix="thr_out_")
     raw = spark.readStream.schema("value string").parquet(src)
     t0 = time.time()
-    serve.serve_stream(spark, raw, registry_rows, out, **kw).await_done()
+    serve.serve_stream(spark, raw, registry_rows, out).await_done()
     dt = time.time() - t0
     shutil.rmtree(out, ignore_errors=True)
     return round(dt, 2)
@@ -105,21 +98,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=30000)
     ap.add_argument("--files", type=int, default=32)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument(
-        "--ab-full-parse",
-        action="store_true",
-        help="also time each fixture with the FULL 15-field from_json "
-        "schema (pre-r9 behavior) for the pruned-parse A/B",
-    )
-    ap.add_argument(
-        "--ab-sink-batch",
-        type=int,
-        default=None,
-        metavar="N",
-        help="also time each fixture with the filtered sinks coalesced "
-        "to N files per trigger (0 = explicitly OFF, the pre-r10 "
-        "shape — sink-commit pressure A/B)",
-    )
     args = ap.parse_args()
 
     from htmlentityextraction_spark.session import get_spark
@@ -143,14 +121,6 @@ def main() -> None:
             "pages_per_s": round(n / warm, 1),
             "mb_per_s": round(nbytes / 1e6 / warm, 2),
         }
-        if args.ab_full_parse:
-            results[kind]["warm_full_parse_s"] = run_serve(
-                spark, src, registry_rows, parse_fields=None
-            )
-        if args.ab_sink_batch is not None:
-            results[kind][f"warm_sink{args.ab_sink_batch}_s"] = run_serve(
-                spark, src, registry_rows, sink_files=args.ab_sink_batch
-            )
         shutil.rmtree(src, ignore_errors=True)
         print(f"# {kind}: {results[kind]}", file=sys.stderr)
 
