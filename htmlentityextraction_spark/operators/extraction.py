@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from htmlentityextraction_spark.functions.text import shrink_string
 from htmlentityextraction_spark.schemas import PRICE_CANDIDATE_SCHEMA
 
 NUM_PATTERN = re.compile(r"([0-9,.]*[0-9])(?:[^0-9,.])")
@@ -84,9 +85,11 @@ CURRENCY_OR_PRICE = re.compile(CURRENCY.pattern + "|price|Price|PRICE")
 
 # Arrow twin of PRICE_CANDIDATE_SCHEMA: the mapInArrow output batches
 _ARROW_CANDIDATES = to_arrow_schema(PRICE_CANDIDATE_SCHEMA)
+# chars of context kept on each side of a candidate
+SNIPPET_SIZE = 150
 
 
-def extract_candidates_py(html: str, snippet_size: int = 150) -> list[dict]:
+def extract_candidates_py(html: str, snippet_size: int = SNIPPET_SIZE) -> list[dict]:
     """Plain-Python reference implementation (called per page by
     ``extract_candidates`` and unit-testable without Spark)."""
     if html is None:
@@ -147,25 +150,29 @@ def _candidate_batches(
         yield pa.RecordBatch.from_arrays(cols, schema=_ARROW_CANDIDATES)
 
 
+def shrunk_pages(df: DataFrame, html_col: str, url_col: str, *keep: str) -> DataFrame:
+    """(url, __html, page_length, *keep): the page projection the
+    per-page maps read. The html is pre-normalized columnar-side (JVM)
+    before the Python boundary, as `utils/Utils.scala:131-145`
+    (``htmlsToCandidsPipe``) does; page_length is the shrunk length."""
+    pages = df.select(
+        F.col(url_col).alias("url"),
+        shrink_string(F.col(html_col)).alias("__html"),
+        *keep,
+    )
+    return pages.select("url", "__html", F.length("__html").alias("page_length"), *keep)
+
+
 def extract_candidates(
     df: DataFrame,
     html_col: str = "html",
     url_col: str = "url",
-    snippet_size: int = 150,
+    snippet_size: int = SNIPPET_SIZE,
 ) -> DataFrame:
     """Page rows → candidate rows (PRICE_CANDIDATE_SCHEMA: url,
-    candidate, location, text_before, text_after, page_length). The
-    html is pre-normalized columnar-side (JVM) before the Python
-    boundary, as `utils/Utils.scala:131-145` (``htmlsToCandidsPipe``)
-    does."""
-    from htmlentityextraction_spark.functions.text import shrink_string
-
-    html = shrink_string(F.col(html_col))
-    pages = df.select(
-        F.col(url_col).alias("url"),
-        html.alias("__html"),
-    ).withColumn("page_length", F.length("__html"))
-    return pages.mapInArrow(
+    candidate, location, text_before, text_after, page_length), from
+    the ``shrunk_pages`` projection."""
+    return shrunk_pages(df, html_col, url_col).mapInArrow(
         lambda batches: _candidate_batches(batches, snippet_size),
         PRICE_CANDIDATE_SCHEMA,
     )
@@ -177,6 +184,11 @@ def norm_location() -> Column:
     return F.col("location").cast("double") / F.greatest(
         F.col("page_length"), F.lit(1)
     ).cast("double")
+
+
+def norm_location_py(location: int, page_length: int) -> float:
+    """``norm_location`` for the per-page maps that run in Python."""
+    return location / max(page_length, 1)
 
 
 def parse_price(c: Column) -> Column:

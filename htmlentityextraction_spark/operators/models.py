@@ -3,9 +3,14 @@ score → pick price (SURVEY.md §2.9 M1-M15, §3.2).
 
 Spark-first split of work:
 
-- ALL text work is columnar JVM-side: tokenization, term hashing
-  (xxhash64 mod num_features — the HashingTF trick), so the Python
-  boundary carries only int arrays + a label + a location double.
+- Training-side text work is columnar JVM-side: tokenization, term
+  hashing (xxhash64 mod num_features — the HashingTF trick), so the
+  Python boundary carries only int arrays + a label + a location
+  double. ``context_tokens`` + ``term_ids_py`` are its Python twin
+  (numpy XXH64 over all of a batch's tokens at once), for the serve
+  path's one per-page map (equivalence-tested against the JVM
+  expression in tests/test_models.py); both live here so one module
+  owns the hashing decision.
 - Per-domain TF-IDF fit (IDF weights, top-k mean-tfidf feature
   selection — `transform/Transformer.scala:26-43`) and the GBT fit
   happen INSIDE one ``applyInPandas`` group task, exactly the
@@ -17,27 +22,32 @@ Spark-first split of work:
   indices, metrics) — collected and broadcast for serving, mirroring
   `emr/Models2Object.scala:27-36` + `streaming/Htmls2PredsPipe.scala:
   89-90`.
-- Scoring is ``mapInPandas`` over candidate rows with the broadcast
-  registry: featurize with the domain's idf/indices, margin from the
-  domain's GBT (`streaming/Htmls2PredsPipe.scala:104-159`).
+- Serving scores with the domain's idf/top-k indices and GBT margin
+  (`streaming/Htmls2PredsPipe.scala:104-159`) through one kernel,
+  ``selected_tfidf``, which builds only the k selected columns. The
+  serve path (`streaming/serve.py`) calls it inside its per-page
+  ``mapInArrow``; ``score_candidates`` (``mapInPandas`` with the
+  broadcast registry) and ``score_candidates_cogrouped`` are the
+  candidate-row scorers the registry queries use.
 
 Scale note: groupBy(domain) skew (one huge domain) is the real risk at
 100 TB — cap rows per domain with a deterministic per-group limit
 (`max_rows_per_domain`, a windowed rank filter) before the shuffle,
 the same defense as the reference's per-domain coalesce(10).
 """
-
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from htmlentityextraction_spark.functions.text import tokenize
+from htmlentityextraction_spark.operators.extraction import parse_price
 from htmlentityextraction_spark.operators.gbt import GBTClassifier
 
 REGISTRY_SCHEMA = T.StructType(
@@ -53,10 +63,15 @@ REGISTRY_SCHEMA = T.StructType(
 )
 
 
+# HashingTF width of the serving features (`streaming/Htmls2PredsPipe.
+# scala:121`)
+NUM_FEATURES = 1000
+
+
 def featurize_candidates(
     cand: DataFrame,
     text_cols: tuple[str, str] = ("text_before", "text_after"),
-    num_features: int = 1000,
+    num_features: int = NUM_FEATURES,
 ) -> DataFrame:
     """Candidate rows → (domain, url, label, norm_location, hashed
     term ids). Hashing = xxhash64 mod num_features, all JVM-side
@@ -77,6 +92,80 @@ def featurize_candidates(
     )
 
 
+# Python twin of featurize_candidates' term hashing: `tokenize` keeps
+# the maximal [A-Za-z]+ runs, and Spark's xxhash64 is XXH64 (seed 42)
+# over the token's UTF-8 bytes, read as a signed long before the pmod.
+_TOKEN = re.compile("[A-Za-z]+")
+_U64 = (1 << 64) - 1
+_SEED = 42
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p)
+    for p in (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+              0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh_round(acc, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def context_tokens(*texts: str) -> list[str]:
+    """``featurize_candidates``' tokens of non-null texts, in order."""
+    return [t for text in texts for t in _TOKEN.findall(text)]
+
+
+def term_ids_py(tokens: list[str]) -> np.ndarray:
+    """Python twin of ``featurize_candidates``' term hashing (at the
+    default NUM_FEATURES): ``pmod(xxhash64(token), NUM_FEATURES)`` of
+    each ``context_tokens`` token, equivalence-tested against the JVM
+    expression in tests/test_models.py. Each XXH64 step is one numpy
+    op over all tokens at once (uint64 arithmetic wraps mod 2**64), so
+    the cost is the same whether or not the tokens repeat."""
+    raw = "".join(tokens).encode("ascii") + bytes(8)  # [A-Za-z] only
+    n = np.fromiter(map(len, tokens), dtype=np.int64, count=len(tokens))
+    # little-endian 8/4-byte words and bytes at every offset of raw
+    w8 = np.ndarray((len(raw) - 7,), dtype="<u8", buffer=raw, strides=(1,))
+    w4 = np.ndarray((len(raw) - 7,), dtype="<u4", buffer=raw, strides=(1,))
+    u8 = np.frombuffer(raw, dtype=np.uint8)
+    pos = np.cumsum(n) - n
+    end = pos + n
+    h = np.full(len(n), (_SEED + int(_P5)) & _U64, dtype=np.uint64)
+    big = np.flatnonzero(n >= 32)  # 32-byte stripes through 4 lanes
+    if len(big):
+        seeds = (_SEED + int(_P1) + int(_P2), _SEED + int(_P2), _SEED, _SEED - int(_P1))
+        v = [np.full(len(big), s & _U64, dtype=np.uint64) for s in seeds]
+        p, e = pos[big], end[big]
+        while (on := np.flatnonzero(p <= e - 32)).size:
+            for j in range(4):
+                v[j][on] = _xxh_round(v[j][on], w8[p[on] + 8 * j])
+            p[on] += 32
+        hv = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for a in v:
+            hv = (hv ^ _xxh_round(np.uint64(0), a)) * _P1 + _P4
+        h[big], pos[big] = hv, p
+    h += n.astype(np.uint64)
+    for _ in range(3):  # < 32 bytes left: up to three 8-byte words,
+        on = pos <= end - 8
+        k = _xxh_round(np.uint64(0), w8[pos])
+        h = np.where(on, _rotl(h ^ k, 27) * _P1 + _P4, h)
+        pos += 8 * on
+    on = pos <= end - 4  # one 4-byte word,
+    h = np.where(on, _rotl(h ^ w4[pos].astype(np.uint64) * _P1, 23) * _P2 + _P3, h)
+    pos += 4 * on
+    for _ in range(3):  # up to three single bytes
+        on = pos < end
+        h = np.where(on, _rotl(h ^ u8[pos].astype(np.uint64) * _P5, 11) * _P1, h)
+        pos += on
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    h ^= h >> np.uint64(32)
+    return np.mod(h.view(np.int64), NUM_FEATURES)
+
+
 def url_grouped_split(
     df: DataFrame, train_frac: float = 0.7, seed: int = 42, url_col: str = "url"
 ) -> tuple[DataFrame, DataFrame]:
@@ -88,15 +177,47 @@ def url_grouped_split(
     return df.filter(bucket < cut), df.filter(bucket >= cut)
 
 
+def selected_tfidf(
+    flat_ids, lengths, norm_location, idf: np.ndarray, indices: np.ndarray
+) -> np.ndarray:
+    """The serving feature matrix of n rows whose term ids are given
+    concatenated (``flat_ids``, row i owning ``lengths[i]`` of them):
+    tf-idf of the registry's top-k ``indices`` (distinct by
+    construction) plus the norm_location column. Only those k columns
+    are built — each term id maps to its selected column or is
+    dropped — and every cell is the same count * idf product the dense
+    num_features-wide matrix holds, so the result is bitwise identical
+    to slicing that matrix (property-tested in tests/test_models.py)."""
+    n, k = len(lengths), len(indices)
+    col = np.full(len(idf), -1, dtype=np.int64)
+    col[indices] = np.arange(k)
+    cols = col[np.asarray(flat_ids, dtype=np.int64)]
+    rows = np.repeat(np.arange(n), lengths)[cols >= 0]
+    tf = np.bincount(rows * k + cols[cols >= 0], minlength=n * k).reshape(n, k)
+    X = np.empty((n, k + 1))
+    X[:, :k] = tf * idf[indices]
+    X[:, k] = norm_location
+    return X
+
+
+def _scoring_matrix(pdf: pd.DataFrame, idf: np.ndarray, indices: np.ndarray) -> np.ndarray:
+    """``selected_tfidf`` of featurized candidate rows (term_ids,
+    norm_location) — the candidate-row scorers' serving matrix."""
+    rows = [np.empty(0, dtype=np.int64) if ids is None else ids for ids in pdf["term_ids"]]
+    return selected_tfidf(
+        np.concatenate([np.empty(0, dtype=np.int64), *rows]),
+        [len(ids) for ids in rows],
+        pdf["norm_location"].to_numpy(dtype=np.float64), idf, indices,
+    )
+
+
 def _tfidf_matrix(
     pdf: pd.DataFrame, num_features: int, min_doc_freq: int, top_k: int,
-    idf: np.ndarray | None = None, indices: np.ndarray | None = None,
     vocab_mode: str = "mean",
 ):
-    """Counts → tf-idf → top-k slice (+ norm_location column). When
-    idf/indices are given (serving), reuse them; else fit (training):
-    idf = log((n+1)/(df+1)), Spark ML's formula, zeroed under
-    min_doc_freq. Selection modes:
+    """Training features: counts → tf-idf → top-k slice (+ norm_location
+    column), with idf = log((n+1)/(df+1)), Spark ML's formula, zeroed
+    under min_doc_freq. Selection modes:
 
     - "mean": top-k by overall mean tf-idf
       (`transform/Transformer.scala:26-43`);
@@ -109,22 +230,19 @@ def _tfidf_matrix(
     for i, ids in enumerate(pdf["term_ids"]):
         if ids is not None and len(ids):
             np.add.at(tf[i], np.asarray(ids, dtype=np.int64), 1.0)
-    if idf is None:
-        docfreq = (tf > 0).sum(axis=0)
-        idf = np.log((n + 1.0) / (docfreq + 1.0))
-        idf[docfreq < min_doc_freq] = 0.0
-        tfidf = tf * idf
-        if vocab_mode == "class_union":
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            half = max(top_k // 2, 1)
-            pos = np.argsort(-tfidf[y == 1].mean(axis=0), kind="stable")[:half]
-            neg = np.argsort(-tfidf[y == 0].mean(axis=0), kind="stable")[:half]
-            neg_minus_pos = np.setdiff1d(neg, pos, assume_unique=False)
-            indices = np.concatenate([pos, neg_minus_pos])
-        else:
-            indices = np.argsort(-tfidf.mean(axis=0), kind="stable")[:top_k]
+    docfreq = (tf > 0).sum(axis=0)
+    idf = np.log((n + 1.0) / (docfreq + 1.0))
+    idf[docfreq < min_doc_freq] = 0.0
+    tfidf = tf * idf
+    if vocab_mode == "class_union":
+        y = pdf["label"].to_numpy(dtype=np.float64)
+        half = max(top_k // 2, 1)
+        pos = np.argsort(-tfidf[y == 1].mean(axis=0), kind="stable")[:half]
+        neg = np.argsort(-tfidf[y == 0].mean(axis=0), kind="stable")[:half]
+        neg_minus_pos = np.setdiff1d(neg, pos, assume_unique=False)
+        indices = np.concatenate([pos, neg_minus_pos])
     else:
-        tfidf = tf * idf
+        indices = np.argsort(-tfidf.mean(axis=0), kind="stable")[:top_k]
     X = np.column_stack([tfidf[:, indices], pdf["norm_location"].to_numpy(dtype=np.float64)])
     return X, idf, indices
 
@@ -143,7 +261,7 @@ def train_per_domain(
     """groupBy(domain).applyInPandas fit → registry DataFrame. Domains
     with < min_rows candidates or a single class are skipped (the
     reference's missingModel path)."""
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         (domain,) = key
         pdf = pdf.sort_values(["url", "candidate"], kind="stable").reset_index(drop=True)
         y = pdf["label"].to_numpy(dtype=np.float64)
@@ -210,7 +328,7 @@ def submodel_curve_per_domain(
     group-task shape as train_per_domain: the curve costs one extra
     margin pass per tree over the group, nothing cluster-wide."""
 
-    def curve(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def curve(key, pdf):
         (domain,) = key
         pdf = pdf.sort_values(["url", "candidate"], kind="stable").reset_index(drop=True)
         y = pdf["label"].to_numpy(dtype=np.float64)
@@ -250,31 +368,32 @@ def save_registry(registry: DataFrame, path: str) -> None:
 
 
 def load_registry(spark: SparkSession, path: str) -> DataFrame:
-    """Reload a persisted registry for serving (broadcast happens in
-    score_candidates)."""
+    """Reload a persisted registry for serving (``registry_models``
+    builds what the scorers broadcast)."""
     return spark.read.parquet(path)
 
 
-def score_candidates(
-    cand: DataFrame,
-    registry: DataFrame | list,
-    num_features: int = 1000,
-) -> DataFrame:
-    """mapInPandas scoring with the collected registry broadcast to
-    executors. Adds prediction (0/1), confidence (margin), and the
-    missing-model sentinel prediction = -2 (`streaming/Htmls2PredsPipe.
-    scala:146-156`)."""
+def registry_models(registry: DataFrame | list) -> dict:
+    """Collected registry → {domain: (GBTClassifier, idf, indices)},
+    the value the broadcast scorers ship to executors: models are
+    deserialized once on the driver, not per task."""
     rows = registry.collect() if isinstance(registry, DataFrame) else registry
-    spark = cand.sparkSession
-    reg = {
+    return {
         r["domain"]: (
-            bytes(r["model"]),
+            GBTClassifier.from_bytes(bytes(r["model"])),
             np.asarray(r["idf"], dtype=np.float64),
             np.asarray(r["indices"], dtype=np.int64),
         )
         for r in rows
     }
-    bc = spark.sparkContext.broadcast(reg)
+
+
+def score_candidates(cand: DataFrame, registry: DataFrame | list) -> DataFrame:
+    """mapInPandas scoring with the collected registry broadcast to
+    executors. Adds prediction (0/1), confidence (margin), and the
+    missing-model sentinel prediction = -2 (`streaming/Htmls2PredsPipe.
+    scala:146-156`)."""
+    bc = cand.sparkSession.sparkContext.broadcast(registry_models(registry))
     out_schema = T.StructType(
         cand.schema.fields
         + [
@@ -284,7 +403,6 @@ def score_candidates(
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, GBTClassifier] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -294,13 +412,8 @@ def score_candidates(
                 entry = bc.value.get(domain)
                 if entry is None:
                     continue
-                model = cache.get(domain)
-                if model is None:
-                    model = cache[domain] = GBTClassifier.from_bytes(entry[0])
-                X, _, _ = _tfidf_matrix(
-                    grp, num_features, 0, 0, idf=entry[1], indices=entry[2]
-                )
-                m = model.margin(X)
+                model, idf, indices = entry
+                m = model.margin(_scoring_matrix(grp, idf, indices))
                 idx = grp.index.to_numpy()
                 pred[pdf.index.get_indexer(idx)] = (m > 0).astype(np.int64)
                 conf[pdf.index.get_indexer(idx)] = m
@@ -312,11 +425,7 @@ def score_candidates(
     return cand.mapInPandas(score, out_schema)
 
 
-def score_candidates_cogrouped(
-    cand: DataFrame,
-    registry: DataFrame,
-    num_features: int = 1000,
-) -> DataFrame:
+def score_candidates_cogrouped(cand: DataFrame, registry: DataFrame) -> DataFrame:
     """Join-based scorer for registries too large to broadcast: the
     registry STAYS a DataFrame, co-grouped with candidates on domain
     (``groupBy.cogroup.applyInPandas``) — no driver collect, no
@@ -351,15 +460,11 @@ def score_candidates_cogrouped(
         if not reg_pdf.empty:
             row = reg_pdf.iloc[0]
             model = GBTClassifier.from_bytes(bytes(row["model"]))
-            X, _, _ = _tfidf_matrix(
+            m = model.margin(_scoring_matrix(
                 cand_pdf,
-                num_features,
-                0,
-                0,
-                idf=np.asarray(row["idf"], dtype=np.float64),
-                indices=np.asarray(row["indices"], dtype=np.int64),
-            )
-            m = model.margin(X)
+                np.asarray(row["idf"], dtype=np.float64),
+                np.asarray(row["indices"], dtype=np.int64),
+            ))
             pred = (m > 0).astype(np.int64)
             conf = m
         out = cand_pdf.copy()
@@ -374,13 +479,23 @@ def score_candidates_cogrouped(
     )
 
 
+def model_price(max_pred: Column, best_candidate: Column) -> Column:
+    """A page's model price from its max prediction and its best
+    positive candidate: -2.0 when the domain had no model, -1.0 when
+    no candidate is positive (or it does not parse), else the
+    candidate's numeric value (`streaming/Htmls2PredsPipe.scala:
+    134-156`). A page without candidates (null max_pred) gets -1.0."""
+    return (
+        F.when(max_pred == -2, F.lit(-2.0))
+        .when(best_candidate.isNull(), F.lit(-1.0))
+        .otherwise(F.coalesce(parse_price(best_candidate), F.lit(-1.0)))
+    )
+
+
 def pick_model_price(scored: DataFrame) -> DataFrame:
     """Per url: the highest-confidence positive candidate's numeric
-    value, sentinel -1.0 when no positive, -2.0 when the domain had no
-    model (`streaming/Htmls2PredsPipe.scala:134-156`). max_by over a
+    value, with ``model_price``'s sentinels. max_by over a
     deterministic (confidence, candidate) struct — one shuffle."""
-    from htmlentityextraction_spark.operators.extraction import parse_price
-
     agg = scored.groupBy("url", "domain").agg(
         F.max(F.when(F.col("prediction") == 1, F.struct("confidence", "candidate"))).alias("best"),
         F.max("prediction").alias("max_pred"),
@@ -388,10 +503,7 @@ def pick_model_price(scored: DataFrame) -> DataFrame:
     return agg.select(
         "url",
         "domain",
-        F.when(F.col("max_pred") == -2, F.lit(-2.0))
-        .when(F.col("best").isNull(), F.lit(-1.0))
-        .otherwise(F.coalesce(parse_price(F.col("best.candidate")), F.lit(-1.0)))
-        .alias("model_price"),
+        model_price(F.col("max_pred"), F.col("best.candidate")).alias("model_price"),
     )
 
 

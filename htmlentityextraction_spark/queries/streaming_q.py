@@ -351,7 +351,11 @@ def stream_bloom_prefilter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build once, reuse across micro-batches. localCheckpoint, not
     # cache(): a cache held at return is plan-keyed and a rebuilt
     # invocation in the same session would re-hit it (cross-run
-    # caching — r13, same standard as table_diff/minhash)
+    # caching — r13, same standard as table_diff/minhash). Local-mode
+    # assumption: localCheckpoint blocks live only on executors and
+    # lineage is cut, so on a cluster an executor loss would make this
+    # frame unrecoverable mid-stream; a cluster deployment needs a
+    # reliable checkpoint() or a persist unpersisted by the caller.
     words = bloom_build(vip, "user_id", num_bits=1 << 14, num_hashes=5).localCheckpoint()
 
     stream = sp.read_events_stream(spark, sf_dir)

@@ -1,27 +1,41 @@
 """The full streaming serve path (SURVEY.md §3.1 — Htmls2PredsPipe):
 
-    kafka(json pages) → typed parse → candidate-extraction UDTF →
-    broadcast-registry scoring → per-url argmax price → status
-    reconciliation → multiplexed sinks
+    kafka(json pages) → typed parse → per-page map (extract candidates
+    → featurize → score with the domain's model → top-1 positive
+    candidate) → price/status reconciliation → multiplexed sinks
 
-as ONE Structured Streaming job. Every stage is the already-tested
-batch operator — foreachBatch composes them per micro-batch, which is
-exactly the reference's transform(rdd => …) shape (T3) with typed
-DataFrames instead of string maps.
+as ONE Structured Streaming job, micro-batch by micro-batch through
+foreachBatch — the reference's transform(rdd => …) shape (T3) with
+typed DataFrames instead of string maps.
 
-Scale: the registry is collected once at job start and broadcast
+The per-page work is ONE ``mapInArrow``, like the reference's one
+per-record map (`streaming/Htmls2PredsPipe.scala:104-159`): for each
+Arrow batch it runs the extraction reference ``extract_candidates_py``,
+hashes the candidate context of each domain's pages in one
+``models.term_ids_py`` call, builds each domain's top-k tf-idf matrix
+once (``models.selected_tfidf``), calls that domain's GBT once, and
+reduces to one row per page. Price
+parsing, the sentinels, status and final price stay JVM expressions.
+
+Scale: the registry is collected and broadcast once per stream
 (matching `streaming/Htmls2PredsPipe.scala:89-90`); each micro-batch
-is a narrow pipeline (parse/extract/score) plus one shuffle for the
-per-url argmax — state-free, so throughput scales with executors and
-Kafka partitions.
+is narrow — no shuffle, no join, no aggregate after the parallelism
+guard — and state-free, so throughput scales with executors and
+Kafka partitions. A url repeated within one micro-batch is scored per
+message, as the reference does.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterator
 
+import numpy as np
+import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from htmlentityextraction_spark import schemas
 from htmlentityextraction_spark.functions.pricing import price_status, selected_price
@@ -30,41 +44,104 @@ from htmlentityextraction_spark.operators import extraction as ex
 from htmlentityextraction_spark.operators import models as md
 from htmlentityextraction_spark.streaming.pipeline import PASSING, StreamingQueryHolder
 
+# one row per page: its best positive candidate (null when none) and
+# its max prediction (-2 missing model, null without candidates)
+_PICKED = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("domain", T.StringType()),
+        T.StructField("updatedPrice", T.DoubleType()),
+        T.StructField("best", T.StringType()),
+        T.StructField("max_pred", T.IntegerType()),
+    ]
+)
+
+
+def _picked_batches(batches: Iterator[pa.RecordBatch], registry: Broadcast) -> Iterator[pa.RecordBatch]:
+    """(url, __html, page_length, domain, updatedPrice) page batches →
+    one _PICKED row per page, in input order. Per batch, the candidates
+    of all its pages are grouped by domain so each domain's features
+    and margins are computed in one call; the best candidate is the
+    max (round(margin, 9), candidate) among positive ones, the order
+    ``models.pick_model_price`` uses."""
+    for batch in batches:
+        models = registry.value
+        best_key: list = [None] * batch.num_rows
+        max_pred: list = [None] * batch.num_rows
+        by_domain: dict = {}
+        for i, (html, length, domain) in enumerate(zip(
+            batch.column("__html").to_pylist(),
+            batch.column("page_length").to_pylist(),
+            batch.column("domain").to_pylist(),
+        )):
+            cands = ex.extract_candidates_py(html)
+            if not cands:
+                continue
+            if domain not in models:
+                max_pred[i] = -2
+                continue
+            pages, values, tokens, lengths, locs = by_domain.setdefault(domain, ([], [], [], [], []))
+            for c in cands:
+                toks = md.context_tokens(c["text_before"], c["text_after"])
+                pages.append(i)
+                values.append(c["candidate"])
+                tokens.extend(toks)
+                lengths.append(len(toks))
+                locs.append(ex.norm_location_py(c["location"], length))
+        for domain, (pages, values, tokens, lengths, locs) in by_domain.items():
+            model, idf, indices = models[domain]
+            X = md.selected_tfidf(md.term_ids_py(tokens), lengths, locs, idf, indices)
+            margin = model.margin(X)
+            for i, value, m, conf in zip(pages, values, margin.tolist(), np.round(margin, 9).tolist()):
+                if m > 0:
+                    max_pred[i] = 1
+                    if best_key[i] is None or (conf, value) > best_key[i]:
+                        best_key[i] = (conf, value)
+                elif max_pred[i] is None:
+                    max_pred[i] = 0
+        best = [None if k is None else k[1] for k in best_key]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("url"),
+                batch.column("domain"),
+                batch.column("updatedPrice"),
+                pa.array(best, pa.string()),
+                pa.array(max_pred, pa.int32()),
+            ],
+            names=_PICKED.fieldNames(),
+        )
+
+
+def _score_pages(pages: DataFrame, registry: Broadcast) -> DataFrame:
+    """``score_pages_batch`` against an already-broadcast
+    ``models.registry_models`` value."""
+    projected = ex.shrunk_pages(
+        pages.withColumn("domain", get_domain(F.col("url"))),
+        "html", "url", "domain", "updatedPrice",
+    )
+    picked = projected.mapInArrow(lambda batches: _picked_batches(batches, registry), _PICKED)
+    model_price = md.model_price(F.col("max_pred"), F.col("best"))
+    status = price_status(F.col("model_price"), F.col("pattern_price"))
+    return (
+        picked.select(
+            "url", "domain", model_price.alias("model_price"),
+            F.col("updatedPrice").alias("pattern_price"),
+        )
+        .withColumn("status", status)
+        .withColumn(
+            "final_price",
+            selected_price(F.col("status"), F.col("model_price"), F.col("pattern_price")),
+        )
+    )
+
 
 def score_pages_batch(pages: DataFrame, registry_rows: list) -> DataFrame:
     """One micro-batch (or batch) of parsed page messages → per-page
-    model price, status, final price. Pages without any surviving
-    candidate get the -1 sentinel (allFalseCandids path)."""
-    pages = pages.withColumn("domain", get_domain(F.col("url")))
-    cand = ex.extract_candidates(pages, html_col="html", url_col="url", snippet_size=150)
-    # domain is a pure function of url, so derive it on the candidate
-    # rows instead of broadcast-joining the page set back (optimization
-    # r12, guide §2.4/§5): the old join collected every page's
-    # (url, domain) to the driver EVERY micro-batch to build the
-    # broadcast — measured 0.79 s vs 0.45 s per batch here, and a
-    # driver-memory hazard at real batch sizes.
-    cand = (
-        cand.withColumn("domain", get_domain(F.col("url")))
-        .withColumn("norm_location", ex.norm_location())
-        .withColumn("label", F.lit(0))
-    )
-    feats = md.featurize_candidates(cand)
-    scored = md.score_candidates(feats, registry_rows)
-    picked = md.pick_model_price(scored)
-    out = pages.join(picked.select("url", "model_price"), "url", "left")
-    out = out.withColumn("model_price", F.coalesce(F.col("model_price"), F.lit(-1.0)))
-    status = price_status(F.col("model_price"), F.col("updatedPrice"))
-    return (
-        out.withColumn("status", status)
-        .withColumn(
-            "final_price",
-            selected_price(F.col("status"), F.col("model_price"), F.col("updatedPrice")),
-        )
-        .select(
-            "url", "domain", "model_price",
-            F.col("updatedPrice").alias("pattern_price"), "status", "final_price",
-        )
-    )
+    (url, domain, model_price, pattern_price, status, final_price),
+    one row per page. Pages without any surviving candidate get the -1
+    sentinel (allFalseCandids path)."""
+    registry = pages.sparkSession.sparkContext.broadcast(md.registry_models(registry_rows))
+    return _score_pages(pages, registry)
 
 
 def serve_stream(
@@ -82,8 +159,10 @@ def serve_stream(
     Every sink writes one file per partition of the micro-batch, and
     the boundary ``from_json`` parses the full PAGE_MESSAGE_SCHEMA:
     a coalesce of the filtered sinks and a pruned 3-field parse both
-    measured as ties on this path (THROUGHPUT.md rounds 9-10)."""
-    registry_rows = registry.collect() if isinstance(registry, DataFrame) else list(registry)
+    measured as ties on this path (THROUGHPUT.md rounds 9-10). The
+    registry is broadcast once, when the stream starts, and every
+    micro-batch scores against that broadcast."""
+    registry_bc = spark.sparkContext.broadcast(md.registry_models(registry))
     want_parallelism = spark.sparkContext.defaultParallelism
 
     def batch_fn(batch: DataFrame, batch_id: int) -> None:
@@ -112,7 +191,7 @@ def serve_stream(
             F.when(F.col("is_corrupt"), F.col("raw_payload")),
         )
         parsed.persist()
-        result = score_pages_batch(parsed.filter(~F.col("is_corrupt")), registry_rows)
+        result = _score_pages(parsed.filter(~F.col("is_corrupt")), registry_bc)
         result.persist()
         try:
             # NOT gated on emptiness: probing the cache first and

@@ -66,6 +66,29 @@ def test_extraction_is_one_flat_map_in_arrow(spark):
     assert "Generate" not in plan
 
 
+def test_serve_scoring_is_one_python_map_and_no_shuffle(spark):
+    # score_pages_batch is one per-page mapInArrow between JVM
+    # projections: no second Python boundary, no shuffle, no join back
+    # to the pages, no per-url aggregate
+    from htmlentityextraction_spark import schemas
+    from htmlentityextraction_spark.streaming import serve
+
+    raw = spark.createDataFrame(
+        [('{"url":"http://a.com/p","html":"price 1.50 now","updatedPrice":1.5}',)],
+        "value string",
+    )
+    pages = schemas.parse_page_messages(raw).filter("NOT is_corrupt")
+    plan = serve.score_pages_batch(pages, [])._jdf.queryExecution().executedPlan().toString()
+    python_nodes = re.findall(
+        r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas"
+        r"|FlatMapCoGroupsInPandas|AggregateInPandas|WindowInPandas|PythonUDTF",
+        plan,
+    )
+    assert python_nodes == ["MapInArrow"]
+    for node in ("Exchange", "Join", "Aggregate"):
+        assert node not in plan
+
+
 def test_whole_stage_codegen_present(spark):
     # the relational core must stay inside codegen (no interpreted
     # projections in the hot path)
