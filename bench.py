@@ -22,7 +22,7 @@ HEADLINE = [
     "dedup_minhash_lsh",             # sketch: shingle minhash + band join
     "similarity_cosine_topk",        # vector scan + per-query topk
     "text_quality_profile",          # columnar text analysis
-    "price_candidate_extraction",    # pandas-UDF extraction path
+    "price_candidate_extraction",    # mapInArrow extraction path
     # model_score_pick_price runs BEFORE stream_serve_pipeline and is
     # charged the one-time per-domain registry fit (queries/ml.fit_once);
     # serve then consumes the packaged registry, like the reference's
@@ -161,26 +161,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    from htmlentityextraction_spark.runner import timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
     import __spark_entry__ as entrymod
 
     spark = get_spark("bench")
     qs = entrymod.queries()
     names = [n for n in HEADLINE if n in qs]
-    # warm the JVM + parquet footers once (not timed)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    # warm the Python worker pool + Arrow path once (not timed) so the
-    # first pandas-UDF query isn't charged worker spin-up
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-
-    def run_once(name: str) -> float:
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        # noop write, NOT count(): count lets Catalyst prune projections
-        # that don't affect cardinality, under-measuring the real work;
-        # the noop sink materializes every column of every row
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
+    warm_up(spark, sf_dir)
 
     # median-of-3 timing (r7+): session first-touch costs (JIT, codegen
     # compile, first shuffle, one-time cached fits) migrate between
@@ -196,9 +184,7 @@ def main() -> None:
     def run_set(set_names: list[str], tag: str) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in set_names:
-            t1 = run_once(name)
-            t2 = run_once(name)
-            t3 = run_once(name)
+            t1, t2, t3 = (timed_noop_write(lambda: qs[name](spark, sf_dir)) for _ in range(3))
             cold[name] = t1
             out[name] = sorted((t1, t2, t3))[1]
             print(f"# {name}: {out[name]}s (runs {t1}/{t2}/{t3}){tag}", file=sys.stderr)

@@ -40,8 +40,6 @@ case, same contract as ``dedup.ngram_jaccard_pairs``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -120,11 +118,8 @@ def prefix_jaccard_pairs(
         # dfreq/sizes joins + prefix window over row-scale data. The
         # exact check (with its precise offender report) still runs
         # whenever the screen cannot rule a hot block out, so the
-        # error contract is unchanged. Kill switch:
-        # SPARK_GRAFT_SETSIM_GUARD=exact.
-        mx = None
-        if os.environ.get("SPARK_GRAFT_SETSIM_GUARD", "screen") != "exact":
-            mx = dfreq.agg(F.max("df").alias("mx")).collect()[0]["mx"]
+        # error contract is unchanged.
+        mx = dfreq.agg(F.max("df").alias("mx")).collect()[0]["mx"]
         if mx is None or mx > max_block_rows:
             hot = (
                 prefix.groupBy("tok")

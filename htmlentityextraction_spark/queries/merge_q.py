@@ -83,50 +83,51 @@ def _merged_orders_table(spark: SparkSession, sf_dir: str) -> ParquetMergeTable:
     # the scan + groupBy shuffle; persist it for the build and release
     # it before returning — the table itself is files, so nothing
     # cached outlives the query (optimization r12, guide §2.2/§5.2).
-    # Kill switch for A/B: SPARK_GRAFT_MERGE_SPINE=0.
-    orders = _orders_source(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_MERGE_SPINE", "1") != "0":
-        orders = orders.persist()
-    k = F.col("o_orderkey")
-    path = tempfile.mkdtemp(prefix="merge_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
-    tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
-    tbl.create(orders)
+    # The release sits in a finally: a spine still cached after a
+    # failed merge is plan-keyed, and the next run would reuse it.
+    orders = _orders_source(spark, sf_dir).persist()
+    try:
+        k = F.col("o_orderkey")
+        path = tempfile.mkdtemp(prefix="merge_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
+        tbl.create(orders)
 
-    # derived updates skip NaN source prices: Spark's floor(NaN) is
-    # silently 0 while DuckDB's is NaN — a corrupt measurement must
-    # not fabricate a price (null/NaN-fuzz aligned)
-    batch1 = orders.filter(
-        (F.pmod(k, F.lit(7)) == 2)
-        | ((F.pmod(k, F.lit(7)) == 1) & finite_measure("price"))
-    ).select(
-        "o_orderkey",
-        F.when(F.pmod(k, F.lit(7)) == 1, F.floor(F.col("price") * 1.05 * 100) / 100)
-        .otherwise(F.lit(None).cast("double"))
-        .alias("price"),
-        F.when(F.pmod(k, F.lit(7)) == 1, F.lit(OP_UPSERT))
-        .otherwise(F.lit(OP_DELETE))
-        .alias("op"),
-    )
-    tbl.merge(batch1)
+        # derived updates skip NaN source prices: Spark's floor(NaN) is
+        # silently 0 while DuckDB's is NaN — a corrupt measurement must
+        # not fabricate a price (null/NaN-fuzz aligned)
+        batch1 = orders.filter(
+            (F.pmod(k, F.lit(7)) == 2)
+            | ((F.pmod(k, F.lit(7)) == 1) & finite_measure("price"))
+        ).select(
+            "o_orderkey",
+            F.when(F.pmod(k, F.lit(7)) == 1, F.floor(F.col("price") * 1.05 * 100) / 100)
+            .otherwise(F.lit(None).cast("double"))
+            .alias("price"),
+            F.when(F.pmod(k, F.lit(7)) == 1, F.lit(OP_UPSERT))
+            .otherwise(F.lit(OP_DELETE))
+            .alias("op"),
+        )
+        tbl.merge(batch1)
 
-    reinsert = orders.filter(F.pmod(k, F.lit(14)) == 2).select(
-        "o_orderkey", F.lit(1.0).alias("price"), F.lit(OP_UPSERT).alias("op")
-    )
-    discount = orders.filter(
-        (F.pmod(k, F.lit(7)) == 3) & finite_measure("price")
-    ).select(
-        "o_orderkey",
-        (F.floor(F.col("price") * 0.9 * 100) / 100).alias("price"),
-        F.lit(OP_UPSERT).alias("op"),
-    )
-    brand_new = orders.filter(F.pmod(k, F.lit(50)) == 0).select(
-        (k + 10_000_000).alias("o_orderkey"),
-        F.lit(5.0).alias("price"),
-        F.lit(OP_UPSERT).alias("op"),
-    )
-    tbl.merge(reinsert.unionByName(discount).unionByName(brand_new))
-    orders.unpersist()  # both merges have materialized; table is files
-    return tbl
+        reinsert = orders.filter(F.pmod(k, F.lit(14)) == 2).select(
+            "o_orderkey", F.lit(1.0).alias("price"), F.lit(OP_UPSERT).alias("op")
+        )
+        discount = orders.filter(
+            (F.pmod(k, F.lit(7)) == 3) & finite_measure("price")
+        ).select(
+            "o_orderkey",
+            (F.floor(F.col("price") * 0.9 * 100) / 100).alias("price"),
+            F.lit(OP_UPSERT).alias("op"),
+        )
+        brand_new = orders.filter(F.pmod(k, F.lit(50)) == 0).select(
+            (k + 10_000_000).alias("o_orderkey"),
+            F.lit(5.0).alias("price"),
+            F.lit(OP_UPSERT).alias("op"),
+        )
+        tbl.merge(reinsert.unionByName(discount).unionByName(brand_new))
+        return tbl
+    finally:
+        orders.unpersist()
 
 
 @register(
@@ -159,24 +160,26 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a handful of bucket dirs instead of the table."""
     # spine persisted across create + merge batch (see _merged_orders_table)
     orders = _orders_source(spark, sf_dir).persist()
-    k = F.col("o_orderkey")
-    path = tempfile.mkdtemp(prefix="merge_rng_", dir=os.environ.get("TMPDIR", "/tmp"))
-    tbl = ParquetMergeTable(
-        spark, path, key_col="o_orderkey", bucketing="range", range_width=2000
-    )
-    tbl.create(orders)
-    in_band = k.between(8000, 16000)
-    batch = orders.filter(in_band & (F.pmod(k, 5) == 0) & finite_measure("price")).select(
-        "o_orderkey",
-        (F.floor(F.col("price") * 1.10 * 100) / 100).alias("price"),
-        F.lit(OP_UPSERT).alias("op"),
-    ).unionByName(
-        orders.filter(in_band & (F.pmod(k, 10) == 7)).select(
-            "o_orderkey", F.lit(None).cast("double").alias("price"), F.lit(OP_DELETE).alias("op")
+    try:
+        k = F.col("o_orderkey")
+        path = tempfile.mkdtemp(prefix="merge_rng_", dir=os.environ.get("TMPDIR", "/tmp"))
+        tbl = ParquetMergeTable(
+            spark, path, key_col="o_orderkey", bucketing="range", range_width=2000
         )
-    )
-    tbl.merge(batch)
-    orders.unpersist()
+        tbl.create(orders)
+        in_band = k.between(8000, 16000)
+        batch = orders.filter(in_band & (F.pmod(k, 5) == 0) & finite_measure("price")).select(
+            "o_orderkey",
+            (F.floor(F.col("price") * 1.10 * 100) / 100).alias("price"),
+            F.lit(OP_UPSERT).alias("op"),
+        ).unionByName(
+            orders.filter(in_band & (F.pmod(k, 10) == 7)).select(
+                "o_orderkey", F.lit(None).cast("double").alias("price"), F.lit(OP_DELETE).alias("op")
+            )
+        )
+        tbl.merge(batch)
+    finally:
+        orders.unpersist()
     return tbl.read_where("o_orderkey", 10000, 14000)
 
 
@@ -499,23 +502,25 @@ def mergetable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverges across engines)."""
     # spine persisted across create + update batch (see _merged_orders_table)
     orders = _orders_source(spark, sf_dir).persist()
-    path = tempfile.mkdtemp(prefix="evo_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
-    tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
-    tbl.create(orders)
-    tbl.rename_column("price", "unit_price")
-    k = F.col("o_orderkey")
-    updates = (
-        orders
-        .filter((F.pmod(k, F.lit(11)) == 4) & finite_measure("price"))
-        .select(
-            "o_orderkey",
-            (F.floor(F.col("price") * 1.10 * 100) / 100).alias("unit_price"),
-            F.pmod(k, F.lit(5)).cast("int").alias("qty"),
-            F.lit(OP_UPSERT).alias("op"),
+    try:
+        path = tempfile.mkdtemp(prefix="evo_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
+        tbl.create(orders)
+        tbl.rename_column("price", "unit_price")
+        k = F.col("o_orderkey")
+        updates = (
+            orders
+            .filter((F.pmod(k, F.lit(11)) == 4) & finite_measure("price"))
+            .select(
+                "o_orderkey",
+                (F.floor(F.col("price") * 1.10 * 100) / 100).alias("unit_price"),
+                F.pmod(k, F.lit(5)).cast("int").alias("qty"),
+                F.lit(OP_UPSERT).alias("op"),
+            )
         )
-    )
-    tbl.merge(updates)
-    orders.unpersist()
+        tbl.merge(updates)
+    finally:
+        orders.unpersist()
     return tbl.read().select("o_orderkey", "unit_price", "qty")
 
 
@@ -572,22 +577,24 @@ def mergetable_schema_drop_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (o_orderkey, price) is identical to _orders_source)
         .persist()
     )
-    path = tempfile.mkdtemp(prefix="dw_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
-    tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
-    tbl.create(orders)  # v1
-    tbl.drop_column("tag")  # v2: metadata-only
-    updates = (
-        orders.select("o_orderkey", "price")
-        .filter((F.pmod(k, F.lit(13)) == 6) & finite_measure("price"))
-        .select(
-            "o_orderkey",
-            (F.floor(F.col("price") * 1.05 * 100) / 100).alias("price"),
-            (F.lit(3_000_000_000) + F.pmod(k, F.lit(5))).cast("long").alias("qty"),
-            F.lit(OP_UPSERT).alias("op"),
+    try:
+        path = tempfile.mkdtemp(prefix="dw_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
+        tbl.create(orders)  # v1
+        tbl.drop_column("tag")  # v2: metadata-only
+        updates = (
+            orders.select("o_orderkey", "price")
+            .filter((F.pmod(k, F.lit(13)) == 6) & finite_measure("price"))
+            .select(
+                "o_orderkey",
+                (F.floor(F.col("price") * 1.05 * 100) / 100).alias("price"),
+                (F.lit(3_000_000_000) + F.pmod(k, F.lit(5))).cast("long").alias("qty"),
+                F.lit(OP_UPSERT).alias("op"),
+            )
         )
-    )
-    tbl.merge(updates)  # v3: widens qty int -> bigint
-    orders.unpersist()
+        tbl.merge(updates)  # v3: widens qty int -> bigint
+    finally:
+        orders.unpersist()
     changes = tbl.table_changes(1, 3).select("o_orderkey", "change_type")
     return (
         tbl.read()

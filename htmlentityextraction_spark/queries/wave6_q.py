@@ -13,8 +13,6 @@ collocations; whole-table delete/re-insert reconciliation
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -319,9 +317,7 @@ def table_diff_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # next bench invocation (cross-run caching — forbidden), while a
     # localCheckpoint is per-run by construction. Stats erasure is
     # harmless here: the only broadcast below is explicitly hinted.
-    # Kill switch for A/B: SPARK_GRAFT_TDIFF_MAT=0.
-    if os.environ.get("SPARK_GRAFT_TDIFF_MAT", "1") != "0":
-        left = left.localCheckpoint()
+    left = left.localCheckpoint()
     right = (
         left.where(F.col("o_orderkey") % 97 != 0)
         .withColumn(

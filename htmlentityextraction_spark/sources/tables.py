@@ -58,21 +58,11 @@ TABLES = (
 # Tables below _SCAN_REPART_MIN_BYTES (region/nation/supplier/part —
 # broadcast-side dimensions) are left alone even when requested:
 # repartitioning a few-KB dimension adds an exchange into every
-# broadcast build for no narrow work worth spreading.
-#
-# SPARK_GRAFT_SCAN_REPARTITION (A/B toggles): "0" = never (kill
-# switch), "all" = force the floor on every eligible table
-# (measurement arm), unset/other = respect the call site.
+# broadcast build for no narrow work worth spreading. The same constant
+# is the harness's never-fan-out arm: tools/ab_bench.py --set
+# htmlentityextraction_spark.sources.tables:_SCAN_REPART_MIN_BYTES
+# --a 1e18 puts every table under the floor.
 _SCAN_REPART_MIN_BYTES = 512 * 1024
-
-
-def _fan_out_requested(fan_out: bool) -> bool:
-    mode = os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "")
-    if mode == "0":
-        return False
-    if mode == "all":
-        return True
-    return fan_out
 
 
 def _input_bytes_and_files(path: str) -> tuple[int, int]:
@@ -94,8 +84,6 @@ def _input_bytes_and_files(path: str) -> tuple[int, int]:
 def scan_parallelism_floor(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Repartition a scan to defaultParallelism when the file layout
     provably cannot supply that many splits (see module note)."""
-    if os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "") == "0":
-        return df
     try:
         nbytes, nfiles = _input_bytes_and_files(path)
     except OSError:
@@ -134,7 +122,7 @@ def load_table(
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
-        if _fan_out_requested(fan_out):
+        if fan_out:
             df = scan_parallelism_floor(spark, df, path)
         if dict(df.dtypes).get("ts") == "bigint":
             from pyspark.sql import functions as F
@@ -144,7 +132,7 @@ def load_table(
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     df = spark.read.parquet(path)
-    if _fan_out_requested(fan_out):
+    if fan_out:
         df = scan_parallelism_floor(spark, df, path)
     return df
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.temporal import epoch_micros
@@ -663,3 +664,37 @@ def test_merge_join_strategy_gate_and_equivalence(spark, tmp_path, monkeypatch):
     # switch keeps sort-merge (also the shape a table-scale batch gets)
     assert "ShuffledHashJoin" in plan_shj and "FullOuter" in plan_shj
     assert "SortMergeJoin" in plan_smj and "ShuffledHashJoin" not in plan_smj
+
+
+def _cached_plans(spark) -> int:
+    # the CacheManager's list is private, so it is read by reflection
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "merge_incremental_orders",
+        "mergetable_pruned_range_read",
+        "mergetable_schema_evolution",
+        "mergetable_schema_drop_widen",
+    ],
+)
+def test_failed_merge_releases_the_persisted_spine(spark, sf_dir, monkeypatch, name):
+    """Each merge query persists its orders spine for the build. A
+    spine still cached after a failed merge is plan-keyed, so the next
+    run of the query would silently reuse it: the release must not
+    depend on the merge succeeding."""
+    import __spark_entry__ as entry
+
+    def failing_merge(self, *args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(inc.ParquetMergeTable, "merge", failing_merge)
+    before = _cached_plans(spark)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        entry.queries()[name](spark, sf_dir)
+    assert _cached_plans(spark) <= before

@@ -177,6 +177,15 @@ def test_tablediff_drilldown_prunes_via_broadcast_semi(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_tablediff_reads_the_deduped_left_once(spark):
+    # the deduped left is localCheckpointed before its six consumer
+    # subtrees, so the executed plan reads checkpointed RDD blocks
+    # instead of replaying the parquet scan + dedup (24 scans without)
+    plan = _plan(spark, "table_diff_reconciliation")
+    assert "Scan parquet" not in plan
+    assert "ExistingRDD" in plan
+
+
 def test_rolling_hll_no_nlj(spark):
     # the trailing window is the 7-offset sketch explode + equi
     # groupBy, never a range join

@@ -1,12 +1,13 @@
 """Contracts for the r12 scan-parallelism floor
-(sources.tables.scan_parallelism_floor): the floor is OPT-IN per call
-site (fan_out=True) because the keyless exchange costs ~1 s and only
-pays for heavy narrow work (module note in sources/tables.py). When
+(sources.tables.scan_parallelism_floor). ``load_table`` applies the
+floor exactly when a call site passes ``fan_out=True``: the keyless
+exchange costs ~1 s and only pays for heavy narrow work (module note
+in sources/tables.py), so the default stays the bare scan. When
 requested, the local single-file fixtures must fan out to
 defaultParallelism right after the read, pushdown must still reach the
-parquet scan through the repartition, and the floor must be a provable
-no-op when the layout already supplies enough splits (the 100 TB
-posture)."""
+parquet scan through the repartition, small dimensions stay unsplit,
+and the floor must be a provable no-op when the layout already supplies
+enough splits (the 100 TB posture)."""
 
 from __future__ import annotations
 
@@ -64,21 +65,6 @@ def test_floor_noop_when_layout_supplies_splits(spark, tmp_path):
     big = spark.read.parquet(src)
     out = tb.scan_parallelism_floor(spark, big, src)
     assert out is big  # untouched: no new plan node
-
-
-def test_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_REPARTITION", "0")
-    df = tb.load_table(spark, SF, "lineitem", fan_out=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_force_all_switch(spark, monkeypatch):
-    # measurement arm: every eligible table fans out even without the
-    # call-site opt-in
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_REPARTITION", "all")
-    df = tb.load_table(spark, SF, "lineitem")
-    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_events_ts_conversion_composes_with_fan_out(spark):

@@ -112,28 +112,29 @@ def test_prefix_join_hot_token_guard(spark):
         prefix_jaccard_pairs(docs, "id", "toks", 0.5, max_block_rows=10)
 
 
-def test_prefix_join_guard_screen_matches_exact(spark, monkeypatch):
+def test_prefix_join_guard_screen_matches_exact(spark):
     """r13 guard screen: count_prefix(tok) <= df(tok), so a max(df)
     reduce over the vocabulary can prove no hot block exists and skip
-    the exact per-prefix-token count job. Both arms must agree on (a)
-    the verified pair set of a clean corpus and (b) raising on a hot
-    corpus — the screen only skips the exact check when it provably
-    cannot fire."""
-    clean = _tok_df(
-        spark, [(i, [f"s{i % 3}", f"t{i % 5}", f"u{i}"]) for i in range(12)]
-    )
+    the exact per-prefix-token count job. ``max_block_rows`` selects
+    the branch. On the clean corpus (docs 100/101 duplicate docs 0/1)
+    max(df) = 5 and the largest prefix block is 3, so a cap of 10
+    takes the screen, a cap of 3 runs the exact check (which finds no
+    offender) and None skips the guard. All three must return the same
+    verified pairs, and the hot corpus must still raise: the screen
+    only skips the exact check when it provably cannot fire."""
+    rows = [(i, [f"s{i % 3}", f"t{i % 5}", f"u{i}"]) for i in range(12)]
+    clean = _tok_df(spark, rows + [(100 + i, toks) for i, toks in rows[:2]])
     hot = _tok_df(spark, [(i, ["hot", f"u{i}"]) for i in range(30)])
 
-    def pairs(arm: str):
-        monkeypatch.setenv("SPARK_GRAFT_SETSIM_GUARD", arm)
-        out = prefix_jaccard_pairs(clean, "id", "toks", 0.5, max_block_rows=10)
+    def pairs(cap):
+        out = prefix_jaccard_pairs(clean, "id", "toks", 0.5, max_block_rows=cap)
         return sorted(map(tuple, out.collect()))
 
-    assert pairs("screen") == pairs("exact")
-    for arm in ("screen", "exact"):
-        monkeypatch.setenv("SPARK_GRAFT_SETSIM_GUARD", arm)
-        with pytest.raises(HotPrefixTokenError, match="hot"):
-            prefix_jaccard_pairs(hot, "id", "toks", 0.5, max_block_rows=10)
+    screen = pairs(10)
+    assert [p[:2] for p in screen] == [(0, 100), (1, 101)]
+    assert screen == pairs(3) == pairs(None)
+    with pytest.raises(HotPrefixTokenError, match="hot"):
+        prefix_jaccard_pairs(hot, "id", "toks", 0.5, max_block_rows=10)
 
 
 # ------------------------------------------------------------------ pmi

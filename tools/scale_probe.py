@@ -16,7 +16,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,14 +43,13 @@ def main() -> None:
     ap.add_argument("--out", default="SCALE_PROBE.md")
     args = ap.parse_args()
 
+    from htmlentityextraction_spark.runner import timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
     import __spark_entry__ as entry
 
     spark = get_spark("scale-probe")
     qs = entry.queries()
-    # warm JVM + python workers once
-    spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, entry.SMOKE_SF_DIR)
 
     results: dict[str, dict[str, float]] = {}
     for name in PROBES:
@@ -60,13 +58,9 @@ def main() -> None:
         results[name] = {}
         for sf in SFS:
             sf_dir = f"/root/testdata/sf{sf}"
-            best = None
-            for _ in range(args.reps):
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            results[name][sf] = round(best, 3)
+            results[name][sf] = min(
+                timed_noop_write(lambda: qs[name](spark, sf_dir)) for _ in range(args.reps)
+            )
             print(f"# {name} sf{sf}: {results[name][sf]}s", file=sys.stderr)
 
     lines = [

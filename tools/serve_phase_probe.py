@@ -34,6 +34,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from htmlentityextraction_spark.runner import timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
     from htmlentityextraction_spark.queries.ml import _registry_rows
     from htmlentityextraction_spark.queries.serve_q import _page_messages
@@ -41,10 +42,7 @@ def main() -> None:
 
     spark = get_spark("serve-phase-probe")
     sf_dir = args.sf_dir
-
-    # same warmup as bench.py (untimed)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, sf_dir)
 
     rows = []
     try:
@@ -60,9 +58,9 @@ def main() -> None:
                 raw = spark.readStream.schema("value string").parquet(src)
                 serve.serve_stream(spark, raw, registry, out).await_done()
                 t3 = time.time()
-                df = spark.read.parquet(os.path.join(out, "historical"))
-                df.write.format("noop").mode("overwrite").save()
-                t4 = time.time()
+                readback = timed_noop_write(
+                    lambda: spark.read.parquet(os.path.join(out, "historical"))
+                )
             finally:
                 # ADVICE r12: clean up even when a run dies mid-iteration
                 shutil.rmtree(src, ignore_errors=True)
@@ -72,8 +70,8 @@ def main() -> None:
                 "registry": round(t1 - t0, 3),
                 "fixture": round(t2 - t1, 3),
                 "stream": round(t3 - t2, 3),
-                "readback": round(t4 - t3, 3),
-                "total": round(t4 - t0, 3),
+                "readback": readback,
+                "total": round(t3 - t0 + readback, 3),
             }
             rows.append(rec)
             print(f"# {rec}", file=sys.stderr)

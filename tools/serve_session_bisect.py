@@ -17,7 +17,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,20 +37,17 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from htmlentityextraction_spark.runner import timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
     import __spark_entry__ as entry
 
     spark = get_spark("serve-bisect")
     qs = entry.queries()
     sf_dir = args.sf_dir
-
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, sf_dir)
 
     def run_once(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
+        return timed_noop_write(lambda: qs[name](spark, sf_dir))
 
     out = []
 

@@ -240,6 +240,7 @@ def ann_probe() -> int:
     clear their floors when each cell/bucket holds 10x the vectors."""
     import subprocess
 
+    from htmlentityextraction_spark.runner import timed_noop_write
     from htmlentityextraction_spark.session import get_spark
     import __spark_entry__ as entry
 
@@ -249,11 +250,7 @@ def ann_probe() -> int:
     for name in ANN_PROBES:
         ts = {}
         for tag, d in (("sf0.1_s", SRC), ("sf1_s", ANN_DST)):
-            runs = []
-            for _ in range(3):
-                t0 = time.time()
-                qs[name](spark, d).write.format("noop").mode("overwrite").save()
-                runs.append(round(time.time() - t0, 2))
+            runs = [timed_noop_write(lambda: qs[name](spark, d)) for _ in range(3)]
             ts[tag] = sorted(runs)[1]
         ts["ratio_per_10x"] = round(ts["sf1_s"] / ts["sf0.1_s"], 2)
         out[name] = ts
@@ -271,6 +268,7 @@ def ann_probe() -> int:
 
 
 def probe(names: list[str] | None = None) -> None:
+    from htmlentityextraction_spark.runner import timed_noop_write
     from htmlentityextraction_spark.session import get_spark
     import __spark_entry__ as entry
 
@@ -279,11 +277,7 @@ def probe(names: list[str] | None = None) -> None:
     out = {"loadavg_1m_at_start": round(os.getloadavg()[0], 2)}
 
     def run(name: str, sf_dir: str) -> float:
-        ts = []
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.time() - t0, 2))
+        ts = [timed_noop_write(lambda: qs[name](spark, sf_dir)) for _ in range(3)]
         return sorted(ts)[1]  # median-of-3, run 1 absorbs warm-up
 
     for name in names or PROBES:
