@@ -25,10 +25,12 @@ Spark-first split of work:
 - Serving scores with the domain's idf/top-k indices and GBT margin
   (`streaming/Htmls2PredsPipe.scala:104-159`) through one kernel,
   ``selected_tfidf``, which builds only the k selected columns. The
-  serve path (`streaming/serve.py`) calls it inside its per-page
-  ``mapInArrow``; ``score_candidates`` (``mapInPandas`` with the
-  broadcast registry) and ``score_candidates_cogrouped`` are the
-  candidate-row scorers the registry queries use.
+  one production scorer is ``pick_pages``: a per-page ``mapInArrow``
+  (extract → hash → score → top-1 positive) that the serve path
+  (`streaming/serve.py`) and the registry queries (`queries/ml.py`)
+  both run. ``score_candidates`` + ``pick_model_price`` are the
+  candidate-row reference it is tested against; no production code
+  calls them.
 
 Scale note: groupBy(domain) skew (one huge domain) is the real risk at
 100 TB — cap rows per domain with a deterministic per-group limit
@@ -42,12 +44,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from htmlentityextraction_spark.functions.text import tokenize
-from htmlentityextraction_spark.operators.extraction import parse_price
+from htmlentityextraction_spark.functions.text import get_domain, tokenize
+from htmlentityextraction_spark.operators import extraction as ex
 from htmlentityextraction_spark.operators.gbt import GBTClassifier
 
 REGISTRY_SCHEMA = T.StructType(
@@ -202,7 +206,7 @@ def selected_tfidf(
 
 def _scoring_matrix(pdf: pd.DataFrame, idf: np.ndarray, indices: np.ndarray) -> np.ndarray:
     """``selected_tfidf`` of featurized candidate rows (term_ids,
-    norm_location) — the candidate-row scorers' serving matrix."""
+    norm_location) — ``score_candidates``' serving matrix."""
     rows = [np.empty(0, dtype=np.int64) if ids is None else ids for ids in pdf["term_ids"]]
     return selected_tfidf(
         np.concatenate([np.empty(0, dtype=np.int64), *rows]),
@@ -388,11 +392,96 @@ def registry_models(registry: DataFrame | list) -> dict:
     }
 
 
+# one row per page: its best positive candidate (null when none) and
+# its max prediction (-2 missing model, null without candidates)
+_PICKED = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("domain", T.StringType()),
+        T.StructField("updatedPrice", T.DoubleType()),
+        T.StructField("best", T.StringType()),
+        T.StructField("max_pred", T.IntegerType()),
+    ]
+)
+
+
+def _picked_batches(batches: Iterator[pa.RecordBatch], registry: Broadcast) -> Iterator[pa.RecordBatch]:
+    """(url, __html, page_length, domain, updatedPrice) page batches →
+    one _PICKED row per page, in input order. Per batch, the candidates
+    of all its pages are grouped by domain so each domain's features
+    and margins are computed in one call; the best candidate is the
+    max (round(margin, 9), candidate) among positive ones, the order
+    ``pick_model_price`` uses."""
+    for batch in batches:
+        models = registry.value
+        best_key: list = [None] * batch.num_rows
+        max_pred: list = [None] * batch.num_rows
+        by_domain: dict = {}
+        for i, (html, length, domain) in enumerate(zip(
+            batch.column("__html").to_pylist(),
+            batch.column("page_length").to_pylist(),
+            batch.column("domain").to_pylist(),
+        )):
+            cands = ex.extract_candidates_py(html)
+            if not cands:
+                continue
+            if domain not in models:
+                max_pred[i] = -2
+                continue
+            pages, values, tokens, lengths, locs = by_domain.setdefault(domain, ([], [], [], [], []))
+            for c in cands:
+                toks = context_tokens(c["text_before"], c["text_after"])
+                pages.append(i)
+                values.append(c["candidate"])
+                tokens.extend(toks)
+                lengths.append(len(toks))
+                locs.append(ex.norm_location_py(c["location"], length))
+        for domain, (pages, values, tokens, lengths, locs) in by_domain.items():
+            model, idf, indices = models[domain]
+            X = selected_tfidf(term_ids_py(tokens), lengths, locs, idf, indices)
+            margin = model.margin(X)
+            for i, value, m, conf in zip(pages, values, margin.tolist(), np.round(margin, 9).tolist()):
+                if m > 0:
+                    max_pred[i] = 1
+                    if best_key[i] is None or (conf, value) > best_key[i]:
+                        best_key[i] = (conf, value)
+                elif max_pred[i] is None:
+                    max_pred[i] = 0
+        best = [None if k is None else k[1] for k in best_key]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("url"),
+                batch.column("domain"),
+                batch.column("updatedPrice"),
+                pa.array(best, pa.string()),
+                pa.array(max_pred, pa.int32()),
+            ],
+            names=_PICKED.fieldNames(),
+        )
+
+
+def pick_pages(pages: DataFrame, registry: Broadcast) -> DataFrame:
+    """The production page scorer: pages with the page-message fields
+    (url, html, updatedPrice) → one (url, domain, updatedPrice, best,
+    max_pred) row per page, from one ``mapInArrow`` over the
+    ``shrunk_pages`` projection with a broadcast ``registry_models``
+    value — the reference's one per-record map
+    (`streaming/Htmls2PredsPipe.scala:104-159`), with no shuffle.
+    ``model_price(max_pred, best)`` is the page's model price."""
+    projected = ex.shrunk_pages(
+        pages.withColumn("domain", get_domain(F.col("url"))),
+        "html", "url", "domain", "updatedPrice",
+    )
+    return projected.mapInArrow(lambda batches: _picked_batches(batches, registry), _PICKED)
+
+
 def score_candidates(cand: DataFrame, registry: DataFrame | list) -> DataFrame:
-    """mapInPandas scoring with the collected registry broadcast to
-    executors. Adds prediction (0/1), confidence (margin), and the
-    missing-model sentinel prediction = -2 (`streaming/Htmls2PredsPipe.
-    scala:146-156`)."""
+    """Candidate-row reference scorer: mapInPandas scoring with the
+    collected registry broadcast to executors. Adds prediction (0/1),
+    confidence (margin), and the missing-model sentinel prediction = -2
+    (`streaming/Htmls2PredsPipe.scala:146-156`). Tests and the
+    benchmark's trace replay call it; no production code does —
+    ``pick_pages`` scores pages in one map."""
     bc = cand.sparkSession.sparkContext.broadcast(registry_models(registry))
     out_schema = T.StructType(
         cand.schema.fields
@@ -425,60 +514,6 @@ def score_candidates(cand: DataFrame, registry: DataFrame | list) -> DataFrame:
     return cand.mapInPandas(score, out_schema)
 
 
-def score_candidates_cogrouped(cand: DataFrame, registry: DataFrame) -> DataFrame:
-    """Join-based scorer for registries too large to broadcast: the
-    registry STAYS a DataFrame, co-grouped with candidates on domain
-    (``groupBy.cogroup.applyInPandas``) — no driver collect, no
-    broadcast, model rows shuffle alongside their candidates.
-
-    Same outputs as ``score_candidates`` (equivalence-tested in
-    tests/test_models.py), different scale trade: the broadcast path
-    never shuffles candidates but holds every model on every executor
-    (fine to ~hundreds of domains — `queries/ml.py` fit_once note);
-    this path shuffles candidates once on domain and holds ONE
-    domain's model at a time, so it is the shape for ~100k+ domain
-    registries. Mega-domain skew on that shuffle is the known cost —
-    AQE skew-split applies, and the per-domain row cap used at fit
-    time (`train_per_domain` max_rows_per_domain) bounds it upstream.
-    """
-    out_schema = T.StructType(
-        cand.schema.fields
-        + [
-            T.StructField("prediction", T.IntegerType()),
-            T.StructField("confidence", T.DoubleType()),
-        ]
-    )
-
-    def score(key, cand_pdf: pd.DataFrame, reg_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return cand_pdf.assign(
-                prediction=np.array([], dtype=np.int64),
-                confidence=np.array([], dtype=np.float64),
-            )
-        pred = np.full(len(cand_pdf), -2, dtype=np.int64)
-        conf = np.zeros(len(cand_pdf), dtype=np.float64)
-        if not reg_pdf.empty:
-            row = reg_pdf.iloc[0]
-            model = GBTClassifier.from_bytes(bytes(row["model"]))
-            m = model.margin(_scoring_matrix(
-                cand_pdf,
-                np.asarray(row["idf"], dtype=np.float64),
-                np.asarray(row["indices"], dtype=np.int64),
-            ))
-            pred = (m > 0).astype(np.int64)
-            conf = m
-        out = cand_pdf.copy()
-        out["prediction"] = pred
-        out["confidence"] = np.round(conf, 9)
-        return out
-
-    return (
-        cand.groupBy("domain")
-        .cogroup(registry.groupBy("domain"))
-        .applyInPandas(score, out_schema)
-    )
-
-
 def model_price(max_pred: Column, best_candidate: Column) -> Column:
     """A page's model price from its max prediction and its best
     positive candidate: -2.0 when the domain had no model, -1.0 when
@@ -488,14 +523,16 @@ def model_price(max_pred: Column, best_candidate: Column) -> Column:
     return (
         F.when(max_pred == -2, F.lit(-2.0))
         .when(best_candidate.isNull(), F.lit(-1.0))
-        .otherwise(F.coalesce(parse_price(best_candidate), F.lit(-1.0)))
+        .otherwise(F.coalesce(ex.parse_price(best_candidate), F.lit(-1.0)))
     )
 
 
 def pick_model_price(scored: DataFrame) -> DataFrame:
-    """Per url: the highest-confidence positive candidate's numeric
-    value, with ``model_price``'s sentinels. max_by over a
-    deterministic (confidence, candidate) struct — one shuffle."""
+    """Candidate-row reference pick, paired with ``score_candidates``:
+    per url, the highest-confidence positive candidate's numeric value,
+    with ``model_price``'s sentinels. max_by over a deterministic
+    (confidence, candidate) struct — one shuffle. No production code
+    calls it."""
     agg = scored.groupBy("url", "domain").agg(
         F.max(F.when(F.col("prediction") == 1, F.struct("confidence", "candidate"))).alias("best"),
         F.max("prediction").alias("max_pred"),
@@ -504,19 +541,4 @@ def pick_model_price(scored: DataFrame) -> DataFrame:
         "url",
         "domain",
         model_price(F.col("max_pred"), F.col("best.candidate")).alias("model_price"),
-    )
-
-
-def eval_url_level(scored_with_truth: DataFrame) -> DataFrame:
-    """URL-level eval (`transform/Transformer.scala:322-337`): did the
-    selected candidate equal the page truth? Returns per-domain
-    tp/fp/fn/selected-accuracy."""
-    picked = pick_model_price(scored_with_truth)
-    truth = scored_with_truth.select("url", "domain", "price").dropDuplicates(["url", "domain"])
-    j = picked.join(truth, ["url", "domain"])
-    hit = (F.col("model_price") >= 0) & (F.abs(F.col("model_price") - F.col("price")) < 0.009)
-    return j.groupBy("domain").agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.sum(hit.cast("long")).alias("n_correct"),
-        F.round(F.avg(hit.cast("double")) + 1e-9, 6).alias("url_accuracy"),
     )

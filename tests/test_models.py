@@ -181,58 +181,6 @@ def test_registry_parquet_roundtrip_serves_identically(spark):
     shutil.rmtree(d)
 
 
-def test_spark_ml_pipeline_single_model(spark):
-    # the pure pyspark.ml path must also learn the separable toy data
-    from htmlentityextraction_spark.operators import mlpipeline as mp
-
-    cand = _toy_candidates(spark)
-    model = mp.fit_single_model(
-        cand, min_doc_freq=2, top_k=50, max_iter=5, max_depth=2
-    )
-    scored = mp.score_with_pipeline(model, cand)
-    acc = scored.select(
-        F.avg((F.col("prediction") == F.col("label").cast("double")).cast("double")).alias("a")
-    ).first().a
-    assert acc >= 0.95
-    # margin sign agrees with the prediction
-    bad = scored.filter(
-        ((F.col("confidence") > 0) & (F.col("prediction") == 0.0))
-        | ((F.col("confidence") < 0) & (F.col("prediction") == 1.0))
-    ).count()
-    assert bad == 0
-
-
-def test_cogrouped_scorer_equals_broadcast_scorer(spark):
-    """The no-broadcast scorer (registry stays distributed, cogrouped
-    on domain) must produce row-identical predictions/confidences to
-    the broadcast path — including the missing-model -2 sentinel for
-    domains the registry lacks."""
-    cand = _toy_candidates(spark)
-    feats = md.featurize_candidates(cand)
-    # train on d0.com only so d1.com exercises the sentinel path
-    reg = md.train_per_domain(
-        feats.filter(F.col("domain") == "d0.com"),
-        n_estimators=5, max_depth=2, min_doc_freq=2, min_rows=10,
-    )
-    key = ["url", "candidate", "norm_location"]
-    want = {
-        tuple(r[k] for k in key): (r.prediction, r.confidence)
-        for r in md.score_candidates(feats, reg).collect()
-    }
-    got = {
-        tuple(r[k] for k in key): (r.prediction, r.confidence)
-        for r in md.score_candidates_cogrouped(feats, reg).collect()
-    }
-    assert got == want
-    assert any(p == -2 for p, _ in got.values()), "sentinel rows must exist"
-    # and the downstream argmax pick agrees too
-    picked_b = {r.url: r.model_price
-                for r in md.pick_model_price(md.score_candidates(feats, reg)).collect()}
-    picked_c = {r.url: r.model_price
-                for r in md.pick_model_price(md.score_candidates_cogrouped(feats, reg)).collect()}
-    assert picked_c == picked_b
-
-
 def test_gbt_predict_proba_is_sigmoid_of_margin():
     # the scikit-style probability surface: sigmoid(margin), in (0,1),
     # monotone in the margin, and 0.5 exactly at the decision boundary

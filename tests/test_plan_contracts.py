@@ -9,6 +9,10 @@ import re
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
+PYTHON_NODES = (
+    r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas"
+    r"|FlatMapCoGroupsInPandas|AggregateInPandas|WindowInPandas|PythonUDTF"
+)
 
 
 def _plan(spark, name):
@@ -79,14 +83,18 @@ def test_serve_scoring_is_one_python_map_and_no_shuffle(spark):
     )
     pages = schemas.parse_page_messages(raw).filter("NOT is_corrupt")
     plan = serve.score_pages_batch(pages, [])._jdf.queryExecution().executedPlan().toString()
-    python_nodes = re.findall(
-        r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas"
-        r"|FlatMapCoGroupsInPandas|AggregateInPandas|WindowInPandas|PythonUDTF",
-        plan,
-    )
-    assert python_nodes == ["MapInArrow"]
+    assert re.findall(PYTHON_NODES, plan) == ["MapInArrow"]
     for node in ("Exchange", "Join", "Aggregate"):
         assert node not in plan
+
+
+def test_model_score_pick_price_scores_through_the_page_map(spark):
+    # the registry query scores with the serve path's page scorer: one
+    # mapInArrow is the plan's only Python node, no candidate-row
+    # mapInPandas scorer
+    plan = _plan(spark, "model_score_pick_price")
+    assert re.findall(PYTHON_NODES, plan) == ["MapInArrow"]
+    assert "MapInPandas" not in plan
 
 
 def test_whole_stage_codegen_present(spark):

@@ -5,7 +5,7 @@ times each phase separately, N consecutive runs in ONE session, to
 attribute the bench's warm-up tail (fresh benches decay
 12.9 -> 8.9 -> 7.6 s across the median-of-3) to a phase:
 
-  registry  — _registry_rows (fit_once cache: run 1 only)
+  registry  — ml.fit_once (registry cache: run 1 only)
   fixture   — _page_messages write to parquet (incl. keyfuzz dedup)
   stream    — serve_stream availableNow start->done
   readback  — read historical/ + noop write (the bench's timed action)
@@ -36,7 +36,7 @@ def main() -> None:
 
     from htmlentityextraction_spark.runner import timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
-    from htmlentityextraction_spark.queries.ml import _registry_rows
+    from htmlentityextraction_spark.queries.ml import fit_once
     from htmlentityextraction_spark.queries.serve_q import _page_messages
     from htmlentityextraction_spark.streaming import serve
 
@@ -48,7 +48,7 @@ def main() -> None:
     try:
         for i in range(args.runs):
             t0 = time.time()
-            registry = _registry_rows(spark, sf_dir)
+            registry = fit_once(spark, sf_dir)
             t1 = time.time()
             src = tempfile.mkdtemp(prefix="serve_probe_src_")
             out = tempfile.mkdtemp(prefix="serve_probe_out_")

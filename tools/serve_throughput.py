@@ -101,11 +101,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from htmlentityextraction_spark.session import get_spark
-    from htmlentityextraction_spark.queries.ml import _registry_rows
+    from htmlentityextraction_spark.queries.ml import fit_once
 
     spark = get_spark("serve-throughput")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    registry_rows = _registry_rows(spark, args.sf_dir)
+    registry_rows = fit_once(spark, args.sf_dir)
 
     results = {}
     for kind in ("tiny", "text", "digit"):
