@@ -33,18 +33,8 @@ of the LLM-training-data extension surface (SURVEY.md §6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _persistent_rdds(spark: SparkSession) -> dict:
-    """Snapshot of the JVM's persistent-RDD registry: {id: JavaRDD}.
-    ``localCheckpoint`` persists its internal RDD outside the SQL
-    cache manager, so this map is where its blocks show up; the
-    storage-bound tests assert against it. (No longer used to TRACK
-    checkpoints — see ``_checkpoint_round``.)"""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(e.getKey()): e.getValue() for e in jmap.entrySet().toArray()}
 
 
 def _checkpoint_round(

@@ -159,22 +159,7 @@ def advance_dedup_index(
       land in.
     """
     ch = corpus_tbl.table_changes(from_version, to_version)
-    return _apply_dedup_feed(
-        index_tbl, ch, fp_col, id_col, f"versions ({from_version}, {to_version}]"
-    )
-
-
-def _apply_dedup_feed(
-    index_tbl, ch: DataFrame, fp_col: str, id_col: str, window_desc: str
-) -> dict:
-    """Net one ENDPOINT-EXACT change feed (adjacent or batch
-    ``table_changes`` — one row per key whose state differs between
-    the window's two endpoint snapshots) into the fingerprint index:
-    the shared core of batch ``advance_dedup_index`` and the
-    per-trigger streaming consumer ``dedup_index_stream_sink``.
-    Idempotent under replay: re-upserting an existing (fp → doc)
-    mapping and re-deleting an absent fp are both no-ops, so a
-    restarted stream re-applying a version step converges."""
+    window_desc = f"versions ({from_version}, {to_version}]"
     old_fp, new_fp = f"old_{fp_col}", f"new_{fp_col}"
     # NULL fingerprints never enter the index (a fp-less doc indexes
     # nothing, retires nothing): without the filters, two null-fp docs
@@ -281,195 +266,6 @@ def dedup_batch_against_index(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col, "fingerprint")
     )
-
-
-def dedup_index_stream_sink(index_tbl, *, fp_col: str = "fingerprint", id_col: str = "doc_id"):
-    """``foreachBatch`` consumer that keeps the fingerprint index
-    CURRENT from the corpus table's live change stream — the streaming
-    half of ``advance_dedup_index`` (which is batch-invoked between
-    two pinned versions). Wire it to the CDC source
-    (`sources/mergetable_cdc_source.py`)::
-
-        spark.readStream.format("mergetable-cdc")
-            .option("path", corpus_dir).load()
-            .writeStream.foreachBatch(dedup_index_stream_sink(index_tbl))
-            .option("checkpointLocation", ck).start()
-
-    and the loop from "corpus merge commits" to "index current" closes
-    with no batch job. Per micro-batch, the feed is applied ONE
-    VERSION STEP AT A TIME in commit order (a multi-version batch may
-    contain a doc inserted in one step and deleted in the next —
-    netting the steps together would resurrect the intermediate
-    state; each adjacent step is endpoint-exact, so the shared
-    ``_apply_dedup_feed`` netting and its loud invariant checks apply
-    unchanged). ``foreachBatch`` runs on the driver, so the table
-    handle is used directly.
-
-    Restart replays are handled with a SYNC WATERMARK persisted in
-    the index table's directory (Delta's txn-version idempotent-sink
-    pattern): after each applied step the watermark advances
-    atomically, and a replayed batch skips every step at or below it.
-    Re-applying one step (crash between apply and watermark write) is
-    idempotent; skipping fully-applied steps is what makes the replay
-    SAFE against the cross-window duplicate check — without it, a
-    replayed step that an already-applied LATER step superseded (fp
-    moved to a new doc) would read as an unprobed duplicate and wedge
-    the stream. Mid-stream corpus schema evolution inherits the
-    SOURCE's fail-loud contract — the stream dies at ``partitions()``
-    before this sink ever sees a mixed-schema batch."""
-    import json as _json
-    import os as _os
-
-    wm_file = _os.path.join(index_tbl.path, "_dedup_sync.json")
-
-    def _watermark() -> int:
-        try:
-            with open(wm_file) as f:
-                return int(_json.load(f)["applied_through"])
-        except (OSError, ValueError, KeyError):
-            return 0
-
-    def _advance_watermark(v: int) -> None:
-        tmp = wm_file + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"applied_through": v}, f)
-        _os.replace(tmp, wm_file)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()  # one source scan, not one per version step
-        try:
-            versions = sorted(
-                r["_commit_version"]
-                for r in batch.select("_commit_version").distinct().collect()
-            )
-            applied = _watermark()
-            for v in versions:
-                if v <= applied:
-                    continue  # restart replay of an already-applied step
-                step = batch.filter(F.col("_commit_version") == v)
-                _apply_dedup_feed(
-                    index_tbl, step, fp_col, id_col, f"version step {v}"
-                )
-                _advance_watermark(v)
-        finally:
-            batch.unpersist()
-
-    return _apply
-
-
-def semantic_admission_merge_sink(
-    corpus_tbl,
-    *,
-    block_col: str,
-    threshold: float = 0.35,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-):
-    """``foreachBatch`` consumer closing the SEMANTIC admission loop —
-    the embedding-level twin of ``dedup_index_stream_sink``'s exact-
-    fingerprint loop. Per micro-batch of candidate documents:
-
-    1. probe the LIVE corpus snapshot
-       (`similarity.admission_best_match`: batch broadcast, corpus
-       scanned once and block-pruned, never shuffled),
-    2. resolve WITHIN-batch near-dups among the corpus survivors with
-       sequential-arrival semantics — ascending-id greedy per block: a
-       doc is rejected iff it matches an EARLIER **admitted** doc
-       (docs the corpus already rejected veto nothing), an exact
-       O(k²)-per-block pass that is micro-batch-sized by construction,
-    3. upsert only the admitted docs into the corpus table, so the
-       NEXT trigger's probe sees them.
-
-    Restart replays are idempotent WITHOUT a sync watermark (unlike
-    the fingerprint sink, which must replay version-stepped deletes): a
-    replayed doc that was admitted finds ITSELF in the corpus —
-    same id, cosine 1.0 — and is re-rejected, and re-upserting an
-    identical row would be a CDC no-op anyway; a replayed doc that was
-    rejected deterministically re-rejects. Corrupt vectors are dropped
-    at the probe boundary and never reach the corpus. Arrivals are
-    insert-only candidates: a re-crawl UPDATE of an existing doc is a
-    merge-table operation, not an admission question.
-
-    Block key is the corpus's blocking column (label on the fixture,
-    the LSH bucket / IVF cell at 100 TB — the same trade the batch
-    query documents)."""
-    import numpy as np
-    import pandas as pd
-
-    from htmlentityextraction_spark.operators.similarity import (
-        _round6,
-        admission_best_match,
-    )
-
-    def _greedy_within(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) < 2:
-            return pdf
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        # Vectors compare only within their own dimensionality: a
-        # mixed-dim pair has no defined cosine (the JVM path's
-        # zip_with yields NULL and no veto — mirror that instead of
-        # crashing a vstack over ragged rows). Zero vectors match
-        # nothing and veto nothing.
-        kept_by_dim: dict[int, list] = {}
-        kept_idx: list[int] = []
-        for i, raw in enumerate(pdf[vec_col]):
-            v = np.asarray(raw, dtype=np.float64)
-            n = np.linalg.norm(v)
-            u = v / n if n > 0 else None
-            peers = kept_by_dim.get(v.shape[0])
-            if (
-                u is not None
-                and peers
-                and (_round6(np.stack(peers) @ u) >= threshold).any()
-            ):
-                continue
-            kept_idx.append(i)
-            if u is not None:
-                kept_by_dim.setdefault(v.shape[0], []).append(u)
-        return pdf.iloc[kept_idx]
-
-    def _corpus_for(batch: DataFrame) -> DataFrame:
-        """The corpus snapshot the probe scans. When the table tracks
-        zone-map stats on the block column (create it with
-        ``stats_cols=[block_col]`` and keep it OPTIMIZE-ZORDERed by
-        block), each trigger reads ONLY the buckets whose block range
-        intersects the batch's blocks — manifest-level pruning via
-        ``read_where_in``, the O(touched blocks) shape; the batch's
-        distinct-block collect is micro-batch-bounded. Otherwise fall
-        back to the full snapshot (the isin pushdown still prunes
-        row-groups inside files, but every file is listed)."""
-        if block_col not in (getattr(corpus_tbl, "stats_cols", None) or []):
-            return corpus_tbl.read()
-        blocks = [
-            r["_b"]
-            for r in batch.select(F.col(block_col).alias("_b")).distinct().collect()
-            if r["_b"] is not None
-        ]
-        if not blocks:
-            return corpus_tbl.read()
-        # ONE manifest pass + ONE scan however many blocks the batch
-        # touches (a per-block read_where union degenerates to
-        # |blocks| manifest probes + plans once block cardinality
-        # grows past a handful).
-        return corpus_tbl.read_where_in(block_col, blocks)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        corpus = _corpus_for(batch).select(id_col, block_col, vec_col)
-        verdict = admission_best_match(
-            corpus, batch, block_col=block_col, threshold=threshold,
-            id_col=id_col, vec_col=vec_col,
-        )
-        survivors = batch.join(
-            verdict.filter(F.col("admitted")).select(id_col), id_col
-        )
-        admitted = survivors.groupBy(block_col).applyInPandas(
-            _greedy_within, survivors.schema
-        )
-        if admitted.isEmpty():
-            return
-        corpus_tbl.merge(admitted.withColumn("op", F.lit("upsert")))
-
-    return _apply
 
 
 def segment_dedup_keep_first(

@@ -1,13 +1,8 @@
-"""Incremental batch processing with a persisted high-watermark —
-the reference's re-run pattern (`analytics/UpdateProdMetrics.scala:102`
-reads `tmsp > ?` from the last run; `analytics/CalcIndices.scala:68`
-likewise) made explicit: each run processes only rows newer than the
-stored watermark, then advances it atomically (write-new + rename).
-
-At 100 TB this is the batch complement to Structured Streaming
-checkpoints: time-partitioned tables + watermark filter = partition
-pruning does the skipping, so an incremental run's scan cost is the
-new data only.
+"""Incremental batch processing over a copy-on-write MERGE table
+(SURVEY K3/K8 upsert + anti-upsert): ``ParquetMergeTable`` keeps
+key-bucketed parquet under an atomic manifest, so a trickle merge
+rewrites only the buckets its keys land in, and ``table_changes``
+reads the change feed between two versions from the manifest diff.
 """
 
 from __future__ import annotations
@@ -19,44 +14,6 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def read_watermark(state_dir: str, default: str = "1970-01-01 00:00:00") -> str:
-    p = os.path.join(state_dir, "watermark.json")
-    if not os.path.exists(p):
-        return default
-    with open(p) as f:
-        return json.load(f)["watermark"]
-
-
-def write_watermark(state_dir: str, value: str) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, "watermark.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"watermark": value}, f)
-    os.replace(tmp, os.path.join(state_dir, "watermark.json"))
-
-
-def incremental_run(
-    df: DataFrame,
-    ts_col: str,
-    state_dir: str,
-    process,
-):
-    """Filter to rows strictly newer than the stored watermark, apply
-    `process(new_rows) -> result`, advance the watermark to the max
-    processed timestamp. Returns (result, n_new). Idempotent when no
-    new data arrives (n_new == 0 → process not called)."""
-    wm = read_watermark(state_dir)
-    new_rows = df.filter(F.col(ts_col) > F.lit(wm).cast("timestamp"))
-    stats = new_rows.agg(
-        F.count("*").alias("n"), F.max(ts_col).alias("mx")
-    ).first()
-    if stats["n"] == 0:
-        return None, 0
-    result = process(new_rows)
-    write_watermark(state_dir, str(stats["mx"]))
-    return result, stats["n"]
 
 
 # ---------------------------------------------------------------------------

@@ -16,12 +16,10 @@ Design for scale:
   doc_id and sized so one task's payload batch fits executor memory
   (metadata.n_bytes enables size-aware repartitioning before the UDF).
 
-STUB NOTE: the actual codecs (PIL/libav/ffmpeg) are NOT in this
-container. ``decode_payload`` uses a deterministic fake decode
-(numpy frombuffer → shaped uint8 array) so every schema, batch shape,
-and partition behavior is real and tested; ``decode_with_codec`` is
-the gated entry point that raises NotImplementedError until a codec
-library is installed.
+STUB NOTE: no image/audio/video codec is wired in. ``decode_payload``
+uses a deterministic fake decode (numpy frombuffer → shaped uint8
+array) so every schema, batch shape, and partition behavior is real
+and tested.
 """
 
 from __future__ import annotations
@@ -30,7 +28,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,222 +82,6 @@ def decode_payload(payload: bytes, width: int) -> np.ndarray:
     arr = np.frombuffer(payload, dtype=np.uint8)
     h = len(arr) // width
     return arr[: h * width].reshape(h, width)
-
-
-def _decode_netpbm(payload: bytes) -> np.ndarray:
-    """Pure-stdlib decode of binary netpbm images: P5 (grayscale) →
-    (H, W), P6 (RGB) → (H, W, 3), uint8. Real parsing of a real
-    on-disk format (magic, #-comments, token whitespace, maxval),
-    not a stand-in — it is the codec path that runs in codec-less
-    containers."""
-    magic = payload[:2]
-    pos = 2
-    tokens: list[int] = []
-    while len(tokens) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":  # comment to end-of-line
-            while pos < len(payload) and payload[pos] not in (10, 13):
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        tokens.append(int(payload[start:pos]))
-    pos += 1  # exactly one whitespace separates the header from pixels
-    width, height, maxval = tokens
-    if maxval > 255:
-        raise NotImplementedError("16-bit netpbm not supported")
-    channels = 3 if magic == b"P6" else 1
-    n = width * height * channels
-    arr = np.frombuffer(payload, dtype=np.uint8, count=n, offset=pos)
-    return arr.reshape((height, width, 3) if channels == 3 else (height, width))
-
-
-def encode_netpbm(arr: np.ndarray) -> bytes:
-    """uint8 array → binary netpbm bytes: (H, W) → P5, (H, W, 3) → P6.
-    The fixture-side twin of ``_decode_netpbm`` (round-trip tested)."""
-    if arr.ndim == 2:
-        magic = b"P5"
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        magic = b"P6"
-    else:
-        raise ValueError(f"expected (H,W) or (H,W,3), got {arr.shape}")
-    h, w = arr.shape[:2]
-    return magic + f"\n{w} {h}\n255\n".encode() + arr.astype(np.uint8).tobytes()
-
-
-def _decode_bmp(payload: bytes) -> np.ndarray:
-    """Pure-stdlib decode of uncompressed 24-bit BMP → (H, W, 3)
-    RGB uint8 (rows are stored bottom-up and BGR, padded to 4
-    bytes — all handled here)."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (data_offset,) = struct.unpack_from("<I", payload, 10)
-    width, height = struct.unpack_from("<ii", payload, 18)
-    (bpp,) = struct.unpack_from("<H", payload, 28)
-    (compression,) = struct.unpack_from("<I", payload, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(f"only uncompressed 24-bit BMP (got {bpp}bpp)")
-    bottom_up = height > 0
-    height = abs(height)
-    row_stride = (width * 3 + 3) & ~3  # rows pad to 4-byte boundaries
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=row_stride * height, offset=data_offset
-    ).reshape(height, row_stride)[:, : width * 3].reshape(height, width, 3)
-    if bottom_up:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR → RGB
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+alpha, RGBA
-
-
-def _decode_png(payload: bytes) -> np.ndarray:
-    """Pure-stdlib decode of 8-bit non-interlaced PNG → uint8 array:
-    grayscale → (H, W), gray+alpha → (H, W, 2), RGB → (H, W, 3),
-    RGBA → (H, W, 4). Real format parsing — chunk walk, zlib
-    inflate, and all five scanline filters (None/Sub/Up/Average/
-    Paeth) inverted per the PNG spec — so compressed-image decode
-    runs with no codec library. Interlaced, paletted, and non-8-bit
-    depths stay PIL-gated."""
-    import struct
-    import zlib
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat = 8, None, bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    width, height, depth, color_type, compression, filter_method, interlace = ihdr
-    if depth != 8 or interlace != 0 or color_type not in _PNG_CHANNELS:
-        raise NotImplementedError(
-            f"only 8-bit non-interlaced gray/RGB(A) PNG in-process "
-            f"(depth={depth} color_type={color_type} interlace={interlace}); "
-            "others dispatch to PIL"
-        )
-    if compression != 0 or filter_method != 0:
-        raise ValueError("invalid PNG compression/filter method")
-    bpp = _PNG_CHANNELS[color_type]  # bytes per pixel at depth 8
-    stride = width * bpp
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != (stride + 1) * height:
-        raise ValueError("PNG pixel data length mismatch")
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ftype == 0:  # None
-            pass
-        elif ftype == 1:  # Sub: cumulative per bpp-lane, mod 256
-            for x in range(bpp, stride):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            row = bytearray((np.frombuffer(bytes(row), np.uint8) + prev).tobytes())
-        elif ftype == 3:  # Average
-            for x in range(stride):
-                left = row[x - bpp] if x >= bpp else 0
-                row[x] = (row[x] + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for x in range(stride):
-                a = row[x - bpp] if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (row[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"invalid PNG filter type {ftype}")
-        out[y] = np.frombuffer(bytes(row), np.uint8)
-        prev = out[y]
-    return out.reshape((height, width) if bpp == 1 else (height, width, bpp))
-
-
-def encode_png(arr: np.ndarray) -> bytes:
-    """uint8 array → PNG bytes (8-bit, non-interlaced, filter 0 rows):
-    (H, W) → grayscale, (H, W, 2) → gray+alpha, (H, W, 3) → RGB,
-    (H, W, 4) → RGBA. The fixture-side twin of ``_decode_png``
-    (round-trip tested)."""
-    import struct
-    import zlib
-
-    bpp = 1 if arr.ndim == 2 else arr.shape[2]
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}.get(bpp)
-    if arr.dtype != np.uint8 or arr.ndim not in (2, 3) or color_type is None:
-        raise ValueError(f"expected uint8 (H,W[,2|3|4]), got {arr.dtype} {arr.shape}")
-    h, w = arr.shape[:2]
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        body = ctype + data
-        return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_with_codec(payload: bytes, media_type: str) -> np.ndarray:
-    """Real-codec decode of an ENCODED image payload, returning the
-    pixel array (H, W[, C]) as uint8.
-
-    Stdlib codecs run everywhere: binary netpbm (P5/P6), uncompressed
-    24-bit BMP, and 8-bit non-interlaced gray/RGB(A) PNG (zlib inflate
-    + all five scanline filters) are parsed in-process
-    (magic-dispatched, round-trip tested in
-    tests/test_multimodal_codec.py with no library gate). Exotic PNGs
-    (interlaced/paletted/16-bit) and JPEG dispatch to PIL
-    and stay gated on its availability; audio/video stay gated until
-    a matching codec lib exists. Either way the Spark-side plumbing
-    (mapInPandas batching, schema, partitioning) is identical to the
-    deterministic stand-in ``decode_payload`` the 4 multimodal
-    queries exercise.
-    """
-    if media_type != "image":
-        raise NotImplementedError(
-            f"no codec wired for media_type={media_type!r}; only image "
-            "decode has codec integrations (netpbm/BMP stdlib, PNG/JPEG via PIL)"
-        )
-    if payload[:2] in (b"P5", b"P6"):
-        return _decode_netpbm(payload)
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        try:
-            return _decode_png(payload)
-        except NotImplementedError:
-            pass  # interlaced/paletted/16-bit → fall through to PIL
-    try:
-        import PIL.Image
-    except ImportError as exc:
-        raise NotImplementedError(
-            "no codec library in this environment; decode_payload provides "
-            "the deterministic stand-in"
-        ) from exc
-    import io
-
-    with PIL.Image.open(io.BytesIO(payload)) as img:
-        return np.asarray(img.convert("L") if img.mode == "1" else img).astype(np.uint8)
 
 
 FEATURE_SCHEMA = T.StructType(

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import persistent_rdd_ids
 from htmlentityextraction_spark.operators import components as cc
 
 
@@ -72,9 +73,9 @@ def test_checkpoint_storage_bounded_across_rounds(spark):
     short = _pairs(spark, [(1, 2)])
 
     def leftover(pairs) -> int:
-        before = set(cc._persistent_rdds(spark))
+        before = persistent_rdd_ids(spark)
         cc.connected_components(pairs).collect()
-        return len(set(cc._persistent_rdds(spark)) - before)
+        return len(persistent_rdd_ids(spark) - before)
 
     assert leftover(long_chain) == leftover(short)
 

@@ -1,6 +1,6 @@
 """Round-8 merge-table evolution surface: column DROP (metadata-only,
-column-mapping model), type WIDENING through MERGE, both through CDC
-and the streaming CDC source, plus the commit-path crash matrix —
+column-mapping model), type WIDENING through MERGE, both through CDC,
+plus the commit-path crash matrix —
 every pre-swap failure residue must leave readers on an intact
 snapshot and a retried commit must converge."""
 
@@ -16,14 +16,6 @@ from htmlentityextraction_spark.operators.incremental import (
     ConcurrentWriteError,
     ParquetMergeTable,
 )
-from htmlentityextraction_spark.sources.mergetable_cdc_source import (
-    MergeTableCDCDataSource,
-)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register(spark):
-    spark.dataSource.register(MergeTableCDCDataSource)
 
 
 def _mk(spark, path, n=12, **kw):
@@ -247,96 +239,6 @@ def test_widening_invalidates_stale_blooms_on_untouched_buckets(spark, tmp_path)
         assert got == [probe // 10], f"qty={probe} lookup lost after widening"
 
 
-# ----------------------------------------------------- streaming CDC source
-
-
-def test_cdc_stream_fails_loud_on_midstream_drop(spark, tmp_path):
-    import time
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    d, out = str(tmp_path / "tbl"), str(tmp_path / "out")
-    tbl = _mk(spark, d, n=6)  # v1
-    q = (
-        spark.readStream.format("mergetable-cdc")
-        .option("path", d)
-        .option("startingVersion", "1")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out, "data"))
-        .option("checkpointLocation", os.path.join(out, "_ck"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    for _ in range(120):
-        time.sleep(0.5)
-        try:
-            if spark.read.parquet(os.path.join(out, "data")).count() >= 6:
-                break
-        except Exception:
-            pass
-    else:
-        raise AssertionError("bootstrap batch never committed")
-    tbl.drop_column("tag")  # metadata-only evolution mid-stream
-    tbl.merge(
-        spark.createDataFrame([(1, 11.0, "upsert")], "k long, price double, op string")
-    )
-    with pytest.raises(StreamingQueryException, match="restart the stream"):
-        q.awaitTermination(120)
-    # a restarted reader pins the POST-drop schema (no _tag columns)
-    restarted = spark.readStream.format("mergetable-cdc").option("path", d).load()
-    assert not [c for c in restarted.columns if c.endswith("_tag")]
-    # restart into the same sink/checkpoint: resumes at the committed
-    # offset and emits the post-drop change rows. The Python-source
-    # availableNow fallback processes ONE batch per start, and the
-    # failed trigger may have pinned its batch at the drop commit
-    # alone — drain until the feed catches up to the merge.
-    for _ in range(3):
-        q2 = (
-            restarted.writeStream.format("parquet")
-            .option("path", os.path.join(out, "data"))
-            .option("checkpointLocation", os.path.join(out, "_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(180)
-    got = spark.read.option("mergeSchema", "true").parquet(os.path.join(out, "data"))
-    upd = [r for r in got.collect() if r.change_type == "update"]
-    assert {(r.k, r.old_price, r.new_price) for r in upd} == {(1, 1.0, 11.0)}
-    # the post-restart batch carries no tag payload (bootstrap files
-    # may still hold the columns; the update row must not)
-    if "old_tag" in got.columns:
-        assert upd[0].old_tag is None and upd[0].new_tag is None
-
-
-def test_cdc_stream_replay_across_drop_projects_to_pinned_schema(spark, tmp_path):
-    d, out = str(tmp_path / "tbl"), str(tmp_path / "out")
-    tbl = _mk(spark, d, n=4)  # v1
-    tbl.merge(
-        spark.createDataFrame(
-            [(0, 10.0, "x0", "upsert")], "k long, price double, tag string, op string"
-        )
-    )  # v2
-    tbl.drop_column("tag")  # v3
-    # stream started AFTER the drop replays history WITHOUT the column
-    q = (
-        spark.readStream.format("mergetable-cdc")
-        .option("path", d)
-        .option("startingVersion", "1")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out, "data"))
-        .option("checkpointLocation", os.path.join(out, "_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(os.path.join(out, "data"))
-    assert not [c for c in got.columns if c.endswith("_tag")]
-    upd = [r for r in got.collect() if r.change_type == "update"]
-    assert {(r.k, r.old_price, r.new_price) for r in upd} == {(0, 0.0, 10.0)}
-
-
 # ------------------------------------------------------------ crash matrix
 
 
@@ -444,50 +346,6 @@ def test_vacuum_spares_inflight_staging_and_removes_orphans(spark, tmp_path):
     tbl.commit(staged)
     assert {r.k: r.price for r in tbl.read().collect()}[2] == 22.0
     assert tbl.verify_integrity()["ok"]
-
-
-def test_cdc_stream_replay_across_widening_boundary(spark, tmp_path):
-    # history written at int/float types, stream started AFTER the
-    # widening pins the wide schema: replayed narrow rows must arrive
-    # upcast (pyarrow hands the executor ints/floats; Spark's row
-    # converter lands them in the pinned long/double fields)
-    d, out = str(tmp_path / "tbl"), str(tmp_path / "out")
-    tbl = ParquetMergeTable(spark, d, "k", num_buckets=4)
-    tbl.create(
-        spark.createDataFrame([(i, i * 10, float(i)) for i in range(4)],
-                              "k long, qty int, score float")
-    )  # v1 (narrow)
-    tbl.merge(
-        spark.createDataFrame([(1, 111, 1.5, "upsert")],
-                              "k long, qty int, score float, op string")
-    )  # v2 (still narrow)
-    tbl.merge(
-        spark.createDataFrame([(2, 3_000_000_000, 2.5, "upsert")],
-                              "k long, qty long, score double, op string")
-    )  # v3: widens qty->bigint, score->double
-    q = (
-        spark.readStream.format("mergetable-cdc")
-        .option("path", d)
-        .option("startingVersion", "1")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out, "data"))
-        .option("checkpointLocation", os.path.join(out, "_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(os.path.join(out, "data"))
-    assert dict(got.dtypes)["new_qty"] == "bigint"
-    assert dict(got.dtypes)["new_score"] == "double"
-    rows = {(r.k, r.change_type): r for r in got.collect()}
-    # v2's narrow-history update arrives upcast under the wide schema
-    assert rows[(1, "update")].new_qty == 111
-    assert abs(rows[(1, "update")].new_score - 1.5) < 1e-9
-    # v3's widening update carries the beyond-int value
-    assert rows[(2, "update")].new_qty == 3_000_000_000
-    # v1 bootstrap inserts replay fine too
-    assert rows[(3, "insert")].new_qty == 30
 
 
 def test_snapshots_lists_retained_tail_after_vacuum(spark, tmp_path):

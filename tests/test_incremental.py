@@ -1,45 +1,14 @@
-"""High-watermark incremental processing + per-domain skew-cap
+"""Copy-on-write merge-table behavior + per-domain skew-cap
 behavior."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.temporal import epoch_micros
+from conftest import cached_plans
 from htmlentityextraction_spark.operators import incremental as inc
 from htmlentityextraction_spark.operators import models as md
-
-
-def test_incremental_runs_process_only_new_rows(spark):
-    state = tempfile.mkdtemp(prefix="wm_state_")
-    from htmlentityextraction_spark.sources.tables import load_table
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    cut = ev.agg(
-        F.timestamp_micros(
-            F.percentile(epoch_micros("ts"), F.lit(0.5)).cast("long")
-        ).alias("p")
-    ).first().p
-
-    counts = []
-    def process(rows):
-        n = rows.count()
-        counts.append(n)
-        return n
-
-    # first run with watermark preset to the median: only newer half
-    inc.write_watermark(state, str(cut))
-    _, n1 = inc.incremental_run(ev, "ts", state, process)
-    assert 0 < n1 < 1000
-    # second run: watermark advanced to max ts -> nothing new, process
-    # must NOT be called
-    res, n2 = inc.incremental_run(ev, "ts", state, process)
-    assert n2 == 0 and res is None
-    assert len(counts) == 1
-    shutil.rmtree(state)
 
 
 def test_train_per_domain_caps_mega_domains(spark):
@@ -666,14 +635,6 @@ def test_merge_join_strategy_gate_and_equivalence(spark, tmp_path, monkeypatch):
     assert "SortMergeJoin" in plan_smj and "ShuffledHashJoin" not in plan_smj
 
 
-def _cached_plans(spark) -> int:
-    # the CacheManager's list is private, so it is read by reflection
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    field = cm.getClass().getDeclaredField("cachedData")
-    field.setAccessible(True)
-    return field.get(cm).size()
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -694,7 +655,7 @@ def test_failed_merge_releases_the_persisted_spine(spark, sf_dir, monkeypatch, n
         raise RuntimeError("merge failed")
 
     monkeypatch.setattr(inc.ParquetMergeTable, "merge", failing_merge)
-    before = _cached_plans(spark)
+    before = cached_plans(spark)
     with pytest.raises(RuntimeError, match="merge failed"):
         entry.queries()[name](spark, sf_dir)
-    assert _cached_plans(spark) <= before
+    assert cached_plans(spark) <= before

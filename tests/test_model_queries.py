@@ -6,6 +6,7 @@ the same from a cold fit."""
 from __future__ import annotations
 
 import __spark_entry__ as entry
+from conftest import persistent_rdd_ids
 from htmlentityextraction_spark.queries import ml
 
 MODEL_QUERIES = (
@@ -17,20 +18,16 @@ MODEL_QUERIES = (
 )
 
 
-def _persistent_rdds(spark) -> int:
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
-
-
 def test_model_queries_leave_nothing_persisted(spark, sf_dir):
     # start from an empty cache: other tests share this session
     spark.catalog.clearCache()
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist(True)
-    assert _persistent_rdds(spark) == 0
+    assert not persistent_rdd_ids(spark)
     for name in MODEL_QUERIES:
         entry.queries()[name](spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert _persistent_rdds(spark) == 0
+    assert not persistent_rdd_ids(spark)
 
 
 def test_fit_once_cold_path_retrains_the_same_registry(spark, sf_dir, monkeypatch):

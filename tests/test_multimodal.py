@@ -1,11 +1,10 @@
 """Tests for the multimodal column layer: fake-decode shapes, frame
-chunking, codec gating, and the column-pruning contract (metadata
-queries must not read payload bytes)."""
+chunking, and the column-pruning contract (metadata queries must not
+read payload bytes)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators import multimodal as mm
@@ -32,11 +31,6 @@ def test_decode_payload_shape_and_content():
     assert img[0, 0] == ord("a") and img[2, 3] == ord("l")
     # trailing bytes that don't fill a row are dropped
     assert mm.decode_payload(b"abcdefghij", width=4).shape == (2, 4)
-
-
-def test_decode_with_codec_is_gated():
-    with pytest.raises(NotImplementedError):
-        mm.decode_with_codec(b"xx", "image")
 
 
 def test_resize_halves_dimensions(spark):

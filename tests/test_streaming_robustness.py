@@ -11,7 +11,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.operators import maintenance as mt
 
 
 def _write_batches(spark, src, n_files=4, rows_per=250):
@@ -61,20 +60,6 @@ def test_multi_microbatch_and_restart_exactly_once(spark):
     assert total == 500 + 1000
     assert dup == 0
     shutil.rmtree(src); shutil.rmtree(ckpt); shutil.rmtree(sink)
-
-
-def test_compact_reduces_file_count(spark):
-    d = tempfile.mkdtemp(prefix="compact_")
-    # 32 tiny files
-    spark.range(10_000).withColumn("v", F.rand(7)).repartition(32).write.mode(
-        "overwrite"
-    ).parquet(d)
-    before, after = mt.compact_parquet_dir(spark, d, target_file_mb=128)
-    assert before == 32
-    assert after < before
-    # data preserved
-    assert spark.read.parquet(d + ".compact").count() == 10_000
-    shutil.rmtree(d); shutil.rmtree(d + ".compact")
 
 
 def test_processing_time_trigger_and_stop(spark):

@@ -280,18 +280,16 @@ def test_pagerank_checkpoint_storage_bounded(spark):
     # round's aggregate), independent of the iteration count. Before
     # the r8 fix every round's blocks accumulated for the whole loop
     # (sf1 probe: GC-locker retries on the single JVM).
-    from htmlentityextraction_spark.operators.components import (
-        _persistent_rdds,
-    )
+    from conftest import persistent_rdd_ids
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "src long, dst long"
     )
 
     def leftover(iters: int) -> int:
-        before = set(_persistent_rdds(spark))
+        before = persistent_rdd_ids(spark)
         pagerank(edges, iterations=iters).collect()
-        return len(set(_persistent_rdds(spark)) - before)
+        return len(persistent_rdd_ids(spark) - before)
 
     assert leftover(8) == leftover(2)
 
