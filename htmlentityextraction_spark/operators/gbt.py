@@ -182,9 +182,6 @@ class GBTClassifier:
             m = m + self.learning_rate * _predict_tree(tree, X)
         return m
 
-    def predict_proba(self, X: np.ndarray) -> np.ndarray:
-        return _sigmoid(self.margin(X))
-
     def predict(self, X: np.ndarray) -> np.ndarray:
         return (self.margin(X) > 0).astype(np.int64)
 

@@ -23,13 +23,6 @@ from pyspark.sql import functions as F
 OP_UPSERT = "upsert"
 OP_DELETE = "delete"
 
-# per-bucket manifest bloom index geometry (see ParquetMergeTable
-# bloom_cols): m bits, k salted xxhash64 probes. 2048 bits / 3 probes
-# gives ~1% false positives at ~300 distinct values per bucket and
-# costs 512 hex chars of manifest per (bucket, column).
-_BLOOM_BITS = 2048
-_BLOOM_K = 3
-
 # legal (from, to) physical type widenings for schema evolution — the
 # lossless core of Delta's type-widening feature; every pair is also a
 # widening conversion Spark's parquet readers apply at scan time
@@ -57,6 +50,19 @@ _WIDENINGS = frozenset(
 # patch it to 0 to force the sort-merge arm deterministically.
 _SHJ_BUILD_BYTES_PER_PART = 8 * 1024 * 1024
 
+# every write shuffles by bucket so each bucket is written by one task;
+# a fat bucket still splits into files of at most this many rows
+# (Spark's maxRecordsPerFile), so alignment never makes unboundedly
+# large files at scale
+_MAX_RECORDS_PER_FILE = 5_000_000
+
+# commit lock: a lock file older than _STALE_LOCK_SEC is a crashed
+# writer's residue and is broken; _acquire_lock gives up after
+# _LOCK_TIMEOUT_SEC of wall clock. Both are read at call time, so
+# tests patch them the way they patch _SHJ_BUILD_BYTES_PER_PART.
+_STALE_LOCK_SEC = 600.0
+_LOCK_TIMEOUT_SEC = 5.0
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer published a snapshot between staging and commit;
@@ -75,17 +81,25 @@ class ParquetMergeTable:
     MERGE a production user runs daily, reduced to its load-bearing
     parts:
 
-    - data lives in ``num_buckets`` key-hash buckets, one parquet dir
-      per (bucket, version); a JSON manifest maps bucket → current dir.
-    - MERGE rewrites ONLY the buckets that contain updated keys
-      (copy-on-write file reuse for the rest) — at 100 TB a trickle
-      merge touches |update-buckets|, not the table.
+    - data lives in key buckets (hash or range), one parquet dir per
+      (bucket, version); a JSON manifest maps bucket → current dir and
+      records each bucket's key zone map and row count.
+    - MERGE (``merge`` = ``staged_merge`` + ``commit``) rewrites ONLY
+      the buckets that contain updated keys (copy-on-write file reuse
+      for the rest) — at 100 TB a trickle merge touches
+      |update-buckets|, not the table.
     - readers resolve the manifest first: a snapshot is immutable.
+      ``read`` time-travels, ``read_buckets``/``read_where`` prune by
+      bucket and key zone map, ``table_changes`` is the change feed.
     - commit = write-new-files, then atomically replace the manifest
-      (os.replace here; a conditional PUT on an object store). A crash
-      BEFORE the swap leaves the old snapshot fully intact — verified
-      by the restart-safety test, which stages a merge, "crashes", and
-      re-runs it.
+      (os.replace here; a conditional PUT on an object store) under a
+      heartbeated lock with an OCC version check. A crash BEFORE the
+      swap leaves the old snapshot fully intact.
+    - schema evolution: ``rename_column``/``drop_column`` are
+      metadata-only; merges add columns and widen types.
+    - maintenance: ``optimize`` (Z-order rewrite), ``vacuum``
+      (retention), ``verify_integrity`` (storage audit), and the
+      ``snapshots``/``files``/``history`` metadata views.
     """
 
     def __init__(
@@ -96,45 +110,18 @@ class ParquetMergeTable:
         num_buckets: int = 16,
         bucketing: str = "hash",
         range_width: int | None = None,
-        stats_cols: list[str] | None = None,
-        align_writes: bool = True,
-        max_records_per_file: int | None = 5_000_000,
-        bloom_cols: list[str] | None = None,
-        stale_lock_sec: float = 600.0,
-        lock_timeout_sec: float = 5.0,
     ):
         """``bucketing``:
 
         - ``hash`` (default): bucket = xxhash64(key) % num_buckets —
-          uniform spread; point lookups prune to one bucket
-          (``read_key``), but range predicates cannot prune.
+          uniform spread; range predicates cannot prune.
         - ``range``: bucket = key div range_width (Iceberg's truncate
           transform) — bucket count grows with the key domain
           (num_buckets is ignored), and range predicates on the key
           prune via the manifest zone maps (``read_where``).
 
-        ``stats_cols``: columns to record per-bucket min/max for in
-        the manifest (zone maps), default ``[key_col]``. Numeric or
-        string columns only (values land in the JSON manifest).
-
-        ``bloom_cols``: columns to build a per-bucket BLOOM FILTER
-        for in the manifest (a membership index for NON-key columns —
-        zone maps prune ranges, blooms prune point lookups on columns
-        the bucket transform does not cover). 2048 bits / 3 salted
-        xxhash64 probes per bucket, stored as hex in the manifest;
-        ``bloom_candidates``/``read_point`` consult it.
-        False positives only ⇒ pruning is safe; deletes/compaction
-        never invalidate it (rows only leave, superset stays sound).
-
-        ``align_writes`` (default True): shuffle each write by
-        ``__bucket`` so every bucket is written by one task — without
-        it, every shuffle partition of the merge join emits a file
-        into every bucket dir (partitions × buckets small files per
-        version, which the NEXT merge then re-opens). Fat buckets
-        still split into bounded files via ``max_records_per_file``
-        (maps to Spark's maxRecordsPerFile), so alignment never
-        creates unboundedly large files at scale. False models
-        legacy/unaligned writers — OPTIMIZE compacts those.
+        Every bucket records a min/max zone map of ``key_col`` and a
+        row count in the manifest.
         """
         if bucketing not in ("hash", "range"):
             raise ValueError(f"bucketing must be hash|range, got {bucketing!r}")
@@ -146,27 +133,17 @@ class ParquetMergeTable:
         self.num_buckets = num_buckets
         self.bucketing = bucketing
         self.range_width = range_width
-        self.stats_cols = list(stats_cols) if stats_cols else [key_col]
-        self.align_writes = align_writes
-        self.max_records_per_file = max_records_per_file
-        self.bloom_cols = list(bloom_cols) if bloom_cols else []
-        # commit-lock staleness threshold: a lock file older than this
-        # is treated as a crashed writer's residue and broken
-        self.stale_lock_sec = stale_lock_sec
-        # how long _acquire_lock waits (wall clock) before TimeoutError
-        self.lock_timeout_sec = lock_timeout_sec
         # the bucket SPEC belongs to the table, not the client
         # (Iceberg partition-spec semantics): an existing manifest's
-        # recorded spec overrides constructor defaults, so a table
-        # rebucketed by one writer prunes correctly for every later
-        # opener regardless of the arguments they pass
+        # recorded spec overrides constructor defaults, so every later
+        # opener buckets and prunes like the creator regardless of the
+        # arguments it passes
         if os.path.exists(self._manifest_file):
             spec = self._read_manifest().get("spec")
             if spec:
                 self.num_buckets = spec.get("num_buckets", self.num_buckets)
                 self.bucketing = spec.get("bucketing", self.bucketing)
                 self.range_width = spec.get("range_width", self.range_width)
-                self.bloom_cols = spec.get("bloom_cols", self.bloom_cols) or []
                 self.key_col = spec.get("key_col", self.key_col)
 
     # -- manifest ----------------------------------------------------------
@@ -194,7 +171,6 @@ class ParquetMergeTable:
                 "num_buckets": self.num_buckets,
                 "bucketing": self.bucketing,
                 "range_width": self.range_width,
-                "bloom_cols": self.bloom_cols,
                 "key_col": self.key_col,
             },
         )
@@ -215,9 +191,8 @@ class ParquetMergeTable:
     # RENAME is therefore a metadata-only commit (no bucket rewrite,
     # old snapshots stay readable), and CDC diffs across a rename
     # boundary stay aligned because they compare physical columns.
-    # Everything internal (bucket files, stats, blooms, manifest
-    # schema) lives in physical space; the public surfaces translate
-    # at the boundary.
+    # Everything internal (bucket files, stats, manifest schema) lives
+    # in physical space; the public surfaces translate at the boundary.
 
     @staticmethod
     def _mapping(manifest: dict) -> dict[str, str]:
@@ -242,9 +217,9 @@ class ParquetMergeTable:
         (that column's data would come back under the wrong name);
         likewise a dropped column must not resurrect. Names that
         never existed pass through — downstream either degrades
-        conservatively (prune/bloom: scan-all, the pinned
-        pre-evolution contract) or fails with Spark's own
-        missing-column analysis error."""
+        conservatively (prune: scan-all, the pinned pre-evolution
+        contract) or fails with Spark's own missing-column analysis
+        error."""
         mp = self._mapping(manifest)
         if logical in mp:
             return mp[logical]
@@ -331,8 +306,8 @@ class ParquetMergeTable:
         in existing bucket files but leaves the table schema — reads
         stop selecting it (schema-pinned scans never touch it), future
         merges neither require nor rewrite it, and every later rewrite
-        (merge/optimize/rebucket) retires it physically for the
-        buckets it touches. The retired PHYSICAL name is recorded in
+        (merge/optimize) retires it physically for the buckets it
+        touches. The retired PHYSICAL name is recorded in
         the manifest's ``dropped`` list so a later ADD of the same
         logical name mints a fresh physical name instead of
         resurrecting old storage (`staged_merge`'s collision guard).
@@ -352,13 +327,6 @@ class ParquetMergeTable:
         phys = mapping.pop(col, col)
         st = T.StructType.fromJson(json.loads(m["schema"]))
         new_schema = T.StructType([f for f in st.fields if f.name != phys])
-        # the retired column can no longer be indexed or zone-mapped —
-        # but stage the trimmed lists and apply them to the handle
-        # ONLY after commit() wins: if the commit loses the OCC race,
-        # the published manifest still records the column and this
-        # handle must keep maintaining its bloom/zone-map
-        new_bloom = [c for c in self.bloom_cols if c != phys]
-        new_stats = [c for c in self.stats_cols if c != phys]
         staged = {
             "version": m["version"] + 1,
             "buckets": dict(m["buckets"]),
@@ -366,19 +334,8 @@ class ParquetMergeTable:
             "schema": new_schema.json(),
             "mapping": {l: p for l, p in mapping.items() if l != p} or None,
             "dropped": list(m.get("dropped") or []) + [phys],
-            # bloom_cols changes with the drop, so re-record the spec
-            # instead of letting _swap_manifest copy a stale default
-            "spec": {
-                "num_buckets": self.num_buckets,
-                "bucketing": self.bucketing,
-                "range_width": self.range_width,
-                "bloom_cols": new_bloom,
-                "key_col": self.key_col,
-            },
         }
         self.commit(staged)
-        self.bloom_cols = new_bloom
-        self.stats_cols = new_stats
         return staged
 
     def _physical_cols(self, manifest: dict) -> list[str]:
@@ -408,153 +365,33 @@ class ParquetMergeTable:
         return str(v)
 
     def _bucket_stats(self, out: DataFrame) -> dict:
-        """Per-bucket min/max zone maps for stats_cols plus a
-        ``__rows`` count (the integrity-audit expectation —
-        ``verify_integrity`` recounts storage against it); ≤ one row
-        per bucket, so the collect is bounded by the bucket count."""
-        # stats cols absent from this frame (e.g. dropped since the
-        # table was opened) just record no zone map — conservative
-        # must-scan, never an error
-        cols = [c for c in self.stats_cols if c in out.columns]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        rows = out.groupBy("__bucket").agg(*aggs).collect()
+        """Per-bucket min/max zone map of the key plus a ``__rows``
+        count (the integrity-audit expectation — ``verify_integrity``
+        recounts storage against it); ≤ one row per bucket, so the
+        collect is bounded by the bucket count."""
+        k = self.key_col
+        rows = (
+            out.groupBy("__bucket")
+            .agg(
+                F.count(F.lit(1)).alias("__rows"),
+                F.min(k).alias("__mn"),
+                F.max(k).alias("__mx"),
+            )
+            .collect()
+        )
         return {
             str(r["__bucket"]): {
                 "__rows": int(r["__rows"]),
-                **{
-                    c: [self._json_scalar(r[f"__mn_{c}"]), self._json_scalar(r[f"__mx_{c}"])]
-                    for c in cols
-                },
+                k: [self._json_scalar(r["__mn"]), self._json_scalar(r["__mx"])],
             }
             for r in rows
         }
 
-    def _bloom_positions(self, col: Column) -> list[Column]:
-        """The k salted bit positions of a value — one expression per
-        probe, evaluated identically at build and lookup time (both go
-        through this function, so hash/type semantics can never fork)."""
-        return [
-            F.pmod(F.xxhash64(F.lit(salt), col), F.lit(_BLOOM_BITS))
-            for salt in range(_BLOOM_K)
-        ]
-
-    def _bucket_blooms(self, out: DataFrame) -> dict:
-        """bucket → {col: hex bitset} for every bloom_col present in
-        the written frame. ONE job for all columns (explode (col, pos)
-        structs → one grouped collect_set); each set is ≤ _BLOOM_BITS
-        positions, so the collect is bounded by buckets × cols × bits
-        regardless of row count — the same bounded-collect contract as
-        _bucket_stats. Configured bloom_cols absent from this frame
-        (e.g. a merge staged before the column evolved in) are SKIPPED,
-        not an error: their buckets simply carry no ``__bloom_*`` entry
-        and ``bloom_candidates`` treats that as must-scan."""
-        cols = [c for c in self.bloom_cols if c in out.columns]
-        if not cols:
-            return {}
-        pairs = F.array(
-            *[
-                F.struct(F.lit(c).alias("__c"), p.alias("__p"))
-                for c in cols
-                for p in self._bloom_positions(F.col(c))
-            ]
-        )
-        rows = (
-            out.select("__bucket", F.explode(pairs).alias("__cp"))
-            .where(F.col("__cp.__p").isNotNull())
-            .groupBy("__bucket", F.col("__cp.__c").alias("__c"))
-            .agg(F.collect_set(F.col("__cp.__p")).alias("__ps"))
-            .collect()
-        )
-        blooms: dict[str, dict[str, str]] = {}
-        for r in rows:
-            bits = 0
-            for p in r["__ps"]:
-                bits |= 1 << int(p)
-            blooms.setdefault(str(r["__bucket"]), {})[r["__c"]] = format(
-                bits, f"0{_BLOOM_BITS // 4}x"
-            )
-        return blooms
-
-    def _bloom_probe_positions(self, col: str, value) -> list[int]:
-        """The k bit positions ``value`` maps to, evaluated through
-        ``_bloom_positions`` on a 1-row frame with the literal cast to
-        the table's stored column type — identical hash/type semantics
-        to the build path (xxhash64 is type-sensitive, so an untyped
-        probe literal could light different bits than the build did).
-        ``col`` is PHYSICAL here (callers translate), so the type
-        comes from the manifest's recorded (physical) schema."""
-        m = self._read_manifest()
-        if m.get("schema"):
-            from pyspark.sql import types as T
-
-            st = T.StructType.fromJson(json.loads(m["schema"]))
-            dtype = next(
-                (f.dataType.simpleString() for f in st.fields if f.name == col), None
-            )
-        else:  # pre-schema manifest: fall back to a footer read
-            dtype = dict(self.read().dtypes).get(col)
-        lit = F.lit(value).cast(dtype) if dtype else F.lit(value)
-        row = (
-            self.spark.range(1)
-            .select(lit.alias(col))
-            .select(F.array(*self._bloom_positions(F.col(col))).alias("__ps"))
-            .first()
-        )
-        return [int(p) for p in row["__ps"]]
-
-    def bloom_candidates(self, col: str, value, version: int | None = None) -> dict:
-        """Manifest-only membership pruning for ``col == value``: a
-        bucket whose stored bloom has ALL k probe bits set must be
-        scanned; one clear bit proves the value is absent (blooms have
-        false positives only, never false negatives). Buckets with no
-        ``__bloom_{col}`` entry — written before the column was
-        tracked/evolved, or col not in bloom_cols — are conservatively
-        scanned. Returns {"scanned": [...], "skipped": [...]} like
-        ``prune_report``."""
-        m = self._manifest_for(version)
-        col = self._phys(m, col)  # blooms are keyed by physical name
-        positions = self._bloom_probe_positions(col, value)
-        kept, pruned = [], []
-        for b in m["buckets"]:
-            hexbits = (m.get("stats") or {}).get(b, {}).get(f"__bloom_{col}")
-            if isinstance(hexbits, str):
-                bits = int(hexbits, 16)
-                if not all((bits >> p) & 1 for p in positions):
-                    pruned.append(b)
-                    continue
-            kept.append(b)
-        return {"scanned": sorted(kept), "skipped": sorted(pruned)}
-
-    def read_point(self, col: str, value, version: int | None = None) -> DataFrame:
-        """Point read on a NON-key column via the manifest bloom
-        index: scan only bloom-candidate buckets. The exact
-        ``col == value`` predicate still applies below, so results
-        never depend on the index (false positives just cost a bucket
-        scan). For the key column itself, ``read_key`` prunes via the
-        bucket transform instead — blooms exist for the columns the
-        transform does not cover."""
-        m = self._manifest_for(version)
-        if not m["buckets"]:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
-        kept = self.bloom_candidates(col, value, version)["scanned"]
-        # all-pruned: scan one bucket for the schema; the predicate
-        # below returns zero rows from it
-        paths = [os.path.join(self.path, m["buckets"][b]) for b in kept] or [
-            os.path.join(self.path, next(iter(m["buckets"].values())))
-        ]
-        df = self._read_physical(m, paths)
-        pcol = self._phys(m, col)  # filter on the stored physical column
-        dtype = dict(df.dtypes).get(pcol)
-        probe = F.lit(value).cast(dtype) if dtype else F.lit(value)
-        return self._to_logical_df(df.filter(F.col(pcol) == probe), m)
-
     def _write_buckets(self, df: DataFrame, version: int) -> tuple[dict[str, str], dict]:
         """Write one dir per bucket under v{version}-{uuid}/; return
         (bucket → relative path for every bucket actually written,
-        bucket → zone-map stats). The input is persisted for the two
+        bucket → zone-map stats). The input is shuffled by bucket, so
+        each bucket is written by one task, and persisted for the two
         passes (write + stats agg).
 
         The staging dir is UNIQUE PER WRITER (uuid suffix): two
@@ -566,20 +403,16 @@ class ParquetMergeTable:
         dir would delete files the winner's published manifest points
         at (readers of the current snapshot would see missing data)."""
         vdir = f"v{version}-{uuid.uuid4().hex[:8]}"
-        out = df.withColumn("__bucket", self._bucket(F.col(self.key_col)))
-        if self.align_writes:
-            out = out.repartition("__bucket")
-        out = out.persist()
+        out = (
+            df.withColumn("__bucket", self._bucket(F.col(self.key_col)))
+            .repartition("__bucket")
+            .persist()
+        )
         try:
-            writer = out.write.mode("overwrite")
-            if self.max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
-            writer.partitionBy("__bucket").parquet(os.path.join(self.path, vdir))
+            out.write.mode("overwrite").option(
+                "maxRecordsPerFile", _MAX_RECORDS_PER_FILE
+            ).partitionBy("__bucket").parquet(os.path.join(self.path, vdir))
             stats = self._bucket_stats(out)
-            if self.bloom_cols:
-                for b, per_col in self._bucket_blooms(out).items():
-                    for c, hexbits in per_col.items():
-                        stats.setdefault(b, {})[f"__bloom_{c}"] = hexbits
         finally:
             out.unpersist()
         written = {
@@ -680,8 +513,8 @@ class ParquetMergeTable:
     def prune_report(self, col: str, lo=None, hi=None, version: int | None = None) -> dict:
         """Manifest-only pruning decision for ``lo <= col <= hi``:
         which buckets must be scanned vs are skipped by their zone
-        maps. Buckets without stats for ``col`` (e.g. written before
-        the column was tracked) are conservatively scanned. Bounds
+        maps. Only the key carries zone maps, so any other ``col``
+        conservatively scans every bucket. Bounds
         are normalized through the manifest's own JSON encoding
         (dates/timestamps → ISO strings, decimals → floats) so a
         date/datetime bound compares against stored stats instead of
@@ -708,12 +541,13 @@ class ParquetMergeTable:
 
     def read_where(self, col: str, lo=None, hi=None, version: int | None = None) -> DataFrame:
         """Range read with manifest zone-map pruning: only buckets
-        whose [min, max] for ``col`` overlaps [lo, hi] are scanned
-        (with range bucketing + col=key this is partition pruning; the
-        predicate still applies exactly, so results never depend on
-        stats). At 100 TB this is the difference between listing a few
-        bucket dirs and scanning the table — the same file-skipping
-        contract Delta/Iceberg readers get from their manifests."""
+        whose key [min, max] overlaps [lo, hi] are scanned when ``col``
+        is the key (with range bucketing this is partition pruning);
+        any other ``col`` scans every bucket. The predicate still
+        applies exactly, so results never depend on stats. At 100 TB
+        this is the difference between listing a few bucket dirs and
+        scanning the table — the same file-skipping contract
+        Delta/Iceberg readers get from their manifests."""
         m = self._manifest_for(version)
         if not m["buckets"]:
             return self.spark.createDataFrame([], self._schema_of_empty(m))
@@ -732,161 +566,72 @@ class ParquetMergeTable:
             cond = cond & (c <= F.lit(hi))
         return self._to_logical_df(df.filter(cond), m)
 
-    def read_where_in(self, col: str, values, version: int | None = None) -> DataFrame:
-        """Set-membership read with manifest zone-map pruning: scan
-        only buckets whose [min, max] for ``col`` contains AT LEAST
-        ONE of ``values``, then apply the exact ``isin`` predicate.
-        One manifest pass and ONE scan regardless of |values| — the
-        shape a consumer wants when a micro-batch touches many blocks
-        (a per-value ``read_where`` union degenerates to |values|
-        manifest probes + |values| tiny plans). Stats-less buckets
-        are conservatively scanned, and stats/bound incomparability
-        degrades to a scan — pruning is an optimization, never a
-        correctness gate."""
-        m = self._manifest_for(version)
-        # deterministic plan literals; type-tagged key so a heterogeneous
-        # value set (int + str) sorts instead of raising TypeError
-        vals = sorted(
-            {v for v in values if v is not None},
-            key=lambda v: (type(v).__name__, repr(v)),
-        )
-        if not m["buckets"] or not vals:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
-        kept = self.prune_report_in(col, vals, version)["scanned"]
-        paths = [os.path.join(self.path, m["buckets"][b]) for b in kept] or [
-            os.path.join(self.path, next(iter(m["buckets"].values())))
-        ]
-        df = self._read_physical(m, paths)
-        return self._to_logical_df(
-            df.filter(F.col(self._phys(m, col)).isin(*vals)), m
-        )
+    def optimize(self, zorder_by: list[str], row_group_bytes: int | None = None) -> dict:
+        """Delta's ``OPTIMIZE ... ZORDER BY``: rewrite EVERY bucket into
+        one file with rows ordered by the Morton interleave of the
+        ``zorder_by`` columns (at least two, each scaled onto a grid of
+        up to 8 bits via the table-wide min/max). Parquet already stores
+        per-row-group min/max for every column; clustering is what
+        makes those statistics TIGHT, so a pushed-down predicate on ANY
+        of the columns skips row groups at scan time (Spark's parquet
+        filter pushdown does the skipping — no reader change needed;
+        evidence in tests/test_zorder_optimize.py via footer metadata).
+        ``row_group_bytes`` sets ``parquet.block.size`` for the rewrite
+        so row-group granularity (the skipping unit) can be tuned to
+        the scan pattern.
 
-    def prune_report_in(self, col: str, values, version: int | None = None) -> dict:
-        """Manifest-only pruning decision for ``col IN (values)`` —
-        the observable behind :meth:`read_where_in`, and the hook
-        measurement harnesses use to record a touched-blocks ratio
-        (scanned / total buckets) without scanning anything."""
-        m = self._manifest_for(version)
-        pcol = self._phys(m, col)
-        jvals = [self._json_scalar(v) for v in values if v is not None]
-        kept, pruned = [], []
-        for b in m["buckets"]:
-            st = (m.get("stats") or {}).get(b, {}).get(pcol)
-            if st is not None and st[0] is not None and st[1] is not None:
-                try:
-                    if not any(st[0] <= v <= st[1] for v in jvals):
-                        pruned.append(b)
-                        continue
-                except TypeError:  # incomparable bound vs stored stat
-                    pass
-            kept.append(b)
-        return {"scanned": sorted(kept), "skipped": sorted(pruned)}
-
-    def _bucket_of_value(self, key_value) -> int:
-        """Bucket id for one key, evaluated with the engine's own
-        expression (identical hash/div semantics to the write path)."""
-        # cast to the stored key type: xxhash64 is type-sensitive
-        # (hash of INT 57 != hash of LONG 57), so an untyped literal
-        # would land in the wrong bucket
-        ktype = dict(self.read().dtypes)[self.key_col]
-        row = (
-            self.spark.range(1)
-            .select(F.lit(key_value).cast(ktype).alias(self.key_col))
-            .select(self._bucket(F.col(self.key_col)).alias("b"))
-            .first()
-        )
-        return int(row.b)
-
-    def optimize(
-        self,
-        target_files_per_bucket: int = 1,
-        zorder_by: list[str] | None = None,
-        row_group_bytes: int | None = None,
-    ) -> dict:
-        """Compact small files (Delta OPTIMIZE): every current bucket
-        dir holding more part files than the target is rewritten
-        coalesced into a new version; buckets already compact are
-        carried over copy-on-write, data and zone maps unchanged.
-        Merges write each bucket from shuffle parallelism, so a
-        long-lived table accretes small files — compaction restores
-        scan efficiency (fewer file opens, fuller row groups) without
-        touching logical content. Published like any other commit:
-        old snapshots still time-travel, vacuum reclaims the
-        fragmented dirs once unreferenced. One coalesce job per fat
-        bucket, driver-looped — at production bucket counts schedule
-        them in a thread pool; the commit is still one atomic swap.
-
-        ``zorder_by``: Delta's ``OPTIMIZE ... ZORDER BY`` — rewrite
-        EVERY bucket with rows ordered by the Morton interleave of
-        two columns (scaled onto an 8-bit grid via the table-wide
-        min/max). Parquet already stores per-row-group min/max for
-        every column; clustering is what makes those statistics
-        TIGHT, so a pushed-down predicate on EITHER column skips row
-        groups at scan time (Spark's parquet filter pushdown does the
-        skipping — no reader change needed; evidence in
-        tests/test_zorder_optimize.py via footer metadata).
-        ``row_group_bytes`` sets ``parquet.block.size`` for the
-        rewrite so row-group granularity (the skipping unit) can be
-        tuned to the scan pattern."""
+        The rewrite also compacts each bucket to one file and is
+        published like any other commit: old snapshots still
+        time-travel, vacuum reclaims the old dirs once unreferenced.
+        One job per bucket, run one after another; the commit is one
+        atomic swap."""
         from htmlentityextraction_spark.operators.zorder import scale_to_bits, zvalue_n
 
+        if len(zorder_by) < 2:
+            raise ValueError("zorder_by takes at least two columns")
         m = self._read_manifest()
         version = m["version"] + 1
         vdir = f"v{version}-{uuid.uuid4().hex[:8]}"  # unique: see _write_buckets
-        entries = dict(m["buckets"])
-        compacted: list[str] = []
-        zbounds = None
-        zbits = 8
-        if zorder_by is not None:
-            if len(zorder_by) < 2:
-                raise ValueError("zorder_by takes at least two columns")
-            zbits = min(8, 63 // len(zorder_by))
-            aggs = []
-            for i, c in enumerate(zorder_by):
-                aggs.append(F.min(c).alias(f"lo{i}"))
-                aggs.append(F.max(c).alias(f"hi{i}"))
-            zbounds = self.read().agg(*aggs).collect()[0]
-        for b, rel in sorted(m["buckets"].items()):
-            full = os.path.join(self.path, rel)
-            n_files = sum(1 for f in os.listdir(full) if f.startswith("part-"))
-            if zorder_by is None and n_files <= target_files_per_bucket:
-                continue
-            out_rel = os.path.join(vdir, f"__bucket={b}")
-            # schema-pinned: compaction materializes the CURRENT
-            # schema — retired (dropped) columns leave the rewritten
-            # files physically, widened columns land at the wide type
-            df = self._read_physical(m, [full])
-            if zorder_by is not None:
-                z = zvalue_n(
-                    [
-                        scale_to_bits(
-                            # bucket files store PHYSICAL names
-                            F.col(self._phys(m, c)),
-                            F.lit(zbounds[f"lo{i}"]),
-                            F.lit(zbounds[f"hi{i}"]),
-                            zbits,
-                        )
-                        for i, c in enumerate(zorder_by)
-                    ],
+        zbits = min(8, 63 // len(zorder_by))
+        aggs = []
+        for i, c in enumerate(zorder_by):
+            aggs.append(F.min(c).alias(f"lo{i}"))
+            aggs.append(F.max(c).alias(f"hi{i}"))
+        zbounds = self.read().agg(*aggs).collect()[0]
+        z = zvalue_n(
+            [
+                scale_to_bits(
+                    # bucket files store PHYSICAL names
+                    F.col(self._phys(m, c)),
+                    F.lit(zbounds[f"lo{i}"]),
+                    F.lit(zbounds[f"hi{i}"]),
                     zbits,
                 )
-                df = (
-                    df.withColumn("__z", z)
-                    .coalesce(target_files_per_bucket)
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
-                )
-            else:
-                df = df.coalesce(target_files_per_bucket)
+                for i, c in enumerate(zorder_by)
+            ],
+            zbits,
+        )
+        entries: dict[str, str] = {}
+        for b, rel in sorted(m["buckets"].items()):
+            out_rel = os.path.join(vdir, f"__bucket={b}")
+            # schema-pinned: the rewrite materializes the CURRENT
+            # schema — retired (dropped) columns leave the rewritten
+            # files physically, widened columns land at the wide type
+            df = (
+                self._read_physical(m, [os.path.join(self.path, rel)])
+                .withColumn("__z", z)
+                .coalesce(1)
+                .sortWithinPartitions("__z")
+                .drop("__z")
+            )
             writer = df.write.mode("overwrite")
             if row_group_bytes:
                 writer = writer.option("parquet.block.size", row_group_bytes)
             writer.parquet(os.path.join(self.path, out_rel))
             entries[b] = out_rel
-            compacted.append(b)
-        if not compacted:
+        if not entries:
             return {"version": m["version"], "compacted": []}
-        # publish through commit() so a merge racing the compaction
+        # publish through commit() so a merge racing the rewrite
         # cannot be silently clobbered
         self.commit(
             {
@@ -898,7 +643,7 @@ class ParquetMergeTable:
                 "dropped": m.get("dropped"),
             }
         )
-        return {"version": version, "compacted": compacted}
+        return {"version": version, "compacted": sorted(entries)}
 
     def snapshots(self) -> DataFrame:
         """Metadata table (Iceberg's ``snapshots``, Delta's DESCRIBE
@@ -995,59 +740,6 @@ class ParquetMergeTable:
             "unverified": unverified,
         }
 
-    def rebucket(
-        self,
-        num_buckets: int | None = None,
-        bucketing: str | None = None,
-        range_width: int | None = None,
-    ) -> dict:
-        """Partition-spec evolution (Iceberg's evolve-the-spec,
-        materialized): rewrite the CURRENT snapshot under a new
-        bucket transform — more buckets for a table that outgrew its
-        layout, or hash→range to turn key-range predicates into
-        bucket pruning — as ONE copy-on-write commit. Historical
-        snapshots keep their old layout and stay time-travel-readable
-        (``read()`` only follows manifest paths); the new spec is
-        recorded in the manifest, so every later opener adopts it
-        (``__init__``) and point/range pruning uses the right
-        transform. One full-table rewrite — the same cost class as
-        OPTIMIZE ZORDER; at production scale schedule it like any
-        table-maintenance job."""
-        m = self._read_manifest()
-        # materialize BEFORE the spec flips; bucket files store
-        # PHYSICAL names, so the rewrite round-trips through them
-        cur = self._to_physical_df(self.read(), m).localCheckpoint()
-        if bucketing is not None:
-            if bucketing not in ("hash", "range"):
-                raise ValueError(f"bucketing must be hash|range, got {bucketing!r}")
-            self.bucketing = bucketing
-        if num_buckets is not None:
-            self.num_buckets = num_buckets
-        if range_width is not None:
-            self.range_width = range_width
-        if self.bucketing == "range" and not self.range_width:
-            raise ValueError("range bucketing requires range_width")
-        version = m["version"] + 1
-        entries, stats = self._write_buckets(cur, version)
-        self.commit(
-            {
-                "version": version,
-                "buckets": entries,
-                "stats": stats,
-                "schema": m.get("schema"),
-                "mapping": m.get("mapping"),
-                "dropped": m.get("dropped"),
-                "spec": {
-                    "num_buckets": self.num_buckets,
-                    "bucketing": self.bucketing,
-                    "range_width": self.range_width,
-                    "bloom_cols": self.bloom_cols,
-                    "key_col": self.key_col,
-                },
-            }
-        )
-        return {"version": version, "n_buckets": len(entries)}
-
     def table_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change data feed between two published snapshots (Delta's
         ``table_changes`` shape): one row per key whose state differs,
@@ -1137,24 +829,6 @@ class ParquetMergeTable:
             return self.spark.createDataFrame([], T.StructType.fromJson(json.loads(sj)))
         return self._read_physical(m, paths)
 
-    def read_key(self, key_value) -> DataFrame:
-        """Point lookup: the bucket transform sends the key to exactly
-        one bucket dir (hash or range), so a lookup scans 1/N of the
-        table regardless of mode — the J7-style point-read path."""
-        m = self._read_manifest()
-        if not m["buckets"]:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
-        b = str(self._bucket_of_value(key_value))
-        paths = [os.path.join(self.path, m["buckets"][b])] if b in m["buckets"] else [
-            os.path.join(self.path, next(iter(m["buckets"].values())))
-        ]
-        return self._to_logical_df(
-            self._read_physical(m, paths).filter(
-                F.col(self.key_col) == F.lit(key_value)
-            ),
-            m,
-        )
-
     def history(self) -> list[dict]:
         """Published versions, oldest first: [{version, n_buckets}].
         Versions beyond the current pointer (crash residue of a commit
@@ -1188,7 +862,7 @@ class ParquetMergeTable:
         pointer (crash residue — see ``commit``) ARE removed, since
         under the lock no in-flight commit can be mid-swap.
 
-        ``min_age_sec`` (default ``stale_lock_sec``): unreferenced
+        ``min_age_sec`` (default ``_STALE_LOCK_SEC``): unreferenced
         STORAGE younger than this survives until a later vacuum —
         Delta's retention-horizon rule. Staging is deliberately
         lock-free, and a staged version number offers no in-flight
@@ -1202,7 +876,7 @@ class ParquetMergeTable:
         import shutil
         import time as _time
 
-        age_floor = self.stale_lock_sec if min_age_sec is None else min_age_sec
+        age_floor = _STALE_LOCK_SEC if min_age_sec is None else min_age_sec
         now = _time.time()
 
         def _old_enough(p: str) -> bool:
@@ -1483,20 +1157,6 @@ class ParquetMergeTable:
             else:  # bucket emptied by deletes
                 entries.pop(b, None)
                 stats.pop(b, None)
-        if widened:
-            # bloom bits are xxhash64-of-TYPED-value: untouched
-            # buckets' blooms for a widened column were built from the
-            # narrow type, and future probes cast to the wide type —
-            # a stale bloom could prune a bucket that HAS the value
-            # (false negative). Invalidate them; absent entry =
-            # conservative must-scan, and the next rewrite of each
-            # bucket rebuilds its bloom at the wide type.
-            rewritten = {str(b) for b in affected}
-            for c in widened:
-                if c in self.bloom_cols:
-                    for b, st in stats.items():
-                        if b not in rewritten and isinstance(st, dict):
-                            st.pop(f"__bloom_{c}", None)
         upd.unpersist()
         schema_json = (
             merged.schema.json() if (evolved or widened) else m.get("schema")
@@ -1515,7 +1175,7 @@ class ParquetMergeTable:
         conditional PUT on an object store). A writer that crashed
         while holding the lock (between manifest swap and unlock)
         would otherwise wedge the table forever; a lock older than
-        ``stale_lock_sec`` is presumed abandoned and broken.
+        ``_STALE_LOCK_SEC`` is presumed abandoned and broken.
 
         Correctness of the break path (a double-granted lock would
         defeat the OCC version check and silently lose a writer's
@@ -1523,7 +1183,7 @@ class ParquetMergeTable:
 
         - the lock file carries an OWNER TOKEN (pid + uuid), and
           release verifies the token before unlinking — a holder that
-          outlived ``stale_lock_sec`` and was broken can no longer
+          outlived ``_STALE_LOCK_SEC`` and was broken can no longer
           unlink the NEXT holder's lock on its way out.
         - breaking is an atomic ``os.rename`` to a unique name:
           exactly one of N racing breakers wins the rename (the
@@ -1536,11 +1196,11 @@ class ParquetMergeTable:
           mtime tells us, and a fresh capture is restored with
           ``os.link`` (atomic, never overwrites a newer lock).
         - a daemon heartbeat refreshes the lock mtime at
-          ``stale_lock_sec/4`` while held, so a legitimately long
+          ``_STALE_LOCK_SEC/4`` while held, so a legitimately long
           operation under the lock (vacuum on a big table) never
           goes stale out from under itself.
 
-        The retry loop is deadline-based (``lock_timeout_sec`` wall
+        The retry loop is deadline-based (``_LOCK_TIMEOUT_SEC`` wall
         clock) and sleeps on EVERY branch, so a contended or flapping
         lock waits the intended duration rather than burning an
         iteration budget in microseconds. Returns a lease for
@@ -1551,7 +1211,7 @@ class ParquetMergeTable:
 
         lock = os.path.join(self.path, "_commit.lock")
         token = f"{os.getpid()}-{uuid.uuid4().hex}"
-        deadline = time.monotonic() + max(self.lock_timeout_sec, 0.0)
+        deadline = time.monotonic() + max(_LOCK_TIMEOUT_SEC, 0.0)
         while True:
             try:
                 fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -1560,7 +1220,7 @@ class ParquetMergeTable:
                     age = time.time() - os.path.getmtime(lock)
                 except OSError:
                     age = None  # holder released between open and stat
-                if age is not None and age > self.stale_lock_sec:
+                if age is not None and age > _STALE_LOCK_SEC:
                     broken = f"{lock}.broken-{uuid.uuid4().hex}"
                     try:
                         os.rename(lock, broken)  # atomic: one breaker wins
@@ -1571,7 +1231,7 @@ class ParquetMergeTable:
                             cap_age = time.time() - os.path.getmtime(broken)
                         except OSError:
                             cap_age = None
-                        if cap_age is not None and cap_age <= self.stale_lock_sec:
+                        if cap_age is not None and cap_age <= _STALE_LOCK_SEC:
                             # stat->rename TOCTOU: we captured a FRESH
                             # lock re-granted after a faster breaker's
                             # break. Put it back atomically; if a yet
@@ -1592,7 +1252,7 @@ class ParquetMergeTable:
             os.write(fd, token.encode())
             os.fsync(fd)
             stop = threading.Event()
-            interval = max(min(self.stale_lock_sec / 4.0, 60.0), 0.2)
+            interval = max(min(_STALE_LOCK_SEC / 4.0, 60.0), 0.2)
 
             def _heartbeat():
                 while not stop.wait(interval):
@@ -1612,7 +1272,7 @@ class ParquetMergeTable:
 
     def _release_lock(self, lease) -> None:
         """Release the commit lock, but ONLY if we still own it: if
-        this holder outlived ``stale_lock_sec`` despite the heartbeat
+        this holder outlived ``_STALE_LOCK_SEC`` despite the heartbeat
         and a breaker re-granted the lock, unlinking here would strip
         the new holder's mutual exclusion mid-commit."""
         lease["stop"].set()

@@ -4,14 +4,14 @@ canonical row with per-field merge rules.
 After duplicate detection (exact, minhash, or fuzzy-join — see
 `operators/dedup.py`, `operators/entity.py`) a master-data pipeline
 must MERGE each cluster into a single surviving record, choosing each
-field independently: "most recent non-null", "max", "most frequent".
+field independently: "most recent non-null", "max", "min".
 The reference's keep-latest dedup (`emr/RemoveOldVersions.scala`
 semantics, SURVEY §2 P7) picks whole rows; survivorship generalizes
 to per-field picks.
 
 Scale shape: everything is ONE ``groupBy(cluster)`` — each rule
 compiles to a built-in aggregate (``max_by`` for recency picks,
-``max``/``min``, ``mode`` for most-frequent), so the whole golden
+``max``/``min``), so the whole golden
 record is a single partial-aggregated shuffle regardless of how many
 fields carry rules. No windows, no per-cluster UDFs.
 
@@ -34,14 +34,6 @@ def latest_nonnull(col: str, ts_col: str, tiebreak_col: str) -> Column:
         F.col(tiebreak_col).alias("tb"),
     )
     return F.max_by(F.col(col), ordering)
-
-
-def most_frequent(col: str) -> Column:
-    # mode() is deterministic in Spark 4 (lowest value wins ties with
-    # deterministic=true flag); we make tie-breaking explicit instead:
-    # max_by over (count, value) computed via a self-contained
-    # count-map would need a second shuffle, so use mode(true).
-    return F.mode(F.col(col), True)
 
 
 def golden_record(

@@ -15,7 +15,7 @@ begs for — implemented Spark-first as custom compositions:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.keys import keep_one_per_id, keep_one_per_id_sql
+from htmlentityextraction_spark.functions.keys import keep_one_per_id
 from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.temporal import (
     valid_date_axis,

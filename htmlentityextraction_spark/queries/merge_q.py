@@ -24,7 +24,7 @@ from htmlentityextraction_spark.operators.incremental import (
     OP_UPSERT,
     ParquetMergeTable,
 )
-from htmlentityextraction_spark.functions.keys import pmod_sql, valid_id
+from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.keys import pmod_sql, valid_id, valid_id_sql
+from htmlentityextraction_spark.functions.keys import valid_id, valid_id_sql
 from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.temporal import (
     epoch_seconds,

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.keys import pmod_sql, valid_id
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import finite_measure
 from htmlentityextraction_spark.functions.temporal import valid_date_axis
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table

@@ -36,10 +36,10 @@ from htmlentityextraction_spark.operators.survivorship import (
     latest_nonnull,
 )
 from htmlentityextraction_spark.operators.timeseries import gap_fill_forward
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import finite_measure
 from htmlentityextraction_spark.functions.temporal import valid_date_axis
 from htmlentityextraction_spark.functions.text import WS_CLASS
-from htmlentityextraction_spark.functions.keys import valid_id, valid_id_sql
+from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 

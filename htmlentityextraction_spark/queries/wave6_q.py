@@ -27,7 +27,7 @@ from htmlentityextraction_spark.operators.zorder import (
 )
 from htmlentityextraction_spark.queries.llmdata import _FT
 from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
-from htmlentityextraction_spark.functions.keys import keep_one_per_id, keep_one_per_id_sql
+from htmlentityextraction_spark.functions.keys import keep_one_per_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 

@@ -8,6 +8,7 @@ sides (driver hashes values under sorted column names).
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,6 +89,6 @@ def _load_all() -> None:
     global _LOADED
     if _LOADED:
         return
-    from htmlentityextraction_spark import queries as _q  # noqa: F401
+    importlib.import_module("htmlentityextraction_spark.queries")
 
     _LOADED = True

@@ -12,14 +12,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.operators import incremental as inc
 from htmlentityextraction_spark.operators.incremental import (
     ConcurrentWriteError,
     ParquetMergeTable,
 )
 
 
-def _mk(spark, path, n=12, **kw):
-    tbl = ParquetMergeTable(spark, path, "k", num_buckets=4, **kw)
+def _mk(spark, path, n=12):
+    tbl = ParquetMergeTable(spark, path, "k", num_buckets=4)
     tbl.create(
         spark.createDataFrame(
             [(i, float(i), f"s{i}") for i in range(n)],
@@ -61,8 +62,6 @@ def test_drop_guards_and_retired_name_probes(spark, tmp_path):
     for probe in (
         lambda: tbl.prune_report("tag", lo="a"),
         lambda: tbl.read_where("tag", lo="a"),
-        lambda: tbl.bloom_candidates("tag", "s1"),
-        lambda: tbl.read_point("tag", "s1"),
     ):
         with pytest.raises(ValueError, match="renamed or dropped"):
             probe()
@@ -109,7 +108,7 @@ def test_merge_after_drop_and_readd_mints_fresh_storage(spark, tmp_path):
 def test_rewrites_progressively_retire_dropped_column(spark, tmp_path):
     tbl = _mk(spark, str(tmp_path / "t"), n=8)
     tbl.drop_column("tag")
-    tbl.optimize(target_files_per_bucket=1, zorder_by=["k", "price"])
+    tbl.optimize(zorder_by=["k", "price"])
     m = tbl._read_manifest()
     for rel in m["buckets"].values():
         df = spark.read.parquet(os.path.join(str(tmp_path / "t"), rel))
@@ -217,28 +216,6 @@ def test_key_type_guard(spark, tmp_path):
         )
 
 
-def test_widening_invalidates_stale_blooms_on_untouched_buckets(spark, tmp_path):
-    tbl = ParquetMergeTable(
-        spark, str(tmp_path / "t"), "k", num_buckets=4, bloom_cols=["qty"]
-    )
-    tbl.create(
-        spark.createDataFrame([(i, i * 10) for i in range(16)], "k long, qty int")
-    )
-    tbl.merge(
-        spark.createDataFrame([(0, 5, "upsert")], "k long, qty long, op string")
-    )
-    m = tbl._read_manifest()
-    from pyspark.sql import types as T
-
-    st = T.StructType.fromJson(json.loads(m["schema"]))
-    assert dict((f.name, f.dataType.simpleString()) for f in st.fields)["qty"] == "bigint"
-    # int-built blooms would hash differently than bigint probes: any
-    # value present in the table must still be FOUND (no false negative)
-    for probe in (30, 70, 110, 150):
-        got = [r.k for r in tbl.read_point("qty", probe).collect()]
-        assert got == [probe // 10], f"qty={probe} lookup lost after widening"
-
-
 # ------------------------------------------------------------ crash matrix
 
 
@@ -266,9 +243,10 @@ def _crash_residues(tbl, staged):
     "residue", ["staged_only", "holding_lock", "orphan_version_file", "tmp_pointer"]
 )
 def test_commit_crash_matrix_readers_intact_and_retry_converges(
-    spark, tmp_path, residue
+    spark, tmp_path, monkeypatch, residue
 ):
-    tbl = _mk(spark, str(tmp_path / "t"), n=10, stale_lock_sec=0.0)
+    monkeypatch.setattr(inc, "_STALE_LOCK_SEC", 0.0)
+    tbl = _mk(spark, str(tmp_path / "t"), n=10)
     updates = spark.createDataFrame(
         [(3, 99.0, "zz", "upsert"), (4, None, None, "delete")],
         "k long, price double, tag string, op string",
@@ -287,7 +265,7 @@ def test_commit_crash_matrix_readers_intact_and_retry_converges(
     assert tbl.verify_integrity()["ok"]
 
     # 2) a retried commit of the same staged manifest converges
-    # (stale_lock_sec=0 lets the retry break the dead writer's lock)
+    # (_STALE_LOCK_SEC=0 lets the retry break the dead writer's lock)
     tbl.commit(staged)
     got = {r.k: r.price for r in tbl.read().collect()}
     assert got[3] == 99.0 and 4 not in got and len(got) == 9
@@ -295,12 +273,13 @@ def test_commit_crash_matrix_readers_intact_and_retry_converges(
     assert tbl.verify_integrity()["ok"]
 
 
-def test_stale_lock_is_broken_but_fresh_lock_blocks(spark, tmp_path):
+def test_stale_lock_is_broken_but_fresh_lock_blocks(spark, tmp_path, monkeypatch):
     import time
 
     # threshold must exceed the ~5 s retry window, or the "fresh" lock
     # legitimately goes stale while the loop waits
-    tbl = _mk(spark, str(tmp_path / "t"), n=4, stale_lock_sec=30.0)
+    monkeypatch.setattr(inc, "_STALE_LOCK_SEC", 30.0)
+    tbl = _mk(spark, str(tmp_path / "t"), n=4)
     staged = tbl.staged_merge(
         spark.createDataFrame(
             [(0, 5.0, "x", "upsert")], "k long, price double, tag string, op string"
@@ -365,16 +344,17 @@ def test_snapshots_lists_retained_tail_after_vacuum(spark, tmp_path):
     assert [h["version"] for h in tbl.history()] == [2, 3]
 
 
-def test_release_never_unlinks_a_regranted_lock(spark, tmp_path):
+def test_release_never_unlinks_a_regranted_lock(spark, tmp_path, monkeypatch):
     """Ownership-verified release: a holder that outlived
-    stale_lock_sec and was broken must NOT strip the NEXT holder's
+    _STALE_LOCK_SEC and was broken must NOT strip the NEXT holder's
     lock on its way out (the double-grant the r9 lock hardening
     closes)."""
     import time
 
-    tbl = _mk(spark, str(tmp_path / "t"), n=4, stale_lock_sec=0.0)
+    monkeypatch.setattr(inc, "_STALE_LOCK_SEC", 0.0)
+    tbl = _mk(spark, str(tmp_path / "t"), n=4)
     lease_a = tbl._acquire_lock()
-    time.sleep(0.01)  # age > 0 => instantly stale under stale_lock_sec=0
+    time.sleep(0.01)  # age > 0 => instantly stale under _STALE_LOCK_SEC=0
     lease_b = tbl._acquire_lock()  # breaks A's lock, grants B
     lock = os.path.join(tbl.path, "_commit.lock")
     with open(lock) as f:
@@ -389,19 +369,15 @@ def test_release_never_unlinks_a_regranted_lock(spark, tmp_path):
     assert not os.path.exists(lock)
 
 
-def test_heartbeat_keeps_long_held_lock_fresh(spark, tmp_path):
-    """A holder legitimately outliving stale_lock_sec (long vacuum) is
+def test_heartbeat_keeps_long_held_lock_fresh(spark, tmp_path, monkeypatch):
+    """A holder legitimately outliving _STALE_LOCK_SEC (long vacuum) is
     protected by the mtime heartbeat: a second writer keeps seeing a
     FRESH lock and times out instead of breaking it."""
-    tbl = _mk(spark, str(tmp_path / "t"), n=4, stale_lock_sec=0.6)
-    contender = ParquetMergeTable(
-        spark,
-        tbl.path,
-        "k",
-        num_buckets=4,
-        stale_lock_sec=0.6,
-        lock_timeout_sec=1.5,  # > stale_lock_sec: break would happen w/o heartbeat
-    )
+    monkeypatch.setattr(inc, "_STALE_LOCK_SEC", 0.6)
+    # > _STALE_LOCK_SEC: a break would happen without the heartbeat
+    monkeypatch.setattr(inc, "_LOCK_TIMEOUT_SEC", 1.5)
+    tbl = _mk(spark, str(tmp_path / "t"), n=4)
+    contender = ParquetMergeTable(spark, tbl.path, "k", num_buckets=4)
     lease = tbl._acquire_lock()
     try:
         with pytest.raises(TimeoutError):

@@ -11,7 +11,6 @@ from htmlentityextraction_spark.operators.bloomjoin import (
     bloom_prefilter,
     bloom_semi_join,
 )
-from htmlentityextraction_spark.operators.bpe import apply_bpe, learn_bpe_merges
 from htmlentityextraction_spark.operators.setjoin import prefix_jaccard_pairs
 from htmlentityextraction_spark.operators.tablediff import checksum_diff
 from htmlentityextraction_spark.operators.textanalysis import pmi_bigram_collocations
@@ -66,12 +65,3 @@ def test_tablediff_one_side_empty(spark):
     rows = {r["k"]: r["change_type"] for r in diff.collect()}
     assert len(rows) == 20 and set(rows.values()) == {"removed"}
     assert changed.count() >= 1
-
-
-def test_bpe_empty_corpus(spark):
-    docs = spark.createDataFrame([], "toks array<string>")
-    assert learn_bpe_merges(docs, "toks", 3) == []
-    out = apply_bpe(
-        spark.createDataFrame([(["ab"],)], "toks array<string>"), "toks", []
-    )
-    assert out.collect()[0]["bpe_pieces"] == ["a", "b"]

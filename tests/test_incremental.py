@@ -143,24 +143,21 @@ def test_range_bucketing_zone_map_pruning(spark, tmp_path):
     assert tbl.read_where("o_orderkey", 5000, 6000).count() == 0
 
 
-def test_point_lookup_scans_single_bucket_both_modes(spark, tmp_path):
-    import os
-
-    for mode, kw in (("hash", {}), ("range", {"range_width": 10})):
-        tbl = inc.ParquetMergeTable(
-            spark, str(tmp_path / f"pl_{mode}"), "o_orderkey", bucketing=mode, **kw
-        )
-        tbl.create(
-            spark.range(0, 200).select(
-                F.col("id").alias("o_orderkey"), (F.col("id") * 1.0).alias("price")
-            )
-        )
-        hit = tbl.read_key(57)
-        rows = hit.collect()
-        assert [(r.o_orderkey, r.price) for r in rows] == [(57, 57.0)]
-        dirs = {os.path.dirname(f) for f in hit.inputFiles()}
-        assert len(dirs) == 1, f"{mode}: point lookup must scan one bucket dir, got {dirs}"
-        assert tbl.read_key(10_000).count() == 0
+def test_spec_persists_for_new_openers(spark, tmp_path):
+    path = str(tmp_path / "spec")
+    tbl = inc.ParquetMergeTable(spark, path, "k", bucketing="range", range_width=100)
+    tbl.create(
+        spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+    )
+    # a fresh opener passing stale/default args adopts the table spec
+    reopened = inc.ParquetMergeTable(spark, path, key_col="k", num_buckets=16)
+    assert reopened.bucketing == "range" and reopened.range_width == 100
+    # its range read prunes to one bucket under the recorded layout
+    assert reopened.prune_report("k", 777, 777)["scanned"] == ["7"]
+    # and its merges land in the recorded layout
+    reopened.merge(spark.createDataFrame([(777, -1, "upsert")], "k long, v long, op string"))
+    assert [r.v for r in tbl.read_where("k", 777, 777).collect()] == [-1]
+    assert tbl.read().count() == 1000
 
 
 def test_table_changes_classification_and_noop(spark, tmp_path):
@@ -219,42 +216,6 @@ def test_merge_schema_evolution_adds_column(spark, tmp_path):
         tbl.merge(
             spark.createDataFrame([(3, "x", "upsert")], "o_orderkey long, currency string, op string")
         )
-
-
-def test_optimize_compacts_small_files(spark, tmp_path):
-    import os
-
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-
-    # align_writes=False models a legacy/unaligned writer: every input
-    # partition emits a file per bucket — the fragmentation OPTIMIZE
-    # exists to repair (aligned writes don't fragment by construction)
-    tbl = ParquetMergeTable(
-        spark, str(tmp_path / "opt"), "o_orderkey", num_buckets=4, align_writes=False
-    )
-    df = spark.range(0, 2000).repartition(16).select(
-        F.col("id").alias("o_orderkey"), (F.col("id") * 1.0).alias("price")
-    )
-    tbl.create(df)
-
-    def files_per_bucket():
-        m = tbl._read_manifest()
-        return {
-            b: sum(1 for f in os.listdir(os.path.join(tbl.path, rel)) if f.startswith("part-"))
-            for b, rel in m["buckets"].items()
-        }
-
-    assert max(files_per_bucket().values()) > 1, "fixture must start fragmented"
-    before = sorted((r.o_orderkey, r.price) for r in tbl.read().collect())
-    res = tbl.optimize()
-    assert res["compacted"], "fragmented buckets must compact"
-    assert max(files_per_bucket().values()) == 1
-    after = sorted((r.o_orderkey, r.price) for r in tbl.read().collect())
-    assert after == before, "compaction must not change logical content"
-    # time travel to the pre-compaction version still works
-    assert tbl.read(version=1).count() == 2000
-    # idempotent: second optimize is a no-op
-    assert tbl.optimize()["compacted"] == []
 
 
 def test_merge_combine_folds_matched_values(spark, tmp_path):
@@ -390,13 +351,12 @@ def test_prune_report_date_bounds_degrade_to_scan(spark, tmp_path):
 
     from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
 
+    # zone maps cover the key only, so the date column is the key
     df = spark.createDataFrame(
         [(1, datetime.date(2024, 1, 1)), (2, datetime.date(2024, 6, 1))],
         "o_orderkey long, d date",
     )
-    tbl = ParquetMergeTable(
-        spark, str(tmp_path / "dt"), "o_orderkey", num_buckets=2, stats_cols=["d"]
-    )
+    tbl = ParquetMergeTable(spark, str(tmp_path / "dt"), "d", num_buckets=2)
     tbl.create(df)
     # date bounds normalize through the manifest's ISO encoding and
     # prune correctly instead of raising TypeError
@@ -434,156 +394,6 @@ def test_concurrent_commit_rejected_then_retry_succeeds(spark, tmp_path):
     tbl.merge(upd_a)
     got = {r.o_orderkey: r.price for r in tbl.read().collect()}
     assert got[3] == 33.0 and got[4] == 44.0
-
-
-def test_bloom_index_no_false_negatives_and_prunes(spark, tmp_path):
-    """The manifest bloom index must never skip a bucket that holds
-    the probed value (false positives only), and must actually skip
-    buckets for values concentrated in few buckets."""
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-
-    # 40 keys across 8 buckets; store is a non-key column whose values
-    # cluster (each store held by ~8 keys) so most buckets lack most stores
-    rows = [(i, float(i), f"store_{i % 5}") for i in range(40)]
-    df = spark.createDataFrame(rows, "o_orderkey long, price double, store string")
-    tbl = ParquetMergeTable(
-        spark, str(tmp_path / "tbl"), "o_orderkey", num_buckets=8,
-        bloom_cols=["store"],
-    )
-    tbl.create(df)
-    m = tbl._read_manifest()
-    all_buckets = set(m["buckets"])
-    # ground truth: buckets that actually contain each store value
-    truth: dict[str, set[str]] = {}
-    for b in all_buckets:
-        for r in tbl.read_buckets([b]).select("store").distinct().collect():
-            truth.setdefault(r.store, set()).add(b)
-    skipped_any = False
-    for store, holders in truth.items():
-        cand = tbl.bloom_candidates("store", store)
-        assert holders <= set(cand["scanned"]), (
-            f"false negative: {store} lives in {holders - set(cand['scanned'])}"
-        )
-        skipped_any = skipped_any or bool(cand["skipped"])
-        got = sorted(r.o_orderkey for r in tbl.read_point("store", store).collect())
-        want = sorted(k for k, _, s in rows if s == store)
-        assert got == want, "read_point must return exactly the matching rows"
-    assert skipped_any, "bloom index never pruned a single bucket"
-    # absent value: every bloom-indexed bucket should prune (FP rate
-    # ~(n*k/m)^3 ≈ 1e-4 per bucket at this density — deterministic here)
-    cand = tbl.bloom_candidates("store", "no_such_store")
-    assert cand["skipped"], "absent probe must prune"
-    assert tbl.read_point("store", "no_such_store").count() == 0
-
-
-def test_bloom_missing_column_skips_not_crashes(spark, tmp_path):
-    """A configured bloom_col absent from a written frame (pre-
-    evolution merge) must be skipped, not raise; buckets without a
-    __bloom_ entry are conservatively must-scan."""
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(20)], "o_orderkey long, price double"
-    )
-    tbl = ParquetMergeTable(
-        spark, str(tmp_path / "tbl"), "o_orderkey", num_buckets=4,
-        bloom_cols=["store"],
-    )
-    tbl.create(df)  # no 'store' column yet — must not raise
-    cand = tbl.bloom_candidates("store", "anything")
-    assert cand["skipped"] == [], "no index yet -> conservative scan-all"
-    assert set(cand["scanned"]) == set(tbl._read_manifest()["buckets"])
-    # evolve the column in via a merge; rewritten buckets gain blooms,
-    # untouched buckets stay must-scan — and lookups remain exact
-    upd = spark.createDataFrame(
-        [(3, 33.0, "store_x", "upsert")],
-        "o_orderkey long, price double, store string, op string",
-    )
-    tbl.merge(upd)
-    cand = tbl.bloom_candidates("store", "store_x")
-    got = [r.o_orderkey for r in tbl.read_point("store", "store_x").collect()]
-    assert got == [3]
-    m = tbl._read_manifest()
-    with_bloom = {b for b, st in m["stats"].items() if "__bloom_store" in st}
-    assert with_bloom, "rewritten bucket must carry a bloom entry"
-    assert set(cand["scanned"]) >= (set(m["buckets"]) - with_bloom), (
-        "buckets without a bloom entry must remain must-scan"
-    )
-
-
-def test_read_where_in_degraded_stats_equal_unpruned_read(spark, tmp_path):
-    """VERDICT r10 ask 6: read_where_in must survive a manifest whose
-    per-bucket stats are missing or MISTYPED mid-table (a writer from
-    an older schema, a hand-edited manifest) by conservatively
-    scanning those buckets — results must equal an unpruned read, and
-    the TypeError fallback in prune_report_in must actually fire."""
-    import json
-
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-
-    df = spark.range(0, 400).select(
-        F.col("id").alias("o_orderkey"),
-        (F.col("id") % 8).alias("blk"),
-        (F.col("id") * 2.0).alias("price"),
-    )
-    tbl = ParquetMergeTable(
-        spark,
-        str(tmp_path / "deg"),
-        "o_orderkey",
-        bucketing="range",
-        range_width=100,
-        stats_cols=["blk"],
-    )
-    tbl.create(df)
-    mpath = str(tmp_path / "deg" / "manifest.json")
-    with open(mpath) as fh:
-        m = json.load(fh)
-    buckets = sorted(m["buckets"])
-    assert len(buckets) >= 3, buckets
-    # bucket 0: stats entirely absent; bucket 1: mistyped (string
-    # min/max for a numeric column) -> the `st[0] <= v <= st[1]`
-    # comparison raises TypeError and must degrade to a scan
-    m["stats"][buckets[0]].pop("blk", None)
-    m["stats"][buckets[1]]["blk"] = ["not-a-number", "zzz"]
-    with open(mpath, "w") as fh:
-        json.dump(m, fh)
-
-    t2 = ParquetMergeTable(
-        spark, str(tmp_path / "deg"), "o_orderkey",
-        bucketing="range", range_width=100, stats_cols=["blk"],
-    )
-    rep = t2.prune_report_in("blk", [3])
-    assert buckets[0] in rep["scanned"], "stats-less bucket must be scanned"
-    assert buckets[1] in rep["scanned"], "mistyped-stats bucket must be scanned"
-    got = sorted(r.o_orderkey for r in t2.read_where_in("blk", [3]).collect())
-    want = sorted(r.o_orderkey for r in t2.read().filter(F.col("blk") == 3).collect())
-    assert got == want and len(got) == 50
-
-
-def test_read_where_in_heterogeneous_values_and_empty_paths(spark, tmp_path):
-    """ADVICE r10: a heterogeneous value set (int + str) must not
-    raise TypeError in the determinism sort; empty values and a
-    zero-bucket table take the _schema_of_empty path and return an
-    empty frame with the recorded schema."""
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-
-    tbl = _mk_table(spark, tmp_path, [(i, float(i)) for i in range(20)])
-    got = sorted(
-        r.o_orderkey for r in tbl.read_where_in("o_orderkey", [3, "7", None, 5]).collect()
-    )
-    # no TypeError from the determinism sort (the ADVICE bug); Spark's
-    # isin coerces the numeric string to the column type, so "7" hits 7
-    assert got == [3, 5, 7]
-
-    empty_sel = tbl.read_where_in("o_orderkey", [])
-    assert empty_sel.count() == 0
-    assert empty_sel.schema.simpleString() == "struct<o_orderkey:bigint,price:double>"
-
-    zb = ParquetMergeTable(spark, str(tmp_path / "zb"), "k", num_buckets=4)
-    zb.create(spark.createDataFrame([], "k long, v double"))
-    out = zb.read_where_in("k", [1, 2])
-    assert out.count() == 0
-    assert out.schema.simpleString() == "struct<k:bigint,v:double>"
 
 
 def test_merge_join_strategy_gate_and_equivalence(spark, tmp_path, monkeypatch):

@@ -181,18 +181,6 @@ def test_registry_parquet_roundtrip_serves_identically(spark):
     shutil.rmtree(d)
 
 
-def test_gbt_predict_proba_is_sigmoid_of_margin():
-    # the scikit-style probability surface: sigmoid(margin), in (0,1),
-    # monotone in the margin, and 0.5 exactly at the decision boundary
-    X, y = _separable()
-    m = GBTClassifier(n_estimators=10, max_depth=3).fit(X, y)
-    margin = m.margin(X)
-    proba = m.predict_proba(X)
-    assert np.allclose(proba, 1.0 / (1.0 + np.exp(-margin)))
-    assert ((proba > 0.0) & (proba < 1.0)).all()
-    assert ((proba > 0.5) == (m.predict(X) == 1)).all()
-
-
 # --- the serve path's Python featurize twin and top-k kernel ---
 # context text: free unicode, plus letter-heavy text whose tokens often
 # reach the 32-byte XXH64 stripe path

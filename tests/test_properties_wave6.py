@@ -1,11 +1,10 @@
 """Property-based tests (hypothesis) for the wave 6-9 algorithmic
 cores. These check the THEOREMS the operators rely on — prefix-filter
-recall, positional-filter soundness, largest-remainder exactness, BPE
-greedy-merge invariants — on randomized inputs, driver-side (pure
-Python mirrors of the columnar logic), so thousands of cases run
-without Spark jobs. The Spark implementations are separately gated
-against brute-force oracles on fixtures; these properties guard the
-MATH as the operators evolve."""
+recall, positional-filter soundness, largest-remainder exactness — on
+randomized inputs, in plain Python (mirrors of the columnar logic), so
+thousands of cases run without Spark jobs. The Spark implementations
+are separately gated against brute-force oracles on fixtures; these
+properties guard the MATH as the operators evolve."""
 
 from __future__ import annotations
 
@@ -13,8 +12,6 @@ import math
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-from htmlentityextraction_spark.operators.bpe import _merge_word
 
 # ----------------------------------------------------- prefix filter
 
@@ -96,28 +93,3 @@ def test_largest_remainder_exact_and_fair(counts, budget):
     assert sum(alloc) == budget          # exactness
     for a, s in zip(alloc, shares):
         assert abs(a - s) < 1            # within one slot of proportional
-
-
-# ----------------------------------------------------------- BPE
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.lists(st.sampled_from(["a", "b", "ab"]), min_size=0, max_size=12),
-    st.sampled_from([("a", "b"), ("a", "a"), ("b", "a")]),
-)
-def test_merge_word_invariants(syms, pair):
-    a, b = pair
-    out = _merge_word(syms, a, b)
-    # 1. concatenation is preserved
-    assert "".join(out) == "".join(syms)
-    # 2. no adjacent (a, b) with the left half unmerged remains when
-    #    greedy scan could have taken it: verify by re-running — a
-    #    second pass may merge pairs newly adjacent, but the FIRST
-    #    pass must be idempotent only when no (a,b) remains from
-    #    non-overlapping positions
-    if a != b:
-        # for distinct symbols, one pass removes every occurrence
-        assert all(not (x == a and y == b) for x, y in zip(out, out[1:]))
-    # 3. output never longer than input
-    assert len(out) <= len(syms)

@@ -376,25 +376,3 @@ def test_valid_event_time_sql_twin_matches_spark(spark):
     }
     assert spark_kept == duck_kept == {3, 4, 5, 6}
 
-
-def test_most_frequent_survivorship_rule_deterministic_ties(spark):
-    """survivorship.most_frequent plugs into golden_record as a field
-    rule; ties resolve to the LOWEST value (mode deterministic=true),
-    never nondeterministically."""
-    from htmlentityextraction_spark.operators.survivorship import (
-        golden_record,
-        most_frequent,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "b"), (1, "a"), (1, "a"), (1, "b"), (1, "c"),  # a/b tie -> a
-            (2, "z"), (2, "z"), (2, "y"),
-        ],
-        "cluster long, name string",
-    )
-    got = {
-        r.cluster: r.name
-        for r in golden_record(df, "cluster", {"name": most_frequent("name")}).collect()
-    }
-    assert got == {1: "a", 2: "z"}

@@ -146,6 +146,7 @@ _VACUUM_WRITER = """
 import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
+from htmlentityextraction_spark.operators import incremental
 from htmlentityextraction_spark.operators.incremental import (
     ConcurrentWriteError,
     ParquetMergeTable,
@@ -162,13 +163,13 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-# stale_lock_sec is the ADVERSARIAL knob: these writers will break any
+# _STALE_LOCK_SEC is the ADVERSARIAL knob: these writers will break any
 # lock whose mtime goes stale past `stale` — the slow vacuum in the
 # parent holds the lock several times longer than that, so its
 # heartbeat is the only thing standing between it and a double grant.
-tbl = ParquetMergeTable(
-    spark, path, "k", num_buckets=4, stale_lock_sec=stale, lock_timeout_sec=300.0
-)
+incremental._STALE_LOCK_SEC = stale
+incremental._LOCK_TIMEOUT_SEC = 300.0
+tbl = ParquetMergeTable(spark, path, "k", num_buckets=4)
 done = 0
 for i in range(n):
     upd = spark.createDataFrame(
@@ -188,10 +189,10 @@ spark.stop()
 """
 
 
-def test_slow_vacuum_heartbeat_survives_writer_contention(spark, tmp_path):
+def test_slow_vacuum_heartbeat_survives_writer_contention(spark, tmp_path, monkeypatch):
     """Adversarial liveness for the commit-lock heartbeat
     (`operators/incremental.py::_acquire_lock`): a deliberately SLOW
-    vacuum holds the lock ~3x past ``stale_lock_sec`` while two live
+    vacuum holds the lock ~3x past ``_STALE_LOCK_SEC`` while two live
     writer processes — each primed to break any lock that goes stale —
     contend for it. The heartbeat refreshes the lock's mtime at
     stale/4, so:
@@ -212,16 +213,16 @@ def test_slow_vacuum_heartbeat_survives_writer_contention(spark, tmp_path):
     """
     import threading
 
-    from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
+    from htmlentityextraction_spark.operators import incremental as inc
 
     path = str(tmp_path / "vacraced")
     # 4 s staleness → 1 s heartbeat: wide enough that transient
     # scheduler stalls under a loaded pytest run can't cause a
     # LEGITIMATE break and flake the test
     STALE = 4.0
-    tbl = ParquetMergeTable(
-        spark, path, "k", num_buckets=4, stale_lock_sec=STALE, lock_timeout_sec=300.0
-    )
+    monkeypatch.setattr(inc, "_STALE_LOCK_SEC", STALE)
+    monkeypatch.setattr(inc, "_LOCK_TIMEOUT_SEC", 300.0)
+    tbl = inc.ParquetMergeTable(spark, path, "k", num_buckets=4)
     tbl.create(
         spark.createDataFrame(
             [(k, 0, "seed") for k in range(4)], "k long, n long, tag string"
@@ -260,7 +261,7 @@ def test_slow_vacuum_heartbeat_survives_writer_contention(spark, tmp_path):
 
         # instrument the parent's table: vacuum's FIRST manifest read
         # happens right after it acquires the lock — sleeping there
-        # holds the lock ~3x past stale_lock_sec with only the
+        # holds the lock ~3x past _STALE_LOCK_SEC with only the
         # heartbeat keeping it alive
         hold_sec = 3 * STALE
         hold_started = threading.Event()

@@ -73,15 +73,6 @@ def test_zorder_optimize_tightens_row_group_stats(spark):
     )
 
 
-def test_plain_optimize_unaffected(spark):
-    """Without zorder_by, optimize still only compacts fat buckets."""
-    path = tempfile.mkdtemp(prefix="zopt3_")
-    _, tbl = _make_table(spark, path)
-    res = tbl.optimize(target_files_per_bucket=1)
-    # create() wrote one file per bucket already -> nothing to compact
-    assert res["compacted"] == []
-
-
 def test_zvalue_n_three_columns(spark):
     from htmlentityextraction_spark.operators.zorder import zvalue_n
     from pyspark.sql import functions as F
