@@ -35,18 +35,17 @@ def asof_join(
     right_ts: str,
     value_cols: list[str] | None = None,
     direction: str = "backward",
-    allow_exact_matches: bool = True,
     tolerance_seconds: int | None = None,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """For each left row, attach the closest right row per key:
     latest ``right_ts <= left_ts`` (backward, default) or earliest
-    ``right_ts >= left_ts`` (forward). Unmatched left rows keep null
-    payload columns (left-outer semantics, like pandas merge_asof).
+    ``right_ts >= left_ts`` (forward); an exact timestamp match counts.
+    Unmatched left rows keep null payload columns (left-outer
+    semantics, like pandas merge_asof).
 
     ``value_cols``: right columns to attach (default: all non-key,
-    non-ts right columns), emitted as ``{prefix}{col}``; the matched
-    right timestamp is always emitted as ``{prefix}{right_ts}``.
+    non-ts right columns), emitted as ``asof_{col}``; the matched
+    right timestamp is always emitted as ``asof_{right_ts}``.
     ``tolerance_seconds``: drop matches farther than this from the
     left timestamp (payload nulled, row kept).
     """
@@ -81,13 +80,12 @@ def asof_join(
     )
     u = l2.unionByName(r2)
 
-    # backward: ascending ts, right-before-left at equal ts when exact
-    # matches are allowed; forward: the mirror image (descending ts)
+    # backward: ascending ts, right-before-left at equal ts so exact
+    # matches count; forward: the mirror image (descending ts)
     ts_order = F.col("__ts").asc() if direction == "backward" else F.col("__ts").desc()
-    side_order = F.col("__side").asc() if allow_exact_matches else F.col("__side").desc()
     w = (
         Window.partitionBy(*keys)
-        .orderBy(ts_order, side_order)
+        .orderBy(ts_order, F.col("__side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = u.withColumn("__m", F.last("__p", ignorenulls=True).over(w)).filter(
@@ -114,6 +112,6 @@ def asof_join(
     m = F.when(~null_key, m)
     return matched.select(
         *lcols,
-        m[right_ts].alias(f"{prefix}{right_ts}"),
-        *[m[c].alias(f"{prefix}{c}") for c in value_cols],
+        m[right_ts].alias(f"asof_{right_ts}"),
+        *[m[c].alias(f"asof_{c}") for c in value_cols],
     )

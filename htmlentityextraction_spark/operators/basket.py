@@ -5,8 +5,7 @@ pairs co-occur more than chance. Per-basket pair generation is the
 classic quadratic trap — a degenerate basket with 10^5 items emits
 10^10 pairs. So, like the trigram blocking guard in
 `operators/entity.py` and `dedup.py`'s ``max_block_rows``, baskets
-above ``max_basket_items`` FAIL LOUDLY (or are dropped when
-``drop_oversize=True``) before the self-join; normal retail baskets
+above ``max_basket_items`` FAIL LOUDLY before the self-join; normal retail baskets
 are tiny, so per-basket C(n,2) is bounded and the join is an
 equi-join on the basket key — one shuffle, map-side combinable
 counts.
@@ -32,7 +31,6 @@ def pair_cooccurrence(
     item_col: str,
     min_pair_count: int = 1,
     max_basket_items: int = 1000,
-    drop_oversize: bool = False,
 ) -> DataFrame:
     """(item_a, item_b, pair_count, count_a, count_b, n_baskets,
     support, confidence_a_to_b, lift) for unordered pairs
@@ -49,26 +47,21 @@ def pair_cooccurrence(
     )
 
     sizes = facts.groupBy("__b").agg(F.count("*").alias("__n"))
-    if drop_oversize:
-        over = sizes.filter(F.col("__n") > max_basket_items)
-        facts = facts.join(F.broadcast(over.select("__b")), "__b", "left_anti")
-        n_baskets = facts.select("__b").distinct().count()
-    else:
-        # one action yields both the guard verdict and the basket
-        # count (sizes has exactly one row per basket)
-        stats = sizes.agg(
-            F.max("__n").alias("__mx"), F.count(F.lit(1)).alias("__nb")
-        ).first()
-        if stats["__mx"] is not None and stats["__mx"] > max_basket_items:
-            hot = sizes.filter(F.col("__n") > max_basket_items).orderBy(
-                F.desc("__n")
-            ).limit(1).collect()
-            raise OversizeBasketError(
-                f"basket {hot[0]['__b']!r} has {hot[0]['__n']} items "
-                f"(max_basket_items={max_basket_items}); pair explosion refused — "
-                "raise the cap or pass drop_oversize=True"
-            )
-        n_baskets = stats["__nb"]
+    # one action yields both the guard verdict and the basket count
+    # (sizes has exactly one row per basket)
+    stats = sizes.agg(
+        F.max("__n").alias("__mx"), F.count(F.lit(1)).alias("__nb")
+    ).first()
+    if stats["__mx"] is not None and stats["__mx"] > max_basket_items:
+        hot = sizes.filter(F.col("__n") > max_basket_items).orderBy(
+            F.desc("__n")
+        ).limit(1).collect()
+        raise OversizeBasketError(
+            f"basket {hot[0]['__b']!r} has {hot[0]['__n']} items "
+            f"(max_basket_items={max_basket_items}); pair explosion refused — "
+            "raise the cap"
+        )
+    n_baskets = stats["__nb"]
     item_counts = facts.groupBy("__i").agg(F.count("*").alias("__cnt"))
 
     a = facts.select(F.col("__b"), F.col("__i").alias("item_a"))

@@ -17,14 +17,20 @@ members of a template family all pairwise-collide in some band), so
 the round count stays small and CORPUS-SIZE-INDEPENDENT — growing the
 corpus adds more clusters, not wider ones. Each round costs one
 shuffle (neighbor-min groupBy) + one join, both keyed on vertex id so
-AQE can coalesce; lineage is cut per round with ``localCheckpoint``
-so the plan does not grow with iterations (at cluster scale, pass
-``reliable_checkpoint_dir`` to cut with durable ``checkpoint`` for
-executor-loss recovery — same one-round storage bound).
-For adversarial long-path graphs the alternating large-star /
+AQE can coalesce. For adversarial long-path graphs the alternating large-star /
 small-star scheme (Kiveris et al., "Connected Components in MapReduce
 and Beyond") converges in O(log n) rounds; near-dup workloads do not
 need it, and its per-round cost is ~2x.
+
+The iterative operators here (``connected_components``,
+``pagerank``) cut lineage every round with ``localCheckpoint`` so the
+plan does not grow with iterations, and free each round's cut once the
+next one lands, so storage stays bounded at one round. The cuts live
+in executor-local storage and are not replicated: an executor lost
+mid-loop fails the job rather than recomputing it, the right trade
+for the single-JVM deployments this engine runs in.
+``bounded_bfs_bipartite`` is the k-hop
+sibling for frontier-sized traversals.
 
 The reference has no clustering stage (its dedup is per-URL
 keep-latest, `analytics/UpdateProdMetrics.scala` model); this is part
@@ -37,70 +43,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _checkpoint_round(
-    df: DataFrame, reliable_dir: str | None = None
-) -> tuple[DataFrame, object]:
-    """Eagerly cut one iteration round's lineage and return
-    (cut df, handle); ``_free_round(handle)`` releases exactly this
-    round's storage once the NEXT round materializes. Without that
-    release every round's cut accumulates for the whole loop
-    (observed as GC-locker retries in the sf1 PageRank probe on a
-    single 128 GiB JVM; on a cluster, the same leak spread across
-    executors).
+def _checkpoint_round(df: DataFrame) -> tuple[DataFrame, object]:
+    """Eagerly cut one iteration round's lineage with
+    ``localCheckpoint`` and return (cut df, handle);
+    ``_free_round(handle)`` releases exactly this round's storage once
+    the NEXT round materializes. Without that release every round's
+    cut accumulates for the whole loop (observed as GC-locker retries
+    in an sf1 PageRank run on a single 128 GiB JVM).
 
-    ``reliable_dir=None`` → ``localCheckpoint``: blocks live in
-    executor local storage, non-replicated — after an executor loss
-    the round CANNOT be recomputed (lineage is truncated), so a lost
-    executor mid-loop fails the job. Right default for a single JVM.
     The handle is the checkpointed frame's OWN internal RDD, pulled
     from the ``LogicalRDD`` node the checkpoint returns — NOT a
     before/after diff of the session-global persistent-RDD registry,
     which would capture (and later force-unpersist) any unrelated RDD
     a concurrent job in the same SparkSession happened to cache
     between the two snapshots.
-
-    ``reliable_dir`` set → the round is written to a UNIQUE parquet
-    dir under it and read back — a durable, replicated cut that
-    survives executor loss, with zero session-global state (the
-    ``sc.setCheckpointDir``-based ``DataFrame.checkpoint`` would
-    redirect EVERY concurrent invocation's rounds to the most
-    recently set directory; a parquet round-trip is scoped to this
-    call alone). Freeing deletes the round's files — the same
-    one-round storage bound either way.
     """
-    spark = df.sparkSession
-    if reliable_dir is not None:
-        import uuid
-
-        path = f"{reliable_dir.rstrip('/')}/round-{uuid.uuid4().hex}"
-        df.write.parquet(path)
-        out = spark.read.parquet(path)
-        return out, {"path": path, "spark": spark}
     out = df.localCheckpoint(eager=True)
-    jrdd = out._jdf.queryExecution().analyzed().rdd()
-    return out, {"jrdd": jrdd}
+    return out, out._jdf.queryExecution().analyzed().rdd()
 
 
 def _free_round(handle: object) -> None:
-    if not handle:
-        return
-    if "jrdd" in handle:
-        handle["jrdd"].unpersist(False)  # non-blocking: overlap next round
-        return
-    spark = handle["spark"]
-    p = spark._jvm.org.apache.hadoop.fs.Path(handle["path"])
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(p, True)
+    if handle is not None:
+        handle.unpersist(False)  # non-blocking: overlap next round
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 25,
-    reliable_checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Resolve ``pairs`` into components: returns (node, component)
+def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
+    """Resolve ``pairs`` (id_a, id_b) into components: returns (node, component)
     where ``component`` is the minimum node id reachable from
     ``node``. Only nodes that appear in at least one pair are
     returned (singletons are the caller's corpus minus this set —
@@ -112,32 +80,19 @@ def connected_components(
     loop), so the bound is never the thing that decides the answer —
     hitting it raises rather than silently returning a partial
     closure.
-
-    ``reliable_checkpoint_dir``: cluster guidance — by default rounds
-    are cut with ``localCheckpoint`` (non-replicated executor-local
-    blocks), and because round N-1 is unpersisted when round N lands,
-    a lost executor mid-loop CANNOT recompute and fails the job. On a
-    real cluster running many rounds over hours, pass an
-    HDFS/object-store dir here: rounds are cut durably (survive
-    executor loss) with the same one-round storage bound — round
-    N-1's files are deleted once round N materializes; the returned
-    frame's own cut remains until the caller drops the directory.
     """
-    reliable = reliable_checkpoint_dir
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # Symmetric, self-loop-free edge list; distinct so repeated pairs
     # from a multi-tier union don't inflate the per-round shuffle.
     edges, edges_handle = _checkpoint_round(
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        reliable,
+        .distinct()
     )
     labels, prev_round = _checkpoint_round(
         edges.select("u")
         .distinct()
-        .select("u", F.col("u").alias("component")),
-        reliable,
+        .select("u", F.col("u").alias("component"))
     )  # prev_round: round N-1's checkpoint storage, freed at round N
     for _ in range(max_rounds):
         nbr_min = (
@@ -151,8 +106,7 @@ def connected_components(
                 F.least(
                     "component", F.coalesce("nbr_component", "component")
                 ).alias("component"),
-            ),
-            reliable,
+            )
         )
         changed = (
             new_labels.alias("n")
@@ -178,12 +132,7 @@ def connected_components(
     )
 
 
-def resolve_duplicate_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    reliable_checkpoint_dir: str | None = None,
-) -> DataFrame:
+def resolve_duplicate_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full dedup decision for a corpus: (doc_id, cluster_id, keep).
 
     ``cluster_id`` is the minimum doc id of the doc's near-dup
@@ -193,20 +142,16 @@ def resolve_duplicate_clusters(
     agree on which copy survives. Singletons bypass the propagation
     loop entirely (left join + coalesce), so the iterative part only
     touches the pair-incident minority of the corpus.
-    ``reliable_checkpoint_dir`` forwards to the propagation loop —
-    see :func:`connected_components` for the cluster guidance.
     """
-    comp = connected_components(
-        pairs, reliable_checkpoint_dir=reliable_checkpoint_dir
-    )
+    comp = connected_components(pairs)
     return (
-        docs.select(id_col)
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
+        docs.select("doc_id")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
+            "doc_id",
+            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
         )
-        .withColumn("keep", F.col(id_col) == F.col("cluster_id"))
+        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
     )
 
 
@@ -215,7 +160,6 @@ def resolve_clusters_keep_best(
     pairs: DataFrame,
     id_col: str = "doc_id",
     quality_col: str = "quality",
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster-level SEMANTIC dedup decision: (id, cluster_id, keep,
     quality) where ``keep`` marks each near-dup cluster's BEST
@@ -232,14 +176,10 @@ def resolve_clusters_keep_best(
     (`operators/survivorship.py` golden-record pattern), so the add-on
     cost at 100 TB is one slim (cluster, best) aggregate, not a
     window over the corpus. Singletons keep themselves.
-    ``reliable_checkpoint_dir`` forwards to the propagation loop —
-    see :func:`connected_components` for the cluster guidance.
     """
     from htmlentityextraction_spark.operators.survivorship import golden_record
 
-    comp = connected_components(
-        pairs, reliable_checkpoint_dir=reliable_checkpoint_dir
-    )
+    comp = connected_components(pairs)
     labeled = (
         items.select(id_col, quality_col)
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")
@@ -326,7 +266,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed (src, dst) edge list.
 
@@ -339,8 +278,7 @@ def pagerank(
     groupBy(dst) per round — the same two shuffles GraphX's Pregel
     incarnation pays, with AQE free to broadcast the rank side when a
     subgraph is small. ``localCheckpoint`` cuts lineage per round so
-    the plan stays O(1) in iterations (swap for durable ``checkpoint``
-    on a real cluster). At 100 TB the edge list should be bucketed by
+    the plan stays O(1) in iterations. At 100 TB the edge list should be bucketed by
     src so the per-round join is co-located and only the slim
     (node, rank) side moves. |V| and the driver-side ``count()`` for n
     are node-scale scalars, not edge-scale.
@@ -358,20 +296,7 @@ def pagerank(
     materialization per round as sink-free ones. Fixed iteration
     count (not convergence-tested) keeps the result deterministic and
     SQL-expressible for the oracle.
-
-    ``reliable_checkpoint_dir``: cluster guidance — the default
-    ``localCheckpoint`` rounds are non-replicated AND round N-1 is
-    freed when round N lands, so a lost executor mid-loop cannot
-    recompute and fails the job. On a real cluster (a 20-round walk
-    over hours WILL lose an executor), pass an HDFS/object-store dir:
-    every cut — edges, verts, edges_deg, and each round's aggregate —
-    is written durably, round N-1's files are deleted at round N and
-    the edge-scale cuts (edges, edges_deg) are freed as soon as their
-    last consumer materializes (same one-round storage bound; only
-    verts + the final round outlive the call, since the returned lazy
-    frame reads them), and the loop survives executor loss.
     """
-    reliable = reliable_checkpoint_dir
     # Drop NULL-endpoint rows up front: the dangling-mass correction
     # below reserves the NULL dst key for its pseudo-edges, so a dirty
     # edge list with real NULL dst would have that mass silently
@@ -380,7 +305,7 @@ def pagerank(
     edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     # materialize the (possibly expensive) edge derivation ONCE — the
     # per-round joins must not replay the caller's edge-building plan
-    edges, edges_handle = _checkpoint_round(edges, reliable)
+    edges, edges_handle = _checkpoint_round(edges)
     # ONE node-scale aggregation yields vertices, out-degrees AND
     # the dangling set (optimization r12, guide §2.3/§2.4): the
     # old shape paid a union+distinct shuffle for verts, a second
@@ -402,8 +327,7 @@ def pagerank(
         edges.select(side.alias("s"))
         .select("s.node", "s.__d")
         .groupBy("node")
-        .agg(F.sum("__d").alias("__outdeg")),
-        reliable,
+        .agg(F.sum("__d").alias("__outdeg"))
     )
     n = nodes.count()
     # node-scale probe over the materialized cut — no extra pass
@@ -447,7 +371,7 @@ def pagerank(
                 F.lit(1).cast("long").alias("__outdeg"),
             )
         )
-    edges_deg, edges_deg_handle = _checkpoint_round(edges_deg, reliable)
+    edges_deg, edges_deg_handle = _checkpoint_round(edges_deg)
     # edges_deg's materialization was the raw edge cut's last consumer
     _free_round(edges_handle)
 
@@ -473,7 +397,7 @@ def pagerank(
         # only consumer and is reassigned below) — unpersist it so
         # storage stays bounded at ONE round's worth across the loop.
         incoming, this_round = _checkpoint_round(
-            contribs.groupBy("node").agg(F.sum("__c").alias("__s")), reliable
+            contribs.groupBy("node").agg(F.sum("__c").alias("__s"))
         )
         _free_round(prev_round)
         prev_round = this_round

@@ -52,8 +52,6 @@ def decontaminate(
     train: DataFrame,
     heldout: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination: per train doc, the number of distinct
@@ -68,23 +66,23 @@ def decontaminate(
     (groupBy doc). Docs with zero hits never shuffle at all.
     """
     h_grams = (
-        heldout.select(F.explode(word_ngrams(tokenize(F.col(text_col)), n)).alias("g"))
+        heldout.select(F.explode(word_ngrams(tokenize(F.col("text")), n)).alias("g"))
         .select(F.xxhash64("g").alias("gh"))
         .distinct()
     )
     t_grams = train.select(
-        F.col(id_col), F.explode(word_ngrams(tokenize(F.col(text_col)), n)).alias("g")
-    ).select(id_col, F.xxhash64("g").alias("gh"))
+        F.col("doc_id"), F.explode(word_ngrams(tokenize(F.col("text")), n)).alias("g")
+    ).select("doc_id", F.xxhash64("g").alias("gh"))
     hits = (
         t_grams.join(F.broadcast(h_grams), "gh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("gh").alias("n_hits"))
     )
     return (
-        train.select(id_col)
-        .join(hits, id_col, "left")
+        train.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
             (F.coalesce("n_hits", F.lit(0)) >= 1).cast("int").alias("contaminated"),
         )
@@ -94,9 +92,6 @@ def decontaminate(
 def dedup_against_corpus(
     incoming: DataFrame,
     existing: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Incremental dedup: keep incoming docs whose normalized-text
     fingerprint appears nowhere in the existing corpus, then keep-min-id
@@ -109,23 +104,19 @@ def dedup_against_corpus(
     """
     from htmlentityextraction_spark.operators.dedup import normalized_fingerprint
 
-    inc = incoming.withColumn("fingerprint", normalized_fingerprint(F.col(text_col)))
+    inc = incoming.withColumn("fingerprint", normalized_fingerprint(F.col("text")))
     ex_fp = existing.select(
-        normalized_fingerprint(F.col(text_col)).alias("fingerprint")
+        normalized_fingerprint(F.col("text")).alias("fingerprint")
     ).distinct()
     fresh = inc.join(ex_fp, "fingerprint", "left_anti")
-    first = fresh.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return first.select(id_col, "fingerprint")
+    first = fresh.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
+    return first.select("doc_id", "fingerprint")
 
 
 def advance_dedup_index(
     index_tbl,
     corpus_tbl,
     from_version: int,
-    to_version: int | None = None,
-    *,
-    fp_col: str = "fingerprint",
-    id_col: str = "doc_id",
 ) -> dict:
     """Advance a (fingerprint → doc_id) dedup-index merge table from
     the corpus table's CHANGE FEED — the corpus-version-level half of
@@ -158,9 +149,9 @@ def advance_dedup_index(
       check reads only the index buckets the window's fingerprints
       land in.
     """
-    ch = corpus_tbl.table_changes(from_version, to_version)
-    window_desc = f"versions ({from_version}, {to_version}]"
-    old_fp, new_fp = f"old_{fp_col}", f"new_{fp_col}"
+    ch = corpus_tbl.table_changes(from_version)
+    window_desc = f"versions ({from_version}, latest]"
+    old_fp, new_fp = "old_fingerprint", "new_fingerprint"
     # NULL fingerprints never enter the index (a fp-less doc indexes
     # nothing, retires nothing): without the filters, two null-fp docs
     # in one window would share the NULL groupBy group and trip the
@@ -168,7 +159,7 @@ def advance_dedup_index(
     adds = (
         ch.filter(F.col("change_type").isin("insert", "update"))
         .filter(F.col(new_fp).isNotNull())
-        .select(F.col(new_fp).alias(fp_col), F.col(id_col), F.lit("upsert").alias("op"))
+        .select(F.col(new_fp).alias("fingerprint"), F.col("doc_id"), F.lit("upsert").alias("op"))
     )
     drops = (
         ch.filter(
@@ -179,15 +170,15 @@ def advance_dedup_index(
             )
         )
         .filter(F.col(old_fp).isNotNull())
-        .select(F.col(old_fp).alias(fp_col), F.col(id_col), F.lit("delete").alias("op"))
+        .select(F.col(old_fp).alias("fingerprint"), F.col("doc_id"), F.lit("delete").alias("op"))
     )
     net = (
         adds.unionByName(drops)
-        .groupBy(fp_col)
+        .groupBy("fingerprint")
         .agg(
-            F.min(F.when(F.col("op") == "upsert", F.col(id_col))).alias("__doc"),
+            F.min(F.when(F.col("op") == "upsert", F.col("doc_id"))).alias("__doc"),
             F.count_distinct(
-                F.when(F.col("op") == "upsert", F.col(id_col))
+                F.when(F.col("op") == "upsert", F.col("doc_id"))
             ).alias("__n_live"),
             F.max(F.col("op") == "delete").alias("__retired"),
         )
@@ -199,19 +190,19 @@ def advance_dedup_index(
             raise ValueError(
                 "dedup-index invariant violated: fingerprints with more than "
                 f"one live doc in {window_desc} of "
-                f"the corpus, e.g. {[r[fp_col] for r in dup]} — a batch was "
+                f"the corpus, e.g. {[r['fingerprint'] for r in dup]} — a batch was "
                 "merged into the corpus without probing "
                 "dedup_batch_against_index first"
             )
         fresh_ups = net.filter(
             F.col("__doc").isNotNull() & ~F.coalesce("__retired", F.lit(False))
         )
-        bks = index_tbl.affected_buckets(fresh_ups, fp_col)
+        bks = index_tbl.affected_buckets(fresh_ups, "fingerprint")
         idx = index_tbl.read_buckets(bks).select(
-            fp_col, F.col(id_col).alias("__idx_doc")
+            "fingerprint", F.col("doc_id").alias("__idx_doc")
         )
         clash = (
-            fresh_ups.join(idx, fp_col)
+            fresh_ups.join(idx, "fingerprint")
             .filter(F.col("__idx_doc") != F.col("__doc"))
             .limit(3)
             .collect()
@@ -219,14 +210,14 @@ def advance_dedup_index(
         if clash:
             raise ValueError(
                 "dedup-index invariant violated: the index already maps "
-                f"fingerprint(s) {[r[fp_col] for r in clash]} to a different "
+                f"fingerprint(s) {[r['fingerprint'] for r in clash]} to a different "
                 f"live doc and nothing in {window_desc} retired the old "
                 "mapping — the corpus now holds a duplicate merged without "
                 "probing dedup_batch_against_index"
             )
         ops = net.select(
-            fp_col,
-            F.col("__doc").alias(id_col),
+            "fingerprint",
+            F.col("__doc").alias("doc_id"),
             F.when(F.col("__doc").isNotNull(), F.lit("upsert"))
             .otherwise(F.lit("delete"))
             .alias("op"),
@@ -239,9 +230,6 @@ def advance_dedup_index(
 def dedup_batch_against_index(
     batch: DataFrame,
     index_tbl,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Dedup an incoming batch against the LIVE corpus state via the
     fingerprint-index merge table: bucket-transform pruning reads only
@@ -256,23 +244,21 @@ def dedup_batch_against_index(
     from htmlentityextraction_spark.operators.dedup import normalized_fingerprint
 
     fps = batch.select(
-        F.col(id_col), normalized_fingerprint(F.col(text_col)).alias("fingerprint")
+        F.col("doc_id"), normalized_fingerprint(F.col("text")).alias("fingerprint")
     ).filter(F.col("fingerprint").isNotNull())
     bks = index_tbl.affected_buckets(fps, "fingerprint")
     known = index_tbl.read_buckets(bks).select("fingerprint")
     fresh = fps.join(known, "fingerprint", "left_anti")
     return (
         fresh.groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col, "fingerprint")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", "fingerprint")
     )
 
 
 def segment_dedup_keep_first(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seg_len: int = 15,
 ) -> DataFrame:
     """Exact passage-level dedup: the FIRST global occurrence of each
@@ -291,16 +277,16 @@ def segment_dedup_keep_first(
     bounded.
     """
     segs = docs.select(
-        F.col(id_col),
-        F.posexplode(segment_tokens(tokenize(F.col(text_col)), seg_len)).alias("pos", "seg"),
+        F.col("doc_id"),
+        F.posexplode(segment_tokens(tokenize(F.col("text")), seg_len)).alias("pos", "seg"),
     ).withColumn("sh", F.xxhash64("seg"))
     # Partition on (sh, seg): the hash dominates the partitioner for
     # balance; the raw segment keeps a 64-bit collision from merging
     # two different segments into one dedup group.
-    win = Window.partitionBy("sh", "seg").orderBy(id_col, "pos")
+    win = Window.partitionBy("sh", "seg").orderBy("doc_id", "pos")
     marked = segs.withColumn("keep", F.row_number().over(win) == 1)
     kept_struct = F.when(F.col("keep"), F.struct("pos", "seg"))
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_segments"),
         F.sum(F.col("keep").cast("int")).cast("bigint").alias("n_kept"),
         F.md5(
@@ -317,8 +303,6 @@ def segment_dedup_keep_first(
 def boilerplate_segments(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seg_len: int = 15,
     min_docs: int = 3,
 ) -> DataFrame:
@@ -335,20 +319,20 @@ def boilerplate_segments(
     linearly.
     """
     segs = docs.select(
-        F.col(id_col),
-        F.posexplode(segment_tokens(tokenize(F.col(text_col)), seg_len)).alias("pos", "seg"),
+        F.col("doc_id"),
+        F.posexplode(segment_tokens(tokenize(F.col("text")), seg_len)).alias("pos", "seg"),
     ).select(
-        id_col,
+        "doc_id",
         "pos",
         F.xxhash64("seg").alias("sh"),
         F.size(F.split("seg", " ")).alias("seg_toks"),
     )
-    freq = segs.groupBy("sh").agg(F.count_distinct(id_col).alias("df"))
+    freq = segs.groupBy("sh").agg(F.count_distinct("doc_id").alias("df"))
     marked = segs.join(freq, "sh").withColumn(
         "is_boiler", (F.col("df") >= min_docs).cast("int")
     )
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_segments"),
             F.sum("is_boiler").cast("bigint").alias("n_boilerplate"),

@@ -28,6 +28,14 @@ from htmlentityextraction_spark.functions.text import text_only
 # operands stay < 2^31 so a*h+b < 2^62 — no long overflow under ANSI mode.
 _P = (1 << 31) - 1
 
+# MinHash sketch geometry (see minhash_lsh_pairs): 48 hashes in 12
+# bands of 4 rows over 5-char shingles. Read at call time.
+_NUM_HASHES = 48
+_BANDS = 12
+_SHINGLE_N = 5
+# ngram_jaccard_pairs' blocking keys
+_NGRAM_BLOCK = ("lang", "source")
+
 
 def _hash_family(i: int) -> tuple[int, int]:
     # multipliers/offsets derived from splitmix-style constants, < 2^31
@@ -41,41 +49,37 @@ def normalized_fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.trim(text_only(text))))
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative per normalized fingerprint."""
-    fp = df.withColumn("fingerprint", normalized_fingerprint(F.col(text_col)))
+    fp = df.withColumn("fingerprint", normalized_fingerprint(F.col("text")))
     from pyspark.sql import Window
 
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
+    w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return fp.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def char_shingles(text: Column, n: int = 5) -> Column:
-    """Distinct char n-gram shingles of normalized text."""
+def char_shingles(text: Column) -> Column:
+    """Distinct char ``_SHINGLE_N``-gram shingles of normalized text."""
     norm = F.lower(F.trim(text_only(text)))
     length = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(length - F.lit(n - 1), F.lit(1)))
+    idx = F.sequence(F.lit(1), F.greatest(length - F.lit(_SHINGLE_N - 1), F.lit(1)))
     return F.array_distinct(
-        F.when(length >= n, F.transform(idx, lambda i: norm.substr(i, F.lit(n)))).otherwise(
-            F.array(norm)
-        )
+        F.when(
+            length >= _SHINGLE_N,
+            F.transform(idx, lambda i: norm.substr(i, F.lit(_SHINGLE_N))),
+        ).otherwise(F.array(norm))
     )
 
 
-def minhash_signatures_codegen(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    n: int = 5,
-) -> DataFrame:
-    """(doc, sig_0..sig_{num_hashes-1}) via explode + codegen, NOT
+def minhash_signatures_codegen(df: DataFrame) -> DataFrame:
+    """(doc, sig_0..sig_{_NUM_HASHES-1}) of (doc_id, text) rows via
+    explode + codegen, NOT
     array lambdas: Spark's higher-order functions (transform/
     aggregate) are interpreted per element — 64 transforms over
     ~500-shingle arrays measured ~100 s for 5000 docs at sf0.1. The
     explode shape runs every hash expression inside whole-stage
     codegen and the min() aggregates combine map-side, so the shuffle
-    is num_hashes longs per doc regardless of document length.
+    is ``_NUM_HASHES`` longs per doc regardless of document length.
     MinHash over a multiset equals MinHash over the set, so no
     distinct is needed before the min.
 
@@ -84,20 +88,22 @@ def minhash_signatures_codegen(
     whole null population would LSH into a single mega-bucket of
     spurious jaccard-1.0 pairs (observed under the null fuzz: 10 null
     docs → 45 extra pairs). No text, no shingles, no pairs."""
-    df = df.filter(F.col(text_col).isNotNull())
-    norm = F.lower(F.trim(text_only(F.col(text_col))))
-    grams = df.select(F.col(id_col).alias("doc"), norm.alias("__norm")).select(
+    df = df.filter(F.col("text").isNotNull())
+    norm = F.lower(F.trim(text_only(F.col("text"))))
+    grams = df.select(F.col("doc_id").alias("doc"), norm.alias("__norm")).select(
         "doc",
         F.explode(
-            F.sequence(F.lit(1), F.greatest(F.length("__norm") - F.lit(n - 1), F.lit(1)))
+            F.sequence(F.lit(1), F.greatest(F.length("__norm") - F.lit(_SHINGLE_N - 1), F.lit(1)))
         ).alias("__i"),
         "__norm",
     ).select(
         "doc",
-        F.pmod(F.xxhash64(F.col("__norm").substr(F.col("__i"), F.lit(n))), F.lit(_P)).alias("__h"),
+        F.pmod(
+            F.xxhash64(F.col("__norm").substr(F.col("__i"), F.lit(_SHINGLE_N))), F.lit(_P)
+        ).alias("__h"),
     )
     aggs = []
-    for i in range(num_hashes):
+    for i in range(_NUM_HASHES):
         a, b = _hash_family(i)
         aggs.append(
             F.min(F.pmod(F.col("__h") * F.lit(a) + F.lit(b), F.lit(_P))).alias(f"sig_{i}")
@@ -105,15 +111,15 @@ def minhash_signatures_codegen(
     return grams.groupBy("doc").agg(*aggs)
 
 
-def minhash_signature(base: Column, num_hashes: int = 64) -> list[Column]:
-    """num_hashes MinHash values from a pre-hashed shingle array (one
+def minhash_signature(base: Column) -> list[Column]:
+    """``_NUM_HASHES`` MinHash values from a pre-hashed shingle array (one
     xxhash64 pass; see base_hashes) + a universal-hash family. `base`
     MUST be a materialized column reference, not an inline expression:
-    it is referenced num_hashes times, and CollapseProject would
+    it is referenced ``_NUM_HASHES`` times, and CollapseProject would
     otherwise duplicate the shingle+hash work 64× (measured 300s vs 3s
     on 500 docs). Values are < P so a*h+b fits in a long (ANSI-safe)."""
     sig = []
-    for i in range(num_hashes):
+    for i in range(_NUM_HASHES):
         a, b = _hash_family(i)
         sig.append(
             F.array_min(F.transform(base, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
@@ -128,16 +134,12 @@ def base_hashes(shingles: Column) -> Column:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 48,
-    bands: int = 12,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b) via banded MinHash-LSH,
-    verified with true shingle Jaccard.
+    """Near-duplicate pairs (id_a < id_b) of (doc_id, text) rows via
+    banded MinHash-LSH, verified with true shingle Jaccard.
 
-    Default sketch geometry is 48 hashes in 12 bands of 4 rows: the
+    The sketch geometry is 48 hashes in 12 bands of 4 rows: the
     4-row band width sets the detection curve's shape, so vs the
     previous 64/16 the per-band hit probability is unchanged and only
     the number of independent chances drops (P(detect) at j=0.6:
@@ -160,7 +162,7 @@ def minhash_lsh_pairs(
     building the returned DataFrame already runs the signature jobs,
     and a caller that composes but never acts on it still pays them.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _NUM_HASHES // _BANDS
     # localCheckpoint, NOT cache(): both are one materialization within
     # a run (two consumers: the band explode and the packed-signature
     # filter), but a cache held at return is plan-keyed — a rebuilt
@@ -168,14 +170,14 @@ def minhash_lsh_pairs(
     # (VERIFIED r13: bench runs 2-3 planned InMemoryTableScan over run
     # 1's blocks, 16.1 -> 3.0 s — cross-run caching, prohibited). A
     # localCheckpoint is per-run by construction (OPTIMIZATION_r13.md).
-    sigs = minhash_signatures_codegen(df, text_col, id_col, num_hashes).localCheckpoint()
+    sigs = minhash_signatures_codegen(df).localCheckpoint()
     banded = sigs.select(
         "doc",
         *[
             F.xxhash64(
                 *[F.col(f"sig_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
             ).alias(f"band_{b}")
-            for b in range(bands)
+            for b in range(_BANDS)
         ],
     )
     bucketed = banded.select(
@@ -184,7 +186,7 @@ def minhash_lsh_pairs(
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("bucket"))
-                    for b in range(bands)
+                    for b in range(_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -209,13 +211,13 @@ def minhash_lsh_pairs(
     # execution); the packed form joins 2 columns and compares with
     # one zip_with over the (small) candidate set, off the hot path.
     sig_arr = sigs.select(
-        "doc", F.array(*[F.col(f"sig_{i}") for i in range(num_hashes)]).alias("sig")
+        "doc", F.array(*[F.col(f"sig_{i}") for i in range(_NUM_HASHES)]).alias("sig")
     )
     est = F.aggregate(
         F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, v: acc + v,
-    ) / float(num_hashes)
+    ) / float(_NUM_HASHES)
     cand = (
         raw_cand.join(sig_arr.select(F.col("doc").alias("id_a"), F.col("sig").alias("sa")), "id_a")
         .join(sig_arr.select(F.col("doc").alias("id_b"), F.col("sig").alias("sb")), "id_b")
@@ -237,11 +239,11 @@ def minhash_lsh_pairs(
         .union(cand.select(F.col("id_b").alias("doc")))
         .distinct()
     )
-    small = df.join(F.broadcast(cand_ids), df[id_col] == cand_ids["doc"], "left_semi")
-    norm = F.lower(F.trim(text_only(F.col(text_col))))
-    n = 5
+    small = df.join(F.broadcast(cand_ids), df["doc_id"] == cand_ids["doc"], "left_semi")
+    norm = F.lower(F.trim(text_only(F.col("text"))))
+    n = _SHINGLE_N
     shingle_tbl = (
-        small.select(F.col(id_col).alias("doc"), norm.alias("__norm"))
+        small.select(F.col("doc_id").alias("doc"), norm.alias("__norm"))
         .select(
             "doc",
             F.explode(
@@ -310,8 +312,6 @@ def simhash60(tokens: Column) -> Column:
 
 def simhash_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60 bits into 4×15-bit keys
@@ -325,7 +325,7 @@ def simhash_pairs(
     # explode + codegen, same rationale as minhash_signatures_codegen:
     # 60 interpreted aggregate() lambdas per doc don't scale
     toks = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokenize(F.col(text_col))).alias("__t")
+        F.col("doc_id").alias("doc"), F.explode(tokenize(F.col("text"))).alias("__t")
     ).select("doc", _token_hash60(F.col("__t")).alias("__h"))
     votes = toks.groupBy("doc").agg(
         *[
@@ -376,9 +376,6 @@ def simhash_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = ("lang", "source"),
     threshold: float = 0.8,
     max_block_rows: int = 100_000,
 ) -> DataFrame:
@@ -392,20 +389,20 @@ def ngram_jaccard_pairs(
     from htmlentityextraction_spark.functions.text import tokenize
 
     toks = df.select(
-        F.col(id_col).alias("doc"),
-        *[F.col(c) for c in block_cols],
-        F.array_distinct(tokenize(F.col(text_col))).alias("toks"),
+        F.col("doc_id").alias("doc"),
+        *[F.col(c) for c in _NGRAM_BLOCK],
+        F.array_distinct(tokenize(F.col("text"))).alias("toks"),
     )
     if max_block_rows is not None:
         big = (
-            toks.groupBy(*block_cols)
+            toks.groupBy(*_NGRAM_BLOCK)
             .count()
             .filter(F.col("count") > max_block_rows)
             .limit(1)
             .collect()
         )
         if big:
-            key = {c: big[0][c] for c in block_cols}
+            key = {c: big[0][c] for c in _NGRAM_BLOCK}
             raise ValueError(
                 f"ngram_jaccard_pairs: block {key} has {big[0]['count']} rows "
                 f"(> max_block_rows={max_block_rows}); quadratic verify would "
@@ -413,12 +410,12 @@ def ngram_jaccard_pairs(
                 "raise the cap explicitly"
             )
     left = toks.select(
-        F.col("doc").alias("id_a"), F.col("toks").alias("t_a"), *[F.col(c) for c in block_cols]
+        F.col("doc").alias("id_a"), F.col("toks").alias("t_a"), *[F.col(c) for c in _NGRAM_BLOCK]
     )
     right = toks.select(
-        F.col("doc").alias("id_b"), F.col("toks").alias("t_b"), *[F.col(c) for c in block_cols]
+        F.col("doc").alias("id_b"), F.col("toks").alias("t_b"), *[F.col(c) for c in _NGRAM_BLOCK]
     )
-    pairs = left.join(right, list(block_cols)).filter(F.col("id_a") < F.col("id_b"))
+    pairs = left.join(right, list(_NGRAM_BLOCK)).filter(F.col("id_a") < F.col("id_b"))
     inter = F.size(F.array_intersect("t_a", "t_b")).cast("double")
     union = F.size(F.array_union("t_a", "t_b")).cast("double")
     return (
@@ -499,8 +496,6 @@ def sorted_neighborhood_pairs(
 def exact_substring_spans(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     window: int = 50,
 ) -> DataFrame:
     """Sliding-window exact-substring duplicate spans — the
@@ -533,33 +528,33 @@ def exact_substring_spans(
     """
     from htmlentityextraction_spark.functions.text import tokenize
 
-    toks = F.filter(tokenize(F.col(text_col)), lambda t: t != "")
+    toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
     base = (
-        docs.select(F.col(id_col), toks.alias("__toks"))
+        docs.select(F.col("doc_id"), toks.alias("__toks"))
         .withColumn("__n", F.size("__toks"))
         .filter(F.col("__n") >= window)
     )
     wins = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), F.col("__n") - window + 1),
                 lambda i: F.array_join(F.slice("__toks", i, window), " "),
             )
         ).alias("__p0", "win"),
-    ).select(F.col(id_col), (F.col("__p0") + 1).alias("pos"), "win")
+    ).select(F.col("doc_id"), (F.col("__p0") + 1).alias("pos"), "win")
     # global first-occurrence rank: hash dominates the partitioner,
     # the raw window rides along as the 64-bit collision guard
-    occ = Window.partitionBy("__h", "win").orderBy(id_col, "pos")
+    occ = Window.partitionBy("__h", "win").orderBy("doc_id", "pos")
     dup = (
         wins.withColumn("__h", F.xxhash64("win"))
         .withColumn("__rk", F.row_number().over(occ))
         .filter(F.col("__rk") > 1)
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
     # island merge: a duplicate window opens a new span iff it starts
     # past the furthest end seen so far in this doc
-    wdoc = Window.partitionBy(id_col).orderBy("pos")
+    wdoc = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max(F.col("pos") + window - 1).over(
         wdoc.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -569,13 +564,13 @@ def exact_substring_spans(
         "__isl", F.sum("__new").over(wdoc.rowsBetween(Window.unboundedPreceding, 0))
     )
     return (
-        isl.groupBy(id_col, "__isl")
+        isl.groupBy("doc_id", "__isl")
         .agg(
             F.min("pos").cast("long").alias("span_start"),
             (F.max("pos") + window - 1).cast("long").alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),

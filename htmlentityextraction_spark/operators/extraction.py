@@ -198,18 +198,16 @@ def parse_price(c: Column) -> Column:
     return F.regexp_replace(c, ",", "").try_cast("double")
 
 
-def label_candidates(
-    cand: DataFrame, truth: DataFrame, url_col: str = "url", price_col: str = "price"
-) -> DataFrame:
+def label_candidates(cand: DataFrame, truth: DataFrame) -> DataFrame:
     """``isTrueCandid`` (`utils/Utils.scala:115-121`): a candidate is
     positive when candidate == page price == updatedPrice numerically.
     `truth` carries (url, price, updated_price). Broadcast-joined by
     url; normalized location added per `data/DataSchema.scala:6-8`."""
-    labeled = cand.join(F.broadcast(truth), url_col)
+    labeled = cand.join(F.broadcast(truth), "url")
     num = parse_price(F.col("candidate"))
     return labeled.withColumn(
         "label",
         (num.isNotNull()
-         & (num == F.col(price_col))
+         & (num == F.col("price"))
          & (num == F.col("updated_price"))).cast("boolean"),
     ).withColumn("norm_location", norm_location())

@@ -30,6 +30,11 @@ import pickle
 import numpy as np
 
 _EPS = 1e-12
+# Shrinkage per tree, the smallest leaf a split may leave, and the
+# quantile thresholds tried per feature.
+_LEARNING_RATE = 0.3
+_MIN_LEAF = 5
+_N_THRESHOLDS = 16
 
 
 def _sigmoid(z: np.ndarray) -> np.ndarray:
@@ -39,12 +44,12 @@ def _sigmoid(z: np.ndarray) -> np.ndarray:
 class _Node:
     __slots__ = ("feature", "threshold", "left", "right", "value")
 
-    def __init__(self, value: float = 0.0):
+    def __init__(self):
         self.feature = -1
         self.threshold = 0.0
         self.left = None
         self.right = None
-        self.value = value
+        self.value = 0.0
 
 
 def _bin_features(X: np.ndarray, n_thresholds: int) -> tuple[list[np.ndarray], np.ndarray]:
@@ -139,19 +144,9 @@ class GBTClassifier:
     290-293`, is the same weighted-vote margin); ``predict`` thresholds
     it at 0."""
 
-    def __init__(
-        self,
-        n_estimators: int = 30,
-        max_depth: int = 5,
-        learning_rate: float = 0.3,
-        min_leaf: int = 5,
-        n_thresholds: int = 16,
-    ):
+    def __init__(self, n_estimators: int = 30, max_depth: int = 5):
         self.n_estimators = n_estimators
         self.max_depth = max_depth
-        self.learning_rate = learning_rate
-        self.min_leaf = min_leaf
-        self.n_thresholds = n_thresholds
         self.base_: float = 0.0
         self.trees_: list[_Node] = []
 
@@ -160,7 +155,7 @@ class GBTClassifier:
         y = np.asarray(y, dtype=np.float64)
         p = min(max(y.mean(), 1e-6), 1 - 1e-6)
         self.base_ = float(np.log(p / (1 - p)))
-        thresholds, binned = _bin_features(X, self.n_thresholds)
+        thresholds, binned = _bin_features(X, _N_THRESHOLDS)
         idx = np.arange(X.shape[0])
         margin = np.full(X.shape[0], self.base_)
         self.trees_ = []
@@ -169,9 +164,9 @@ class GBTClassifier:
             grad = y - prob           # negative gradient of logloss
             hess = prob * (1 - prob)
             tree = _fit_tree_binned(
-                binned, thresholds, idx, grad, hess, self.max_depth, self.min_leaf
+                binned, thresholds, idx, grad, hess, self.max_depth, _MIN_LEAF
             )
-            margin = margin + self.learning_rate * _predict_tree(tree, X)
+            margin = margin + _LEARNING_RATE * _predict_tree(tree, X)
             self.trees_.append(tree)
         return self
 
@@ -179,7 +174,7 @@ class GBTClassifier:
         X = np.asarray(X, dtype=np.float64)
         m = np.full(X.shape[0], self.base_)
         for tree in self.trees_:
-            m = m + self.learning_rate * _predict_tree(tree, X)
+            m = m + _LEARNING_RATE * _predict_tree(tree, X)
         return m
 
     def predict(self, X: np.ndarray) -> np.ndarray:
@@ -195,7 +190,7 @@ class GBTClassifier:
         m = np.full(X.shape[0], self.base_)
         out[0] = m
         for k, tree in enumerate(self.trees_, start=1):
-            m = m + self.learning_rate * _predict_tree(tree, X)
+            m = m + _LEARNING_RATE * _predict_tree(tree, X)
             out[k] = m
         return out
 
@@ -218,10 +213,7 @@ class GBTClassifier:
 
     def truncate(self, k: int) -> "GBTClassifier":
         """Sub-model with only the first k trees (shares fitted trees)."""
-        sub = GBTClassifier(
-            n_estimators=k, max_depth=self.max_depth, learning_rate=self.learning_rate,
-            min_leaf=self.min_leaf, n_thresholds=self.n_thresholds,
-        )
+        sub = GBTClassifier(n_estimators=k, max_depth=self.max_depth)
         sub.base_ = self.base_
         sub.trees_ = self.trees_[:k]
         return sub

@@ -99,7 +99,7 @@ class ParquetMergeTable:
       metadata-only; merges add columns and widen types.
     - maintenance: ``optimize`` (Z-order rewrite), ``vacuum``
       (retention), ``verify_integrity`` (storage audit), and the
-      ``snapshots``/``files``/``history`` metadata views.
+      ``snapshots``/``history`` metadata views.
     """
 
     def __init__(
@@ -491,14 +491,14 @@ class ParquetMergeTable:
         )
         return sorted({str(r["__b"]) for r in rows})
 
-    def read_buckets(self, bucket_ids: list[str], version: int | None = None) -> DataFrame:
-        """Snapshot read restricted to the given bucket ids — the
+    def read_buckets(self, bucket_ids: list[str]) -> DataFrame:
+        """Current-snapshot read restricted to the given bucket ids — the
         pruned-read primitive behind key-state lookups (streaming
         MERGE reads only the buckets a micro-batch's keys touch) and
         manifest-diff CDC. Buckets absent from the manifest (never
         written / emptied) are skipped. An empty selection reads back
         as an empty frame with the manifest schema."""
-        m = self._manifest_for(version)
+        m = self._read_manifest()
         want = {str(b) for b in bucket_ids}
         paths = [
             os.path.join(self.path, rel)
@@ -510,8 +510,9 @@ class ParquetMergeTable:
         return self._to_logical_df(self._read_physical(m, paths), m)
 
     # -- pruned reads (zone maps / bucket transform) -----------------------
-    def prune_report(self, col: str, lo=None, hi=None, version: int | None = None) -> dict:
-        """Manifest-only pruning decision for ``lo <= col <= hi``:
+    def prune_report(self, col: str, lo=None, hi=None) -> dict:
+        """Manifest-only pruning decision for ``lo <= col <= hi`` on the
+        current snapshot:
         which buckets must be scanned vs are skipped by their zone
         maps. Only the key carries zone maps, so any other ``col``
         conservatively scans every bucket. Bounds
@@ -522,7 +523,7 @@ class ParquetMergeTable:
         against string stats) degrades to a conservative scan, never
         an error — pruning is an optimization, not a correctness
         gate."""
-        m = self._manifest_for(version)
+        m = self._read_manifest()
         col = self._phys(m, col)  # stats are keyed by physical name
         lo = self._json_scalar(lo)
         hi = self._json_scalar(hi)
@@ -539,8 +540,8 @@ class ParquetMergeTable:
             kept.append(b)
         return {"scanned": sorted(kept), "skipped": sorted(pruned)}
 
-    def read_where(self, col: str, lo=None, hi=None, version: int | None = None) -> DataFrame:
-        """Range read with manifest zone-map pruning: only buckets
+    def read_where(self, col: str, lo=None, hi=None) -> DataFrame:
+        """Current-snapshot range read with manifest zone-map pruning: only buckets
         whose key [min, max] overlaps [lo, hi] are scanned when ``col``
         is the key (with range bucketing this is partition pruning);
         any other ``col`` scans every bucket. The predicate still
@@ -548,10 +549,10 @@ class ParquetMergeTable:
         this is the difference between listing a few bucket dirs and
         scanning the table — the same file-skipping contract
         Delta/Iceberg readers get from their manifests."""
-        m = self._manifest_for(version)
+        m = self._read_manifest()
         if not m["buckets"]:
             return self.spark.createDataFrame([], self._schema_of_empty(m))
-        kept = self.prune_report(col, lo, hi, version)["scanned"]
+        kept = self.prune_report(col, lo, hi)["scanned"]
         # all-pruned: scan one bucket for the schema; the predicate
         # below returns zero rows from it
         paths = [os.path.join(self.path, m["buckets"][b]) for b in kept] or [
@@ -686,24 +687,8 @@ class ParquetMergeTable:
             "version int, n_buckets int, total_rows long, bucketing string, num_buckets int",
         )
 
-    def files(self, version: int | None = None) -> DataFrame:
-        """Metadata table (Iceberg's ``files``): one row per data
-        file of a snapshot — bucket, path, size in bytes. Local
-        listing of only the referenced dirs."""
-        m = self._manifest_for(version)
-        rows = []
-        for b, rel in sorted(m["buckets"].items()):
-            full = os.path.join(self.path, rel)
-            for fname in sorted(os.listdir(full)):
-                if fname.endswith(".parquet"):
-                    p = os.path.join(full, fname)
-                    rows.append((b, os.path.relpath(p, self.path), os.path.getsize(p)))
-        return self.spark.createDataFrame(
-            rows, "bucket string, rel_path string, size_bytes long"
-        )
-
-    def verify_integrity(self, version: int | None = None) -> dict:
-        """Storage-vs-manifest audit of a snapshot: every referenced
+    def verify_integrity(self) -> dict:
+        """Storage-vs-manifest audit of the current snapshot: every referenced
         bucket dir must exist with data files, and its row count must
         equal the manifest's recorded ``__rows`` expectation. Returns
         ``{"ok", "missing", "mismatched", "unverified"}`` — missing =
@@ -715,7 +700,7 @@ class ParquetMergeTable:
         This is the routine a migration/replication pipeline runs
         before flipping readers to a copied table — the audit-side
         complement of ``tablediff.checksum_diff``."""
-        m = self._manifest_for(version)
+        m = self._read_manifest()
         missing: list[str] = []
         mismatched: list[dict] = []
         unverified: list[str] = []
@@ -932,9 +917,7 @@ class ParquetMergeTable:
         finally:
             self._release_lock(lease)
 
-    def merge(
-        self, updates: DataFrame, op_col: str = "op", combine: dict[str, str] | None = None
-    ) -> dict:
+    def merge(self, updates: DataFrame, combine: dict[str, str] | None = None) -> dict:
         """MERGE: rows with op='upsert' update matched keys or insert
         new ones; op='delete' removes matched keys. Returns the new
         manifest. Equal to staged_merge + commit.
@@ -949,13 +932,11 @@ class ParquetMergeTable:
         pre-reads current state to compute the combined value — the
         only state ever read is the affected buckets the merge
         rewrites anyway."""
-        staged = self.staged_merge(updates, op_col, combine)
+        staged = self.staged_merge(updates, combine)
         self.commit(staged)
         return staged
 
-    def staged_merge(
-        self, updates: DataFrame, op_col: str = "op", combine: dict[str, str] | None = None
-    ) -> dict:
+    def staged_merge(self, updates: DataFrame, combine: dict[str, str] | None = None) -> dict:
         """Write the post-merge files for every affected bucket and
         return the NEW manifest — without publishing it. A crash here
         (or a discarded stage) leaves readers on the old snapshot.
@@ -977,7 +958,7 @@ class ParquetMergeTable:
         phys_cols = set(self._physical_cols(m)) | retired
         logical_cols = self._logical_cols(m)
         for c in updates.columns:
-            if c in (op_col, self.key_col) or c in logical_cols:
+            if c in ("op", self.key_col) or c in logical_cols:
                 continue
             if c in phys_cols:
                 minted = f"{c}__p{version}"
@@ -1038,7 +1019,7 @@ class ParquetMergeTable:
             for b in affected
             if str(b) in m["buckets"]
         ]
-        data_cols = [c for c in upd.columns if c not in (op_col, "__bucket")]
+        data_cols = [c for c in upd.columns if c not in ("op", "__bucket")]
         if old_paths:
             # schema-pinned read: dropped physical columns are never
             # selected (this rewrite retires them physically for the
@@ -1046,7 +1027,7 @@ class ParquetMergeTable:
             # already widened
             old = self._read_physical(m, old_paths)
         else:
-            old = self.spark.createDataFrame([], updates.drop(op_col).schema)
+            old = self.spark.createDataFrame([], updates.drop("op").schema)
 
         # schema evolution (Delta mergeSchema shape): an update batch
         # may ADD columns — existing rows take null for them, and the
@@ -1098,7 +1079,7 @@ class ParquetMergeTable:
         k = self.key_col
         upd_named = upd.select(
             F.col(k).alias("__uk"),
-            F.col(op_col).alias("__op"),
+            F.col("op").alias("__op"),
             *[F.col(c).alias(f"__u_{c}") for c in data_cols if c != k],
         )
         # full-outer SMJ sorts BOTH sides; when the update batch is

@@ -30,12 +30,11 @@ def interval_join(
     start_ts: str,
     end_ts: str,
     grain_seconds: int = 3600,
-    inclusive_end: bool = False,
 ) -> DataFrame:
     """Inner-join each point row to every interval row (same key)
-    whose ``[start_ts, end_ts)`` contains ``point_ts`` (closed end
-    with ``inclusive_end``). Output: all point columns + all interval
-    columns (caller aliases collisions away beforehand).
+    whose half-open ``[start_ts, end_ts)`` contains ``point_ts``.
+    Output: all point columns + all interval columns (caller aliases
+    collisions away beforehand).
 
     Implementation: one equi shuffle on (key, time-grain) + exact
     filter — no non-equi join in the plan (contract-tested)."""
@@ -54,13 +53,8 @@ def interval_join(
         "__g",
         F.explode(F.sequence((us(start_ts) / g).cast("long"), (us(end_ts) / g).cast("long"))),
     )
-    end_pred = (
-        F.col(point_ts) <= F.col(end_ts)
-        if inclusive_end
-        else F.col(point_ts) < F.col(end_ts)
-    )
     return (
         p.join(i, [*keys, "__g"])
-        .filter((F.col(point_ts) >= F.col(start_ts)) & end_pred)
+        .filter((F.col(point_ts) >= F.col(start_ts)) & (F.col(point_ts) < F.col(end_ts)))
         .drop("__g")
     )

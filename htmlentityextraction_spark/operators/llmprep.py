@@ -34,20 +34,16 @@ def quantize_int8(vec: Column) -> tuple[Column, Column]:
 
 def chunk_tokens(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_size: int = 32,
     stride: int = 24,
 ) -> DataFrame:
     """Token-window chunking with overlap (the context-window prep
-    step): doc → ceil((n-size)/stride)+1 chunks of `chunk_size` tokens
+    step) over (doc_id, text): doc → ceil((n-size)/stride)+1 chunks of `chunk_size` tokens
     starting every `stride`. Short docs yield one chunk. Explode keeps
     it a narrow op — no shuffle; at 100 TB chunking happens in the
     same stage as the scan."""
-    toks = F.filter(tokenize(F.col(text_col)), lambda t: t != "")
-    base = df.select(
-        F.col(id_col).alias("doc_id"), toks.alias("__toks"), F.size(toks).alias("n_tokens")
-    )
+    toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
+    base = df.select("doc_id", toks.alias("__toks"), F.size(toks).alias("n_tokens"))
     n = F.col("n_tokens")
     n_chunks = F.when(
         n <= chunk_size, F.lit(1)
@@ -69,24 +65,23 @@ def chunk_tokens(
     )
 
 
-def split_assign(key: Column, val_hex: str = "c", test_hex: str = "e") -> Column:
+def split_assign(key: Column) -> Column:
     """Deterministic 75/12.5/12.5 train/val/test assignment from the
     first hex digit of md5(key): < 'c' → train, 'c'-'d' → val,
     >= 'e' → test. md5 is identical in every engine — the split
     survives engine swaps and reruns (unlike RNG splits)."""
     h = F.substring(F.md5(key), 1, 1)
-    return F.when(h < val_hex, "train").when(h < test_hex, "val").otherwise("test")
+    return F.when(h < "c", "train").when(h < "e", "val").otherwise("test")
 
 
 def source_mix(
     df: DataFrame,
     rates_by_source: dict[str, float],
     key: Column,
-    source_col: str = "source",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Weighted source mixing: keep a deterministic md5-hash fraction
-    of each source (the up/down-weighting step of corpus assembly).
+    of each ``source`` (the up/down-weighting step of corpus assembly).
     Rates are per-source keep probabilities in [0, 1];
     ``default_rate`` applies to sources absent from the dict (a real
     corpus always has sources the mix plan never enumerated —
@@ -96,10 +91,10 @@ def source_mix(
     bucket = F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
     keep = F.lit(False)
     for src, rate in rates_by_source.items():
-        keep = keep | ((F.col(source_col) == src) & (bucket < int(rate * 256)))
+        keep = keep | ((F.col("source") == src) & (bucket < int(rate * 256)))
     if default_rate > 0:
         keep = keep | (
-            ~F.col(source_col).isin(list(rates_by_source))
+            ~F.col("source").isin(list(rates_by_source))
             & (bucket < int(default_rate * 256))
         )
     return df.filter(keep)
@@ -109,10 +104,9 @@ def cap_per_group(
     df: DataFrame,
     group_cols: list[str],
     k: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-group cap (domain rebalancing): keep the
-    ``k`` rows with the smallest md5(id) per group — an equal-
+    ``k`` rows with the smallest md5(doc_id) per group — an equal-
     probability without-replacement sample whose "random" order is
     the hash, so it is reproducible across engines, runs, and
     partitionings (``sampleBy`` is none of those). Adds
@@ -125,8 +119,8 @@ def cap_per_group(
     k, then re-cap the ≤ salt*k survivors — same operator applied
     twice, so the building block here stays the right one.
     """
-    rnd = F.md5(F.col(id_col).cast("string"))
-    win = Window.partitionBy(*group_cols).orderBy(rnd, id_col)
+    rnd = F.md5(F.col("doc_id").cast("string"))
+    win = Window.partitionBy(*group_cols).orderBy(rnd, "doc_id")
     return (
         df.withColumn("sample_rank", F.row_number().over(win))
         .filter(F.col("sample_rank") <= k)
@@ -136,12 +130,9 @@ def cap_per_group(
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
 ) -> DataFrame:
-    """Concat-and-cut sequence packing: within each group, documents
-    in deterministic ``id_col`` order are laid head-to-tail and cut
+    """Concat-and-cut sequence packing: within each ``source``, documents
+    in deterministic ``doc_id`` order are laid head-to-tail and cut
     into fixed ``budget``-token training sequences; each document is
     attributed to the bin containing its first token. The packing
     step that turns a chunked corpus into dense fixed-length batches
@@ -153,10 +144,10 @@ def pack_sequences(
     assignment is reproducible because the order key is the id, not
     arrival order. Returns one row per (group, bin) with fill stats.
     """
-    toks = F.filter(tokenize(F.col(text_col)), lambda t: t != "")
+    toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
     base = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("id"),
+        F.col("source").alias("grp"),
+        F.col("doc_id").alias("id"),
         F.size(toks).cast("long").alias("n_tok"),
     )
     w = Window.partitionBy("grp").orderBy("id")

@@ -30,13 +30,13 @@ from pyspark.sql import functions as F
 from htmlentityextraction_spark.functions.text import tokenize
 
 
-def corpus_tokens(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, tok) rows: lowercase letter-token stream, empty
-    tokens dropped (empty docs contribute nothing)."""
+def corpus_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok) rows: lowercase letter-token stream of ``text``,
+    empty tokens dropped (empty docs contribute nothing)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(F.lower(F.col(text_col)))).alias("tok"),
+            "doc_id",
+            F.explode(tokenize(F.lower(F.col("text")))).alias("tok"),
         )
         .filter(F.col("tok") != "")
     )
@@ -65,15 +65,13 @@ def unigram_vocab(
 
 def score_documents(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     vocab_size: int = 5000,
     alpha: float = 0.5,
 ) -> DataFrame:
     """(doc_id, n_tokens, avg_logprob): mean unigram log-prob per
     document — the perplexity-gate signal (higher = more typical of
     the corpus; boilerplate scores high, lorem-ipsum noise low)."""
-    toks = corpus_tokens(docs, text_col, id_col)
+    toks = corpus_tokens(docs)
     vocab, oov_lp = unigram_vocab(toks, vocab_size, alpha)
     scored = toks.join(F.broadcast(vocab), "tok", "left").select(
         "doc_id", F.coalesce("logprob", F.lit(oov_lp)).alias("lp")
@@ -84,11 +82,11 @@ def score_documents(
     )
 
 
-def bigram_doc_scores(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
+def bigram_doc_scores(docs: DataFrame) -> DataFrame:
     """Bigram LM scoring — the order-2 step from the unigram model
     toward KenLM-style perplexity gating. Per doc: mean
     ln P(w2|w1) over its adjacent token pairs, with add-alpha
-    smoothing conditioned on context counts
+    smoothing (a = 0.5) conditioned on context counts
     (P = (c12 + a) / (c1 + a(V+1))).
 
     Shape: bigrams explode narrowly from the token arrays (no window
@@ -114,7 +112,7 @@ def bigram_doc_scores(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     c1 = bg.groupBy("w1").agg(F.count("*").cast("double").alias("c1"))
     toks = docs.select(F.explode(ft).alias("tok"))
     v = toks.agg(F.countDistinct("tok").cast("double").alias("v"))
-    a = F.lit(alpha)
+    a = F.lit(0.5)
     scored = (
         bg.join(c12, ["w1", "w2"])
         .join(c1, "w1")

@@ -21,29 +21,33 @@ from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators.similarity import valid_vectors
 
+# The RF/SVC evals' binary target: label < _LABEL_THRESHOLD.
+_LABEL_THRESHOLD = 5
+# RandomForest capacity (depth calibration in random_forest_eval's
+# docstring); read at call time.
+_RF_TREES = 20
+_RF_DEPTH = 7
+
 
 def _empty_eval(emb: DataFrame) -> DataFrame:
     """Typed empty per-class metrics frame (the RF/SVC output shape)."""
     return emb.sparkSession.createDataFrame([], "klass int, n bigint, accuracy double")
 
 
-def _vectorized(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Vectorize for pyspark.ml; corrupt vectors (NULL / NULL-element
+def _vectorized(emb: DataFrame) -> DataFrame:
+    """Vectorize ``embedding`` for pyspark.ml; corrupt vectors (NULL / NULL-element
     / empty) are dropped first — array_to_vector crashes on them, and
     at 100 TB they WILL occur (null-fuzz hardened)."""
-    emb = valid_vectors(emb, vec_col)
-    return emb.withColumn("features", array_to_vector(F.col(vec_col).cast("array<double>")))
+    emb = valid_vectors(emb, "embedding")
+    return emb.withColumn("features", array_to_vector(F.col("embedding").cast("array<double>")))
 
 
-def random_forest_eval(
-    emb: DataFrame, label_threshold: int = 5, n_trees: int = 20, max_depth: int = 7,
-    seed: int = 42,
-) -> DataFrame:
+def random_forest_eval(emb: DataFrame) -> DataFrame:
     """M16 (`models/ModelR.scala:75-88`): RF binary classifier on the
     embedding vectors (label = label < threshold), returning per-class
     train accuracy.
 
-    max_depth 7 (was 5 through r6): depth 5 was calibrated on the
+    Depth 7 (was 5 through r6): depth 5 was calibrated on the
     500-row gate fixture, where trees memorize to ~0.95 — at sf0.1
     (~2k rows) its train accuracy decays to ~0.75-0.77, and a 4%
     poisoned fixture (mixed fuzz, fresh seed) landed class-1 at 0.73,
@@ -53,15 +57,15 @@ def random_forest_eval(
     data = (
         _vectorized(emb)
         .filter(F.col("label").isNotNull())  # Spark ML: labels must be non-null
-        .withColumn("y", (F.col("label") < label_threshold).cast("double"))
+        .withColumn("y", (F.col("label") < _LABEL_THRESHOLD).cast("double"))
     )
     if data.isEmpty():  # Spark ML fit crashes on an empty dataset;
         # an empty corpus yields an empty metrics report (matches the
         # oracle's empty GROUP BY) — the empty-fuzz production shape
         return _empty_eval(emb)
     rf = RandomForestClassifier(
-        labelCol="y", featuresCol="features", numTrees=n_trees, maxDepth=max_depth,
-        seed=seed, featureSubsetStrategy="auto",
+        labelCol="y", featuresCol="features", numTrees=_RF_TREES, maxDepth=_RF_DEPTH,
+        seed=42, featureSubsetStrategy="auto",
     )
     model = rf.fit(data)
     pred = model.transform(data)
@@ -73,9 +77,7 @@ def random_forest_eval(
     )
 
 
-def linear_svc_eval(
-    emb: DataFrame, label_threshold: int = 5, max_iter: int = 50
-) -> DataFrame:
+def linear_svc_eval(emb: DataFrame) -> DataFrame:
     """M17 (`models/SVM.scala:55-56`): linear SVM (hinge loss) on the
     embeddings; per-class train accuracy PLUS the two quantities a
     linear separator's quality contract should actually gate on —
@@ -92,7 +94,7 @@ def linear_svc_eval(
     data = (
         _vectorized(emb)
         .filter(F.col("label").isNotNull())  # Spark ML: labels must be non-null
-        .withColumn("y", (F.col("label") < label_threshold).cast("double"))
+        .withColumn("y", (F.col("label") < _LABEL_THRESHOLD).cast("double"))
     )
     if data.isEmpty():  # see random_forest_eval
         return emb.sparkSession.createDataFrame(
@@ -100,7 +102,7 @@ def linear_svc_eval(
             "klass int, n bigint, accuracy double, "
             "overall_accuracy double, majority_share double",
         )
-    svc = LinearSVC(labelCol="y", featuresCol="features", maxIter=max_iter)
+    svc = LinearSVC(labelCol="y", featuresCol="features", maxIter=50)
     model = svc.fit(data)
     pred = model.transform(data)
     per_class = pred.groupBy(F.col("y").cast("int").alias("klass")).agg(
@@ -123,8 +125,8 @@ def linear_svc_eval(
     )
 
 
-def lda_topics(docs: DataFrame, k: int = 3, vocab_size: int = 500, seed: int = 42) -> DataFrame:
-    """M18 (`models/LDA.scala:87-95`): LDA over document tokens;
+def lda_topics(docs: DataFrame) -> DataFrame:
+    """M18 (`models/LDA.scala:87-95`): 3-topic LDA over document tokens;
     returns one scalar row per (topic, ranked term) — array columns
     are unhashable for the driver's pandas canonicalizer, so the
     top-term lists are exploded to (topic, term_rank, term_index,
@@ -138,10 +140,10 @@ def lda_topics(docs: DataFrame, k: int = 3, vocab_size: int = 500, seed: int = 4
         return docs.sparkSession.createDataFrame(
             [], "topic int, term_rank int, term_index int, term string"
         )
-    cv = CountVectorizer(inputCol="tokens", outputCol="features", vocabSize=vocab_size, minDF=2.0)
+    cv = CountVectorizer(inputCol="tokens", outputCol="features", vocabSize=500, minDF=2.0)
     cvm = cv.fit(toks)
     vecs = cvm.transform(toks)
-    lda = LDA(k=k, seed=seed, maxIter=20, optimizer="em")
+    lda = LDA(k=3, seed=42, maxIter=20, optimizer="em")
     model = lda.fit(vecs)
     topics = model.describeTopics(5)
     return topics.select(
@@ -154,9 +156,9 @@ def lda_topics(docs: DataFrame, k: int = 3, vocab_size: int = 500, seed: int = 4
     )
 
 
-def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
+def pca_project(emb: DataFrame) -> DataFrame:
     """M19 (`models/PCA2GBT.scala:126-136`): project embeddings onto
-    the top-k principal components. Returns the rotation-invariant
+    the top-8 principal components. Returns the rotation-invariant
     projection norm per vector (component signs are implementation-
     defined; the norm is not)."""
     data = _vectorized(emb)
@@ -164,7 +166,7 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
         return data.select("vec_id", "label").withColumn(
             "proj_norm", F.lit(None).cast("double")
         )
-    pca = PCA(k=k, inputCol="features", outputCol="proj")
+    pca = PCA(k=8, inputCol="features", outputCol="proj")
     model = pca.fit(data)
     out = model.transform(data).withColumn("proj_arr", vector_to_array("proj"))
     norm = F.sqrt(F.aggregate(F.col("proj_arr"), F.lit(0.0), lambda a, v: a + v * v))

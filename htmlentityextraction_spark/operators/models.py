@@ -4,7 +4,7 @@ score → pick price (SURVEY.md §2.9 M1-M15, §3.2).
 Spark-first split of work:
 
 - Training-side text work is columnar JVM-side: tokenization, term
-  hashing (xxhash64 mod num_features — the HashingTF trick), so the
+  hashing (xxhash64 mod NUM_FEATURES — the HashingTF trick), so the
   Python boundary carries only int arrays + a label + a location
   double. ``context_tokens`` + ``term_ids_py`` are its Python twin
   (numpy XXH64 over all of a batch's tokens at once), for the serve
@@ -34,7 +34,7 @@ Spark-first split of work:
 
 Scale note: groupBy(domain) skew (one huge domain) is the real risk at
 100 TB — cap rows per domain with a deterministic per-group limit
-(`max_rows_per_domain`, a windowed rank filter) before the shuffle,
+(`_MAX_ROWS_PER_DOMAIN`, a windowed rank filter) before the shuffle,
 the same defense as the reference's per-domain coalesce(10).
 """
 from __future__ import annotations
@@ -72,20 +72,16 @@ REGISTRY_SCHEMA = T.StructType(
 NUM_FEATURES = 1000
 
 
-def featurize_candidates(
-    cand: DataFrame,
-    text_cols: tuple[str, str] = ("text_before", "text_after"),
-    num_features: int = NUM_FEATURES,
-) -> DataFrame:
+def featurize_candidates(cand: DataFrame) -> DataFrame:
     """Candidate rows → (domain, url, label, norm_location, hashed
-    term ids). Hashing = xxhash64 mod num_features, all JVM-side
-    (HashingTF(1000) at serving parity, `streaming/Htmls2PredsPipe.
-    scala:121`)."""
+    term ids of text_before + text_after). Hashing = xxhash64 mod
+    NUM_FEATURES, all JVM-side (HashingTF(1000) at serving parity,
+    `streaming/Htmls2PredsPipe.scala:121`)."""
     toks = F.filter(
-        F.concat(tokenize(F.col(text_cols[0])), tokenize(F.col(text_cols[1]))),
+        F.concat(tokenize(F.col("text_before")), tokenize(F.col("text_after"))),
         lambda t: t != "",
     )
-    hashed = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(num_features)).cast("int"))
+    hashed = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(NUM_FEATURES)).cast("int"))
     return cand.select(
         "domain",
         "url",
@@ -170,15 +166,13 @@ def term_ids_py(tokens: list[str]) -> np.ndarray:
     return np.mod(h.view(np.int64), NUM_FEATURES)
 
 
-def url_grouped_split(
-    df: DataFrame, train_frac: float = 0.7, seed: int = 42, url_col: str = "url"
-) -> tuple[DataFrame, DataFrame]:
-    """Leakage-safe split: all candidates of one url land on the same
-    side (`transform/Transformer.scala:15-24`). Deterministic via hash
-    of the url, not sample(), so re-runs agree."""
-    bucket = F.pmod(F.xxhash64(F.col(url_col), F.lit(seed)), F.lit(1000))
-    cut = int(train_frac * 1000)
-    return df.filter(bucket < cut), df.filter(bucket >= cut)
+def url_grouped_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Leakage-safe 70/30 train/test split: all candidates of one url
+    land on the same side (`transform/Transformer.scala:15-24`).
+    Deterministic via hash of the url, not sample(), so re-runs
+    agree."""
+    bucket = F.pmod(F.xxhash64(F.col("url"), F.lit(42)), F.lit(1000))
+    return df.filter(bucket < 700), df.filter(bucket >= 700)
 
 
 def selected_tfidf(
@@ -190,7 +184,7 @@ def selected_tfidf(
     construction) plus the norm_location column. Only those k columns
     are built — each term id maps to its selected column or is
     dropped — and every cell is the same count * idf product the dense
-    num_features-wide matrix holds, so the result is bitwise identical
+    NUM_FEATURES-wide matrix holds, so the result is bitwise identical
     to slicing that matrix (property-tested in tests/test_models.py)."""
     n, k = len(lengths), len(indices)
     col = np.full(len(idf), -1, dtype=np.int64)
@@ -216,8 +210,7 @@ def _scoring_matrix(pdf: pd.DataFrame, idf: np.ndarray, indices: np.ndarray) -> 
 
 
 def _tfidf_matrix(
-    pdf: pd.DataFrame, num_features: int, min_doc_freq: int, top_k: int,
-    vocab_mode: str = "mean",
+    pdf: pd.DataFrame, min_doc_freq: int, top_k: int, vocab_mode: str = "mean"
 ):
     """Training features: counts → tf-idf → top-k slice (+ norm_location
     column), with idf = log((n+1)/(df+1)), Spark ML's formula, zeroed
@@ -230,7 +223,7 @@ def _tfidf_matrix(
       class-discriminative terms a global mean would drown out.
     """
     n = len(pdf)
-    tf = np.zeros((n, num_features), dtype=np.float64)
+    tf = np.zeros((n, NUM_FEATURES), dtype=np.float64)
     for i, ids in enumerate(pdf["term_ids"]):
         if ids is not None and len(ids):
             np.add.at(tf[i], np.asarray(ids, dtype=np.int64), 1.0)
@@ -251,29 +244,55 @@ def _tfidf_matrix(
     return X, idf, indices
 
 
-def train_per_domain(
-    cand: DataFrame,
-    num_features: int = 1000,
-    min_doc_freq: int = 5,
-    top_k: int = 100,
-    n_estimators: int = 30,
-    max_depth: int = 5,
-    min_rows: int = 20,
-    max_rows_per_domain: int = 100_000,
-    vocab_mode: str = "mean",
-) -> DataFrame:
-    """groupBy(domain).applyInPandas fit → registry DataFrame. Domains
-    with < min_rows candidates or a single class are skipped (the
-    reference's missingModel path)."""
-    def fit(key, pdf):
+# Per-domain training guards: a domain with fewer than _MIN_ROWS
+# candidate rows (or a single class) is skipped — the reference's
+# missingModel path — and each domain trains on at most
+# _MAX_ROWS_PER_DOMAIN rows in (url, candidate) order. Both are read
+# when the fit is built, not at import.
+_MIN_ROWS = 20
+_MAX_ROWS_PER_DOMAIN = 100_000
+
+
+def _per_domain(cand: DataFrame, fit, schema: T.StructType) -> DataFrame:
+    """The shape both per-domain fits share: cap each domain at
+    _MAX_ROWS_PER_DOMAIN rows, then one applyInPandas group task per
+    domain that sorts its rows by (url, candidate) and calls
+    ``fit(domain, pdf, y)`` — only for domains with at least _MIN_ROWS
+    rows and both classes; the others yield no row."""
+    # captured here: Python workers import the module afresh, so a
+    # patched _MIN_ROWS reaches them only through the closure
+    min_rows = _MIN_ROWS
+
+    def task(key, pdf):
         (domain,) = key
         pdf = pdf.sort_values(["url", "candidate"], kind="stable").reset_index(drop=True)
         y = pdf["label"].to_numpy(dtype=np.float64)
         if len(pdf) < min_rows or y.sum() == 0 or y.sum() == len(y):
-            return pd.DataFrame(columns=[f.name for f in REGISTRY_SCHEMA.fields])
-        X, idf, indices = _tfidf_matrix(
-            pdf, num_features, min_doc_freq, top_k, vocab_mode=vocab_mode
-        )
+            return pd.DataFrame(columns=schema.fieldNames())
+        return fit(domain, pdf, y)
+
+    w = Window.partitionBy("domain").orderBy("url", "candidate")
+    capped = (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= _MAX_ROWS_PER_DOMAIN)
+        .drop("__rn")
+    )
+    return capped.groupBy("domain").applyInPandas(task, schema)
+
+
+def train_per_domain(
+    cand: DataFrame,
+    min_doc_freq: int = 5,
+    top_k: int = 100,
+    n_estimators: int = 30,
+    max_depth: int = 5,
+    vocab_mode: str = "mean",
+) -> DataFrame:
+    """groupBy(domain).applyInPandas fit → registry DataFrame (see
+    ``_per_domain`` for the skipped domains)."""
+
+    def fit(domain, pdf, y):
+        X, idf, indices = _tfidf_matrix(pdf, min_doc_freq, top_k, vocab_mode=vocab_mode)
         model = GBTClassifier(n_estimators=n_estimators, max_depth=max_depth).fit(X, y)
         pred = model.predict(X)
         tp = float(((pred == 1) & (y == 1)).sum())
@@ -294,13 +313,7 @@ def train_per_domain(
             ]
         )
 
-    w = Window.partitionBy("domain").orderBy("url", "candidate")
-    capped = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= max_rows_per_domain)
-        .drop("__rn")
-    )
-    return capped.groupBy("domain").applyInPandas(fit, REGISTRY_SCHEMA)
+    return _per_domain(cand, fit, REGISTRY_SCHEMA)
 
 
 CURVE_SCHEMA = T.StructType(
@@ -315,13 +328,10 @@ CURVE_SCHEMA = T.StructType(
 
 def submodel_curve_per_domain(
     cand: DataFrame,
-    num_features: int = 1000,
     min_doc_freq: int = 5,
     top_k: int = 100,
     n_estimators: int = 10,
     max_depth: int = 3,
-    min_rows: int = 20,
-    max_rows_per_domain: int = 100_000,
 ) -> DataFrame:
     """M11/M13 (`transform/Transformer.scala:295-304`,
     `emr/BuildModels.scala:45-55`, `domain/models/GBTPerDomain.scala:
@@ -332,13 +342,8 @@ def submodel_curve_per_domain(
     group-task shape as train_per_domain: the curve costs one extra
     margin pass per tree over the group, nothing cluster-wide."""
 
-    def curve(key, pdf):
-        (domain,) = key
-        pdf = pdf.sort_values(["url", "candidate"], kind="stable").reset_index(drop=True)
-        y = pdf["label"].to_numpy(dtype=np.float64)
-        if len(pdf) < min_rows or y.sum() == 0 or y.sum() == len(y):
-            return pd.DataFrame(columns=[f.name for f in CURVE_SCHEMA.fields])
-        X, _idf, _indices = _tfidf_matrix(pdf, num_features, min_doc_freq, top_k)
+    def curve(domain, pdf, y):
+        X, _idf, _indices = _tfidf_matrix(pdf, min_doc_freq, top_k)
         model = GBTClassifier(n_estimators=n_estimators, max_depth=max_depth).fit(X, y)
         curves = model.margin_curve(X)
         rows = []
@@ -354,13 +359,7 @@ def submodel_curve_per_domain(
             r["selected"] = r["n_trees"] == best_k
         return pd.DataFrame(rows)
 
-    w = Window.partitionBy("domain").orderBy("url", "candidate")
-    capped = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= max_rows_per_domain)
-        .drop("__rn")
-    )
-    return capped.groupBy("domain").applyInPandas(curve, CURVE_SCHEMA)
+    return _per_domain(cand, curve, CURVE_SCHEMA)
 
 
 def save_registry(registry: DataFrame, path: str) -> None:

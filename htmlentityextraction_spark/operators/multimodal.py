@@ -46,24 +46,25 @@ METADATA_TYPE = T.StructType(
 )
 
 
-def attach_media(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Deterministic media fixture: payload = utf-8 bytes of the text,
     media_type cycles by id, metadata derived from payload size. The
     payload column is genuinely BINARY — everything downstream treats
     it as opaque. NULL-text docs are dropped: no bytes, no media row
     (null-fuzz hardened; oracles filter text IS NOT NULL to match)."""
-    docs = docs.filter(F.col(text_col).isNotNull())
-    payload = F.encode(F.col(text_col), "UTF-8")
+    docs = docs.filter(F.col("text").isNotNull())
+    payload = F.encode(F.col("text"), "UTF-8")
     n_bytes = F.octet_length(payload).cast("long")
     mt = F.element_at(
-        F.array(*[F.lit(m) for m in MEDIA_TYPES]), (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int")
+        F.array(*[F.lit(m) for m in MEDIA_TYPES]),
+        (F.pmod(F.col("doc_id"), F.lit(3)) + 1).cast("int"),
     )
-    width = (F.pmod(F.col(id_col), F.lit(16)) + 4).cast("int")
+    width = (F.pmod(F.col("doc_id"), F.lit(16)) + 4).cast("int")
     meta = F.struct(
         mt.alias("media_type"),
         width.alias("width"),
         (n_bytes / width).cast("int").alias("height"),
-        F.when(mt == "video", (F.pmod(F.col(id_col), F.lit(8)) + 2))
+        F.when(mt == "video", (F.pmod(F.col("doc_id"), F.lit(8)) + 2))
         .otherwise(F.lit(1))
         .cast("int")
         .alias("n_frames"),
@@ -71,7 +72,7 @@ def attach_media(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
         n_bytes.alias("n_bytes"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"), payload.alias("payload"), meta.alias("media")
+        F.col("doc_id").alias("doc_id"), payload.alias("payload"), meta.alias("media")
     )
 
 

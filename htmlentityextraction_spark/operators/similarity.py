@@ -40,6 +40,13 @@ from pyspark.sql.types import DoubleType
 # the caller wants a pair join / ANN index, not a broadcast scan.
 MAX_QUERY_BATCH = 10_000
 
+# The embedding dimension ann_lsh_topk's hyperplanes span.
+_LSH_DIM = 64
+# The IVF coarse quantizer: seed and bounded KMeans training sample.
+_QUANTIZER_SEED = 42
+_FIT_SAMPLE_CAP = 20_000
+_KMEANS_ITERS = 25
+
 
 # DuckDB-oracle twin of ``valid_vectors`` (interpolate with .format(c=col)).
 VALID_VEC_SQL = (
@@ -118,12 +125,10 @@ def _pair_cosine6(a: pd.Series, b: pd.Series) -> pd.Series:
     return out
 
 
-def _collect_query_matrix(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
+def _collect_query_matrix(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     rows = queries.select(
-        F.col(id_col).cast("long").alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").cast("long").alias("qid"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).collect()
     if len(rows) > MAX_QUERY_BATCH:
         raise ValueError(
@@ -143,8 +148,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query (excluding self), deterministic
     tie-break on corpus id.
@@ -158,10 +161,10 @@ def cosine_topk(
     from pyspark.sql import Window
 
     spark = corpus.sparkSession
-    corpus = valid_vectors(corpus, vec_col)
-    queries = valid_vectors(queries, vec_col)
+    corpus = valid_vectors(corpus, "embedding")
+    queries = valid_vectors(queries, "embedding")
     out_ddl = "query_id long, neighbor_id long, cosine double"
-    q_ids, q_mat = _collect_query_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _collect_query_matrix(queries)
     if q_ids.size == 0:
         return spark.createDataFrame([], out_ddl + ", rank long")
     q_norms = np.linalg.norm(q_mat, axis=1)
@@ -192,8 +195,8 @@ def cosine_topk(
                 )
 
     part_top = corpus.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
     ).mapInPandas(local_topk, out_ddl)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -261,10 +264,6 @@ def ann_lsh_topk(
     k: int = 10,
     bits: int = 6,
     tables: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: exact rerank inside the query's LSH buckets
     across `tables` independent hyperplane tables (+ hamming-1 probe
@@ -277,25 +276,25 @@ def ann_lsh_topk(
     each query probe is a partition-pruned read, not a scan."""
     from pyspark.sql import Window
 
-    corpus = valid_vectors(corpus, vec_col)
-    queries = valid_vectors(queries, vec_col)
+    corpus = valid_vectors(corpus, "embedding")
+    queries = valid_vectors(queries, "embedding")
     planes = np.array(
-        [p for t in range(tables) for p in hyperplanes(dim, bits, seed=42 + t)],
+        [p for t in range(tables) for p in hyperplanes(_LSH_DIM, bits, seed=42 + t)],
         dtype=np.float64,
     )
     c = _bucketize(
         corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
+            F.col("vec_id").cast("long").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("cvec"),
         ),
         planes, tables, bits, "neighbor_id", "cvec", multiprobe=False,
     )
     q = _bucketize(
         queries.select(
-            F.col(id_col).cast("long").alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qvec"),
+            F.col("vec_id").cast("long").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("qvec"),
         ),
-        planes, tables, bits, "query_id", "qvec", multiprobe=multiprobe,
+        planes, tables, bits, "query_id", "qvec", multiprobe=True,
     )
     scored = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
@@ -325,9 +324,9 @@ def quantizer_fit_frame(c: DataFrame, cap: int, seed: int) -> DataFrame:
     return c.sample(False, cap / n, seed=seed) if n > cap else c
 
 
-def _fit_kmeans_local(X: "np.ndarray", k: int, seed: int, iters: int = 25) -> "np.ndarray":
+def _fit_kmeans_local(X: "np.ndarray", k: int, seed: int) -> "np.ndarray":
     """Driver-local Lloyd's with kmeans++ init over the (bounded)
-    sample matrix. The sample is ≤ fit_sample_cap rows by construction,
+    sample matrix. The sample is ≤ ``_FIT_SAMPLE_CAP`` rows by construction,
     so the fit is O(MB) driver work — replacing the distributed KMeans
     whose per-iteration job overhead dominated (measured 8.8 s of an
     11 s query at sf0.01 for a 16-centroid fit on ~2k vectors). This is
@@ -346,7 +345,7 @@ def _fit_kmeans_local(X: "np.ndarray", k: int, seed: int, iters: int = 25) -> "n
         centers[j] = X[rng.choice(n, p=probs)]
         d2 = np.minimum(d2, ((X - centers[j]) ** 2).sum(1))
     x2 = (X**2).sum(1)
-    for _ in range(iters):
+    for _ in range(_KMEANS_ITERS):
         d = x2[:, None] - 2.0 * (X @ centers.T) + (centers**2).sum(1)[None, :]
         assign = d.argmin(1)
         moved = 0.0
@@ -367,17 +366,13 @@ def ann_ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_sample_cap: int = 20000,
 ) -> DataFrame:
     """IVF-flat ANN: a KMeans coarse quantizer partitions the corpus
     into n_cells inverted lists; each query exact-reranks only its
     n_probe nearest cells — candidate fraction ≈ n_probe/n_cells of
     the corpus. At 100 TB the cell id is the write-time partition key
     (partition-pruned probes); the quantizer trains on a BOUNDED
-    sample (≤ fit_sample_cap rows) — a full-corpus multi-pass KMeans
+    sample (≤ ``_FIT_SAMPLE_CAP`` rows) — a full-corpus multi-pass KMeans
     before any query runs would be the job-killer at scale, and
     quantizer quality needs only thousands of points per cell. This
     is the clustered-data complement to ann_lsh_topk: LSH needs no
@@ -385,17 +380,20 @@ def ann_ivf_topk(
     the data distribution."""
     from pyspark.sql import Window
 
-    corpus = valid_vectors(corpus, vec_col)
-    queries = valid_vectors(queries, vec_col)
+    corpus = valid_vectors(corpus, "embedding")
+    queries = valid_vectors(queries, "embedding")
     c = corpus.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
     )
     sample = np.array(
-        [list(r["cvec"]) for r in quantizer_fit_frame(c, fit_sample_cap, seed).collect()],
+        [
+            list(r["cvec"])
+            for r in quantizer_fit_frame(c, _FIT_SAMPLE_CAP, _QUANTIZER_SEED).collect()
+        ],
         dtype=np.float64,
     )
-    centers = _fit_kmeans_local(sample, n_cells, seed)
+    centers = _fit_kmeans_local(sample, n_cells, _QUANTIZER_SEED)
     c2 = (centers**2).sum(1)
 
     def assign_cells(batches):
@@ -423,8 +421,8 @@ def ann_ivf_topk(
         )
     )
     q = queries.select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
+        F.col("vec_id").cast("long").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qvec"),
     )
     # rank cells per query by centroid distance, probe the top n_probe
     # (tiny frame: |queries| x n_cells rows — fold expression is fine)
@@ -464,10 +462,6 @@ def semantic_dedup_pairs(
     corpus: DataFrame,
     threshold: float = 0.35,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_sample_cap: int = 20000,
 ) -> DataFrame:
     """SemDeDup-shaped semantic dedup: the bounded-sample KMeans
     quantizer blocks the corpus into cells, then each cell computes
@@ -485,10 +479,10 @@ def semantic_dedup_pairs(
     quantize together; the residual cross-cell miss rate is the
     recall the contract query measures.
     """
-    corpus = valid_vectors(corpus, vec_col)
+    corpus = valid_vectors(corpus, "embedding")
     c = corpus.select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
+        F.col("vec_id").cast("long").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
     )
     if n_cells == 1:
         # the exact-truth degenerate: one cell holds everything, so
@@ -497,10 +491,13 @@ def semantic_dedup_pairs(
         assigned = c.withColumn("cell", F.lit(0).cast("int"))
     else:
         sample = np.array(
-            [list(r["cvec"]) for r in quantizer_fit_frame(c, fit_sample_cap, seed).collect()],
+            [
+            list(r["cvec"])
+            for r in quantizer_fit_frame(c, _FIT_SAMPLE_CAP, _QUANTIZER_SEED).collect()
+        ],
             dtype=np.float64,
         )
-        centers = _fit_kmeans_local(sample, n_cells, seed)
+        centers = _fit_kmeans_local(sample, n_cells, _QUANTIZER_SEED)
         c2 = (centers**2).sum(1)
 
         def assign(batches):
@@ -565,8 +562,6 @@ def admission_best_match(
     batch: DataFrame,
     block_col: str,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Semantic admission gate for incremental ingestion: score every
     BATCH document against its block of the EXISTING corpus and admit
@@ -596,15 +591,15 @@ def admission_best_match(
     corrupt corpus row must not veto admission."""
     from pyspark.sql import Window
 
-    c = valid_vectors(corpus, vec_col).select(
-        F.col(id_col).cast("long").alias("cand_id"),
+    c = valid_vectors(corpus, "embedding").select(
+        F.col("vec_id").cast("long").alias("cand_id"),
         F.col(block_col).alias("_block"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )
-    b = valid_vectors(batch, vec_col).select(
-        F.col(id_col).cast("long").alias("_bid"),
+    b = valid_vectors(batch, "embedding").select(
+        F.col("vec_id").cast("long").alias("_bid"),
         F.col(block_col).alias("_block"),
-        F.col(vec_col).cast("array<double>").alias("bv"),
+        F.col("embedding").cast("array<double>").alias("bv"),
     )
     # Push the batch's block list into the corpus scan as a static
     # predicate: the join alone restricts rows AFTER the scan, but an
@@ -637,7 +632,7 @@ def admission_best_match(
         b.select("_bid")
         .join(best, "_bid", "left")
         .select(
-            F.col("_bid").alias(id_col),
+            F.col("_bid").alias("vec_id"),
             F.col("cand_id").alias("best_match_id"),
             F.col("cosine").alias("best_cosine"),
             F.coalesce(

@@ -75,33 +75,32 @@ def salted_group_stats(
 
 def sessionize(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_minutes: int = 30,
 ) -> DataFrame:
-    """Gaps-and-islands sessionization: a new session starts when the
-    gap to the previous event of the same user exceeds gap_minutes.
+    """Gaps-and-islands sessionization of (user_id, ts) events: a new
+    session starts when the gap to the previous event of the same user
+    exceeds gap_minutes.
     Batch form of the custom stateful operator (the streaming twin is
     streaming/pipeline.sessionize_stream). One window shuffle on
     user; session ids are (user, running count of gap-breaks)."""
     from pyspark.sql import Window
 
-    # ts_col must be a timestamp type: epoch_seconds' timestamp_ltz
+    # ts must be a timestamp type: epoch_seconds' timestamp_ltz
     # cast would silently reinterpret a raw epoch long as seconds
-    assert_timestamp_col(df, ts_col)
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    ep = epoch_seconds(ts_col)
+    assert_timestamp_col(df, "ts")
+    w = Window.partitionBy("user_id").orderBy("ts")
+    ep = epoch_seconds("ts")
     gap = ep - F.lag(ep).over(w)
     is_new = (gap.isNull() | (gap > gap_minutes * 60)).cast("long")
     with_sess = df.withColumn("__new", is_new).withColumn(
         "session_seq", F.sum("__new").over(w)
     )
     return (
-        with_sess.groupBy(user_col, "session_seq")
+        with_sess.groupBy("user_id", "session_seq")
         .agg(
             F.count("*").alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
         )
         .withColumn(
             "duration_sec",

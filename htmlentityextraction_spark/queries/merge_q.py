@@ -139,13 +139,13 @@ def _merged_orders_table(spark: SparkSession, sf_dir: str) -> ParquetMergeTable:
                -- the markup applies only to usable prices: a corrupt
                -- (NULL/NaN/out-of-range) price passes through raw on
                -- both engines (Spark floor(inf) clamps, duck keeps inf)
-               CASE WHEN k % 5 = 0 AND k BETWEEN 8000 AND 16000
+               CASE WHEN k % 5 = 0 AND k BETWEEN 1000 AND 3000
                          AND {fp}
                     THEN floor(p * 1.10 * 100) / 100
                     ELSE p END AS price
         FROM o
-        WHERE NOT (((((k) % 10) + 10) % 10) = 7 AND k BETWEEN 8000 AND 16000)
-    ) WHERE o_orderkey BETWEEN 10000 AND 14000
+        WHERE NOT (((((k) % 10) + 10) % 10) = 7 AND k BETWEEN 1000 AND 3000)
+    ) WHERE o_orderkey BETWEEN 1200 AND 2400
     """.format(fp=finite_measure_sql("p")),
 )
 def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,7 +156,10 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``read_where``; the oracle is the same rows, proving pruning
     never changes results). The manifest-level file skipping a
     Delta/Iceberg reader gets — at 100 TB a narrow range read lists
-    a handful of bucket dirs instead of the table."""
+    a handful of bucket dirs instead of the table. The read band spans
+    the bucket-0/1 boundary and overlaps the merged band, so it holds
+    rows at every fixture scale and, from sf0.01 up, skips every
+    bucket past the second."""
     # spine persisted across create + merge batch (see _merged_orders_table)
     orders = _orders_source(spark, sf_dir).persist()
     try:
@@ -166,7 +169,7 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, key_col="o_orderkey", bucketing="range", range_width=2000
         )
         tbl.create(orders)
-        in_band = k.between(8000, 16000)
+        in_band = k.between(1000, 3000)
         batch = orders.filter(in_band & (F.pmod(k, 5) == 0) & finite_measure("price")).select(
             "o_orderkey",
             (F.floor(F.col("price") * 1.10 * 100) / 100).alias("price"),
@@ -179,7 +182,7 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.merge(batch)
     finally:
         orders.unpersist()
-    return tbl.read_where("o_orderkey", 10000, 14000)
+    return tbl.read_where("o_orderkey", 1200, 2400)
 
 
 @register(
@@ -312,7 +315,7 @@ def incremental_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
                     ELSE CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END)
                 AS BIGINT) AS sum_cents
     FROM lineitem
-    WHERE l_partkey BETWEEN 400 AND 700 AND l_suppkey BETWEEN 40 AND 70
+    WHERE l_partkey BETWEEN 40 AND 180 AND l_suppkey BETWEEN 2 AND 8
     GROUP BY l_partkey
     """,
 )
@@ -335,7 +338,7 @@ def mergetable_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl.create(li)
     tbl.optimize(zorder_by=["l_partkey", "l_suppkey"], row_group_bytes=256 * 1024)
     out = tbl.read().where(
-        F.col("l_partkey").between(400, 700) & F.col("l_suppkey").between(40, 70)
+        F.col("l_partkey").between(40, 180) & F.col("l_suppkey").between(2, 8)
     )
     return out.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n"),

@@ -23,8 +23,8 @@ from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
 _N_DOMAINS = 8
+# One fit configuration: the served registry and the sub-model curve.
 _FIT = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
-_FIT_CURVE = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 
 # The registry rows are memoized per sf_dir: the one thing a model
 # query leaves behind across runs. Four registered queries (registry
@@ -202,7 +202,7 @@ def model_submodel_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     model — any curve row below 1.0 or a larger selected model is a
     pipeline regression."""
     feats = md.featurize_candidates(_labeled_candidates(spark, sf_dir))
-    return md.submodel_curve_per_domain(feats, **_FIT_CURVE)
+    return md.submodel_curve_per_domain(feats, **_FIT)
 
 
 @register(

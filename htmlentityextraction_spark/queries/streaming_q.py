@@ -186,7 +186,7 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly."""
     views = sp.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     clicks = sp.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
-    joined = sp.stream_stream_attribution(views, clicks, horizon="10 minutes")
+    joined = sp.stream_stream_attribution(views, clicks, "inner")
     return sp.run_to_memory(spark, joined)
 
 
@@ -249,7 +249,7 @@ def stream_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFra
     withheld."""
     views = sp.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     clicks = sp.read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
-    joined = sp.stream_stream_attribution_outer(views, clicks, horizon="10 minutes")
+    joined = sp.stream_stream_attribution(views, clicks, "left_outer")
     return sp.run_to_memory(spark, joined)
 
 

@@ -26,7 +26,7 @@ _TOKS = (
 VOCAB_SIZE = 64
 
 
-def build_vocab(docs: DataFrame, size: int = VOCAB_SIZE) -> DataFrame:
+def build_vocab(docs: DataFrame) -> DataFrame:
     toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
     counts = (
         docs.select(F.explode(toks).alias("token"))
@@ -36,7 +36,7 @@ def build_vocab(docs: DataFrame, size: int = VOCAB_SIZE) -> DataFrame:
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     return (
         counts.withColumn("token_id", F.row_number().over(w).cast("long"))
-        .filter(F.col("token_id") <= size)
+        .filter(F.col("token_id") <= VOCAB_SIZE)
     )
 
 

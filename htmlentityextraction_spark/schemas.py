@@ -58,8 +58,8 @@ HISTORICAL_PRICE_SCHEMA = T.StructType(
 )
 
 
-def parse_page_messages(raw: DataFrame, json_col: str = "value") -> DataFrame:
-    """Kafka-boundary parse: bytes/string JSON → typed columns +
+def parse_page_messages(raw: DataFrame) -> DataFrame:
+    """Kafka-boundary parse: bytes/string JSON ``value`` → typed columns +
     `is_corrupt` flag (the reference's try/catch-null-filter,
     `emr/SeedsDistinctS3ToKafka.scala:50-59`, made explicit). Corrupt
     rows keep their payload for the error side output instead of
@@ -72,13 +72,13 @@ def parse_page_messages(raw: DataFrame, json_col: str = "value") -> DataFrame:
     parsed = raw.withColumn(
         "__m",
         F.from_json(
-            F.col(json_col).cast("string"),
+            F.col("value").cast("string"),
             schema_with_corrupt,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
         ),
     )
     return parsed.select(
         *[F.col(f"__m.{f.name}") for f in PAGE_MESSAGE_SCHEMA.fields],
-        F.col(json_col).cast("string").alias("raw_payload"),
+        F.col("value").cast("string").alias("raw_payload"),
         F.col("__m._corrupt_record").isNotNull().alias("is_corrupt"),
     )

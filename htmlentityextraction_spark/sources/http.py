@@ -57,6 +57,9 @@ WHOIS_SCHEMA = T.StructType(
     ]
 )
 
+# Per-URL fetch timeout in seconds.
+_FETCH_TIMEOUT = 10.0
+
 FETCH_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -66,17 +69,17 @@ FETCH_SCHEMA = T.StructType(
 )
 
 
-def fetch_url_text(url: str, timeout: float = 10.0) -> str:
+def fetch_url_text(url: str) -> str:
     """Driver-side single-URL fetch (S12). Raises on failure, like the
     reference's ``Source.fromURL``."""
     import urllib.request
 
-    with urllib.request.urlopen(url, timeout=timeout) as resp:
+    with urllib.request.urlopen(url, timeout=_FETCH_TIMEOUT) as resp:
         return resp.read().decode("utf-8", errors="replace")
 
 
-def fetch_pages(urls: DataFrame, url_col: str = "url", timeout: float = 10.0) -> DataFrame:
-    """Distributed page fetch: (url, status, body) per input URL;
+def fetch_pages(urls: DataFrame) -> DataFrame:
+    """Distributed page fetch: (url, status, body) per input ``url``;
     fetch failures yield (url, -1, error-message) rows. Each
     partition fetches sequentially — repartition by domain upstream
     to turn that into a per-host politeness limit."""
@@ -87,31 +90,29 @@ def fetch_pages(urls: DataFrame, url_col: str = "url", timeout: float = 10.0) ->
 
         for pdf in batches:
             rows = []
-            for u in pdf[url_col]:
+            for u in pdf["url"]:
                 try:
-                    with urllib.request.urlopen(u, timeout=timeout) as resp:
+                    with urllib.request.urlopen(u, timeout=_FETCH_TIMEOUT) as resp:
                         rows.append((u, int(resp.status), resp.read().decode("utf-8", "replace")))
                 except Exception as exc:  # noqa: BLE001 — dead URL must not kill the job
                     rows.append((u, -1, f"{type(exc).__name__}: {exc}"))
             yield pd.DataFrame(rows, columns=["url", "status", "body"])
 
-    return urls.select(F.col(url_col).alias(url_col)).mapInPandas(go, FETCH_SCHEMA)
+    return urls.select("url").mapInPandas(go, FETCH_SCHEMA)
 
 
 def _na(col: Column) -> Column:
     return F.coalesce(col, F.lit("N/A"))
 
 
-def whois_contacts(
-    df: DataFrame, domain_col: str = "domain", raw_col: str = "raw"
-) -> DataFrame:
-    """Parse raw WhoIs API payloads into the reference's contact
+def whois_contacts(df: DataFrame) -> DataFrame:
+    """Parse (domain, raw) WhoIs API payloads into the reference's contact
     layout (S13): per domain, 3 contacts x 9 fields with "N/A"
     fallback, plus the exact "!@#@!"-delimited line the reference
     wrote to its contact files. Pure ``from_json`` — no Python in the
     row path."""
-    parsed = df.withColumn("__w", F.from_json(F.col(raw_col), WHOIS_SCHEMA))
-    cols = [F.col(domain_col).alias("domain")]
+    parsed = df.withColumn("__w", F.from_json(F.col("raw"), WHOIS_SCHEMA))
+    cols = [F.col("domain")]
     flat = []
     for c in _CONTACTS:
         short = c.split("_")[0]

@@ -303,13 +303,13 @@ class StreamingQueryHolder:
         self.query.awaitTermination(timeout_sec)
 
 
-def windowed_counts(enriched: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window counts with watermark (the T7
-    upgrade: late data beyond the watermark is dropped explicitly
-    instead of silently mis-binned)."""
+def windowed_counts(enriched: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window counts with a 2-hour
+    watermark (the T7 upgrade: late data beyond the watermark is
+    dropped explicitly instead of silently mis-binned)."""
     return (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        enriched.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             # corrupt values (NULL/NaN/|v|>=1e10) are excluded from the
@@ -327,11 +327,12 @@ def windowed_counts(enriched: DataFrame, window: str = "1 hour", watermark: str 
     )
 
 
-def sliding_avg(enriched: DataFrame, size: str = "2 hours", slide: str = "1 hour") -> DataFrame:
-    """Sliding-window average value per event type."""
+def sliding_avg(enriched: DataFrame) -> DataFrame:
+    """Sliding-window (2 hours, every hour) average value per event
+    type."""
     return (
         enriched.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", size, slide).alias("w"), "event_type")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
             F.round(F.avg(F.when(finite_measure("value"), F.col("value"))) + 1e-9, 6)
             .alias("avg_value")
@@ -362,58 +363,27 @@ def stream_dedup(stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_attribution(
-    views: DataFrame, clicks: DataFrame, horizon: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream event-time inner join (view→click attribution):
-    each click matches the same user's views whose timestamp falls in
-    [click_ts - horizon, click_ts]. BOTH sides carry watermarks and
-    the join condition carries the time band, so the state store is
-    bounded: a buffered view is evicted once the click-side watermark
-    passes view_ts + horizon — without the band the state would grow
-    with the full history of both streams. Inner-join matches emit
-    eagerly (no watermark hold-back), so a bounded availableNow run
-    yields the complete batch-equivalent result.
-
-    Scale shape: the join keys on user_id, so both streams shuffle
-    once to co-locate per-user state; state size is horizon-bounded
-    per user, independent of stream length. The reference's streaming
-    surface is stateless per-message (`streaming/Htmls2PredsPipe.
-    scala`) — this is the idiomatic-Spark extension (SURVEY §2.10).
-    """
-    # sane-clock guard before the watermark: a single corrupt
-    # far-future event on either side would drag the global watermark
-    # forward and silently drop every real pair (time-fuzz aligned)
-    v = views.filter(valid_event_time("ts")).select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", horizon)
-    c = clicks.filter(valid_event_time("ts")).select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user_id"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", horizon)
-    cond = (
-        (v["user_id"] == c["click_user_id"])
-        & (c["click_ts"] >= v["view_ts"])
-        & (c["click_ts"] <= v["view_ts"] + F.expr(f"INTERVAL {horizon}"))
-    )
-    return v.join(c, cond, "inner").select(
-        "view_id",
-        "click_id",
-        "user_id",
-        (epoch_seconds("click_ts") - epoch_seconds("view_ts")).alias("lag_seconds"),
-    )
+# Attribution horizon: a click matches its user's views at most this
+# long before it.
+_ATTRIBUTION_HORIZON = "10 minutes"
 
 
-def stream_stream_attribution_outer(
-    views: DataFrame, clicks: DataFrame, horizon: str = "10 minutes"
-) -> DataFrame:
-    """LEFT OUTER variant of the attribution join: views with no
-    click in the horizon still emit (null click) — but only once the
-    watermark proves no future click can match. Emission semantics
-    (asserted by the oracle of `stream_stream_attribution_outer`):
+def stream_stream_attribution(views: DataFrame, clicks: DataFrame, how: str) -> DataFrame:
+    """Stream-stream event-time join (view→click attribution): each
+    click matches the same user's views whose timestamp falls in
+    [click_ts - horizon, click_ts] (``_ATTRIBUTION_HORIZON``). BOTH
+    sides carry watermarks and the join condition carries the time
+    band, so the state store is bounded: a buffered view is evicted
+    once the click-side watermark passes view_ts + horizon — without
+    the band the state would grow with the full history of both
+    streams.
+
+    ``how="inner"``: matches emit eagerly (no watermark hold-back), so
+    a bounded availableNow run yields the complete batch-equivalent
+    result. ``how="left_outer"``: views with no click in the horizon
+    still emit (null click) — but only once the watermark proves no
+    future click can match. Emission semantics (asserted by the
+    oracle of `stream_stream_attribution_outer`):
 
     - matched pairs emit eagerly, exactly like the inner join;
     - an unmatched view emits with nulls when
@@ -424,8 +394,13 @@ def stream_stream_attribution_outer(
       the price of outer semantics on an unbounded model. On a live
       stream they emit as the watermark advances.
 
-    Same user_id shuffle and horizon-bounded state as the inner form.
+    Scale shape: the join keys on user_id, so both streams shuffle
+    once to co-locate per-user state; state size is horizon-bounded
+    per user, independent of stream length. The reference's streaming
+    surface is stateless per-message (`streaming/Htmls2PredsPipe.
+    scala`) — this is the idiomatic-Spark extension (SURVEY §2.10).
     """
+    horizon = _ATTRIBUTION_HORIZON
     # sane-clock guard before the watermark: a single corrupt
     # far-future event on either side would drag the global watermark
     # forward and silently drop every real pair (time-fuzz aligned)
@@ -444,7 +419,7 @@ def stream_stream_attribution_outer(
         & (c["click_ts"] >= v["view_ts"])
         & (c["click_ts"] <= v["view_ts"] + F.expr(f"INTERVAL {horizon}"))
     )
-    return v.join(c, cond, "left_outer").select(
+    return v.join(c, cond, how).select(
         "view_id",
         "click_id",
         "user_id",
@@ -452,11 +427,11 @@ def stream_stream_attribution_outer(
     )
 
 
-def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: str = "user_id") -> DataFrame:
-    """Stream-static broadcast join (J8/T-static): the static side is
+def stream_static_enrich(stream: DataFrame, dim: DataFrame) -> DataFrame:
+    """Stream-static broadcast join on user_id (J8/T-static): the static side is
     re-read per micro-batch; broadcast keeps it off the shuffle path —
     the model-registry / dMap lookup shape."""
-    return stream.join(F.broadcast(dim), on, "left")
+    return stream.join(F.broadcast(dim), "user_id", "left")
 
 
 SESSION_OUT_SCHEMA = (

@@ -47,7 +47,7 @@ def test_models_empty_candidates(spark):
         "candidate string, text_before string, text_after string",
     )
     feats = md.featurize_candidates(cand)
-    reg = md.train_per_domain(feats, min_rows=1)
+    reg = md.train_per_domain(feats)
     assert reg.count() == 0
     # scoring with an empty registry -> everything gets the -2 sentinel
     some = md.featurize_candidates(spark.createDataFrame(

@@ -11,8 +11,9 @@ from htmlentityextraction_spark.operators import incremental as inc
 from htmlentityextraction_spark.operators import models as md
 
 
-def test_train_per_domain_caps_mega_domains(spark):
+def test_train_per_domain_caps_mega_domains(spark, monkeypatch):
     # one domain with 300 rows, cap at 50: the fit must see exactly 50
+    monkeypatch.setattr(md, "_MAX_ROWS_PER_DOMAIN", 50)
     rows = []
     for i in range(150):
         rows.append(("big.com", f"http://big.com/p/{i}", 1, 0.2, f"{i}.50", "good price", "x"))
@@ -24,8 +25,7 @@ def test_train_per_domain_caps_mega_domains(spark):
     )
     feats = md.featurize_candidates(cand)
     reg = md.train_per_domain(
-        feats, n_estimators=3, max_depth=2, min_doc_freq=2, min_rows=10,
-        max_rows_per_domain=50,
+        feats, n_estimators=3, max_depth=2, min_doc_freq=2,
     ).collect()
     assert len(reg) == 1
     assert reg[0].n_rows == 50, "skew cap must bound the per-domain fit"
@@ -469,3 +469,13 @@ def test_failed_merge_releases_the_persisted_spine(spark, sf_dir, monkeypatch, n
     with pytest.raises(RuntimeError, match="merge failed"):
         entry.queries()[name](spark, sf_dir)
     assert cached_plans(spark) <= before
+
+
+@pytest.mark.parametrize("name", ["mergetable_pruned_range_read", "mergetable_zorder_read"])
+def test_read_band_selects_rows_at_the_smallest_scale(spark, sf_dir, name):
+    """The oracle gate of a range read proves nothing when both sides
+    are empty: each query's band must select rows in the smallest
+    fixture too."""
+    import __spark_entry__ as entry
+
+    assert entry.queries()[name](spark, sf_dir).count() > 0

@@ -395,7 +395,7 @@ def test_admission_best_match_semantics(spark):
 
 
 # --- expression-form sketch helpers: equivalence to the codegen shapes ---
-def test_minhash_signature_column_form_matches_codegen(spark, sf_dir):
+def test_minhash_signature_column_form_matches_codegen(spark, sf_dir, monkeypatch):
     """dd.minhash_signature (array-lambda form, for pre-hashed shingle
     arrays) and dd.minhash_signatures_codegen (the explode shape the
     LSH pipeline uses) are the SAME hash family over the SAME
@@ -403,10 +403,9 @@ def test_minhash_signature_column_form_matches_codegen(spark, sf_dir):
     from htmlentityextraction_spark.functions.text import text_only
 
     docs = _docs(spark, sf_dir).filter(F.col("text").isNotNull()).limit(50)
-    num_hashes, n = 16, 5
-    codegen = dd.minhash_signatures_codegen(
-        docs, "text", "doc_id", num_hashes=num_hashes, n=n
-    )
+    num_hashes, n = 16, dd._SHINGLE_N
+    monkeypatch.setattr(dd, "_NUM_HASHES", num_hashes)  # a quicker sketch
+    codegen = dd.minhash_signatures_codegen(docs)
     norm = F.lower(F.trim(text_only(F.col("text"))))
     shingles = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length("__norm") - F.lit(n - 1), F.lit(1))),
@@ -416,7 +415,7 @@ def test_minhash_signature_column_form_matches_codegen(spark, sf_dir):
         docs.select(F.col("doc_id").alias("doc"), norm.alias("__norm"))
         .select("doc", dd.base_hashes(shingles).alias("__base"))
     )
-    cols = dd.minhash_signature(F.col("__base"), num_hashes=num_hashes)
+    cols = dd.minhash_signature(F.col("__base"))
     expr_form = based.select(
         "doc", *[c.alias(f"sig_{i}") for i, c in enumerate(cols)]
     )

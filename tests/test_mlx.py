@@ -39,7 +39,7 @@ def test_linear_svc_runs_and_scores(spark):
 
 def test_lda_topics_shape_and_vocab(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    rows = mlx.lda_topics(docs, k=3).collect()
+    rows = mlx.lda_topics(docs).collect()
     # exploded shape: one row per (topic, ranked term), 3 topics x 5 terms
     assert len(rows) == 15
     assert {r.topic for r in rows} == {0, 1, 2}
@@ -50,7 +50,7 @@ def test_lda_topics_shape_and_vocab(spark):
 
 def test_pca_projection_norm_bounded_by_vector_norm(spark):
     emb = _emb(spark)
-    proj = mlx.pca_project(emb, k=8)
+    proj = mlx.pca_project(emb)
     full = emb.select(
         "vec_id",
         F.sqrt(

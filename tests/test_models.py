@@ -60,7 +60,7 @@ def test_url_grouped_split_no_leakage(spark):
         F.concat(F.lit("u"), (F.col("id") % 100).cast("string")).alias("url"),
         F.col("id").alias("x"),
     )
-    train, test = md.url_grouped_split(df, 0.7)
+    train, test = md.url_grouped_split(df)
     tr = {r.url for r in train.select("url").distinct().collect()}
     te = {r.url for r in test.select("url").distinct().collect()}
     assert tr.isdisjoint(te)
@@ -88,9 +88,7 @@ def _toy_candidates(spark, n_urls=40):
 def test_train_score_pick_roundtrip(spark):
     cand = _toy_candidates(spark)
     feats = md.featurize_candidates(cand)
-    reg = md.train_per_domain(
-        feats, n_estimators=5, max_depth=2, min_doc_freq=2, min_rows=10
-    )
+    reg = md.train_per_domain(feats, n_estimators=5, max_depth=2, min_doc_freq=2)
     rows = reg.collect()
     assert {r.domain for r in rows} == {"d0.com", "d1.com"}
     assert all(r.train_f1 == 1.0 for r in rows), "separable toy data must fit perfectly"
@@ -107,7 +105,7 @@ def test_score_missing_model_sentinel(spark):
     # registry trained only on d0.com -> d1.com urls get sentinel -2.0
     reg = md.train_per_domain(
         feats.filter(F.col("domain") == "d0.com"),
-        n_estimators=5, max_depth=2, min_doc_freq=2, min_rows=10,
+        n_estimators=5, max_depth=2, min_doc_freq=2,
     )
     picked = md.pick_model_price(md.score_candidates(feats, reg))
     vals = {r.url: r.model_price for r in picked.collect()}
@@ -118,7 +116,7 @@ def test_score_missing_model_sentinel(spark):
 def test_train_skips_single_class_and_tiny_domains(spark):
     cand = _toy_candidates(spark).filter(F.col("label") == 1)  # single class
     feats = md.featurize_candidates(cand)
-    reg = md.train_per_domain(feats, n_estimators=3, max_depth=2, min_rows=5)
+    reg = md.train_per_domain(feats, n_estimators=3, max_depth=2)
     assert reg.count() == 0
 
 
@@ -149,8 +147,7 @@ def test_class_union_vocab_mode(spark):
     cand = _toy_candidates(spark)
     feats = md.featurize_candidates(cand)
     reg = md.train_per_domain(
-        feats, n_estimators=5, max_depth=2, min_doc_freq=2, min_rows=10,
-        vocab_mode="class_union",
+        feats, n_estimators=5, max_depth=2, min_doc_freq=2, vocab_mode="class_union",
     )
     rows = reg.collect()
     assert {r.domain for r in rows} == {"d0.com", "d1.com"}
@@ -167,9 +164,7 @@ def test_registry_parquet_roundtrip_serves_identically(spark):
 
     cand = _toy_candidates(spark)
     feats = md.featurize_candidates(cand)
-    reg = md.train_per_domain(
-        feats, n_estimators=5, max_depth=2, min_doc_freq=2, min_rows=10
-    )
+    reg = md.train_per_domain(feats, n_estimators=5, max_depth=2, min_doc_freq=2)
     d = tempfile.mkdtemp(prefix="registry_")
     md.save_registry(reg, d)
     reloaded = md.load_registry(spark, d)
@@ -300,5 +295,5 @@ def test_fit_operators_infer_no_eval_type_warning(spark):
     feats = md.featurize_candidates(_toy_candidates(spark))
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        md.train_per_domain(feats, min_rows=10)
-        md.submodel_curve_per_domain(feats, min_rows=10)
+        md.train_per_domain(feats)
+        md.submodel_curve_per_domain(feats)

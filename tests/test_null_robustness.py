@@ -76,15 +76,17 @@ def test_sorted_neighborhood_drops_null_keys(spark):
     assert {(p.id_a, p.id_b) for p in pairs} == {(1, 2)}
 
 
-def test_ml_fits_skip_null_labels_and_vectors(spark):
+def test_ml_fits_skip_null_labels_and_vectors(spark, monkeypatch):
     from htmlentityextraction_spark.operators import mlx
 
+    monkeypatch.setattr(mlx, "_RF_TREES", 3)  # a quicker forest
+    monkeypatch.setattr(mlx, "_RF_DEPTH", 3)
     rng = np.random.default_rng(3)
     rows = [
         (i, [float(v) for v in rng.normal(size=4)], int(i % 10)) for i in range(40)
     ] + [(100, None, 1), (101, [1.0, 2.0, 3.0, 4.0], None)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = mlx.random_forest_eval(emb, n_trees=3, max_depth=3).collect()
+    out = mlx.random_forest_eval(emb).collect()
     assert sum(r.n for r in out) == 40  # both corrupt rows excluded
 
 

@@ -2,7 +2,7 @@
 (VERDICT r8 item 1): the "a trickle merge costs a handful of bucket
 reads" claims in `operators/decontam.py` and
 `operators/incremental.py` as MEASURED file-open counts via the
-manifest (`files()`), not docstrings. `DataFrame.inputFiles()` lists
+manifest, not docstrings. `DataFrame.inputFiles()` lists
 the parquet files a plan's scan legs resolve to, so the contracts
 below are exact: a small-batch index probe and a single-key CDC diff
 must each open a sliver of the table's files, never O(table)."""
@@ -36,7 +36,7 @@ def _mk_index(spark, path):
 
 def test_small_batch_probe_opens_few_index_files(spark, tmp_path):
     idx = _mk_index(spark, str(tmp_path / "idx"))
-    total_files = idx.files().count()
+    total_files = len(idx.read().inputFiles())
     assert total_files >= N_BUCKETS  # every bucket populated
 
     batch = spark.createDataFrame(
@@ -80,7 +80,7 @@ def test_trickle_cdc_diff_opens_only_changed_bucket_files(spark, tmp_path):
             [(i, float(i)) for i in range(N_FPS)], "k long, price double"
         )
     )
-    total_files = tbl.files().count()
+    total_files = len(tbl.read().inputFiles())
     assert total_files >= N_BUCKETS
 
     tbl.merge(

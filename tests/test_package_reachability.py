@@ -10,11 +10,18 @@ module, and every name used by ``tools/``, ``bench.py``,
 definition reaches every name used in its body. Reaching a class
 reaches its bases, decorators, its body other than methods, and its
 dunder methods; any other method is a definition of its own
-(``"<module path>:<Class>.<method>"``) and is reached by its name.
+(``"<module path>:<Class>.<method>"``) and is reached only by an
+attribute of its name (``x.files``, never a variable ``files``).
 Names are matched without their module or class, so a shared name can
 only keep code alive, never flag it. Docstrings and other string
 constants are not names, so prose that mentions a definition does not
-reach it."""
+reach it.
+
+Options: every defaulted parameter of a package function or method is
+passed by some call the same roots make (the reached definitions'
+bodies, module-level code and the root files), or is named in
+``KEEP_OPTIONS`` with its reason. An option with one value in use is a
+constant, and a branch only tests select is not carried."""
 
 from __future__ import annotations
 
@@ -46,18 +53,33 @@ KEEP = {
     "operators/gbt.py:GBTClassifier.truncate": "the prefix-model reference margin_curve is checked against",
 }
 
+# Options no query, tool or bench passes, each kept on purpose.
+KEEP_OPTIONS = {
+    "streaming/pipeline.py:read_events_stream(starting_offset)": "SURVEY T2 earliest/latest start of the event stream",
+    "streaming/pipeline.py:read_events_kafka(topic)": "the paper's real serve input (kept with read_events_kafka)",
+    "streaming/pipeline.py:read_events_kafka(starting_offset)": "the paper's real serve input (kept with read_events_kafka)",
+    "streaming/pipeline.py:read_events_kafka(max_offsets_per_trigger)": "the paper's real serve input (kept with read_events_kafka)",
+    "operators/models.py:train_per_domain(vocab_mode)": "SURVEY M4 class-union vocabulary selection",
+    "operators/models.py:_tfidf_matrix(vocab_mode)": "SURVEY M4 class-union vocabulary selection",
+    "operators/incremental.py:ParquetMergeTable.vacuum(keep_last)": "retention safety code: how many snapshots vacuum keeps",
+    "operators/incremental.py:ParquetMergeTable.vacuum(min_age_sec)": "retention safety code: the age horizon that protects in-flight readers",
+    "operators/components.py:connected_components(max_rounds)": "guard limit: a pathological pair graph raises instead of looping",
+    "operators/dedup.py:ngram_jaccard_pairs(max_block_rows)": "guard limit: a block too big for the quadratic verify fails loudly",
+    "operators/setjoin.py:prefix_jaccard_pairs(max_block_rows)": "guard limit: a block too big for the quadratic verify fails loudly",
+}
+
 
 def used_names(nodes) -> set[str]:
-    """Every identifier ``nodes`` use: bare names, attribute names and
-    imported names. String constants (docstrings included) are not
-    names."""
+    """Every identifier ``nodes`` use: bare names and imported names as
+    they are, attribute names with a leading ``.``. String constants
+    (docstrings included) are not names."""
     out: set[str] = set()
     for root in nodes:
         for node in ast.walk(root):
             if isinstance(node, ast.Name):
                 out.add(node.id)
             elif isinstance(node, ast.Attribute):
-                out.add(node.attr)
+                out.add(f".{node.attr}")
             elif isinstance(node, ast.alias):
                 out.add(node.name)
     return out
@@ -92,10 +114,11 @@ def scan(package: pathlib.Path, root_files) -> tuple[dict, dict]:
     roots: list[ast.AST] = []
     seen: set[str] = set()
 
-    def define(key: str, name: str, node: ast.AST, body: list[ast.AST]) -> None:
+    def define(key: str, names: tuple[str, ...], node: ast.AST, body: list[ast.AST]) -> None:
         defs[key] = body
         spans[key] = node.end_lineno - node.lineno + 1
-        by_name.setdefault(name, []).append(key)
+        for name in names:
+            by_name.setdefault(name, []).append(key)
 
     for path in sorted(package.rglob("*.py")):
         rel = path.relative_to(package).as_posix()
@@ -103,12 +126,13 @@ def scan(package: pathlib.Path, root_files) -> tuple[dict, dict]:
             if isinstance(node, ast.ClassDef):
                 key = f"{rel}:{node.name}"
                 shell = [n for n in node.body if not is_method(n)]
-                define(key, node.name, node, [*node.bases, *node.keywords, *shell])
+                body = [*node.bases, *node.keywords, *shell]
+                define(key, (node.name, f".{node.name}"), node, body)
                 for m in filter(is_method, node.body):
-                    define(f"{key}.{m.name}", m.name, m, [m])
+                    define(f"{key}.{m.name}", (f".{m.name}",), m, [m])
             elif isinstance(node, FUNCS):
                 key = f"{rel}:{node.name}"
-                define(key, node.name, node, [node])
+                define(key, (node.name, f".{node.name}"), node, [node])
             else:
                 roots.append(node)
                 continue
@@ -166,10 +190,154 @@ def unused_imports(package: pathlib.Path) -> list[str]:
     return out
 
 
+def defaulted(fn: ast.AST) -> list[str]:
+    """The parameters of ``fn`` that have a default."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    out = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+    return out + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def splat_keys(trees) -> dict[str, set[str]]:
+    """Keys of every module-level dict literal (``{"k": v}`` or
+    ``dict(k=v)``) by its name: ``**NAME`` passes exactly these."""
+    out: dict[str, set[str]] = {}
+    for tree in trees:
+        for node in tree.body:
+            if not (isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name)):
+                continue
+            v, keys = node.value, None
+            if isinstance(v, ast.Dict) and all(isinstance(k, ast.Constant) for k in v.keys):
+                keys = {k.value for k in v.keys}
+            elif isinstance(v, ast.Call) and getattr(v.func, "id", None) == "dict" and not v.args:
+                keys = {k.arg for k in v.keywords} if all(k.arg for k in v.keywords) else None
+            if keys is not None:
+                out.setdefault(node.targets[0].id, set()).update(keys)
+    return out
+
+
+def passes(node: ast.AST, params, splats) -> list[tuple]:
+    """``(callee name, slot, forwarded)`` for every argument of every call
+    in ``node``. ``slot`` is a keyword, a position or ``"*"`` (a splat
+    that may set anything); ``forwarded`` names the enclosing function's
+    defaulted parameter the argument just hands on, else None."""
+    out = []
+    for call in ast.walk(node):
+        if not isinstance(call, ast.Call):
+            continue
+        name = getattr(call.func, "id", getattr(call.func, "attr", None))
+
+        def fwd(arg):
+            return arg.id if isinstance(arg, ast.Name) and arg.id in params else None
+
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                out.append((name, "*", None))
+                break
+            out.append((name, i, fwd(arg)))
+        for kw in call.keywords:
+            if kw.arg is not None:
+                out.append((name, kw.arg, fwd(kw.value)))
+                continue
+            keys = splats.get(getattr(kw.value, "id", None), ("*",))
+            out.extend((name, k, None) for k in keys)
+    return out
+
+
+def option_scan(package: pathlib.Path, root_files) -> tuple[list[str], set[str]]:
+    """(unset, options): every defaulted parameter of a package function
+    or method, as ``"<module path>:<name>(<param>)"``, and those no call
+    from the roots passes. A call matches a definition by its name (a
+    class name calls ``__init__``); positions skip ``self``/``cls``. A
+    forwarded argument (``f(x=x)``) sets the callee's option only when
+    the forwarding function's own option is set, to a fixed point."""
+    unreached, _ = scan(package, root_files)
+    trees = {
+        p.relative_to(package).as_posix(): ast.parse(p.read_text())
+        for p in sorted(package.rglob("*.py"))
+    }
+    roots = [ast.parse(p.read_text()) for p in root_files]
+    splats = splat_keys([*trees.values(), *roots])
+    sig: dict[str, tuple] = {}  # key -> (positional params after self, defaulted params)
+    by_call: dict[str, list[str]] = {}
+    calls: list[tuple] = []  # (enclosing key, callee name, slot, forwarded)
+
+    def declare(key, fn, names, offset, reached):
+        params = defaulted(fn)
+        sig[key] = ([a.arg for a in [*fn.args.posonlyargs, *fn.args.args]][offset:], params)
+        for name in names:
+            by_call.setdefault(name, []).append(key)
+        body = [fn] if reached else fn.decorator_list
+        calls.extend((key, *c) for b in body for c in passes(b, params, splats))
+
+    for rel, tree in trees.items():
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                ckey = f"{rel}:{node.name}"
+                shell = [n for n in node.body if not isinstance(n, FUNCS)]
+                if ckey not in unreached:
+                    for n in [*node.bases, *shell]:
+                        calls.extend((None, *c) for c in passes(n, (), splats))
+                for m in filter(lambda n: isinstance(n, FUNCS), node.body):
+                    key = f"{ckey}.{m.name}"
+                    static = any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list)
+                    names = (m.name, node.name) if m.name == "__init__" else (m.name,)
+                    # a dunder is reached with its class
+                    reached = (key if is_method(m) else ckey) not in unreached
+                    declare(key, m, names, 0 if static else 1, reached)
+            elif isinstance(node, FUNCS):
+                key = f"{rel}:{node.name}"
+                declare(key, node, (node.name,), 0, key not in unreached)
+            else:
+                calls.extend((None, *c) for c in passes(node, (), splats))
+    for tree in roots:
+        calls.extend((None, *c) for c in passes(tree, (), splats))
+
+    options = {f"{k}({p})" for k, (_, ps) in sig.items() for p in ps}
+    done: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for enclosing, name, slot, forwarded in calls:
+            if forwarded is not None and f"{enclosing}({forwarded})" not in done:
+                continue
+            for key in by_call.get(name, ()):
+                positional, params = sig[key]
+                if slot == "*":
+                    hit = params
+                elif isinstance(slot, int):
+                    hit = positional[slot:slot + 1]
+                else:
+                    hit = [slot]
+                for p in hit:
+                    option = f"{key}({p})"
+                    if option in options and option not in done:
+                        done.add(option)
+                        grew = True
+    return sorted(options - done), options
+
+
+def stale_keep_options(keep, unset, options) -> list[str]:
+    """``keep`` entries that name no option, or one some call now sets."""
+    return [k for k in keep if k not in options or k not in unset]
+
+
 def test_every_package_definition_is_reached_or_kept():
     unreached, _ = scan(PACKAGE, root_files(REPO))
     bad = sorted(k for k in unreached if not kept(k))
     assert not bad, f"{len(bad)} definitions only tests reach: " + ", ".join(bad)
+
+
+def test_every_package_option_is_set_or_kept():
+    unset, _ = option_scan(PACKAGE, root_files(REPO))
+    bad = [o for o in unset if o not in KEEP_OPTIONS]
+    assert not bad, f"{len(bad)} options no production caller sets: " + ", ".join(bad)
+
+
+def test_keep_options_name_unset_options():
+    unset, options = option_scan(PACKAGE, root_files(REPO))
+    stale = stale_keep_options(KEEP_OPTIONS, unset, options)
+    assert not stale, "KEEP_OPTIONS names options that are gone or now set: " + ", ".join(stale)
 
 
 def test_no_package_module_imports_a_name_it_never_uses():
@@ -223,8 +391,11 @@ def test_scan_reaches_methods_by_name_and_dunders_with_their_class(tmp_path):
         "@register('q')\n"
         "def query(spark, sf):\n    return Table().used()\n"
     )
-    unreached, _ = scan(pkg, [])
-    # a shared method name keeps every method of that name alive
+    tool = tmp_path / "tool.py"
+    tool.write_text("test_only = 1\nprint(test_only)\n")
+    unreached, _ = scan(pkg, [tool])
+    # a shared method name keeps every method of that name alive; a
+    # bare variable of the same name reaches no method
     assert sorted(unreached) == ["mod.py:Table.test_only", "mod.py:Unused"]
 
 
@@ -240,3 +411,44 @@ def test_unused_imports_flags_bindings_the_module_never_reads(tmp_path):
         "def f():\n    return used, os.path.sep\n"
     )
     assert unused_imports(pkg) == ["mod.py:3:js", "mod.py:4:unused"]
+
+
+def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "from registry import register\n"
+        "CONF = dict(depth=3)\n"
+        "def kw(x, a=1, b=2):\n    return x\n"
+        "def pos(x, a=1, b=2):\n    return x\n"
+        "def splat(x, depth=1, width=2):\n    return x\n"
+        "def anything(x, a=1, b=2):\n    return x\n"
+        "def inner(x, fwd=1):\n    return x\n"
+        "def outer(x, fwd=None):\n    return inner(x, fwd=fwd)\n"
+        "def inner2(x, fwd=1):\n    return x\n"
+        "def outer2(x, fwd=None):\n    return inner2(x, fwd)\n"
+        "class Table:\n"
+        "    def __init__(self, path, mode='r'):\n        self.path = path\n"
+        "    def read(self, col, version=None):\n        return col\n"
+        "@register('q')\n"
+        "def query(spark, sf, **kw2):\n"
+        "    kw(1, b=5)\n"
+        "    pos(1, 2)\n"
+        "    splat(1, **CONF)\n"
+        "    anything(1, **kw2)\n"
+        "    outer(1)\n"
+        "    outer2(1, fwd=3)\n"
+        "    Table('p', 'w').read('c')\n"
+    )
+    unset, options = option_scan(pkg, [])
+    assert len(options) == 14
+    assert unset == [
+        "mod.py:Table.read(version)",  # positions skip self
+        "mod.py:inner(fwd)",  # forwarded from an option nobody sets
+        "mod.py:kw(a)",
+        "mod.py:outer(fwd)",
+        "mod.py:pos(b)",
+        "mod.py:splat(width)",  # **CONF passes only its own keys
+    ]
+    keep = {"mod.py:kw(a)": "kept", "mod.py:kw(b)": "set by query", "mod.py:gone(x)": "gone"}
+    assert stale_keep_options(keep, unset, options) == ["mod.py:kw(b)", "mod.py:gone(x)"]

@@ -37,7 +37,7 @@ def _registry(spark):
         "candidate string, text_before string, text_after string",
     )
     return md.train_per_domain(
-        md.featurize_candidates(cand), n_estimators=3, max_depth=2, min_doc_freq=2, min_rows=10,
+        md.featurize_candidates(cand), n_estimators=3, max_depth=2, min_doc_freq=2,
     ).collect()
 
 

@@ -211,6 +211,6 @@ def test_stream_stream_attribution_horizon(spark, tmp_path):
     views = spark.readStream.schema(schema).parquet(vdir)
     clicks = spark.readStream.schema(schema).parquet(cdir)
     out = sp.run_to_memory(
-        spark, sp.stream_stream_attribution(views, clicks, horizon="10 minutes")
+        spark, sp.stream_stream_attribution(views, clicks, "inner")
     ).collect()
     assert [(r["view_id"], r["click_id"], r["lag_seconds"]) for r in out] == [(1, 3, 300)]

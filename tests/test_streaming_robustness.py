@@ -113,8 +113,7 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
         "candidate string, text_before string, text_after string",
     )
     reg = md.train_per_domain(
-        md.featurize_candidates(toy), n_estimators=3, max_depth=2,
-        min_doc_freq=2, min_rows=10,
+        md.featurize_candidates(toy), n_estimators=3, max_depth=2, min_doc_freq=2,
     )
 
     msgs = [
@@ -165,8 +164,7 @@ def test_serve_backpressure_bounds_microbatches(spark):
         "candidate string, text_before string, text_after string",
     )
     reg = md.train_per_domain(
-        md.featurize_candidates(toy), n_estimators=3, max_depth=2,
-        min_doc_freq=2, min_rows=10,
+        md.featurize_candidates(toy), n_estimators=3, max_depth=2, min_doc_freq=2,
     )
 
     rows_per_file = 25

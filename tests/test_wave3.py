@@ -14,7 +14,7 @@ def test_pack_sequences_bins_and_attribution(spark):
         [(i, "alpha beta gamma", "s0") for i in range(4)],
         "doc_id long, text string, source string",
     )
-    out = lp.pack_sequences(docs, budget=5, group_col="source").orderBy("bin_id").collect()
+    out = lp.pack_sequences(docs, budget=5).orderBy("bin_id").collect()
     assert [(r.bin_id, r.n_docs, r.bin_tokens) for r in out] == [(0, 2, 6), (1, 2, 6)]
     assert out[0].first_doc == 0 and out[0].last_doc == 1
 

@@ -169,9 +169,6 @@ def test_pair_cooccurrence_oversize_guard(spark):
     df = spark.createDataFrame(rows, "b int, i string")
     with pytest.raises(OversizeBasketError, match="pair explosion refused"):
         pair_cooccurrence(df, "b", "i", max_basket_items=10)
-    # drop_oversize keeps the small basket only
-    out = pair_cooccurrence(df, "b", "i", max_basket_items=10, drop_oversize=True)
-    assert [(r.item_a, r.item_b) for r in out.collect()] == [("i0", "i1")]
 
 
 # ---------------------------------------------------------------- pagerank
