@@ -404,9 +404,12 @@ _PICKED = T.StructType(
 )
 
 
-def _picked_batches(batches: Iterator[pa.RecordBatch], registry: Broadcast) -> Iterator[pa.RecordBatch]:
-    """(url, __html, page_length, domain, updatedPrice) page batches →
-    one _PICKED row per page, in input order. Per batch, the candidates
+def _picked_batches(
+    batches: Iterator[pa.RecordBatch], registry: Broadcast, forward: tuple[str, ...]
+) -> Iterator[pa.RecordBatch]:
+    """(url, __html, page_length, domain, updatedPrice, *forward) page
+    batches → one _PICKED row per page, in input order, followed by its
+    ``forward`` columns unchanged. Per batch, the candidates
     of all its pages are grouped by domain so each domain's features
     and margins are computed in one call; the best candidate is the
     max (round(margin, 9), candidate) among positive ones, the order
@@ -454,8 +457,9 @@ def _picked_batches(batches: Iterator[pa.RecordBatch], registry: Broadcast) -> I
                 batch.column("updatedPrice"),
                 pa.array(best, pa.string()),
                 pa.array(max_pred, pa.int32()),
+                *(batch.column(c) for c in forward),
             ],
-            names=_PICKED.fieldNames(),
+            names=[*_PICKED.fieldNames(), *forward],
         )
 
 
@@ -467,11 +471,18 @@ def pick_pages(pages: DataFrame, registry: Broadcast) -> DataFrame:
     value — the reference's one per-record map
     (`streaming/Htmls2PredsPipe.scala:104-159`), with no shuffle.
     ``model_price(max_pred, best)`` is the page's model price."""
+    return pick_pages_with(pages, registry, ())
+
+
+def pick_pages_with(pages: DataFrame, registry: Broadcast, forward: tuple[str, ...]) -> DataFrame:
+    """``pick_pages``, with each page's ``forward`` columns carried
+    through the map unchanged after the _PICKED ones."""
     projected = ex.shrunk_pages(
         pages.withColumn("domain", get_domain(F.col("url"))),
-        "html", "url", "domain", "updatedPrice",
+        "html", "url", "domain", "updatedPrice", *forward,
     )
-    return projected.mapInArrow(lambda batches: _picked_batches(batches, registry), _PICKED)
+    schema = T.StructType(_PICKED.fields + [projected.schema[c] for c in forward])
+    return projected.mapInArrow(lambda batches: _picked_batches(batches, registry, forward), schema)
 
 
 def score_candidates(cand: DataFrame, registry: DataFrame | list) -> DataFrame:

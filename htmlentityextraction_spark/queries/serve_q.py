@@ -8,6 +8,7 @@ The planted-token construction keeps the output closed-form SQL.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,4 +94,6 @@ def stream_serve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _page_messages(spark, sf_dir).write.mode("overwrite").parquet(src)
     raw = spark.readStream.schema("value string").parquet(src)
     serve.serve_stream(spark, raw, registry, out).await_done()
+    # the returned frame reads only the historical sink
+    shutil.rmtree(src)
     return spark.read.parquet(os.path.join(out, "historical"))

@@ -9,9 +9,9 @@ The rebuild uses Structured Streaming:
   (swap `.format("parquet")` for `.format("kafka")` + `from_json` in
   production — same downstream plan);
 - stateless transforms are plain select/withColumn (T4);
-- status routing = one `foreachBatch` writing N filtered sinks (T5/T6)
-  — the batch is cached once, filtered N ways, so the source is read
-  once per micro-batch, not N times;
+- status routing = one `foreachBatch` whose one writer map routes each
+  partition's rows to every sink (T5/T6, ``write_sinks``), so a
+  micro-batch is read once and written in one Spark job;
 - `trigger(availableNow=True)` gives bounded runs (T9) — and makes
   every streaming query here equal to its batch counterpart over the
   same files, which is exactly how the DuckDB oracles check them;
@@ -29,10 +29,18 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from collections import Counter
+from typing import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from htmlentityextraction_spark.functions.pricing import finite_measure, price_status, selected_price
 from htmlentityextraction_spark.functions.temporal import epoch_seconds, valid_event_time
@@ -243,45 +251,127 @@ def enrich_events(stream: DataFrame) -> DataFrame:
 PASSING = ("modeledPatternEquals", "minorModelPatternConflict", "majorModelPatternConflict")
 
 
-def write_status_sinks(batch: DataFrame, out_dir: str) -> None:
-    """Append one (persisted) micro-batch of status rows to historical/
-    (all rows), realtime/ (PASSING statuses) and logs/ (the rest) — the
-    Htmls2Cassandra three-table fan-out, shared by ``route_to_sinks``
-    and the serve path."""
-    passing = F.col("status").isin(*PASSING)
-    batch.write.mode("append").parquet(os.path.join(out_dir, "historical"))
-    batch.filter(passing).write.mode("append").parquet(os.path.join(out_dir, "realtime"))
-    batch.filter(~passing).write.mode("append").parquet(os.path.join(out_dir, "logs"))
+_STATUS_SINKS = ("historical", "realtime", "logs")
+
+# One row per writer task: what it routed (the reference's per-batch
+# accumulators, SURVEY A11, `streaming/Htmls2PredsPipe.scala:74-84`).
+_SINK_COUNTS = T.StructType(
+    [
+        T.StructField("rows", T.LongType()),
+        T.StructField("corrupt", T.LongType()),
+        T.StructField("no_candidate", T.LongType()),
+        T.StructField("missing_model", T.LongType()),
+        T.StructField("status", T.MapType(T.StringType(), T.LongType())),
+    ]
+)
+_CORRUPT_SINK = pa.schema([("raw_payload", pa.string()), ("status", pa.string())])
+
+
+def _sink_partition(
+    batches: Iterator[pa.RecordBatch], out_dir: str, batch_id: int, schema: pa.Schema, sinks: tuple[str, ...]
+) -> Iterator[pa.RecordBatch]:
+    """One partition of status rows → its ``part-<batch_id>-<partition>``
+    file in each sink, and one _SINK_COUNTS row. A row with a non-null
+    raw_payload is a corrupt message and goes to logs_corrupt/ only;
+    every other row goes to historical/ and to realtime/ (PASSING
+    statuses) or logs/ (the rest). A file is written when it has rows,
+    and by partition 0 always, so every sink dir is readable after
+    every batch. Each file is written under a dot-prefixed temp name
+    (which readers skip) and then moved onto its final name."""
+    fs, root = pafs.FileSystem.from_uri(out_dir)
+    routed: dict[str, list[pa.Table]] = {s: [] for s in sinks}
+    n = dict.fromkeys(_SINK_COUNTS.fieldNames()[:-1], 0)
+    status: Counter = Counter()
+    for batch in batches:
+        table = pa.Table.from_batches([batch])
+        if "logs_corrupt" in sinks:
+            bad = pc.is_valid(table["raw_payload"])
+            payloads = table["raw_payload"].filter(bad).cast(pa.string())
+            routed["logs_corrupt"].append(pa.table(
+                [payloads, pa.array(["corruptMessage"] * len(payloads), pa.string())], schema=_CORRUPT_SINK))
+            n["corrupt"] += len(payloads)
+            table = table.filter(pc.invert(bad))
+        table = table.select(schema.names).cast(schema)
+        passing = pc.is_in(table["status"], value_set=pa.array(PASSING))
+        routed["historical"].append(table)
+        routed["realtime"].append(table.filter(passing))
+        routed["logs"].append(table.filter(pc.invert(passing)))
+        n["rows"] += table.num_rows
+        n["no_candidate"] += pc.sum(pc.equal(table["model_price"], -1.0)).as_py() or 0
+        n["missing_model"] += pc.sum(pc.equal(table["model_price"], -2.0)).as_py() or 0
+        counts = pc.value_counts(table["status"])
+        status.update(dict(zip(counts.field("values").to_pylist(), counts.field("counts").to_pylist())))
+    part = TaskContext.get().partitionId()
+    name = f"part-{batch_id}-{part}.parquet"
+    for sink, tables in routed.items():
+        if part == 0 or any(t.num_rows for t in tables):
+            empty = (_CORRUPT_SINK if sink == "logs_corrupt" else schema).empty_table()
+            tmp = f"{root}/{sink}/.{name}.{uuid.uuid4().hex}"
+            pq.write_table(pa.concat_tables([empty, *tables]), tmp, filesystem=fs)
+            fs.move(tmp, f"{root}/{sink}/{name}")
+    yield pa.RecordBatch.from_pylist([{**n, "status": dict(status)}], schema=to_arrow_schema(_SINK_COUNTS))
+
+
+def write_sinks(batch: DataFrame, out_dir: str, batch_id: int) -> dict:
+    """Route one micro-batch of status rows to historical/ (all rows),
+    realtime/ (PASSING statuses) and logs/ (the rest), and, when the
+    rows carry a raw_payload column, its non-null payloads to
+    logs_corrupt/ — the Htmls2Cassandra fan-out plus the reference's
+    error topic, routed in one producer pass as
+    `utils/Utils.scala:442-460` does. One ``mapInArrow`` writer per
+    partition writes all sinks with ``pyarrow.parquet`` and returns a
+    counter row; the driver collects those rows, so the batch is read
+    once, in one Spark job, with its counters from the same pass.
+
+    Files are named ``part-<batch_id>-<partition>.parquet``, and the
+    batch id's files are deleted before the job starts, so a replayed
+    batch overwrites its own output instead of appending a second
+    copy. ``out_dir`` is an absolute path or a URI, resolved through
+    ``pyarrow.fs.FileSystem.from_uri`` on the driver and in every task.
+
+    Returns the summed counters: rows (not corrupt), corrupt,
+    no_candidate (model_price -1), missing_model (-2) and the rows of
+    each status."""
+    schema = to_arrow_schema(T.StructType([f for f in batch.schema.fields if f.name != "raw_payload"]))
+    sinks = _STATUS_SINKS + (("logs_corrupt",) if "raw_payload" in batch.columns else ())
+    fs, root = pafs.FileSystem.from_uri(out_dir)
+    stale = (f"part-{batch_id}-", f".part-{batch_id}-")
+    for sink in sinks:
+        fs.create_dir(f"{root}/{sink}")
+        for info in fs.get_file_info(pafs.FileSelector(f"{root}/{sink}")):
+            if info.base_name.startswith(stale):
+                fs.delete_file(info.path)
+    rows = batch.mapInArrow(
+        lambda batches: _sink_partition(batches, out_dir, batch_id, schema, sinks), _SINK_COUNTS
+    ).collect()
+    status: Counter = Counter()
+    for r in rows:
+        status.update(r["status"])
+    totals = {k: sum(r[k] for r in rows) for k in _SINK_COUNTS.fieldNames()[:-1]}
+    return {**totals, "status": dict(status)}
 
 
 def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
-    """Multiplexed sinks (T5/T6): one foreachBatch writes
-    historical/ (all rows), realtime/ (passing statuses), logs/
-    (errored) — the Htmls2Cassandra three-table fan-out. The micro-
-    batch is persisted once so the three filters share one source
-    read. Per-batch counters (A11 — the reference's accumulators,
+    """Multiplexed sinks (T5/T6): one foreachBatch routes each
+    micro-batch to historical/ (all rows), realtime/ (passing
+    statuses) and logs/ (errored) — the Htmls2Cassandra three-table
+    fan-out — through ``write_sinks``'s one writer pass. Per-batch
+    counters (A11 — the reference's accumulators,
     `streaming/Htmls2PredsPipe.scala:74-84`) accumulate on the holder
-    via one cheap agg over the cached batch."""
+    from that pass's counter rows, with no job of their own."""
     holder_metrics: list[dict] = []
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            counts = batch.agg(
-                F.count("*").alias("n_total"),
-                F.sum(F.col("status").isin(*PASSING).cast("long")).alias("n_passing"),
-            ).first()
-            holder_metrics.append(
-                {
-                    "batch_id": batch_id,
-                    "n_total": counts["n_total"],
-                    "n_passing": counts["n_passing"] or 0,
-                    "n_errored": counts["n_total"] - (counts["n_passing"] or 0),
-                }
-            )
-            write_status_sinks(batch, out_dir)
-        finally:
-            batch.unpersist()
+        counts = write_sinks(batch, out_dir, batch_id)
+        n_passing = sum(counts["status"].get(s, 0) for s in PASSING)
+        holder_metrics.append(
+            {
+                "batch_id": batch_id,
+                "n_total": counts["rows"],
+                "n_passing": n_passing,
+                "n_errored": counts["rows"] - n_passing,
+            }
+        )
 
     q = (
         enriched.writeStream.foreachBatch(write_batch)

@@ -88,6 +88,70 @@ def test_serve_scoring_is_one_python_map_and_no_shuffle(spark):
         assert node not in plan
 
 
+def test_serve_batch_parses_once_above_the_exchange(spark):
+    # the micro-batch is parsed by one from_json, after the parallelism
+    # guard's shuffle: a filter on the parsed corrupt flag would be
+    # pushed below the Exchange and parse each message up to 3 times
+    from htmlentityextraction_spark.streaming import serve
+
+    raw = spark.createDataFrame(
+        [('{"url":"http://a.com/p","html":"price 1.50 now","updatedPrice":1.5}',), ("{bad",)],
+        "value string",
+    ).coalesce(1)
+    registry = spark.sparkContext.broadcast({})
+    plan = serve.serve_batch(raw, registry, 4)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    parse = [i for i, line in enumerate(lines) if "from_json(" in line]
+    exchange = [i for i, line in enumerate(lines) if "Exchange RoundRobinPartitioning" in line]
+    assert plan.count("from_json(") == 1 and len(exchange) == 1
+    assert parse[0] < exchange[0], plan
+    assert re.findall(PYTHON_NODES, plan) == ["MapInArrow"]
+
+
+def test_serve_drain_runs_at_most_two_jobs_per_trigger(spark, tmp_path):
+    # one Spark pass per micro-batch: with the session's AQE, the
+    # guard's shuffle map stage and the writer's result stage. Counted
+    # as the difference between drains of 1 and 4 files, so one-time
+    # stream start-up jobs cancel out.
+    import os
+    import shutil
+
+    from htmlentityextraction_spark.streaming import serve
+
+    sc = spark.sparkContext
+    src = tmp_path / "src"
+    for f in range(4):
+        msgs = [(f'{{"url":"http://a.com/p/{f}-{i}","html":"price {i}.50 now","updatedPrice":{i}.5}}',)
+                for i in range(8)] + [(f"{{bad {f}",)]
+        spark.createDataFrame(msgs, "value string").coalesce(1).write.mode("append").parquet(str(src))
+    files = sorted(p for p in os.listdir(src) if p.endswith(".parquet"))
+    groups = [None]
+
+    def last_job() -> int:
+        ids = [i for g in groups for i in sc.statusTracker().getJobIdsForGroup(g) or []]
+        return max(ids) if ids else -1
+
+    def jobs_for(n: int, tag: str) -> int:
+        topic = tmp_path / f"topic_{tag}"
+        topic.mkdir()
+        for name in files[:n]:
+            shutil.copy(src / name, topic)
+        raw = spark.readStream.schema("value string").option("maxFilesPerTrigger", 1).parquet(str(topic))
+        j0 = last_job()
+        holder = serve.serve_stream(spark, raw, [], str(tmp_path / f"out_{tag}"))
+        holder.await_done()
+        # foreachBatch runs its jobs under the stream's run id
+        groups.append(str(holder.query.runId))
+        assert len(holder.metrics) == n
+        return last_job() - j0
+
+    jobs_for(1, "warm")
+    base = jobs_for(1, "base")
+    more = jobs_for(4, "more")
+    per_trigger = (more - base) / 3
+    assert 1 <= per_trigger <= 2, f"{per_trigger} jobs per trigger (1 file: {base}, 4 files: {more})"
+
+
 def test_model_score_pick_price_scores_through_the_page_map(spark):
     # the registry query scores with the serve path's page scorer: one
     # mapInArrow is the plan's only Python node, no candidate-row

@@ -158,7 +158,56 @@ def test_serve_stream_broadcasts_the_registry_once(spark):
         batches = [p for p in holder.query.recentProgress if p["numInputRows"] > 0]
         assert len(batches) == 3
         assert len(created) == 1
-        assert spark.read.parquet(os.path.join(out, "historical")).count() == 15
+        # every sink dir is readable, the ones no row reached included
+        for sink, rows in (("historical", 15), ("realtime", 15), ("logs", 0), ("logs_corrupt", 0)):
+            assert spark.read.parquet(os.path.join(out, sink)).count() == rows, sink
+    finally:
+        shutil.rmtree(src)
+        shutil.rmtree(out)
+
+
+def test_serve_replayed_batch_overwrites_its_own_output(spark):
+    # a restart after a batch's output was written but before its
+    # commit replays that batch; its deterministic file names let it
+    # overwrite its own files, so every sink still holds each message
+    # once (append-mode writes would hold the replayed batch twice)
+    from collections import Counter
+
+    reg = _registry(spark)
+    src = tempfile.mkdtemp(prefix="serve_replay_src_")
+    out = tempfile.mkdtemp(prefix="serve_replay_out_")
+    for f in range(3):
+        msgs = [(f'{{"url":"http://a.com/p/{f}-{i}","html":"good price {10 + i}.50 now",'
+                 f'"price":{10 + i}.5,"updatedPrice":{10 + i}.5}}',) for i in range(5)]
+        msgs += [(f'{{"url":"http://b.com/p/{f}","html":"bad price 3.25 now","updatedPrice":0.0}}',),
+                 (f"{{broken {f}",)]
+        spark.createDataFrame(msgs, "value string").coalesce(1).write.mode("append").parquet(src)
+
+    def drain():
+        raw = spark.readStream.schema("value string").option("maxFilesPerTrigger", 1).parquet(src)
+        holder = serve.serve_stream(spark, raw, reg, out)
+        holder.await_done()
+        return [p["batchId"] for p in holder.query.recentProgress if p["numInputRows"] > 0]
+
+    try:
+        assert drain() == [0, 1, 2]
+        commits = os.path.join(out, "_checkpoint", "commits")
+        os.remove(os.path.join(commits, "2"))
+        crc = os.path.join(commits, ".2.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        assert drain() == [2]
+
+        def sink(name):
+            return spark.read.parquet(os.path.join(out, name)).collect()
+
+        hist, rt, logs = sink("historical"), sink("realtime"), sink("logs")
+        urls = Counter(r.url for r in hist)
+        assert len(urls) == 18 and set(urls.values()) == {1}
+        assert Counter(rt + logs) == Counter(hist)
+        assert {r.url for r in logs} == {f"http://b.com/p/{f}" for f in range(3)}
+        corrupt = Counter(r.raw_payload for r in sink("logs_corrupt"))
+        assert corrupt == Counter(f"{{broken {f}" for f in range(3))
     finally:
         shutil.rmtree(src)
         shutil.rmtree(out)

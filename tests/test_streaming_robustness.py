@@ -96,12 +96,9 @@ def test_processing_time_trigger_and_stop(spark):
     shutil.rmtree(out); shutil.rmtree(ckpt)
 
 
-def test_serve_path_survives_corrupt_and_null_messages(spark):
-    """The serve pipeline must route corrupt JSON out, sentinel
-    null-html pages, and still score the good ones — one poisoned
-    Kafka message must never kill the stream."""
-    import os
-    from pyspark.sql import functions as F
+def _three_message_drain(spark):
+    """One micro-batch of a good page, a null-html page and a corrupt
+    message through ``serve_stream``: (holder, src, out)."""
     from htmlentityextraction_spark.operators import models as md
     from htmlentityextraction_spark.streaming import serve
 
@@ -127,7 +124,16 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
     out = tempfile.mkdtemp(prefix="serve_rob_out_")
     spark.createDataFrame(msgs, "value string").write.mode("overwrite").parquet(src)
     raw = spark.readStream.schema("value string").parquet(src)
-    serve.serve_stream(spark, raw, reg, out).await_done()
+    holder = serve.serve_stream(spark, raw, reg, out)
+    holder.await_done()
+    return holder, src, out
+
+
+def test_serve_path_survives_corrupt_and_null_messages(spark):
+    """The serve pipeline must route corrupt JSON out, sentinel
+    null-html pages, and still score the good ones — one poisoned
+    Kafka message must never kill the stream."""
+    _, src, out = _three_message_drain(spark)
 
     hist = spark.read.parquet(os.path.join(out, "historical")).collect()
     by_url = {r.url: r for r in hist}
@@ -142,6 +148,19 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
     r2 = by_url["http://good.com/p/2"]
     assert r2.model_price == -1.0 and r2.status == "allFalseCandids"
     assert r2.final_price == 7.0
+    shutil.rmtree(src); shutil.rmtree(out)
+
+
+def test_serve_counters_of_the_three_message_batch(spark):
+    """The per-batch counters come from the sink writer's own pass: two
+    pages and one corrupt message. The toy registry cannot separate its
+    alternating labels (every training row has the same features), so
+    no candidate is positive and both pages take the -1 sentinel."""
+    holder, src, out = _three_message_drain(spark)
+    assert holder.metrics == [{
+        "batch_id": 0, "rows": 2, "corrupt": 1, "no_candidate": 2, "missing_model": 0,
+        "status": {"allFalseCandids": 2},
+    }]
     shutil.rmtree(src); shutil.rmtree(out)
 
 
