@@ -74,6 +74,8 @@ def assert_timestamp_col(df: DataFrame, name: str) -> None:
 # leap-day instants are VALID and must flow through.
 VALID_EVENT_TIME_MIN = "2000-01-01"
 VALID_EVENT_TIME_MAX = "2100-01-01"
+# The inactivity gap that closes a session, batch and streaming.
+SESSION_GAP_MINUTES = 30
 
 
 def valid_event_time(col: Column | str) -> Column:

@@ -5,7 +5,7 @@ pairs co-occur more than chance. Per-basket pair generation is the
 classic quadratic trap — a degenerate basket with 10^5 items emits
 10^10 pairs. So, like the trigram blocking guard in
 `operators/entity.py` and `dedup.py`'s ``max_block_rows``, baskets
-above ``max_basket_items`` FAIL LOUDLY before the self-join; normal retail baskets
+above ``_MAX_BASKET_ITEMS`` FAIL LOUDLY before the self-join; normal retail baskets
 are tiny, so per-basket C(n,2) is bounded and the join is an
 equi-join on the basket key — one shuffle, map-side combinable
 counts.
@@ -21,20 +21,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# a pair must co-occur in this many baskets; a basket with more items
+# than the cap is refused before the quadratic self-join
+_MIN_PAIR_COUNT = 5
+_MAX_BASKET_ITEMS = 100
+
+
 class OversizeBasketError(ValueError):
     pass
 
 
-def pair_cooccurrence(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_pair_count: int = 1,
-    max_basket_items: int = 1000,
-) -> DataFrame:
+def pair_cooccurrence(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     """(item_a, item_b, pair_count, count_a, count_b, n_baskets,
     support, confidence_a_to_b, lift) for unordered pairs
-    item_a < item_b appearing in >= min_pair_count baskets."""
+    item_a < item_b appearing in >= ``_MIN_PAIR_COUNT`` baskets."""
     facts = (
         df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
         .distinct()
@@ -52,13 +52,13 @@ def pair_cooccurrence(
     stats = sizes.agg(
         F.max("__n").alias("__mx"), F.count(F.lit(1)).alias("__nb")
     ).first()
-    if stats["__mx"] is not None and stats["__mx"] > max_basket_items:
-        hot = sizes.filter(F.col("__n") > max_basket_items).orderBy(
+    if stats["__mx"] is not None and stats["__mx"] > _MAX_BASKET_ITEMS:
+        hot = sizes.filter(F.col("__n") > _MAX_BASKET_ITEMS).orderBy(
             F.desc("__n")
         ).limit(1).collect()
         raise OversizeBasketError(
             f"basket {hot[0]['__b']!r} has {hot[0]['__n']} items "
-            f"(max_basket_items={max_basket_items}); pair explosion refused — "
+            f"(_MAX_BASKET_ITEMS={_MAX_BASKET_ITEMS}); pair explosion refused — "
             "raise the cap"
         )
     n_baskets = stats["__nb"]
@@ -71,7 +71,7 @@ def pair_cooccurrence(
         .filter(F.col("item_a") < F.col("item_b"))
         .groupBy("item_a", "item_b")
         .agg(F.count("*").alias("pair_count"))
-        .filter(F.col("pair_count") >= min_pair_count)
+        .filter(F.col("pair_count") >= _MIN_PAIR_COUNT)
     )
     out = (
         pairs.join(

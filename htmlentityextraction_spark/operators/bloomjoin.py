@@ -38,25 +38,24 @@ from pyspark.sql import functions as F
 
 # Bit positions derive from xxhash64(key, seed_i); the salt column
 # makes the k hash functions independent.
+_NUM_HASHES = 5
 _WORD_COL = "__bloom_word"
 _BITS_COL = "__bloom_bits"
 
 
-def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
+def _positions(key: Column, num_bits: int) -> list[Column]:
     return [
         F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)).cast("long")
-        for i in range(num_hashes)
+        for i in range(_NUM_HASHES)
     ]
 
 
-def bloom_build(
-    dim: DataFrame, key_col: str, num_bits: int = 1 << 20, num_hashes: int = 5
-) -> DataFrame:
+def bloom_build(dim: DataFrame, key_col: str, num_bits: int = 1 << 20) -> DataFrame:
     """Bit-set over ``dim[key_col]`` as a DataFrame of
     ``(__bloom_word: long, __bloom_bits: long)`` — at most
     ``num_bits/64`` rows. One narrow explode + one small shuffle on
     the word index (domain ≤ m/64), independent of dim row count."""
-    pos = F.explode(F.array(*_positions(F.col(key_col), num_bits, num_hashes)))
+    pos = F.explode(F.array(*_positions(F.col(key_col), num_bits)))
     return (
         dim.select(pos.alias("__pos"))
         .select(
@@ -75,7 +74,6 @@ def bloom_prefilter(
     key_col: str,
     words: DataFrame,
     num_bits: int = 1 << 20,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Keep fact rows whose key tests positive in the Bloom bit-set.
 
@@ -83,7 +81,7 @@ def bloom_prefilter(
     fact side, all bit math in codegen. Survivors are a superset of
     the true matches."""
     out = fact
-    for i, pos in enumerate(_positions(F.col(key_col), num_bits, num_hashes)):
+    for i, pos in enumerate(_positions(F.col(key_col), num_bits)):
         w = words.select(
             F.col(_WORD_COL).alias(f"__w{i}"), F.col(_BITS_COL).alias(f"__b{i}")
         )
@@ -108,12 +106,11 @@ def bloom_semi_join(
     fact_key: str,
     dim_key: str,
     num_bits: int = 1 << 20,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Exact inner join of fact ⋈ dim on the keys, with a Bloom
     pre-filter cutting the fact rows that reach the shuffle. Result
     is identical to the plain join (false positives are removed by
     the exact join; false negatives cannot occur)."""
-    words = bloom_build(dim, dim_key, num_bits, num_hashes)
-    pruned = bloom_prefilter(fact, fact_key, words, num_bits, num_hashes)
+    words = bloom_build(dim, dim_key, num_bits)
+    pruned = bloom_prefilter(fact, fact_key, words, num_bits)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], "inner")

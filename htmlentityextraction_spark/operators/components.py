@@ -42,6 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# frontier expansions of bounded_bfs_bipartite; pagerank's fixed round
+# count and damping factor
+_BFS_ROUNDS = 3
+_PAGERANK_ITERATIONS = 3
+_PAGERANK_DAMPING = 0.85
+
 
 def _checkpoint_round(df: DataFrame) -> tuple[DataFrame, object]:
     """Eagerly cut one iteration round's lineage with
@@ -155,14 +161,10 @@ def resolve_duplicate_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def resolve_clusters_keep_best(
-    items: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    quality_col: str = "quality",
-) -> DataFrame:
-    """Cluster-level SEMANTIC dedup decision: (id, cluster_id, keep,
-    quality) where ``keep`` marks each near-dup cluster's BEST
+def resolve_clusters_keep_best(items: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Cluster-level SEMANTIC dedup decision over ``items``
+    (vec_id, quality): (vec_id, cluster_id, keep, quality) where
+    ``keep`` marks each near-dup cluster's BEST
     exemplar by (quality DESC, id ASC) — quality-ranked survivorship
     over the transitive closure, not pairwise-greedy and not
     keep-min-id. A cluster {A, B, C} discovered through pairs (A,B),
@@ -181,12 +183,12 @@ def resolve_clusters_keep_best(
 
     comp = connected_components(pairs)
     labeled = (
-        items.select(id_col, quality_col)
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
+        items.select("vec_id", "quality")
+        .join(comp.withColumnRenamed("node", "vec_id"), "vec_id", "left")
         .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
-            quality_col,
+            "vec_id",
+            F.coalesce("component", F.col("vec_id")).alias("cluster_id"),
+            "quality",
         )
     )
     # best exemplar: max quality, min id on ties. min_by over
@@ -198,25 +200,25 @@ def resolve_clusters_keep_best(
         "cluster_id",
         {
             "__best": F.min_by(
-                F.col(id_col),
+                F.col("vec_id"),
                 F.struct(
-                    (-F.col(quality_col)).alias("nq"),
-                    F.col(id_col).alias("tb"),
+                    (-F.col("quality")).alias("nq"),
+                    F.col("vec_id").alias("tb"),
                 ),
             )
         },
     )
     return labeled.join(best, "cluster_id").select(
-        id_col,
+        "vec_id",
         "cluster_id",
-        (F.col(id_col) == F.col("__best")).alias("keep"),
-        quality_col,
+        (F.col("vec_id") == F.col("__best")).alias("keep"),
+        "quality",
     )
 
 
-def bounded_bfs_bipartite(edges: DataFrame, seed, rounds: int = 3) -> DataFrame:
+def bounded_bfs_bipartite(edges: DataFrame, seed) -> DataFrame:
     """Breadth-first traversal over a bipartite edge list (u, v),
-    ``rounds`` frontier expansions from a single u-side ``seed``;
+    ``_BFS_ROUNDS`` frontier expansions from a single u-side ``seed``;
     returns (side, node_id, level) with each node at its FIRST
     discovery level (min-level semantics via anti-joins against the
     visited set).
@@ -235,7 +237,7 @@ def bounded_bfs_bipartite(edges: DataFrame, seed, rounds: int = 3) -> DataFrame:
         F.lit("u").alias("side"), "node_id", F.lit(0).cast("long").alias("level")
     )
     frontier, on_u = u_seen, True
-    for lvl in range(1, rounds + 1):
+    for lvl in range(1, _BFS_ROUNDS + 1):
         if on_u:  # expand u-frontier to its v-neighbors
             nxt = (
                 edges.join(frontier.withColumnRenamed("node_id", "u"), "u")
@@ -262,17 +264,14 @@ def bounded_bfs_bipartite(edges: DataFrame, seed, rounds: int = 3) -> DataFrame:
     return out
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-iteration PageRank over a directed (src, dst) edge list.
 
     The power-iteration recurrence as pure DataFrame algebra: each
     round every node sends rank/outdeg along its out-edges, and new
-    rank = (1-d)/n + d * sum(incoming). Returns (node, rank) after
-    ``iterations`` rounds from the uniform start.
+    rank = (1-d)/n + d * sum(incoming) with d = ``_PAGERANK_DAMPING``.
+    Returns (node, rank) after ``_PAGERANK_ITERATIONS`` rounds from the
+    uniform start.
 
     Scale shape: one equi-join (edges x ranks, keyed on src) plus one
     groupBy(dst) per round — the same two shuffles GraphX's Pregel
@@ -377,7 +376,8 @@ def pagerank(
 
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
     prev_round = None  # round N-1's checkpoint storage, freed at round N
-    for _ in range(iterations):
+    damping = _PAGERANK_DAMPING
+    for _ in range(_PAGERANK_ITERATIONS):
         # broadcast hint only when the DRIVER-COUNTED |V| provably
         # fits the threshold (bcast_nodes): (node, rank) is node-scale
         # and can be arbitrarily large, and the checkpointed lineage

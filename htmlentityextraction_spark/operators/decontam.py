@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.text import tokenize
 
+# decontamination gram length; the segment length of both segment
+# passes; the doc frequency that makes a segment boilerplate
+_NGRAM_N = 8
+_SEG_LEN = 15
+_BOILER_MIN_DOCS = 3
 
 def word_ngrams(toks: Column, n: int) -> Column:
     """All space-joined word n-grams of a token array; empty array when
@@ -48,14 +53,9 @@ def segment_tokens(toks: Column, seg_len: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def decontaminate(
-    train: DataFrame,
-    heldout: DataFrame,
-    *,
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(train: DataFrame, heldout: DataFrame) -> DataFrame:
     """Benchmark decontamination: per train doc, the number of distinct
-    word ``n``-grams it shares with ANY held-out document, plus a
+    word ``_NGRAM_N``-grams it shares with ANY held-out document, plus a
     0/1 ``contaminated`` flag (>= 1 hit).
 
     Scale shape: the held-out side (benchmark suites) is small by
@@ -65,6 +65,7 @@ def decontaminate(
     and only the surviving (doc, gram-hash) pairs hit the one shuffle
     (groupBy doc). Docs with zero hits never shuffle at all.
     """
+    n = _NGRAM_N
     h_grams = (
         heldout.select(F.explode(word_ngrams(tokenize(F.col("text")), n)).alias("g"))
         .select(F.xxhash64("g").alias("gh"))
@@ -197,7 +198,7 @@ def advance_dedup_index(
         fresh_ups = net.filter(
             F.col("__doc").isNotNull() & ~F.coalesce("__retired", F.lit(False))
         )
-        bks = index_tbl.affected_buckets(fresh_ups, "fingerprint")
+        bks = index_tbl.affected_buckets(fresh_ups)
         idx = index_tbl.read_buckets(bks).select(
             "fingerprint", F.col("doc_id").alias("__idx_doc")
         )
@@ -246,7 +247,7 @@ def dedup_batch_against_index(
     fps = batch.select(
         F.col("doc_id"), normalized_fingerprint(F.col("text")).alias("fingerprint")
     ).filter(F.col("fingerprint").isNotNull())
-    bks = index_tbl.affected_buckets(fps, "fingerprint")
+    bks = index_tbl.affected_buckets(fps)
     known = index_tbl.read_buckets(bks).select("fingerprint")
     fresh = fps.join(known, "fingerprint", "left_anti")
     return (
@@ -256,13 +257,9 @@ def dedup_batch_against_index(
     )
 
 
-def segment_dedup_keep_first(
-    docs: DataFrame,
-    *,
-    seg_len: int = 15,
-) -> DataFrame:
+def segment_dedup_keep_first(docs: DataFrame) -> DataFrame:
     """Exact passage-level dedup: the FIRST global occurrence of each
-    distinct ``seg_len``-token segment (order = (doc_id, pos)) is
+    distinct ``_SEG_LEN``-token segment (order = (doc_id, pos)) is
     kept, every later repeat dropped — the within-corpus complement of
     ``boilerplate_segments`` (which drops by doc-frequency regardless
     of position). Emits per-doc accounting plus an md5 fingerprint of
@@ -278,7 +275,7 @@ def segment_dedup_keep_first(
     """
     segs = docs.select(
         F.col("doc_id"),
-        F.posexplode(segment_tokens(tokenize(F.col("text")), seg_len)).alias("pos", "seg"),
+        F.posexplode(segment_tokens(tokenize(F.col("text")), _SEG_LEN)).alias("pos", "seg"),
     ).withColumn("sh", F.xxhash64("seg"))
     # Partition on (sh, seg): the hash dominates the partitioner for
     # balance; the raw segment keeps a 64-bit collision from merging
@@ -300,16 +297,11 @@ def segment_dedup_keep_first(
     )
 
 
-def boilerplate_segments(
-    docs: DataFrame,
-    *,
-    seg_len: int = 15,
-    min_docs: int = 3,
-) -> DataFrame:
+def boilerplate_segments(docs: DataFrame) -> DataFrame:
     """C4-style boilerplate removal at segment granularity: split each
-    doc into consecutive ``seg_len``-token segments, count how many
+    doc into consecutive ``_SEG_LEN``-token segments, count how many
     DISTINCT docs each segment occurs in corpus-wide, and drop segments
-    seen in >= ``min_docs`` docs. Emits per-doc keep/drop accounting
+    seen in >= ``_BOILER_MIN_DOCS`` docs. Emits per-doc keep/drop accounting
     (the reassembled text is a deterministic function of the kept
     segments).
 
@@ -320,7 +312,7 @@ def boilerplate_segments(
     """
     segs = docs.select(
         F.col("doc_id"),
-        F.posexplode(segment_tokens(tokenize(F.col("text")), seg_len)).alias("pos", "seg"),
+        F.posexplode(segment_tokens(tokenize(F.col("text")), _SEG_LEN)).alias("pos", "seg"),
     ).select(
         "doc_id",
         "pos",
@@ -329,7 +321,7 @@ def boilerplate_segments(
     )
     freq = segs.groupBy("sh").agg(F.count_distinct("doc_id").alias("df"))
     marked = segs.join(freq, "sh").withColumn(
-        "is_boiler", (F.col("df") >= min_docs).cast("int")
+        "is_boiler", (F.col("df") >= _BOILER_MIN_DOCS).cast("int")
     )
     return (
         marked.groupBy("doc_id")

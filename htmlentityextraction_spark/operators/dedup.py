@@ -33,8 +33,18 @@ _P = (1 << 31) - 1
 _NUM_HASHES = 48
 _BANDS = 12
 _SHINGLE_N = 5
+# the verified-Jaccard floors of minhash_lsh_pairs and
+# ngram_jaccard_pairs
+_MINHASH_JACCARD = 0.5
+_NGRAM_JACCARD = 0.8
 # ngram_jaccard_pairs' blocking keys
 _NGRAM_BLOCK = ("lang", "source")
+# sorted_neighborhood_pairs: rows per neighborhood, blocking-prefix chars
+_SNM_WINDOW = 4
+_SNM_PREFIX = 2
+# exact_substring_spans' window in tokens, shared with its DuckDB
+# oracle: fixture scale; production corpora use ~50 tokens
+SUBSTR_WINDOW = 8
 
 
 def _hash_family(i: int) -> tuple[int, int]:
@@ -132,12 +142,10 @@ def base_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda g: F.pmod(F.xxhash64(g), F.lit(_P)))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b) of (doc_id, text) rows via
-    banded MinHash-LSH, verified with true shingle Jaccard.
+    banded MinHash-LSH, verified with true shingle Jaccard
+    >= ``_MINHASH_JACCARD``.
 
     The sketch geometry is 48 hashes in 12 bands of 4 rows: the
     4-row band width sets the detection curve's shape, so vs the
@@ -222,7 +230,7 @@ def minhash_lsh_pairs(
         raw_cand.join(sig_arr.select(F.col("doc").alias("id_a"), F.col("sig").alias("sa")), "id_a")
         .join(sig_arr.select(F.col("doc").alias("id_b"), F.col("sig").alias("sb")), "id_b")
         .withColumn("__est", est)
-        .filter(F.col("__est") >= jaccard_threshold - 0.15)
+        .filter(F.col("__est") >= _MINHASH_JACCARD - 0.15)
         .select("id_a", "id_b")
         # tiny; reused for the id semi-join and both verify joins —
         # localCheckpoint for the same per-run reason as sigs above
@@ -269,7 +277,7 @@ def minhash_lsh_pairs(
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
         verified.withColumn("jaccard", F.round(inter / union + 1e-9, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= _MINHASH_JACCARD)
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -283,6 +291,9 @@ def minhash_lsh_pairs(
 # md5 still runs JVM-side inside codegen.
 SIMHASH_BITS = 60
 _SIMHASH_BAND_BITS = 15
+# the pair radius the 4 bands find completely (pigeonhole), shared
+# with the DuckDB oracle
+SIMHASH_MAX_HAMMING = 3
 
 
 def _token_hash60(tok: Column) -> Column:
@@ -310,15 +321,12 @@ def simhash60(tokens: Column) -> Column:
     return out
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs by SimHash: band the 60 bits into 4×15-bit keys
     (any pair within hamming ≤ 3 of each other shares ≥1 exact band —
     pigeonhole), join per band, verify with bit_count(xor). The DuckDB
     oracle recomputes simhashes with the same md5 hash family and
-    emits ALL pairs with hamming ≤ max_hamming — so the gate also
+    emits ALL pairs with hamming ≤ ``SIMHASH_MAX_HAMMING`` — so the gate also
     proves the banding loses nothing (pigeonhole completeness)."""
     from htmlentityextraction_spark.functions.text import tokenize
 
@@ -370,17 +378,13 @@ def simhash_pairs(
     )
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return cand.withColumn("hamming", hamming.cast("int")).filter(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= SIMHASH_MAX_HAMMING
     ).select("id_a", "id_b", "hamming")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    max_block_rows: int = 100_000,
-) -> DataFrame:
-    """Exact token-set Jaccard pairs within blocking keys — the
-    SQL-expressible ground truth the sketch tiers approximate. The
+def ngram_jaccard_pairs(df: DataFrame, max_block_rows: int = 100_000) -> DataFrame:
+    """Exact token-set Jaccard pairs (>= ``_NGRAM_JACCARD``) within
+    blocking keys — the SQL-expressible ground truth the sketch tiers approximate. The
     join is QUADRATIC within each block: this is the verifier for
     candidate sets / small blocks, NOT a corpus-wide dedup pass (use
     minhash_lsh_pairs for that). max_block_rows makes the misuse loud:
@@ -420,19 +424,13 @@ def ngram_jaccard_pairs(
     union = F.size(F.array_union("t_a", "t_b")).cast("double")
     return (
         pairs.withColumn("jaccard", F.round(inter / union + 1e-9, 6))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= _NGRAM_JACCARD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    id_col: str,
-    key_col: str,
-    window: int = 4,
-    block_prefix_len: int = 2,
-) -> DataFrame:
-    """Sorted-neighborhood candidate pairs: ids within ``window``
+def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """Sorted-neighborhood candidate pairs: ids within ``_SNM_WINDOW``
     positions of each other in the sort order of a normalized
     blocking key (Hernandez & Stolfo's merge/purge method). NULL
     keys are dropped: they have no sort position (and a NULL=NULL
@@ -448,15 +446,16 @@ def sorted_neighborhood_pairs(
 
     Scale shape: a truly global sort would funnel everything through
     one window partition, so the sort order is blocked by the key's
-    first ``block_prefix_len`` chars — one shuffle on the prefix, a
+    first ``_SNM_PREFIX`` chars — one shuffle on the prefix, a
     per-block ordered window, and ``lead()`` columns exploded into
     pairs. Neighborhoods spanning a block boundary are traded away
     (standard multi-pass SNM recovers them by re-running with a
     second, shifted key; compose two calls for that).
 
     Returns (id_a, id_b, key_a, key_b) with id_a pairing to the next
-    ``window - 1`` rows in block order.
+    ``_SNM_WINDOW - 1`` rows in block order.
     """
+    window = _SNM_WINDOW
     df = df.filter(F.col(key_col).isNotNull())
     w = (
         Window.partitionBy("__blk")
@@ -465,7 +464,7 @@ def sorted_neighborhood_pairs(
     blocked = df.select(
         F.col(id_col),
         F.col(key_col),
-        F.substring(F.col(key_col), 1, block_prefix_len).alias("__blk"),
+        F.substring(F.col(key_col), 1, _SNM_PREFIX).alias("__blk"),
     )
     # window expressions cannot sit inside a generator's argument, so
     # materialize the lead structs first, then explode
@@ -493,15 +492,11 @@ def sorted_neighborhood_pairs(
     )
 
 
-def exact_substring_spans(
-    docs: DataFrame,
-    *,
-    window: int = 50,
-) -> DataFrame:
+def exact_substring_spans(docs: DataFrame) -> DataFrame:
     """Sliding-window exact-substring duplicate spans — the
     suffix-array dedup of "Deduplicating Training Data Makes Language
     Models Better" (Lee et al., 2022) re-expressed for Spark: every
-    ``window``-token substring (stride 1) that occurs MORE THAN ONCE
+    ``SUBSTR_WINDOW``-token substring (stride 1) that occurs MORE THAN ONCE
     in the corpus marks a duplicated region; the first occurrence
     (ordered by (doc_id, pos)) is the kept original, every later
     occurrence is a duplicate window, and overlapping duplicate
@@ -509,7 +504,7 @@ def exact_substring_spans(
     regions). Complements ``segment_dedup_keep_first`` (non-
     overlapping segments — cheaper, but a duplicate straddling a
     segment boundary escapes it); stride-1 windows catch ANY
-    ``window``-token repeat at any alignment, which is the property
+    ``SUBSTR_WINDOW``-token repeat at any alignment, which is the property
     the suffix-array construction buys and a 15-token grid does not.
 
     Scale shape: no suffix array and no global sort of text —
@@ -528,6 +523,7 @@ def exact_substring_spans(
     """
     from htmlentityextraction_spark.functions.text import tokenize
 
+    window = SUBSTR_WINDOW
     toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
     base = (
         docs.select(F.col("doc_id"), toks.alias("__toks"))

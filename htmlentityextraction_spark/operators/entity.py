@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 # boundary sentinels: control chars that cannot appear in real keys
 _PAD_L = "\x01\x01"
 _PAD_R = "\x02\x02"
+# the edit distance d a match may have
+_MAX_DISTANCE = 1
 
 
 def _trigrams(df: DataFrame, id_col: str, name_col: str) -> DataFrame:
@@ -81,7 +83,6 @@ def blocking_candidates(
     left_name: str,
     right_id: str,
     right_name: str,
-    max_distance: int = 1,
 ) -> DataFrame:
     """Candidate (left_id, right_id) pairs from prefix-filtered
     trigram blocking — exposed separately so tests can assert the
@@ -95,7 +96,7 @@ def blocking_candidates(
         .groupBy("__tri")
         .agg(F.count("*").alias("__df"))
     )
-    keep = 3 * max_distance + 1
+    keep = 3 * _MAX_DISTANCE + 1
     lp = _prefix_filter(lt, df_counts, left_id, keep)
     rp = _prefix_filter(rt, df_counts, right_id, keep)
     return lp.join(rp, "__tri").select(left_id, right_id).distinct()
@@ -108,22 +109,19 @@ def fuzzy_join(
     left_name: str,
     right_id: str,
     right_name: str,
-    max_distance: int = 1,
 ) -> DataFrame:
     """(left_id, right_id, dist) for every pair with
-    ``levenshtein(left_name, right_name) <= max_distance``, computed
+    ``levenshtein(left_name, right_name) <= _MAX_DISTANCE``, computed
     via prefix-filtered trigram blocking + exact candidate
     verification (false positives impossible; recall per module
     docstring)."""
-    cand = blocking_candidates(
-        left, right, left_id, left_name, right_id, right_name, max_distance
-    )
+    cand = blocking_candidates(left, right, left_id, left_name, right_id, right_name)
     ln = left.select(left_id, F.col(left_name).alias("__ln"))
     rn = right.select(right_id, F.col(right_name).alias("__rn"))
     dist = F.levenshtein("__ln", "__rn")
     return (
         cand.join(ln, left_id)
         .join(rn, right_id)
-        .filter(dist <= max_distance)
+        .filter(dist <= _MAX_DISTANCE)
         .select(left_id, right_id, dist.cast("long").alias("dist"))
     )

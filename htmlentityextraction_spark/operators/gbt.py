@@ -144,7 +144,7 @@ class GBTClassifier:
     290-293`, is the same weighted-vote margin); ``predict`` thresholds
     it at 0."""
 
-    def __init__(self, n_estimators: int = 30, max_depth: int = 5):
+    def __init__(self, n_estimators: int, max_depth: int):
         self.n_estimators = n_estimators
         self.max_depth = max_depth
         self.base_: float = 0.0

@@ -478,14 +478,13 @@ class ParquetMergeTable:
         # this snapshot's column mapping
         return self._to_logical_df(self._read_physical(m, paths), m)
 
-    def affected_buckets(self, keys: DataFrame, key_col: str | None = None) -> list[str]:
-        """Distinct bucket ids the given key column lands in —
-        evaluated with the table's own bucket expression, so it is
+    def affected_buckets(self, keys: DataFrame) -> list[str]:
+        """Distinct bucket ids the table's key column in ``keys`` lands
+        in — evaluated with the table's own bucket expression, so it is
         exact for both hash and range bucketing. Bounded collect:
         ≤ the table's bucket count."""
-        kc = key_col or self.key_col
         rows = (
-            keys.select(self._bucket(F.col(kc)).alias("__b"))
+            keys.select(self._bucket(F.col(self.key_col)).alias("__b"))
             .distinct()
             .collect()
         )
@@ -510,7 +509,7 @@ class ParquetMergeTable:
         return self._to_logical_df(self._read_physical(m, paths), m)
 
     # -- pruned reads (zone maps / bucket transform) -----------------------
-    def prune_report(self, col: str, lo=None, hi=None) -> dict:
+    def prune_report(self, col: str, lo, hi) -> dict:
         """Manifest-only pruning decision for ``lo <= col <= hi`` on the
         current snapshot:
         which buckets must be scanned vs are skipped by their zone
@@ -532,7 +531,7 @@ class ParquetMergeTable:
             st = (m.get("stats") or {}).get(b, {}).get(col)
             if st is not None and st[0] is not None and st[1] is not None:
                 try:
-                    if (hi is not None and st[0] > hi) or (lo is not None and st[1] < lo):
+                    if st[0] > hi or st[1] < lo:
                         pruned.append(b)
                         continue
                 except TypeError:  # incomparable bound vs stored stat
@@ -540,7 +539,7 @@ class ParquetMergeTable:
             kept.append(b)
         return {"scanned": sorted(kept), "skipped": sorted(pruned)}
 
-    def read_where(self, col: str, lo=None, hi=None) -> DataFrame:
+    def read_where(self, col: str, lo, hi) -> DataFrame:
         """Current-snapshot range read with manifest zone-map pruning: only buckets
         whose key [min, max] overlaps [lo, hi] are scanned when ``col``
         is the key (with range bucketing this is partition pruning);
@@ -560,12 +559,7 @@ class ParquetMergeTable:
         ]
         df = self._read_physical(m, paths)
         c = F.col(self._phys(m, col))  # predicate on the physical column
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (c <= F.lit(hi))
-        return self._to_logical_df(df.filter(cond), m)
+        return self._to_logical_df(df.filter(c.between(F.lit(lo), F.lit(hi))), m)
 
     def optimize(self, zorder_by: list[str], row_group_bytes: int | None = None) -> dict:
         """Delta's ``OPTIMIZE ... ZORDER BY``: rewrite EVERY bucket into

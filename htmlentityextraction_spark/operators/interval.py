@@ -12,7 +12,7 @@ interval to the grains it overlaps, map each point to its single
 grain, equi-join on (key, grain) — co-partitioned, shuffle-once —
 then apply the exact predicate to discard same-grain near-misses.
 Each interval lands in ceil(len/grain)+1 buckets, so candidate
-fan-out is bounded by construction; pick the grain near the typical
+fan-out is bounded by construction; the grain sits near the typical
 interval length to keep the blow-up ~2x.
 """
 
@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# the time grain: the one-hour outage windows the query joins
+_GRAIN_SECONDS = 3600
 
 
 def interval_join(
@@ -29,7 +32,6 @@ def interval_join(
     point_ts: str,
     start_ts: str,
     end_ts: str,
-    grain_seconds: int = 3600,
 ) -> DataFrame:
     """Inner-join each point row to every interval row (same key)
     whose half-open ``[start_ts, end_ts)`` contains ``point_ts``.
@@ -39,7 +41,7 @@ def interval_join(
     Implementation: one equi shuffle on (key, time-grain) + exact
     filter — no non-equi join in the plan (contract-tested)."""
     keys = [on] if isinstance(on, str) else list(on)
-    g = int(grain_seconds) * 1_000_000
+    g = _GRAIN_SECONDS * 1_000_000
 
     def us(col: str):  # NTZ-safe epoch micros under a pinned-UTC session
         return F.unix_micros(F.col(col).cast("timestamp_ltz"))

@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.text import tokenize
 
+# chunk_tokens' window and stride in tokens
+_CHUNK_SIZE = 32
+_CHUNK_STRIDE = 24
+# source_mix's keep rate for sources its rates do not list
+_DEFAULT_RATE = 0.25
 
 def l2_normalize(vec: Column) -> Column:
     """v / ||v||2 (zero vectors pass through unchanged)."""
@@ -32,16 +37,14 @@ def quantize_int8(vec: Column) -> tuple[Column, Column]:
     return q, scale
 
 
-def chunk_tokens(
-    df: DataFrame,
-    chunk_size: int = 32,
-    stride: int = 24,
-) -> DataFrame:
+def chunk_tokens(df: DataFrame) -> DataFrame:
     """Token-window chunking with overlap (the context-window prep
-    step) over (doc_id, text): doc → ceil((n-size)/stride)+1 chunks of `chunk_size` tokens
-    starting every `stride`. Short docs yield one chunk. Explode keeps
+    step) over (doc_id, text): doc → ceil((n-size)/stride)+1 chunks of
+    ``_CHUNK_SIZE`` tokens starting every ``_CHUNK_STRIDE``. Short docs
+    yield one chunk. Explode keeps
     it a narrow op — no shuffle; at 100 TB chunking happens in the
     same stage as the scan."""
+    chunk_size, stride = _CHUNK_SIZE, _CHUNK_STRIDE
     toks = F.filter(tokenize(F.col("text")), lambda t: t != "")
     base = df.select("doc_id", toks.alias("__toks"), F.size(toks).alias("n_tokens"))
     n = F.col("n_tokens")
@@ -78,12 +81,11 @@ def source_mix(
     df: DataFrame,
     rates_by_source: dict[str, float],
     key: Column,
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Weighted source mixing: keep a deterministic md5-hash fraction
     of each ``source`` (the up/down-weighting step of corpus assembly).
     Rates are per-source keep probabilities in [0, 1];
-    ``default_rate`` applies to sources absent from the dict (a real
+    ``_DEFAULT_RATE`` applies to sources absent from the dict (a real
     corpus always has sources the mix plan never enumerated —
     text-fuzz aligned). NULL sources are never kept on either
     engine."""
@@ -92,11 +94,10 @@ def source_mix(
     keep = F.lit(False)
     for src, rate in rates_by_source.items():
         keep = keep | ((F.col("source") == src) & (bucket < int(rate * 256)))
-    if default_rate > 0:
-        keep = keep | (
-            ~F.col("source").isin(list(rates_by_source))
-            & (bucket < int(default_rate * 256))
-        )
+    keep = keep | (
+        ~F.col("source").isin(list(rates_by_source))
+        & (bucket < int(_DEFAULT_RATE * 256))
+    )
     return df.filter(keep)
 
 

@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.text import tokenize
 
+# the unigram model's vocabulary cut V (its DuckDB oracle reads it) and
+# add-alpha smoothing
+VOCAB_SIZE = 5000
+ALPHA = 0.5
 
 def corpus_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, tok) rows: lowercase letter-token stream of ``text``,
@@ -42,10 +46,8 @@ def corpus_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def unigram_vocab(
-    tokens: DataFrame, vocab_size: int = 5000, alpha: float = 0.5
-) -> tuple[DataFrame, float]:
-    """Top-``vocab_size`` tokens by corpus frequency with add-alpha
+def unigram_vocab(tokens: DataFrame) -> tuple[DataFrame, float]:
+    """Top-``VOCAB_SIZE`` tokens by corpus frequency with add-``ALPHA``
     log-probabilities; returns (vocab_df, oov_logprob).
 
     The cut is ``orderBy(count desc, tok).limit(V)`` — a distributed
@@ -53,6 +55,7 @@ def unigram_vocab(
     via the token tie-break. OOV mass is one shared bucket:
     ``alpha / (N + alpha * (V + 1))``.
     """
+    vocab_size, alpha = VOCAB_SIZE, ALPHA
     counts = tokens.groupBy("tok").agg(F.count("*").alias("c"))
     n_total = counts.agg(F.sum("c")).collect()[0][0] or 0
     vocab = counts.orderBy(F.col("c").desc(), "tok").limit(vocab_size)
@@ -63,16 +66,12 @@ def unigram_vocab(
     return vocab, math.log(alpha / denom)
 
 
-def score_documents(
-    docs: DataFrame,
-    vocab_size: int = 5000,
-    alpha: float = 0.5,
-) -> DataFrame:
+def score_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, avg_logprob): mean unigram log-prob per
     document — the perplexity-gate signal (higher = more typical of
     the corpus; boilerplate scores high, lorem-ipsum noise low)."""
     toks = corpus_tokens(docs)
-    vocab, oov_lp = unigram_vocab(toks, vocab_size, alpha)
+    vocab, oov_lp = unigram_vocab(toks)
     scored = toks.join(F.broadcast(vocab), "tok", "left").select(
         "doc_id", F.coalesce("logprob", F.lit(oov_lp)).alias("lp")
     )

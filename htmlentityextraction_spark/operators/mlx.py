@@ -38,7 +38,7 @@ def _vectorized(emb: DataFrame) -> DataFrame:
     """Vectorize ``embedding`` for pyspark.ml; corrupt vectors (NULL / NULL-element
     / empty) are dropped first — array_to_vector crashes on them, and
     at 100 TB they WILL occur (null-fuzz hardened)."""
-    emb = valid_vectors(emb, "embedding")
+    emb = valid_vectors(emb)
     return emb.withColumn("features", array_to_vector(F.col("embedding").cast("array<double>")))
 
 

@@ -251,6 +251,8 @@ def _tfidf_matrix(
 # when the fit is built, not at import.
 _MIN_ROWS = 20
 _MAX_ROWS_PER_DOMAIN = 100_000
+# One fit configuration: the served registry and the sub-model curve.
+FIT = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 
 
 def _per_domain(cand: DataFrame, fit, schema: T.StructType) -> DataFrame:
@@ -326,21 +328,18 @@ CURVE_SCHEMA = T.StructType(
 )
 
 
-def submodel_curve_per_domain(
-    cand: DataFrame,
-    min_doc_freq: int = 5,
-    top_k: int = 100,
-    n_estimators: int = 10,
-    max_depth: int = 3,
-) -> DataFrame:
+def submodel_curve_per_domain(cand: DataFrame) -> DataFrame:
     """M11/M13 (`transform/Transformer.scala:295-304`,
     `emr/BuildModels.scala:45-55`, `domain/models/GBTPerDomain.scala:
     62-68`): per domain, the tree-prefix sub-model curve — one row per
     (domain, k) with the training F-score of the first-k-trees model —
     plus the reference's model-size selection (argmax F, ties to the
-    smaller model) marked on the selected row. Same applyInPandas
-    group-task shape as train_per_domain: the curve costs one extra
-    margin pass per tree over the group, nothing cluster-wide."""
+    smaller model) marked on the selected row, for the ``FIT``
+    configuration. Same applyInPandas group-task shape as
+    train_per_domain: the curve costs one extra margin pass per tree
+    over the group, nothing cluster-wide."""
+    min_doc_freq, top_k = FIT["min_doc_freq"], FIT["top_k"]
+    n_estimators, max_depth = FIT["n_estimators"], FIT["max_depth"]
 
     def curve(domain, pdf, y):
         X, _idf, _indices = _tfidf_matrix(pdf, min_doc_freq, top_k)

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_TYPES = ("image", "audio", "video")
+# resize_images keeps every _RESIZE_FACTOR-th pixel row and column
+_RESIZE_FACTOR = 2
 
 METADATA_TYPE = T.StructType(
     [
@@ -135,9 +137,11 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_images(media: DataFrame, factor: int = 2) -> DataFrame:
-    """Stride-subsample 'resize' of image payloads (every factor-th
-    row/col of the fake-decoded matrix) — deterministic, checksummed."""
+def resize_images(media: DataFrame) -> DataFrame:
+    """Stride-subsample 'resize' of image payloads (every
+    ``_RESIZE_FACTOR``-th row/col of the fake-decoded matrix) —
+    deterministic, checksummed."""
+    factor = _RESIZE_FACTOR  # read here: the closure carries it to the workers
 
     def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -40,8 +40,19 @@ from pyspark.sql.types import DoubleType
 # the caller wants a pair join / ANN index, not a broadcast scan.
 MAX_QUERY_BATCH = 10_000
 
-# The embedding dimension ann_lsh_topk's hyperplanes span.
+# Neighbors per query of the three top-k searches.
+_TOP_K = 10
+# ann_lsh_topk's hyperplane tables: the embedding dimension they span,
+# signature bits per table and the number of tables.
 _LSH_DIM = 64
+_LSH_BITS = 6
+_LSH_TABLES = 6
+# ann_ivf_topk's inverted lists and the nearest of them each query probes.
+_IVF_CELLS = 16
+_IVF_PROBE = 6
+# The rounded cosine at which two embeddings are semantic duplicates
+# (semantic_dedup_pairs) and a batch document is refused admission.
+_DUP_COSINE = 0.35
 # The IVF coarse quantizer: seed and bounded KMeans training sample.
 _QUANTIZER_SEED = 42
 _FIT_SAMPLE_CAP = 20_000
@@ -55,8 +66,8 @@ VALID_VEC_SQL = (
 )
 
 
-def valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
-    """Drop corrupt embedding rows at the operator boundary: NULL
+def valid_vectors(df: DataFrame) -> DataFrame:
+    """Drop corrupt ``embedding`` rows at the operator boundary: NULL
     vectors, zero-length vectors, and vectors containing NULL,
     NaN, or out-of-domain elements (|x| >= 1e10 — the same corrupt-
     measurement bound as ``functions/pricing.finite_measure``; no
@@ -70,7 +81,7 @@ def valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     could not). Dropping is the contract: a corrupt vector has no
     meaningful neighbors and no place in a training set. Oracles
     mirror it via ``VALID_VEC_SQL``."""
-    c = F.col(vec_col)
+    c = F.col("embedding")
     return df.filter(
         c.isNotNull()
         & (F.size(c) > 0)
@@ -144,13 +155,9 @@ def _collect_query_matrix(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return q_ids, q_mat
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k neighbors per query (excluding self), deterministic
-    tie-break on corpus id.
+def cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``_TOP_K`` neighbors per query (excluding self),
+    deterministic tie-break on corpus id.
 
     Physical shape: per corpus partition, ONE (rows x dim) @
     (dim x n_queries) BLAS multiply + per-query local top-k (sorted on
@@ -161,8 +168,9 @@ def cosine_topk(
     from pyspark.sql import Window
 
     spark = corpus.sparkSession
-    corpus = valid_vectors(corpus, "embedding")
-    queries = valid_vectors(queries, "embedding")
+    k = _TOP_K
+    corpus = valid_vectors(corpus)
+    queries = valid_vectors(queries)
     out_ddl = "query_id long, neighbor_id long, cosine double"
     q_ids, q_mat = _collect_query_matrix(queries)
     if q_ids.size == 0:
@@ -258,26 +266,22 @@ def _bucketize(
     )
 
 
-def ann_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    bits: int = 6,
-    tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k: exact rerank inside the query's LSH buckets
-    across `tables` independent hyperplane tables (+ hamming-1 probe
-    buckets per table). One table is rarely enough: per-bit collision
-    prob for cosine θ is 1−θ/π, so recall decays as pᵇ — L tables
-    recover 1−(1−r)ᴸ. Candidate fraction ≈ tables·(1+bits)/2ᵇⁱᵗˢ of
-    the corpus; bits/tables trade recall vs scan cost. Recall is
-    contract-tested against cosine_topk in tests/test_llmdata.py.
+def ann_lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-``_TOP_K``: exact rerank inside the query's LSH
+    buckets across ``_LSH_TABLES`` independent hyperplane tables of
+    ``_LSH_BITS`` bits (+ hamming-1 probe buckets per table). One
+    table is rarely enough: per-bit collision prob for cosine θ is
+    1−θ/π, so recall decays as pᵇ — L tables recover 1−(1−r)ᴸ.
+    Candidate fraction ≈ tables·(1+bits)/2ᵇⁱᵗˢ of the corpus;
+    bits/tables trade recall vs scan cost. Recall is contract-tested
+    against cosine_topk in tests/test_llmdata.py.
     At 100 TB the (table, bucket) pair is the corpus partition key so
     each query probe is a partition-pruned read, not a scan."""
     from pyspark.sql import Window
 
-    corpus = valid_vectors(corpus, "embedding")
-    queries = valid_vectors(queries, "embedding")
+    k, bits, tables = _TOP_K, _LSH_BITS, _LSH_TABLES
+    corpus = valid_vectors(corpus)
+    queries = valid_vectors(queries)
     planes = np.array(
         [p for t in range(tables) for p in hyperplanes(_LSH_DIM, bits, seed=42 + t)],
         dtype=np.float64,
@@ -360,18 +364,12 @@ def _fit_kmeans_local(X: "np.ndarray", k: int, seed: int) -> "np.ndarray":
     return centers
 
 
-def ann_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
+def ann_ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-flat ANN: a KMeans coarse quantizer partitions the corpus
-    into n_cells inverted lists; each query exact-reranks only its
-    n_probe nearest cells — candidate fraction ≈ n_probe/n_cells of
-    the corpus. At 100 TB the cell id is the write-time partition key
-    (partition-pruned probes); the quantizer trains on a BOUNDED
+    into ``_IVF_CELLS`` inverted lists; each query exact-reranks only
+    its ``_IVF_PROBE`` nearest cells for its top ``_TOP_K`` —
+    candidate fraction ≈ probe/cells of the corpus. At 100 TB the cell
+    id is the write-time partition key (partition-pruned probes); the quantizer trains on a BOUNDED
     sample (≤ ``_FIT_SAMPLE_CAP`` rows) — a full-corpus multi-pass KMeans
     before any query runs would be the job-killer at scale, and
     quantizer quality needs only thousands of points per cell. This
@@ -380,8 +378,9 @@ def ann_ivf_topk(
     the data distribution."""
     from pyspark.sql import Window
 
-    corpus = valid_vectors(corpus, "embedding")
-    queries = valid_vectors(queries, "embedding")
+    k, n_cells, n_probe = _TOP_K, _IVF_CELLS, _IVF_PROBE
+    corpus = valid_vectors(corpus)
+    queries = valid_vectors(queries)
     c = corpus.select(
         F.col("vec_id").cast("long").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("cvec"),
@@ -458,15 +457,11 @@ def ann_ivf_topk(
     )
 
 
-def semantic_dedup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.35,
-    n_cells: int = 16,
-) -> DataFrame:
+def semantic_dedup_pairs(corpus: DataFrame, n_cells: int = 16) -> DataFrame:
     """SemDeDup-shaped semantic dedup: the bounded-sample KMeans
     quantizer blocks the corpus into cells, then each cell computes
     its EXACT pairwise cosine matrix (one BLAS gram matrix per cell
-    inside applyInPandas) and emits pairs >= threshold as
+    inside applyInPandas) and emits pairs >= ``_DUP_COSINE`` as
     (id_a, id_b, cosine).
 
     This is the scale path for embedding near-dup: the pair space
@@ -479,7 +474,8 @@ def semantic_dedup_pairs(
     quantize together; the residual cross-cell miss rate is the
     recall the contract query measures.
     """
-    corpus = valid_vectors(corpus, "embedding")
+    threshold = _DUP_COSINE
+    corpus = valid_vectors(corpus)
     c = corpus.select(
         F.col("vec_id").cast("long").alias("vid"),
         F.col("embedding").cast("array<double>").alias("cvec"),
@@ -561,11 +557,10 @@ def admission_best_match(
     corpus: DataFrame,
     batch: DataFrame,
     block_col: str,
-    threshold: float = 0.35,
 ) -> DataFrame:
     """Semantic admission gate for incremental ingestion: score every
     BATCH document against its block of the EXISTING corpus and admit
-    it only when its best corpus match stays under ``threshold``.
+    it only when its best corpus match stays under ``_DUP_COSINE``.
     Returns one row per valid batch document:
     (id, best_match_id, best_cosine, admitted) — best_match_id /
     best_cosine are NULL when the block holds no corpus candidate
@@ -591,12 +586,12 @@ def admission_best_match(
     corrupt corpus row must not veto admission."""
     from pyspark.sql import Window
 
-    c = valid_vectors(corpus, "embedding").select(
+    c = valid_vectors(corpus).select(
         F.col("vec_id").cast("long").alias("cand_id"),
         F.col(block_col).alias("_block"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    b = valid_vectors(batch, "embedding").select(
+    b = valid_vectors(batch).select(
         F.col("vec_id").cast("long").alias("_bid"),
         F.col(block_col).alias("_block"),
         F.col("embedding").cast("array<double>").alias("bv"),
@@ -636,7 +631,7 @@ def admission_best_match(
             F.col("cand_id").alias("best_match_id"),
             F.col("cosine").alias("best_cosine"),
             F.coalesce(
-                F.col("cosine") < F.lit(threshold), F.lit(True)
+                F.col("cosine") < F.lit(_DUP_COSINE), F.lit(True)
             ).alias("admitted"),
         )
     )

@@ -22,30 +22,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.temporal import (
+    SESSION_GAP_MINUTES,
     assert_timestamp_col,
     epoch_seconds,
 )
+
+# salted_group_stats' partial groups per key
+_SALT_BUCKETS = 16
 
 
 def salted_group_stats(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    salt_buckets: int = 16,
-    salt_on: Column | None = None,
+    salt_on: Column,
 ) -> DataFrame:
     """Two-phase (salted) count/sum/avg/min/max per key group.
 
-    Phase 1 groups by (keys, salt) — salt derived from a high-
-    cardinality column (or random-ish row hash) so a hot key fans out
-    over salt_buckets reducers; phase 2 merges partials per key. The
+    Phase 1 groups by (keys, salt) — salt derived from ``salt_on``, a
+    high-cardinality column, so a hot key fans out over
+    ``_SALT_BUCKETS`` reducers; phase 2 merges partials per key. The
     result is exactly the plain groupBy (asserted by the DuckDB
     oracle of `salted_skew_group_stats`)."""
-    salt = (
-        F.pmod(salt_on, F.lit(salt_buckets))
-        if salt_on is not None
-        else F.pmod(F.xxhash64(*[F.col(k) for k in df.columns]), F.lit(salt_buckets))
-    )
+    salt = F.pmod(salt_on, F.lit(_SALT_BUCKETS))
     partial = (
         df.withColumn("__salt", salt)
         .groupBy(*keys, "__salt")
@@ -73,13 +72,10 @@ def salted_group_stats(
     )
 
 
-def sessionize(
-    df: DataFrame,
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(df: DataFrame) -> DataFrame:
     """Gaps-and-islands sessionization of (user_id, ts) events: a new
     session starts when the gap to the previous event of the same user
-    exceeds gap_minutes.
+    exceeds ``SESSION_GAP_MINUTES``.
     Batch form of the custom stateful operator (the streaming twin is
     streaming/pipeline.sessionize_stream). One window shuffle on
     user; session ids are (user, running count of gap-breaks)."""
@@ -91,7 +87,7 @@ def sessionize(
     w = Window.partitionBy("user_id").orderBy("ts")
     ep = epoch_seconds("ts")
     gap = ep - F.lag(ep).over(w)
-    is_new = (gap.isNull() | (gap > gap_minutes * 60)).cast("long")
+    is_new = (gap.isNull() | (gap > SESSION_GAP_MINUTES * 60)).cast("long")
     with_sess = df.withColumn("__new", is_new).withColumn(
         "session_seq", F.sum("__new").over(w)
     )

@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# phase 1's checksum buckets per side
+_N_BUCKETS = 4096
+
 
 def _bucketed(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFrame:
     keys = [F.col(c) for c in key_cols]
@@ -47,17 +50,18 @@ def bucket_checksums(df: DataFrame, key_cols: list[str], n_buckets: int) -> Data
 
 
 def checksum_diff(
-    left: DataFrame, right: DataFrame, key_cols: list[str], n_buckets: int = 4096
+    left: DataFrame, right: DataFrame, key_cols: list[str]
 ) -> tuple[DataFrame, DataFrame]:
     """Returns ``(changed_buckets, row_diff)``.
 
     ``changed_buckets``: bucket ids whose (count, xor) disagree —
-    phase 1, two scans + two ``n_buckets``-row aggregates.
+    phase 1, two scans + two ``_N_BUCKETS``-row aggregates.
 
     ``row_diff``: for rows in those buckets only, a full outer join
     on the keys classifying each key as 'added' (right only),
     'removed' (left only) or 'changed' (both sides, different row
     hash). Identical rows inside a flagged bucket drop out."""
+    n_buckets = _N_BUCKETS
     lc = bucket_checksums(left, key_cols, n_buckets).alias("l")
     rc = bucket_checksums(right, key_cols, n_buckets).alias("r")
     changed = (

@@ -17,6 +17,11 @@ from htmlentityextraction_spark.functions.text import (
     tokenize,
 )
 
+# rolling_fingerprint's char-gram width; the bigram count under which
+# pmi_bigram_collocations drops a pair
+_FP_WINDOW = 8
+_PMI_MIN_COUNT = 5
+
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -105,11 +110,12 @@ def token_count_bpe_ish(text: Column) -> Column:
     return F.size(pieces).cast("long")
 
 
-def rolling_fingerprint(text: Column, window: int = 8) -> Column:
+def rolling_fingerprint(text: Column) -> Column:
     """Winnowing-style document fingerprint: min hash (md5 hex —
     available in both Spark and DuckDB) over all char 8-gram windows
     of the normalized text. Robust to local edits, unlike whole-doc
     md5."""
+    window = _FP_WINDOW
     norm = F.lower(F.trim(text_only(text)))
     length = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(length - F.lit(window - 1), F.lit(1)))
@@ -122,7 +128,6 @@ def rolling_fingerprint(text: Column, window: int = 8) -> Column:
 def pmi_bigram_collocations(
     docs: DataFrame,
     tokens_col: str,
-    min_count: int = 5,
 ) -> DataFrame:
     """Pointwise mutual information of adjacent token pairs —
     collocation mining ("new york", "machine learning") over a corpus.
@@ -130,7 +135,7 @@ def pmi_bigram_collocations(
     PMI(w1,w2) = ln( c(w1,w2) · N / (c_left(w1) · c_right(w2)) ) with
     N = total bigram occurrences and the left/right marginals taken
     over bigram positions, the standard collocation estimator
-    (Church & Hanks 1990). `min_count` suppresses the low-frequency
+    (Church & Hanks 1990). ``_PMI_MIN_COUNT`` suppresses the low-frequency
     PMI explosion.
 
     Scale shape: bigrams come from zipping each token array with its
@@ -153,7 +158,7 @@ def pmi_bigram_collocations(
     c2 = bg.groupBy("w2").agg(F.count(F.lit(1)).alias("c2"))
     n = bg.agg(F.count(F.lit(1)).alias("nb"))
     return (
-        c12.where(F.col("c12") >= min_count)
+        c12.where(F.col("c12") >= _PMI_MIN_COUNT)
         .join(F.broadcast(c1), "w1")
         .join(F.broadcast(c2), "w2")
         .crossJoin(F.broadcast(n))

@@ -402,7 +402,7 @@ def fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lower(ascii_only(F.col("s_name"))))
         .alias("dname"),
     )
-    return fuzzy_join(dirty, clean, "dirty_id", "dname", "clean_id", "cname", max_distance=1)
+    return fuzzy_join(dirty, clean, "dirty_id", "dname", "clean_id", "cname")
 
 
 @register(
@@ -442,7 +442,7 @@ def bfs_order_part_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seed = load_table(spark, sf_dir, "orders").agg(F.min("o_orderkey")).first()[0]
-    out = bounded_bfs_bipartite(edges, int(seed), rounds=3)
+    out = bounded_bfs_bipartite(edges, int(seed))
     return out.select(
         F.when(F.col("side") == "u", "order").otherwise("part").alias("node_type"),
         "node_id",

@@ -79,7 +79,7 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = (
         gated.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
-    chunks = lp.chunk_tokens(deduped, chunk_size=32, stride=24)
+    chunks = lp.chunk_tokens(deduped)
     key = F.concat(F.col("doc_id").cast("string"), F.lit("/"), F.col("chunk_id").cast("string"))
     return chunks.select(
         "doc_id", "chunk_id", "chunk_text", lp.split_assign(key).alias("split")

@@ -61,7 +61,7 @@ def decontaminate_against_heldout(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     heldout = docs.filter(F.col("doc_id") % 37 == 0)
     train = docs.filter(F.col("doc_id") % 37 != 0)
-    return dc.decontaminate(train, heldout, n=8)
+    return dc.decontaminate(train, heldout)
 
 
 @register(
@@ -138,7 +138,7 @@ def segment_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = keep_one_per_id(
         load_table(spark, sf_dir, "documents"), "doc_id"
     ).select("doc_id", "text")
-    return dc.segment_dedup_keep_first(docs, seg_len=15)
+    return dc.segment_dedup_keep_first(docs)
 
 
 @register(
@@ -175,7 +175,7 @@ def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-frequency and the join back both shuffle on a 64-bit segment
     hash, never raw text."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return dc.boilerplate_segments(docs, seg_len=15, min_docs=3)
+    return dc.boilerplate_segments(docs)
 
 
 _FP = (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators import dedup as dd
+from htmlentityextraction_spark.operators import lmscore
 from htmlentityextraction_spark.operators import similarity as sim
 from htmlentityextraction_spark.functions.text import WS_CHARS, java_lower_sql
 from htmlentityextraction_spark.operators import textanalysis as ta
@@ -78,7 +79,7 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dd.ngram_jaccard_pairs(docs, threshold=0.8)
+    return dd.ngram_jaccard_pairs(docs)
 
 
 # --- MinHash-LSH near-dup, gated against the exact shingle-Jaccard set ---
@@ -117,7 +118,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out (opt-in scan floor, r12): shingle explode + 48-hash
     # map-side mins; 6-round ABBA measured 4.71 s -> 3.90 s (-17%)
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    return dd.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    return dd.minhash_lsh_pairs(docs)
 
 
 # --- cluster resolution: pairs -> transitive closure -> keep/drop ---
@@ -161,11 +162,11 @@ def dedup_cluster_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from htmlentityextraction_spark.operators import components as cc
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dd.ngram_jaccard_pairs(docs, threshold=0.8).select("id_a", "id_b")
+    pairs = dd.ngram_jaccard_pairs(docs).select("id_a", "id_b")
     return cc.resolve_duplicate_clusters(docs, pairs)
 
 
-def _simhash_oracle(max_hamming: int = 3) -> str:
+def _simhash_oracle() -> str:
     """DuckDB recomputation of the 60-bit md5-family SimHash + the
     FULL hamming-radius pair set (no banding — gating the Spark side's
     banding as lossless)."""
@@ -194,14 +195,14 @@ def _simhash_oracle(max_hamming: int = 3) -> str:
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= {dd.SIMHASH_MAX_HAMMING}
     """
 
 
-@register("dedup_simhash", _simhash_oracle(max_hamming=3))
+@register("dedup_simhash", _simhash_oracle())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash_pairs(docs, max_hamming=3)
+    return dd.simhash_pairs(docs)
 
 
 
@@ -228,7 +229,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block key is the LSH bucket from similarity.ann_lsh_topk; label
     stands in on the fixture). Threshold 0.35 is fixture-calibrated —
     the synthetic embeddings have no true near-dups (max cosine ~0.47)."""
-    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
+    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"))
     a = emb.select(
         F.col("vec_id").alias("id_a"),
         F.col("label"),
@@ -295,7 +296,7 @@ def semantic_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint, AND the exemplar choice agree."""
     from htmlentityextraction_spark.operators import components as cc
 
-    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
+    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"))
     a = emb.select(
         F.col("vec_id").alias("id_a"),
         "label",
@@ -321,9 +322,7 @@ def semantic_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", F.coalesce("n_chars", F.lit(-1)).alias("quality")
     )
-    return cc.resolve_clusters_keep_best(
-        items, pairs, id_col="vec_id", quality_col="quality"
-    )
+    return cc.resolve_clusters_keep_best(items, pairs)
 
 
 # --- brute-force cosine top-k (exact ANN baseline) ---
@@ -352,7 +351,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark and DuckDB order identically."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return sim.cosine_topk(emb, queries, k=10)
+    return sim.cosine_topk(emb, queries)
 
 
 def _ann_recall_contract(approx: DataFrame, exact: DataFrame, floor: float) -> DataFrame:
@@ -392,8 +391,8 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin. Raw-output recall is also pytest-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    approx = sim.ann_ivf_topk(emb, queries, k=10, n_cells=16, n_probe=6)
-    exact = sim.cosine_topk(emb, queries, k=10)
+    approx = sim.ann_ivf_topk(emb, queries)
+    exact = sim.cosine_topk(emb, queries)
     return _ann_recall_contract(approx, exact, floor=0.3)
 
 
@@ -410,8 +409,8 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     work — still far under scan cost."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    approx = sim.ann_lsh_topk(emb, queries, k=10, bits=6, tables=6)
-    exact = sim.cosine_topk(emb, queries, k=10)
+    approx = sim.ann_lsh_topk(emb, queries)
+    exact = sim.cosine_topk(emb, queries)
     return _ann_recall_contract(approx, exact, floor=0.4)
 
 
@@ -451,8 +450,8 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely why the blocking quality is gated here and the promise
     is gated on planted structure)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    found = sim.semantic_dedup_pairs(emb, threshold=0.35, n_cells=16)
-    truth = sim.semantic_dedup_pairs(emb, threshold=0.35, n_cells=1)
+    found = sim.semantic_dedup_pairs(emb, n_cells=16)
+    truth = sim.semantic_dedup_pairs(emb, n_cells=1)
     t = truth.agg(F.count("*").alias("n_true_pairs"))
     f_ = found.agg(F.count("*").alias("n_found"))
     c = (
@@ -551,23 +550,19 @@ def semantic_dedup_scale_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         load_table(spark, sf_dir, "documents"), "doc_id"
     ).select("doc_id", "n_chars")
     items = (
-        sim.valid_vectors(emb, "embedding")
+        sim.valid_vectors(emb)
         .select("vec_id")
         .join(docs.withColumnRenamed("doc_id", "vec_id"), "vec_id")
         .select("vec_id", F.coalesce("n_chars", F.lit(-1)).alias("quality"))
     )
-    ppairs = sim.semantic_dedup_pairs(emb, threshold=0.35, n_cells=16).select(
+    ppairs = sim.semantic_dedup_pairs(emb, n_cells=16).select(
         "id_a", "id_b"
     )
-    tpairs = sim.semantic_dedup_pairs(emb, threshold=0.35, n_cells=1).select(
+    tpairs = sim.semantic_dedup_pairs(emb, n_cells=1).select(
         "id_a", "id_b"
     )
-    prod = cc.resolve_clusters_keep_best(
-        items, ppairs, id_col="vec_id", quality_col="quality"
-    )
-    truth = cc.resolve_clusters_keep_best(
-        items, tpairs, id_col="vec_id", quality_col="quality"
-    )
+    prod = cc.resolve_clusters_keep_best(items, ppairs)
+    truth = cc.resolve_clusters_keep_best(items, tpairs)
     j = prod.select(
         "vec_id", F.col("cluster_id").alias("pc"), F.col("keep").alias("p_keep")
     ).join(
@@ -651,7 +646,7 @@ def semantic_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     corpus = emb.filter(F.col("vec_id") % 10 != 7)
-    return sim.admission_best_match(corpus, batch, block_col="label", threshold=0.35)
+    return sim.admission_best_match(corpus, batch, block_col="label")
 
 
 # --- text analysis: language id + quality + token counts ---
@@ -722,8 +717,7 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- unigram LM scoring (perplexity-gate signal) ---
-_LM_V = 5000
-_LM_DENOM = f"(n + 0.5 * {_LM_V + 1})"
+_LM_DENOM = f"(n + 0.5 * {lmscore.VOCAB_SIZE + 1})"
 
 
 @register(
@@ -740,7 +734,7 @@ _LM_DENOM = f"(n + 0.5 * {_LM_V + 1})"
         SELECT CAST(sum(c) AS DOUBLE) AS n FROM counts
     ), lp AS (
         SELECT tok, ln((c + 0.5) / {_LM_DENOM}) AS logprob
-        FROM (SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT {_LM_V}), tot
+        FROM (SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT {lmscore.VOCAB_SIZE}), tot
     ), scored AS (
         SELECT doc_id,
                coalesce(lp.logprob,
@@ -758,10 +752,8 @@ def lm_unigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a KenLM perplexity gate (operators/lmscore.py). The vocab cut
     is a distributed top-K, the score join a broadcast; one shuffle
     each for token counts and the per-doc aggregate."""
-    from htmlentityextraction_spark.operators import lmscore
-
     docs = load_table(spark, sf_dir, "documents")
-    return lmscore.score_documents(docs, vocab_size=_LM_V, alpha=0.5)
+    return lmscore.score_documents(docs)
 
 
 # --- rolling fingerprint ---
@@ -782,7 +774,7 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust to local edits (vs whole-doc md5)."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id", ta.rolling_fingerprint(F.col("text"), 8).alias("rolling_fp")
+        "doc_id", ta.rolling_fingerprint(F.col("text")).alias("rolling_fp")
     )
 
 
@@ -819,7 +811,7 @@ def semantic_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side n x k scan — no shuffle until the k-row profile agg.
     Iterating = re-running this pass with updated centroids; the
     oracle pins one exact pass."""
-    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
+    emb = sim.valid_vectors(load_table(spark, sf_dir, "embeddings"))
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").cast("array<double>").alias("cv"),
@@ -990,9 +982,6 @@ def lm_bigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_doc_scores(load_table(spark, sf_dir, "documents"))
 
 
-_SUBSTR_W = 8  # fixture-scale window; production uses ~50 tokens
-
-
 @register(
     "exact_substring_dup_spans",
     f"""
@@ -1001,13 +990,13 @@ _SUBSTR_W = 8  # fixture-scale window; production uses ~50 tokens
                list_filter({_TOKS.format(col='text')}, t -> t <> '') AS toks
         FROM documents
     ), b AS (
-        SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= {_SUBSTR_W}
+        SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= {dd.SUBSTR_WINDOW}
     ), wn AS (
-        SELECT doc_id, unnest(generate_series(1, n - {_SUBSTR_W} + 1)) AS pos, toks
+        SELECT doc_id, unnest(generate_series(1, n - {dd.SUBSTR_WINDOW} + 1)) AS pos, toks
         FROM b
     ), wv AS (
         SELECT doc_id, pos,
-               array_to_string(list_slice(toks, pos, pos + {_SUBSTR_W} - 1), ' ') AS win
+               array_to_string(list_slice(toks, pos, pos + {dd.SUBSTR_WINDOW} - 1), ' ') AS win
         FROM wn
     ), mk AS (
         SELECT doc_id, pos,
@@ -1017,7 +1006,7 @@ _SUBSTR_W = 8  # fixture-scale window; production uses ~50 tokens
         SELECT doc_id, pos FROM mk WHERE rk > 1
     ), pe AS (
         SELECT doc_id, pos,
-               max(pos + {_SUBSTR_W} - 1) OVER (
+               max(pos + {dd.SUBSTR_WINDOW} - 1) OVER (
                    PARTITION BY doc_id ORDER BY pos
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
         FROM d
@@ -1033,8 +1022,8 @@ _SUBSTR_W = 8  # fixture-scale window; production uses ~50 tokens
     )
     SELECT doc_id,
            CAST(min(pos) AS BIGINT) AS span_start,
-           CAST(max(pos) + {_SUBSTR_W} - 1 AS BIGINT) AS span_end,
-           CAST(max(pos) + {_SUBSTR_W} - min(pos) AS BIGINT) AS span_tokens
+           CAST(max(pos) + {dd.SUBSTR_WINDOW} - 1 AS BIGINT) AS span_end,
+           CAST(max(pos) + {dd.SUBSTR_WINDOW} - min(pos) AS BIGINT) AS span_tokens
     FROM isl GROUP BY doc_id, g
     """,
 )
@@ -1045,4 +1034,4 @@ def exact_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences merged into removable regions. See
     operators/dedup.py exact_substring_spans for the scale shape."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.exact_substring_spans(docs, window=_SUBSTR_W)
+    return dd.exact_substring_spans(docs)

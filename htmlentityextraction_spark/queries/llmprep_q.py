@@ -55,9 +55,9 @@ def embedding_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary (r10 vecpoison finding): one NaN element would crash
     BOTH engines' int8 cast (ANSI/DuckDB conversion error) — a vector
     a failed encoder wrote has no norm and no quantization."""
-    emb = valid_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = valid_vectors(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
     unit = lp.l2_normalize(F.col("v"))
     q, scale = lp.quantize_int8(F.col("v"))
     wide = emb.select(
@@ -102,7 +102,7 @@ def document_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (size 32, stride 24) — the
     context-window prep step; explode keeps it narrow (no shuffle)."""
     docs = load_table(spark, sf_dir, "documents")
-    return lp.chunk_tokens(docs, chunk_size=32, stride=24)
+    return lp.chunk_tokens(docs)
 
 
 @register(
@@ -151,9 +151,7 @@ def weighted_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = {f"src{i}": 1.0 for i in range(5)}
     rates.update({f"src{i}": 0.5 for i in range(5, 10)})
     rates.update({f"src{i}": 0.25 for i in range(10, 20)})
-    mixed = lp.source_mix(
-        docs, rates, key=F.col("doc_id").cast("string"), default_rate=0.25
-    )
+    mixed = lp.source_mix(docs, rates, key=F.col("doc_id").cast("string"))
     return mixed.groupBy("source").agg(F.count("*").alias("n_kept"))
 
 

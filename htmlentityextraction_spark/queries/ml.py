@@ -23,8 +23,6 @@ from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
 _N_DOMAINS = 8
-# One fit configuration: the served registry and the sub-model curve.
-_FIT = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 
 # The registry rows are memoized per sf_dir: the one thing a model
 # query leaves behind across runs. Four registered queries (registry
@@ -58,7 +56,7 @@ def fit_once(spark: SparkSession, sf_dir: str) -> list:
     ~100k domains / multi-GB of models."""
     if sf_dir not in _REG_CACHE:
         feats = md.featurize_candidates(_labeled_candidates(spark, sf_dir))
-        _REG_CACHE[sf_dir] = md.train_per_domain(feats, **_FIT).collect()
+        _REG_CACHE[sf_dir] = md.train_per_domain(feats, **md.FIT).collect()
     return _REG_CACHE[sf_dir]
 
 
@@ -202,7 +200,7 @@ def model_submodel_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     model — any curve row below 1.0 or a larger selected model is a
     pipeline regression."""
     feats = md.featurize_candidates(_labeled_candidates(spark, sf_dir))
-    return md.submodel_curve_per_domain(feats, **_FIT)
+    return md.submodel_curve_per_domain(feats)
 
 
 @register(

@@ -119,7 +119,7 @@ def multimodal_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strided 'resize' of image payloads: decode → [::2, ::2] →
     shape + checksum. DuckDB recomputes the same stride arithmetic
     byte-by-byte."""
-    return mm.resize_images(_media(spark, sf_dir), factor=2)
+    return mm.resize_images(_media(spark, sf_dir))
 
 
 @register(

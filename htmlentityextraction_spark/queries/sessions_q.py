@@ -72,8 +72,7 @@ def salted_skew_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         finite_measure("l_extendedprice")
     )
     return skew.salted_group_stats(
-        li, ["l_returnflag"], "l_extendedprice", salt_buckets=16,
-        salt_on=F.col("l_orderkey"),
+        li, ["l_returnflag"], "l_extendedprice", salt_on=F.col("l_orderkey")
     )
 
 
@@ -84,7 +83,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     clocks (pre-2000 / post-2100) carry no session semantics and are
     rejected at ingestion (time-fuzz aligned)."""
     ev = load_table(spark, sf_dir, "events").filter(valid_event_time("ts"))
-    return skew.sessionize(ev, gap_minutes=30)
+    return skew.sessionize(ev)
 
 
 @register(
@@ -114,7 +113,7 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = sp.read_events_stream(spark, sf_dir).filter(
         valid_event_time("ts") & valid_id("user_id")
     )
-    out = sp.run_to_memory(spark, sp.sessionize_stream(stream, gap_minutes=30))
+    out = sp.run_to_memory(spark, sp.sessionize_stream(stream))
     return out.withColumn("session_seq", F.col("session_seq") + 1)
 
 

@@ -294,7 +294,7 @@ def stream_merge_upsert_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = sp.read_events_stream(
         spark, sf_dir, events_dir=topic, max_files_per_trigger=1
     ).filter(valid_id("user_id"))
-    sp.stream_merge_into(stream, tbl, key="user_id").await_done()
+    sp.stream_merge_into(stream, tbl).await_done()
     return tbl.read()
 
 
@@ -355,11 +355,11 @@ def stream_bloom_prefilter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage is cut, so on a cluster an executor loss would make this
     # frame unrecoverable mid-stream; a cluster deployment needs a
     # reliable checkpoint() or a persist unpersisted by the caller.
-    words = bloom_build(vip, "user_id", num_bits=1 << 14, num_hashes=5).localCheckpoint()
+    words = bloom_build(vip, "user_id", num_bits=1 << 14).localCheckpoint()
 
     stream = sp.read_events_stream(spark, sf_dir)
     clicks = stream.where(F.col("event_type") == "click")
-    pruned = bloom_prefilter(clicks, "user_id", words, num_bits=1 << 14, num_hashes=5)
+    pruned = bloom_prefilter(clicks, "user_id", words, num_bits=1 << 14)
     joined = pruned.join(F.broadcast(vip), "user_id", "inner")
     out = sp.run_to_memory(spark, joined)
     return out.select("event_id", "user_id", "spend_cents")

@@ -54,9 +54,9 @@ def embedding_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     poisoned element diverges cross-engine (DuckDB var_pop RAISES on
     NaN/1e308 where Spark propagates NaN), and a one-bad-element
     vector is a failed encoder write, not 63 good measurements."""
-    emb = valid_vectors(
-        load_table(spark, sf_dir, "embeddings"), "embedding"
-    ).select(F.posexplode("embedding").alias("pos", "v"))
+    emb = valid_vectors(load_table(spark, sf_dir, "embeddings")).select(
+        F.posexplode("embedding").alias("pos", "v")
+    )
     x = emb.select((F.col("pos") + 1).cast("long").alias("dim"), F.col("v").cast("double").alias("v"))
     return x.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),

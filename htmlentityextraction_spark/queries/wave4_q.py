@@ -131,7 +131,7 @@ def interval_outage_click_attribution(spark: SparkSession, sf_dir: str) -> DataF
     )
     out = interval_join(
         clicks, outages, on="user_id", point_ts="ts",
-        start_ts="start_ts", end_ts="end_ts", grain_seconds=3600,
+        start_ts="start_ts", end_ts="end_ts",
     )
     return out.select("click_id", "outage_id", "user_id")
 

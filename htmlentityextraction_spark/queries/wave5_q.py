@@ -330,9 +330,7 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts = li.join(part, li.l_partkey == part.p_partkey).select(
         F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item")
     )
-    out = pair_cooccurrence(
-        facts, "basket", "item", min_pair_count=5, max_basket_items=100
-    )
+    out = pair_cooccurrence(facts, "basket", "item")
     return out.select(
         "item_a", "item_b",
         F.col("pair_count").cast("long").alias("pair_count"),
@@ -476,7 +474,7 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = half.unionAll(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    ranks = pagerank(edges, iterations=3, damping=0.85)
+    ranks = pagerank(edges)
     return ranks.select(
         F.col("node").alias("l_partkey"),
         F.round(F.col("rank") + F.lit(1e-9), 6).alias("rank"),
@@ -581,9 +579,7 @@ def sorted_neighborhood_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
             F.substring(F.regexp_replace(F.col("text"), WS_CLASS + "+", " "), 1, 30)
         ).alias("key"),
     )
-    return sorted_neighborhood_pairs(
-        docs, "doc_id", "key", window=4, block_prefix_len=2
-    )
+    return sorted_neighborhood_pairs(docs, "doc_id", "key")
 
 
 _TOKS = (

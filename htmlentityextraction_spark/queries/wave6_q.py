@@ -57,9 +57,7 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     ).filter(finite_measure("o_totalprice"))
-    joined = bloom_semi_join(
-        orders, customer, "o_custkey", "c_custkey", num_bits=1 << 16, num_hashes=5
-    )
+    joined = bloom_semi_join(orders, customer, "o_custkey", "c_custkey", num_bits=1 << 16)
     return joined.groupBy("c_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice") + F.lit(1e-9), 2).alias("revenue"),
@@ -258,7 +256,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x: x != "",
     )
     toks = docs.select(ft.alias("ft"))
-    out = pmi_bigram_collocations(toks, "ft", min_count=5)
+    out = pmi_bigram_collocations(toks, "ft")
     return out.select(
         "w1", "w2", "c12", F.round(F.col("pmi") + F.lit(1e-9), 6).alias("pmi")
     )
@@ -333,5 +331,5 @@ def table_diff_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    _, row_diff = checksum_diff(left, right, ["o_orderkey"], n_buckets=4096)
+    _, row_diff = checksum_diff(left, right, ["o_orderkey"])
     return row_diff.select("o_orderkey", "change_type")

@@ -43,7 +43,11 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from htmlentityextraction_spark.functions.pricing import finite_measure, price_status, selected_price
-from htmlentityextraction_spark.functions.temporal import epoch_seconds, valid_event_time
+from htmlentityextraction_spark.functions.temporal import (
+    SESSION_GAP_MINUTES,
+    epoch_seconds,
+    valid_event_time,
+)
 
 # events.parquet physical schema (ts is TIMESTAMP(NANOS) stored as
 # long; see sources/tables.load_table)
@@ -379,15 +383,16 @@ def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
         .trigger(availableNow=True)
         .start()
     )
-    holder = StreamingQueryHolder(q, out_dir)
-    holder.metrics = holder_metrics
-    return holder
+    return StreamingQueryHolder(q, holder_metrics)
 
 
 class StreamingQueryHolder:
-    def __init__(self, query, out_dir: str):
+    """A started streaming query and the per-micro-batch counter dicts
+    its sink appends to ``metrics`` as batches commit."""
+
+    def __init__(self, query, metrics: list[dict]):
         self.query = query
-        self.out_dir = out_dir
+        self.metrics = metrics
 
     def await_done(self, timeout_sec: int = 300) -> None:
         self.query.awaitTermination(timeout_sec)
@@ -530,19 +535,19 @@ SESSION_OUT_SCHEMA = (
 )
 
 
-def sessionize_stream(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_stream(stream: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState (the
     reference has NO stateful streaming — this is the idiomatic
     capability Spark adds): per-user session windows with a
-    gap_minutes inactivity break. State = the open session; closed
-    sessions emit as soon as a later event breaks the gap. The open
+    ``SESSION_GAP_MINUTES`` inactivity break. State = the open session;
+    closed sessions emit as soon as a later event breaks the gap. The open
     (final) session stays in state — at 100 TB a GroupStateTimeout
     would flush idle users; with the bounded test source the batch
     sessionizer minus each user's last session is the exact oracle."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_sec = gap_minutes * 60
+    gap_sec = SESSION_GAP_MINUTES * 60
 
     def fn(key, pdfs, state: GroupState):
         (user,) = key
@@ -590,9 +595,9 @@ def sessionize_stream(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def stream_merge_into(stream: DataFrame, tbl, key: str = "user_id") -> "StreamingQueryHolder":
+def stream_merge_into(stream: DataFrame, tbl) -> "StreamingQueryHolder":
     """foreachBatch MERGE sink — the Delta-style "streaming upsert"
-    (T6 + K3 composed): each micro-batch aggregates per key
+    (T6 + K3 composed): each micro-batch aggregates per user_id
     (event count, value cents, latest event time) and merges
     ADDITIVELY into a ParquetMergeTable. The merge combine is
     commutative + exact (integer counts/cents, max on epoch micros),
@@ -612,7 +617,7 @@ def stream_merge_into(stream: DataFrame, tbl, key: str = "user_id") -> "Streamin
     from htmlentityextraction_spark.operators.incremental import OP_UPSERT
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        agg = batch.groupBy(key).agg(
+        agg = batch.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum(
                 F.when(finite_measure("value"), F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
@@ -628,7 +633,7 @@ def stream_merge_into(stream: DataFrame, tbl, key: str = "user_id") -> "Streamin
         .trigger(availableNow=True)
         .start()
     )
-    return StreamingQueryHolder(q, tbl.path)
+    return StreamingQueryHolder(q, [])
 
 
 def run_to_memory(spark: SparkSession, df: DataFrame, complete: bool = False) -> DataFrame:

@@ -152,6 +152,4 @@ def serve_stream(
         .trigger(availableNow=True)
         .start()
     )
-    holder = StreamingQueryHolder(q, out_dir)
-    holder.metrics = metrics
-    return holder
+    return StreamingQueryHolder(q, metrics)

@@ -27,13 +27,14 @@ def test_segment_tokens_trailing_partial(spark):
     assert row.s == ["a b", "c d", "e"]
 
 
-def test_decontaminate_planted_overlap(spark):
+def test_decontaminate_planted_overlap(spark, monkeypatch):
+    monkeypatch.setattr(dc, "_NGRAM_N", 3)
     # train doc 1 contains the held-out 3-gram "x y z"; doc 2 does not
     train = spark.createDataFrame(
         [(1, "p q x y z r"), (2, "a b c d e f")], "doc_id long, text string"
     )
     heldout = spark.createDataFrame([(99, "m x y z n")], "doc_id long, text string")
-    rows = {r.doc_id: r for r in dc.decontaminate(train, heldout, n=3).collect()}
+    rows = {r.doc_id: r for r in dc.decontaminate(train, heldout).collect()}
     assert rows[1].n_hits == 1 and rows[1].contaminated == 1
     assert rows[2].n_hits == 0 and rows[2].contaminated == 0
 
@@ -52,15 +53,16 @@ def test_dedup_against_corpus(spark):
     assert [r.doc_id for r in out] == [11]
 
 
-def test_boilerplate_segments_flags_common_segment(spark):
-    # the 2-token segment "x y" appears in 3 docs -> boilerplate at min_docs=3
+def test_boilerplate_segments_flags_common_segment(spark, monkeypatch):
+    monkeypatch.setattr(dc, "_SEG_LEN", 2)
+    # the 2-token segment "x y" appears in 3 docs -> boilerplate at _BOILER_MIN_DOCS=3
     docs = spark.createDataFrame(
         [(1, "x y a b"), (2, "x y c d"), (3, "x y e f"), (4, "g h i")],
         "doc_id long, text string",
     )
     rows = {
         r.doc_id: r
-        for r in dc.boilerplate_segments(docs, seg_len=2, min_docs=3).collect()
+        for r in dc.boilerplate_segments(docs).collect()
     }
     for d in (1, 2, 3):
         assert rows[d].n_segments == 2

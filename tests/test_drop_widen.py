@@ -60,8 +60,8 @@ def test_drop_guards_and_retired_name_probes(spark, tmp_path):
         tbl.drop_column("tag")  # double drop
     # probes for the retired name must raise, never resolve to storage
     for probe in (
-        lambda: tbl.prune_report("tag", lo="a"),
-        lambda: tbl.read_where("tag", lo="a"),
+        lambda: tbl.prune_report("tag", "a", "z"),
+        lambda: tbl.read_where("tag", "a", "z"),
     ):
         with pytest.raises(ValueError, match="renamed or dropped"):
             probe()
@@ -73,9 +73,9 @@ def test_probe_for_renamed_away_name_raises(spark, tmp_path):
     tbl = _mk(spark, str(tmp_path / "t"))
     tbl.rename_column("price", "unit_price")
     with pytest.raises(ValueError, match="renamed or dropped"):
-        tbl.prune_report("price", lo=1.0)
+        tbl.prune_report("price", 1.0, 2.0)
     with pytest.raises(ValueError, match="renamed or dropped"):
-        tbl.read_where("price", lo=1.0)
+        tbl.read_where("price", 1.0, 2.0)
 
 
 def test_merge_after_drop_and_readd_mints_fresh_storage(spark, tmp_path):

@@ -53,7 +53,7 @@ def test_pmi_empty_and_short_docs(spark):
 
 def test_tablediff_both_empty(spark):
     t = spark.createDataFrame([], "k long, v long")
-    changed, diff = checksum_diff(t, t, ["k"], n_buckets=16)
+    changed, diff = checksum_diff(t, t, ["k"])
     assert changed.count() == 0
     assert diff.count() == 0
 
@@ -61,7 +61,7 @@ def test_tablediff_both_empty(spark):
 def test_tablediff_one_side_empty(spark):
     left = spark.range(0, 20).select(F.col("id").alias("k"), F.lit(1).alias("v"))
     right = spark.createDataFrame([], "k long, v long")
-    changed, diff = checksum_diff(left, right, ["k"], n_buckets=16)
+    changed, diff = checksum_diff(left, right, ["k"])
     rows = {r["k"]: r["change_type"] for r in diff.collect()}
     assert len(rows) == 20 and set(rows.values()) == {"removed"}
     assert changed.count() >= 1

@@ -360,17 +360,19 @@ def test_prune_report_date_bounds_degrade_to_scan(spark, tmp_path):
     tbl.create(df)
     # date bounds normalize through the manifest's ISO encoding and
     # prune correctly instead of raising TypeError
-    rep = tbl.prune_report("d", lo=datetime.date(2024, 5, 1))
+    rep = tbl.prune_report("d", datetime.date(2024, 5, 1), datetime.date(2024, 12, 31))
     assert set(rep["scanned"]) | set(rep["skipped"]) == set(
         tbl._read_manifest()["buckets"]
     )
     got = sorted(
         r.o_orderkey
-        for r in tbl.read_where("d", lo=datetime.date(2024, 5, 1)).collect()
+        for r in tbl.read_where(
+            "d", datetime.date(2024, 5, 1), datetime.date(2024, 12, 31)
+        ).collect()
     )
     assert got == [2]
     # an incomparable bound (numeric vs date stats) degrades to scan
-    rep2 = tbl.prune_report("d", lo=123)
+    rep2 = tbl.prune_report("d", 123, 456)
     assert rep2["skipped"] == [] or rep2["scanned"], "never raises, conservatively scans"
 
 

@@ -5,6 +5,7 @@ the driver gate get their recall/precision contracts checked here.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators import dedup as dd
@@ -47,8 +48,8 @@ def test_exact_dedup_count_matches_distinct_fingerprints(spark, sf_dir):
 # --- minhash LSH: precision by construction, recall vs true jaccard ---
 def test_minhash_lsh_recall_and_precision(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    threshold = 0.5
-    found = dd.minhash_lsh_pairs(docs, jaccard_threshold=threshold)
+    threshold = dd._MINHASH_JACCARD
+    found = dd.minhash_lsh_pairs(docs)
     found_pairs = {(r.id_a, r.id_b) for r in found.collect()}
 
     # exact ground truth: all-pairs char-shingle jaccard (500 docs -> fine)
@@ -86,12 +87,12 @@ def test_simhash_identical_docs_hamming_zero(spark):
         ],
         "doc_id long, text string",
     )
-    rows = dd.simhash_pairs(df, max_hamming=3).collect()
+    rows = dd.simhash_pairs(df).collect()
     assert {(r.id_a, r.id_b, r.hamming) for r in rows} == {(1, 2, 0)}
 
 
 def test_simhash_pairs_respect_max_hamming(spark, sf_dir):
-    rows = dd.simhash_pairs(_docs(spark, sf_dir), max_hamming=3).collect()
+    rows = dd.simhash_pairs(_docs(spark, sf_dir)).collect()
     assert rows, "fixture should contain simhash near-dups"
     assert all(0 <= r.hamming <= 3 for r in rows)
 
@@ -100,24 +101,24 @@ def test_simhash_pairs_respect_max_hamming(spark, sf_dir):
 def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = sim.cosine_topk(emb, queries, k=10)
-    approx = sim.ann_lsh_topk(emb, queries, k=10, bits=6, tables=4)
+    exact = sim.cosine_topk(emb, queries)
+    approx = sim.ann_lsh_topk(emb, queries)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
-    # 4 tables x 6 bits + hamming-1 multiprobe on 64-dim synthetic
+    # 6 tables x 6 bits + hamming-1 multiprobe on 64-dim synthetic
     # vectors (near-random, worst case for LSH): contract is "well
     # above random" (random 10-of-499 ~= 0.02) at a bounded candidate
-    # fraction (~4*7/64 of corpus per query)
+    # fraction (~6*7/64 of corpus per query)
     assert recall >= 0.5, f"ANN recall {recall:.2f} < 0.5"
 
 
 def test_cosine_topk_is_exact_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") == 0)
-    got = sim.cosine_topk(emb, queries, k=5).orderBy("rank").collect()
-    assert len(got) == 5
-    assert [r.rank for r in got] == [1, 2, 3, 4, 5]
+    got = sim.cosine_topk(emb, queries).orderBy("rank").collect()
+    assert len(got) == 10
+    assert [r.rank for r in got] == list(range(1, 11))
     # scores non-increasing
     scores = [r.cosine for r in got]
     assert scores == sorted(scores, reverse=True)
@@ -193,13 +194,13 @@ def test_char_ngrams_reference_off_by_one(spark):
 def test_ann_ivf_recall_vs_bruteforce(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = sim.cosine_topk(emb, queries, k=10)
-    approx = sim.ann_ivf_topk(emb, queries, k=10, n_cells=16, n_probe=4)
+    exact = sim.cosine_topk(emb, queries)
+    approx = sim.ann_ivf_topk(emb, queries)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
-    # probing 4/16 KMeans cells on near-random 64-dim vectors; must be
-    # far above random (~0.02) at ~25% of the scan cost
+    # probing 6/16 KMeans cells on near-random 64-dim vectors; must be
+    # far above random (~0.02) at ~40% of the scan cost
     assert recall >= 0.4, f"IVF recall {recall:.2f} < 0.4"
 
 
@@ -235,7 +236,7 @@ def test_cosine_zero_vector_yields_null_not_crash(spark):
         [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.5, 0.5])],
         "vec_id long, embedding array<double>",
     )
-    out = sim.cosine_topk(df, df, k=2).collect()
+    out = sim.cosine_topk(df, df).collect()
     # null-scored pairs are excluded: the zero-vec id appears in no
     # ranking, as query or neighbor; non-zero pairs still rank
     assert all(r.cosine is not None for r in out)
@@ -244,29 +245,34 @@ def test_cosine_zero_vector_yields_null_not_crash(spark):
 
 
 # --- sliding-window exact-substring dedup (Lee et al. 2022 shape) ---
-def _span_rows(spark, texts, window=4):
+@pytest.fixture
+def window4(monkeypatch):
+    monkeypatch.setattr(dd, "SUBSTR_WINDOW", 4)
+
+
+def _span_rows(spark, texts):
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    out = dd.exact_substring_spans(df, window=window)
+    out = dd.exact_substring_spans(df)
     return sorted(
         (r.doc_id, r.span_start, r.span_end, r.span_tokens) for r in out.collect()
     )
 
 
-def test_substring_spans_full_copy_marks_whole_later_doc(spark):
+def test_substring_spans_full_copy_marks_whole_later_doc(spark, window4):
     ten = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     # doc 0 is the kept original (no span); doc 1 is a verbatim copy:
     # its 7 overlapping 4-token duplicate windows merge to one span 1..10
     assert _span_rows(spark, [ten, ten]) == [(1, 1, 10, 10)]
 
 
-def test_substring_spans_within_doc_repeat(spark):
+def test_substring_spans_within_doc_repeat(spark, window4):
     # the second half repeats the first 6 tokens: windows starting at
     # 7..9 duplicate windows 1..3 -> one merged span 7..12
     txt = "a b c d e f a b c d e f"
     assert _span_rows(spark, [txt]) == [(0, 7, 12, 6)]
 
 
-def test_substring_spans_disjoint_repeats_stay_separate(spark):
+def test_substring_spans_disjoint_repeats_stay_separate(spark, window4):
     shared = "one two three four"
     a = f"{shared} fa fb fc fd {shared}"
     # doc 0: tokens 1-4 original, tokens 9-12 repeat them -> span 9..12;
@@ -275,13 +281,13 @@ def test_substring_spans_disjoint_repeats_stay_separate(spark):
     assert _span_rows(spark, [a, b]) == [(0, 9, 12, 4), (1, 3, 6, 4)]
 
 
-def test_substring_spans_no_false_positives_on_unique_text(spark):
+def test_substring_spans_no_false_positives_on_unique_text(spark, window4):
     # letter-only tokens: tokenize() strips digits, so u1..u6 would
     # collapse to six copies of "u" and legitimately self-duplicate
     assert _span_rows(spark, ["ua ub uc ud ue uf", "va vb vc vd ve vf"]) == []
 
 
-def test_substring_spans_short_docs_skipped(spark):
+def test_substring_spans_short_docs_skipped(spark, window4):
     # below the window size no spans can exist (and no crash)
     assert _span_rows(spark, ["a b c", "a b c"]) == []
 
@@ -309,15 +315,16 @@ def _planted_frame(spark, dim=16, n_base=60, n_planted=8, seed=7):
     return df, planted
 
 
-def test_semantic_dedup_pairs_planted_recall_one(spark):
+def test_semantic_dedup_pairs_planted_recall_one(spark, monkeypatch):
     # at threshold 0.9 only the planted near-identicals qualify
     # (random 16-dim pairs live near cosine 0); near-identical vectors
     # MUST quantize into the same cell, so recall is 1.0, and
     # within-cell cosine is exact, so precision is 1.0: found == planted
+    monkeypatch.setattr(sim, "_DUP_COSINE", 0.9)
     df, planted = _planted_frame(spark)
     found = {
         (r.id_a, r.id_b)
-        for r in sim.semantic_dedup_pairs(df, threshold=0.9, n_cells=4).collect()
+        for r in sim.semantic_dedup_pairs(df, n_cells=4).collect()
     }
     assert found == planted
 
@@ -325,10 +332,10 @@ def test_semantic_dedup_pairs_planted_recall_one(spark):
 def test_semantic_dedup_pairs_one_cell_is_exact_truth(spark, sf_dir):
     # the contract query's truth side (n_cells=1) must equal an
     # expression-level exact all-pairs join — anchoring the harness
-    emb = sim.valid_vectors(_emb(spark, sf_dir), "embedding")
+    emb = sim.valid_vectors(_emb(spark, sf_dir))
     got = {
         (r.id_a, r.id_b, r.cosine)
-        for r in sim.semantic_dedup_pairs(emb, threshold=0.35, n_cells=1).collect()
+        for r in sim.semantic_dedup_pairs(emb, n_cells=1).collect()
     }
     a = emb.select(
         F.col("vec_id").alias("id_a"),
@@ -379,9 +386,7 @@ def test_admission_best_match_semantics(spark):
     )
     out = {
         r.vec_id: r
-        for r in sim.admission_best_match(
-            corpus, batch, block_col="label", threshold=0.35
-        ).collect()
+        for r in sim.admission_best_match(corpus, batch, block_col="label").collect()
     }
     assert set(out) == {10, 11, 12, 13, 15}  # 14 dropped as corrupt
     assert out[10].best_match_id == 1 and not out[10].admitted
@@ -484,4 +489,4 @@ def test_semantic_dedup_pairs_oversize_cell_raises_loud(spark):
         )
     )
     with pytest.raises(Exception, match="semantic_dedup_pairs: cell holds"):
-        sim.semantic_dedup_pairs(df, threshold=0.99, n_cells=1).collect()
+        sim.semantic_dedup_pairs(df, n_cells=1).collect()

@@ -35,7 +35,7 @@ def test_decode_payload_shape_and_content():
 
 def test_resize_halves_dimensions(spark):
     media = _media(spark)
-    out = mm.resize_images(media, factor=2)
+    out = mm.resize_images(media)
     joined = out.join(
         media.select("doc_id", "media.width", "media.n_bytes"), "doc_id"
     ).collect()

@@ -35,7 +35,7 @@ def test_valid_vectors_drops_corrupt_rows(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    kept = sorted(r.vec_id for r in valid_vectors(df, "embedding").collect())
+    kept = sorted(r.vec_id for r in valid_vectors(df).collect())
     assert kept == [1, 5]
 
 
@@ -44,7 +44,7 @@ def test_cosine_topk_skips_null_vectors(spark):
 
     rows = [(i, [float(i), 1.0, 0.0]) for i in range(6)] + [(97, None), (98, None)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 2), k=3).collect()
+    out = sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 2)).collect()
     assert out, "non-null queries must still produce neighbors"
     ids = {r.neighbor_id for r in out} | {r.query_id for r in out}
     assert 97 not in ids and 98 not in ids
@@ -59,7 +59,7 @@ def test_minhash_null_docs_form_no_mega_bucket(spark):
         (200, "a completely different document about spark engines " * 5),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
+    pairs = minhash_lsh_pairs(docs).collect()
     # the true near-dup pair survives; the 10 null docs (which would
     # otherwise contribute C(10,2)=45 jaccard-1.0 pairs) contribute none
     assert {(p.id_a, p.id_b) for p in pairs} == {(100, 101)}
@@ -70,7 +70,7 @@ def test_sorted_neighborhood_drops_null_keys(spark):
 
     rows = [(1, "aa x"), (2, "aa y"), (3, None), (4, None), (5, None)]
     df = spark.createDataFrame(rows, "doc_id long, key string")
-    pairs = sorted_neighborhood_pairs(df, "doc_id", "key", window=4).collect()
+    pairs = sorted_neighborhood_pairs(df, "doc_id", "key").collect()
     ids = {p.id_a for p in pairs} | {p.id_b for p in pairs}
     assert 3 not in ids and 4 not in ids and 5 not in ids
     assert {(p.id_a, p.id_b) for p in pairs} == {(1, 2)}

@@ -49,7 +49,7 @@ def test_small_batch_probe_opens_few_index_files(spark, tmp_path):
     fps = batch.select(
         "doc_id", normalized_fingerprint(F.col("text")).alias("fingerprint")
     ).filter(F.col("fingerprint").isNotNull())
-    bks = idx.affected_buckets(fps, "fingerprint")
+    bks = idx.affected_buckets(fps)
     assert len(bks) <= 2, "2 fingerprints must land in <= 2 buckets"
 
     pruned = idx.read_buckets(bks)

@@ -17,16 +17,23 @@ only keep code alive, never flag it. Docstrings and other string
 constants are not names, so prose that mentions a definition does not
 reach it.
 
-Options: every defaulted parameter of a package function or method is
-passed by some call the same roots make (the reached definitions'
-bodies, module-level code and the root files), or is named in
-``KEEP_OPTIONS`` with its reason. An option with one value in use is a
-constant, and a branch only tests select is not carried."""
+Options: every defaulted parameter of a package function or method
+takes at least two distinct values across the calls the same roots
+make (the reached definitions' bodies, module-level code and the root
+files), or is named in ``KEEP_OPTIONS`` with its reason. A call that
+omits the option gives its default; a literal, a module-constant name
+or a value of a module-level dict passed as ``**NAME`` gives itself; an
+option the caller hands on (``f(x=x)``) gives the caller's values; any
+other expression gives an unknown value, which can only keep the option
+alive. An option with one value in use is a constant (or, when its
+default selects a branch no call takes, a required input), and a
+branch only tests select is not carried."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import htmlentityextraction_spark
 
@@ -53,7 +60,7 @@ KEEP = {
     "operators/gbt.py:GBTClassifier.truncate": "the prefix-model reference margin_curve is checked against",
 }
 
-# Options no query, tool or bench passes, each kept on purpose.
+# Options production gives one value or none, each kept on purpose.
 KEEP_OPTIONS = {
     "streaming/pipeline.py:read_events_stream(starting_offset)": "SURVEY T2 earliest/latest start of the event stream",
     "streaming/pipeline.py:read_events_kafka(topic)": "the paper's real serve input (kept with read_events_kafka)",
@@ -66,6 +73,12 @@ KEEP_OPTIONS = {
     "operators/components.py:connected_components(max_rounds)": "guard limit: a pathological pair graph raises instead of looping",
     "operators/dedup.py:ngram_jaccard_pairs(max_block_rows)": "guard limit: a block too big for the quadratic verify fails loudly",
     "operators/setjoin.py:prefix_jaccard_pairs(max_block_rows)": "guard limit: a block too big for the quadratic verify fails loudly",
+    "operators/extraction.py:extract_candidates(html_col)": "perfbench's serve workload passes it; the benchmark's calls keep their signatures",
+    "operators/extraction.py:extract_candidates(url_col)": "perfbench's serve workload passes it; the benchmark's calls keep their signatures",
+    "operators/models.py:train_per_domain(n_estimators)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
+    "operators/models.py:train_per_domain(max_depth)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
+    "operators/models.py:train_per_domain(min_doc_freq)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
+    "operators/models.py:train_per_domain(top_k)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
 }
 
 
@@ -190,85 +203,120 @@ def unused_imports(package: pathlib.Path) -> list[str]:
     return out
 
 
-def defaulted(fn: ast.AST) -> list[str]:
-    """The parameters of ``fn`` that have a default."""
-    a = fn.args
-    pos = [*a.posonlyargs, *a.args]
-    out = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
-    return out + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+CONSTANT_NAME = re.compile(r"_*[A-Z][A-Z0-9_]*")
 
 
-def splat_keys(trees) -> dict[str, set[str]]:
-    """Keys of every module-level dict literal (``{"k": v}`` or
-    ``dict(k=v)``) by its name: ``**NAME`` passes exactly these."""
-    out: dict[str, set[str]] = {}
+def module_constants(trees) -> set[str]:
+    """Upper-case names a module-level assignment binds."""
+    return {
+        t.id
+        for tree in trees
+        for node in tree.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and CONSTANT_NAME.fullmatch(t.id)
+    }
+
+
+def value(node: ast.AST, params, consts) -> tuple:
+    """What one argument (or default) gives an option: ``("=", text)``
+    for a literal or a module-constant name (``LIMIT``, ``mod.LIMIT``),
+    ``("fwd", param)`` for the enclosing function's own option handed
+    on, else ``("?", node)``, an unknown value distinct from every
+    other."""
+    if isinstance(node, ast.Name) and node.id in params:
+        return ("fwd", node.id)
+    name = getattr(node, "id", getattr(node, "attr", None))
+    if isinstance(node, (ast.Name, ast.Attribute)) and name in consts:
+        return ("=", name)
+    try:
+        return ("=", repr(ast.literal_eval(node)))
+    except (ValueError, TypeError):
+        return ("?", node)
+
+
+def splat_values(trees, consts) -> dict[str, dict]:
+    """Every module-level dict literal (``{"k": v}`` or ``dict(k=v)``) by
+    its name, as ``{key: value}``: ``**NAME`` (or ``**mod.NAME``) passes
+    exactly these keys. Where two dicts of one name give a key
+    different values, the key passes an unknown value."""
+    out: dict[str, dict] = {}
     for tree in trees:
         for node in tree.body:
             if not (isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name)):
                 continue
-            v, keys = node.value, None
+            v, items = node.value, None
             if isinstance(v, ast.Dict) and all(isinstance(k, ast.Constant) for k in v.keys):
-                keys = {k.value for k in v.keys}
+                items = {k.value: val for k, val in zip(v.keys, v.values)}
             elif isinstance(v, ast.Call) and getattr(v.func, "id", None) == "dict" and not v.args:
-                keys = {k.arg for k in v.keywords} if all(k.arg for k in v.keywords) else None
-            if keys is not None:
-                out.setdefault(node.targets[0].id, set()).update(keys)
+                items = {k.arg: k.value for k in v.keywords} if all(k.arg for k in v.keywords) else None
+            if items is not None:
+                merged = out.setdefault(node.targets[0].id, {})
+                for k, arg in items.items():
+                    val = value(arg, (), consts)
+                    merged[k] = val if merged.get(k, val) == val else ("?", node)
     return out
 
 
-def passes(node: ast.AST, params, splats) -> list[tuple]:
-    """``(callee name, slot, forwarded)`` for every argument of every call
-    in ``node``. ``slot`` is a keyword, a position or ``"*"`` (a splat
-    that may set anything); ``forwarded`` names the enclosing function's
-    defaulted parameter the argument just hands on, else None."""
+def passes(node: ast.AST, params, splats, consts) -> list[tuple]:
+    """``(callee name, args)`` for every call in ``node``. ``args`` maps a
+    keyword or a position to its ``value``, or ``"*"`` to an unknown
+    splat that may set anything; ``params`` are the enclosing
+    function's defaulted parameters."""
     out = []
     for call in ast.walk(node):
         if not isinstance(call, ast.Call):
             continue
-        name = getattr(call.func, "id", getattr(call.func, "attr", None))
-
-        def fwd(arg):
-            return arg.id if isinstance(arg, ast.Name) and arg.id in params else None
-
+        args: dict = {}
         for i, arg in enumerate(call.args):
             if isinstance(arg, ast.Starred):
-                out.append((name, "*", None))
+                args["*"] = ("?", arg)
                 break
-            out.append((name, i, fwd(arg)))
+            args[i] = value(arg, params, consts)
         for kw in call.keywords:
             if kw.arg is not None:
-                out.append((name, kw.arg, fwd(kw.value)))
-                continue
-            keys = splats.get(getattr(kw.value, "id", None), ("*",))
-            out.extend((name, k, None) for k in keys)
+                args[kw.arg] = value(kw.value, params, consts)
+            elif (dict_name := getattr(kw.value, "id", getattr(kw.value, "attr", None))) in splats:
+                args.update(splats[dict_name])
+            else:
+                args["*"] = ("?", kw)
+        out.append((getattr(call.func, "id", getattr(call.func, "attr", None)), args))
     return out
 
 
-def option_scan(package: pathlib.Path, root_files) -> tuple[list[str], set[str]]:
-    """(unset, options): every defaulted parameter of a package function
-    or method, as ``"<module path>:<name>(<param>)"``, and those no call
-    from the roots passes. A call matches a definition by its name (a
-    class name calls ``__init__``); positions skip ``self``/``cls``. A
-    forwarded argument (``f(x=x)``) sets the callee's option only when
-    the forwarding function's own option is set, to a fixed point."""
+def option_scan(package: pathlib.Path, root_files) -> tuple[dict, set[str]]:
+    """(single, options): every defaulted parameter of a package function
+    or method, as ``"<module path>:<name>(<param>)"``, and those the
+    calls from the roots give fewer than two distinct values, each with
+    its values. A call matches a definition by its name (a class name
+    calls ``__init__``); positions skip ``self``/``cls``. A call that
+    omits the option gives its default; a literal or a constant name
+    gives itself; a forwarded option (``f(x=x)``) gives the forwarding
+    function's own values, to a fixed point; any other expression, or
+    an unknown splat, gives an unknown value that only keeps the option
+    alive."""
     unreached, _ = scan(package, root_files)
     trees = {
         p.relative_to(package).as_posix(): ast.parse(p.read_text())
         for p in sorted(package.rglob("*.py"))
     }
     roots = [ast.parse(p.read_text()) for p in root_files]
-    splats = splat_keys([*trees.values(), *roots])
-    sig: dict[str, tuple] = {}  # key -> (positional params after self, defaulted params)
+    consts = module_constants([*trees.values(), *roots])
+    splats = splat_values([*trees.values(), *roots], consts)
+    sig: dict[str, tuple] = {}  # key -> (positional params after self, {defaulted param: default})
     by_call: dict[str, list[str]] = {}
-    calls: list[tuple] = []  # (enclosing key, callee name, slot, forwarded)
+    calls: list[tuple] = []  # (enclosing key, callee name, args)
 
     def declare(key, fn, names, offset, reached):
-        params = defaulted(fn)
-        sig[key] = ([a.arg for a in [*fn.args.posonlyargs, *fn.args.args]][offset:], params)
+        a = fn.args
+        pos = [*a.posonlyargs, *a.args]
+        defaults = dict(zip([p.arg for p in pos[len(pos) - len(a.defaults):]], a.defaults))
+        defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+        sig[key] = ([p.arg for p in pos][offset:], {p: value(d, (), consts) for p, d in defaults.items()})
         for name in names:
             by_call.setdefault(name, []).append(key)
         body = [fn] if reached else fn.decorator_list
-        calls.extend((key, *c) for b in body for c in passes(b, params, splats))
+        calls.extend((key, *c) for b in body for c in passes(b, defaults, splats, consts))
 
     for rel, tree in trees.items():
         for node in tree.body:
@@ -277,7 +325,7 @@ def option_scan(package: pathlib.Path, root_files) -> tuple[list[str], set[str]]
                 shell = [n for n in node.body if not isinstance(n, FUNCS)]
                 if ckey not in unreached:
                     for n in [*node.bases, *shell]:
-                        calls.extend((None, *c) for c in passes(n, (), splats))
+                        calls.extend((None, *c) for c in passes(n, (), splats, consts))
                 for m in filter(lambda n: isinstance(n, FUNCS), node.body):
                     key = f"{ckey}.{m.name}"
                     static = any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list)
@@ -289,37 +337,40 @@ def option_scan(package: pathlib.Path, root_files) -> tuple[list[str], set[str]]
                 key = f"{rel}:{node.name}"
                 declare(key, node, (node.name,), 0, key not in unreached)
             else:
-                calls.extend((None, *c) for c in passes(node, (), splats))
+                calls.extend((None, *c) for c in passes(node, (), splats, consts))
     for tree in roots:
-        calls.extend((None, *c) for c in passes(tree, (), splats))
+        calls.extend((None, *c) for c in passes(tree, (), splats, consts))
 
-    options = {f"{k}({p})" for k, (_, ps) in sig.items() for p in ps}
-    done: set[str] = set()
+    values: dict[str, set] = {f"{k}({p})": set() for k, (_, ds) in sig.items() for p in ds}
     grew = True
     while grew:
         grew = False
-        for enclosing, name, slot, forwarded in calls:
-            if forwarded is not None and f"{enclosing}({forwarded})" not in done:
-                continue
+        for enclosing, name, args in calls:
             for key in by_call.get(name, ()):
-                positional, params = sig[key]
-                if slot == "*":
-                    hit = params
-                elif isinstance(slot, int):
-                    hit = positional[slot:slot + 1]
-                else:
-                    hit = [slot]
-                for p in hit:
-                    option = f"{key}({p})"
-                    if option in options and option not in done:
-                        done.add(option)
+                positional, defaults = sig[key]
+                given = {
+                    positional[i]: v
+                    for i, v in args.items()
+                    if isinstance(i, int) and i < len(positional)
+                }
+                for p, default in defaults.items():
+                    v = args.get("*") or args.get(p) or given.get(p) or default
+                    got = values[f"{enclosing}({v[1]})"] if v[0] == "fwd" else {v}
+                    option = values[f"{key}({p})"]
+                    if not got <= option:
+                        option |= got
                         grew = True
-    return sorted(options - done), options
+    single = {
+        o: vs for o, vs in sorted(values.items())
+        if len(vs) < 2 and all(v[0] == "=" for v in vs)
+    }
+    return single, set(values)
 
 
-def stale_keep_options(keep, unset, options) -> list[str]:
-    """``keep`` entries that name no option, or one some call now sets."""
-    return [k for k in keep if k not in options or k not in unset]
+def stale_keep_options(keep, single, options) -> list[str]:
+    """``keep`` entries that name no option, or one the calls now give
+    two values."""
+    return [k for k in keep if k not in options or k not in single]
 
 
 def test_every_package_definition_is_reached_or_kept():
@@ -329,15 +380,15 @@ def test_every_package_definition_is_reached_or_kept():
 
 
 def test_every_package_option_is_set_or_kept():
-    unset, _ = option_scan(PACKAGE, root_files(REPO))
-    bad = [o for o in unset if o not in KEEP_OPTIONS]
-    assert not bad, f"{len(bad)} options no production caller sets: " + ", ".join(bad)
+    single, _ = option_scan(PACKAGE, root_files(REPO))
+    bad = [f"{o}={sorted(v for _, v in vs)}" for o, vs in single.items() if o not in KEEP_OPTIONS]
+    assert not bad, f"{len(bad)} options production gives one value or none: " + ", ".join(bad)
 
 
 def test_keep_options_name_unset_options():
-    unset, options = option_scan(PACKAGE, root_files(REPO))
-    stale = stale_keep_options(KEEP_OPTIONS, unset, options)
-    assert not stale, "KEEP_OPTIONS names options that are gone or now set: " + ", ".join(stale)
+    single, options = option_scan(PACKAGE, root_files(REPO))
+    stale = stale_keep_options(KEEP_OPTIONS, single, options)
+    assert not stale, "KEEP_OPTIONS names options that are gone or now take two values: " + ", ".join(stale)
 
 
 def test_no_package_module_imports_a_name_it_never_uses():
@@ -419,6 +470,7 @@ def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
     (pkg / "mod.py").write_text(
         "from registry import register\n"
         "CONF = dict(depth=3)\n"
+        "LIMIT = 10\n"
         "def kw(x, a=1, b=2):\n    return x\n"
         "def pos(x, a=1, b=2):\n    return x\n"
         "def splat(x, depth=1, width=2):\n    return x\n"
@@ -427,28 +479,50 @@ def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
         "def outer(x, fwd=None):\n    return inner(x, fwd=fwd)\n"
         "def inner2(x, fwd=1):\n    return x\n"
         "def outer2(x, fwd=None):\n    return inner2(x, fwd)\n"
+        "def same(x, a=1):\n    return x\n"
+        "def repeated(x, n=1):\n    return x\n"
+        "def const(x, w=2):\n    return x\n"
         "class Table:\n"
         "    def __init__(self, path, mode='r'):\n        self.path = path\n"
         "    def read(self, col, version=None):\n        return col\n"
         "@register('q')\n"
         "def query(spark, sf, **kw2):\n"
         "    kw(1, b=5)\n"
+        "    kw(2)\n"
         "    pos(1, 2)\n"
+        "    pos(2)\n"
         "    splat(1, **CONF)\n"
         "    anything(1, **kw2)\n"
         "    outer(1)\n"
         "    outer2(1, fwd=3)\n"
+        "    outer2(2)\n"
+        "    same(1, a=1)\n"
+        "    repeated(1, n=7)\n"
+        "    repeated(2, n=7)\n"
+        "    const(1, w=LIMIT)\n"
+        "    const(2, w=LIMIT)\n"
         "    Table('p', 'w').read('c')\n"
+        "    Table('q')\n"
     )
-    unset, options = option_scan(pkg, [])
-    assert len(options) == 14
-    assert unset == [
+    single, options = option_scan(pkg, [])
+    assert len(options) == 17
+    assert list(single) == [
         "mod.py:Table.read(version)",  # positions skip self
-        "mod.py:inner(fwd)",  # forwarded from an option nobody sets
-        "mod.py:kw(a)",
+        "mod.py:const(w)",  # a constant name is one value
+        "mod.py:inner(fwd)",  # forwarded from an option with one value
+        "mod.py:kw(a)",  # only ever omitted: its default
         "mod.py:outer(fwd)",
         "mod.py:pos(b)",
+        "mod.py:repeated(n)",  # one non-default literal, twice
+        "mod.py:same(a)",  # a literal equal to the default
+        "mod.py:splat(depth)",  # **CONF gives its own value
         "mod.py:splat(width)",  # **CONF passes only its own keys
     ]
-    keep = {"mod.py:kw(a)": "kept", "mod.py:kw(b)": "set by query", "mod.py:gone(x)": "gone"}
-    assert stale_keep_options(keep, unset, options) == ["mod.py:kw(b)", "mod.py:gone(x)"]
+    assert single["mod.py:const(w)"] == {("=", "LIMIT")}
+    assert single["mod.py:repeated(n)"] == {("=", "7")}
+    assert single["mod.py:splat(depth)"] == {("=", "3")}
+    # inner2(fwd) takes outer2's two values (3 and the default None);
+    # anything(a, b) take an unknown splat; kw(b), pos(a) and
+    # Table(mode) each take a passed value and their default
+    keep = {"mod.py:kw(a)": "kept", "mod.py:kw(b)": "two values", "mod.py:gone(x)": "gone"}
+    assert stale_keep_options(keep, single, options) == ["mod.py:kw(b)", "mod.py:gone(x)"]

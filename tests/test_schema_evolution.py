@@ -72,9 +72,9 @@ def test_merge_under_new_name_and_pruned_reads(spark, tmp_path):
     assert got[3] == 103.0 and got[50] == 0.5
     # the logical name resolves for pruning; a non-key column has no
     # zone map, so the report conservatively scans every bucket
-    rep = tbl.prune_report("unit_price", lo=90.0)
+    rep = tbl.prune_report("unit_price", 90.0, 1e9)
     assert rep["skipped"] == [] and rep["scanned"] == sorted(tbl._read_manifest()["buckets"])
-    vals = {r.unit_price for r in tbl.read_where("unit_price", lo=90.0).collect()}
+    vals = {r.unit_price for r in tbl.read_where("unit_price", 90.0, 1e9).collect()}
     assert vals == {103.0}
 
 
@@ -132,4 +132,4 @@ def test_zorder_optimize_survives_rename(spark, tmp_path):
     tbl.optimize(zorder_by=["k", "unit_price"])
     assert {r.k: r.unit_price for r in tbl.read().collect()}[5] == 5.0
     # range reads on the renamed column stay exact after the rewrite
-    assert set(tbl.read_where("unit_price", lo=4.9, hi=5.1).select("k").toPandas()["k"]) == {5}
+    assert set(tbl.read_where("unit_price", 4.9, 5.1).select("k").toPandas()["k"]) == {5}

@@ -211,3 +211,42 @@ def test_serve_replayed_batch_overwrites_its_own_output(spark):
     finally:
         shutil.rmtree(src)
         shutil.rmtree(out)
+
+
+def test_serve_counters_equal_the_oracle_counts_at_sf001(spark, tmp_path):
+    """The stream_serve_pipeline pages at sf0.01, drained through
+    ``serve_stream`` with the ``fit_once`` registry: the per-batch
+    counters, summed, equal DuckDB counts over that query's oracle SQL
+    (rows, the -1 and -2 sentinels, each status), and no message is
+    corrupt."""
+    from collections import Counter
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from htmlentityextraction_spark.queries import ml, serve_q
+
+    sf = "/root/testdata/sf0.01"
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    serve_q._page_messages(spark, sf).write.parquet(src)
+    raw = spark.readStream.schema("value string").parquet(src)
+    holder = serve.serve_stream(spark, raw, ml.fit_once(spark, sf), out)
+    holder.await_done()
+    counts = ("rows", "corrupt", "no_candidate", "missing_model")
+    got = {k: sum(m[k] for m in holder.metrics) for k in counts}
+    status = Counter()
+    for m in holder.metrics:
+        status.update(m["status"])
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf}/orders.parquet')")
+    oracle = entry.oracle_sql()["stream_serve_pipeline"]
+    rows, no_candidate, missing_model = con.execute(
+        "SELECT count(*), count(*) FILTER (WHERE model_price = -1.0),"
+        f" count(*) FILTER (WHERE model_price = -2.0) FROM ({oracle})"
+    ).fetchone()
+    want_status = dict(con.execute(f"SELECT status, count(*) FROM ({oracle}) GROUP BY status").fetchall())
+    assert got == {
+        "rows": rows, "corrupt": 0, "no_candidate": no_candidate, "missing_model": missing_model,
+    }
+    assert dict(status) == want_status

@@ -11,10 +11,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.operators.skew import _SALT_BUCKETS as SALT_BUCKETS
 from htmlentityextraction_spark.operators.skew import salted_group_stats
 
 N_ROWS = 100_000
-SALT_BUCKETS = 16
 
 
 def _skewed_df(spark):
@@ -38,7 +38,7 @@ def test_salted_agg_spreads_hot_key_and_bounds_partitions(spark):
         # a raw modulo would only ever reach half the salt buckets —
         # the same trap a real pipeline hits salting on a structured id
         for r in salted_group_stats(
-            df, ["k"], "v", salt_buckets=SALT_BUCKETS, salt_on=F.xxhash64(F.col("id"))
+            df, ["k"], "v", salt_on=F.xxhash64(F.col("id"))
         ).collect()
     }
     want = {

@@ -75,30 +75,32 @@ def test_csv_default_read_splits_embedded_newlines(spark):
     assert n == 2  # one logical row read back as two physical rows
 
 
-def test_source_mix_default_rate_keeps_unlisted_sources(spark):
+def test_source_mix_default_rate_keeps_unlisted_sources(spark, monkeypatch):
+    from htmlentityextraction_spark.operators import llmprep
     from htmlentityextraction_spark.operators.llmprep import source_mix
 
     rows = [(i, "listed" if i % 2 == 0 else "junk-src é") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
     key = F.col("doc_id").cast("string")
+    some = source_mix(df, {"listed": 1.0}, key).filter(
+        F.col("source") != "listed"
+    )
+    n = some.count()
+    assert 0 < n < 100  # deterministic md5 quarter-keep of the 100 junk rows
+    monkeypatch.setattr(llmprep, "_DEFAULT_RATE", 0.0)
     none_kept = source_mix(df, {"listed": 1.0}, key).filter(
         F.col("source") != "listed"
     )
     assert none_kept.count() == 0
-    some = source_mix(df, {"listed": 1.0}, key, default_rate=0.5).filter(
-        F.col("source") != "listed"
-    )
-    n = some.count()
-    assert 0 < n < 100  # deterministic md5 half-keep of the 100 junk rows
 
 
-def test_source_mix_never_keeps_null_source(spark):
+def test_source_mix_never_keeps_null_source(spark, monkeypatch):
+    from htmlentityextraction_spark.operators import llmprep
     from htmlentityextraction_spark.operators.llmprep import source_mix
 
+    monkeypatch.setattr(llmprep, "_DEFAULT_RATE", 1.0)  # keep every listed-or-not source
     df = spark.createDataFrame([(1, None), (2, "a")], "doc_id long, source string")
-    out = source_mix(
-        df, {"a": 1.0}, F.col("doc_id").cast("string"), default_rate=1.0
-    )
+    out = source_mix(df, {"a": 1.0}, F.col("doc_id").cast("string"))
     assert [r.doc_id for r in out.collect()] == [2]
 
 

@@ -79,7 +79,7 @@ def test_fuzzy_join_short_strings_and_no_match(spark):
         [(10, "ab"), (20, "hallo"), (30, "qqqq")], "rid long, rname string"
     )
     got = {(r.lid, r.rid): r.dist for r in
-           fuzzy_join(left, right, "lid", "lname", "rid", "rname", 1).collect()}
+           fuzzy_join(left, right, "lid", "lname", "rid", "rname").collect()}
     assert got[(1, 10)] == 0, "short strings (<3 chars) must still block and match"
     assert got[(2, 20)] == 1
     assert all(lid != 3 for lid, _ in got), "no spurious match for disjoint strings"
@@ -94,7 +94,7 @@ def test_fuzzy_join_mixed_length_short_keys(spark):
     left = spark.createDataFrame([(1, "ab"), (2, "x")], "lid long, lname string")
     right = spark.createDataFrame([(10, "abc"), (20, "xy")], "rid long, rname string")
     got = {(r.lid, r.rid): r.dist for r in
-           fuzzy_join(left, right, "lid", "lname", "rid", "rname", 1).collect()}
+           fuzzy_join(left, right, "lid", "lname", "rid", "rname").collect()}
     assert got[(1, 10)] == 1, "mixed-length short pair within distance 1 must match"
     assert got[(2, 20)] == 1
 
@@ -115,10 +115,10 @@ def test_fuzzy_join_hot_trigram_blocking_stays_linear(spark):
     names = [(i, f"the-company-{(i * 2654435761) % 2**32:08x}") for i in range(n)]
     left = spark.createDataFrame(names, "lid long, lname string")
     right = spark.createDataFrame(names, "rid long, rname string")
-    cand = blocking_candidates(left, right, "lid", "lname", "rid", "rname", 1)
+    cand = blocking_candidates(left, right, "lid", "lname", "rid", "rname")
     n_cand = cand.count()
     assert n_cand < 10 * n, f"hot shared trigrams must not explode blocking: {n_cand}"
     # recall intact: every identical pair is found
     matched = {(r.lid, r.rid) for r in
-               fuzzy_join(left, right, "lid", "lname", "rid", "rname", 1).collect()}
+               fuzzy_join(left, right, "lid", "lname", "rid", "rname").collect()}
     assert {(i, i) for i in range(n)} <= matched

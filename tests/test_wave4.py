@@ -112,8 +112,7 @@ def test_interval_join_boundaries_and_overlap(spark):
     got = sorted(
         (r.pid, r.iid)
         for r in interval_join(
-            points, iv, on="k", point_ts="ts", start_ts="s", end_ts="e",
-            grain_seconds=600,
+            points, iv, on="k", point_ts="ts", start_ts="s", end_ts="e"
         ).collect()
     )
     assert got == [(1, 10), (2, 10), (4, 10), (4, 11)]

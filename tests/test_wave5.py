@@ -13,6 +13,7 @@ from htmlentityextraction_spark.operators.basket import (
     OversizeBasketError,
     pair_cooccurrence,
 )
+from htmlentityextraction_spark.operators import basket, components, dedup
 from htmlentityextraction_spark.operators.components import pagerank
 from htmlentityextraction_spark.operators.dataquality import (
     check_suite,
@@ -149,7 +150,8 @@ def test_weighted_sample_excludes_nonpositive_weights(spark):
 # ------------------------------------------------------------------ basket
 
 
-def test_pair_cooccurrence_counts_and_lift(spark):
+def test_pair_cooccurrence_counts_and_lift(spark, monkeypatch):
+    monkeypatch.setattr(basket, "_MIN_PAIR_COUNT", 1)
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "c")],
         "b int, i string",
@@ -165,10 +167,10 @@ def test_pair_cooccurrence_counts_and_lift(spark):
 
 
 def test_pair_cooccurrence_oversize_guard(spark):
-    rows = [(1, f"i{j}") for j in range(30)] + [(2, "i0"), (2, "i1")]
+    rows = [(1, f"i{j}") for j in range(101)] + [(2, "i0"), (2, "i1")]
     df = spark.createDataFrame(rows, "b int, i string")
     with pytest.raises(OversizeBasketError, match="pair explosion refused"):
-        pair_cooccurrence(df, "b", "i", max_basket_items=10)
+        pair_cooccurrence(df, "b", "i")
 
 
 # ---------------------------------------------------------------- pagerank
@@ -176,7 +178,7 @@ def test_pair_cooccurrence_oversize_guard(spark):
 
 def test_pagerank_two_node_cycle_and_mass(spark):
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    ranks = {r.node: r.rank for r in pagerank(edges, iterations=5).collect()}
+    ranks = {r.node: r.rank for r in pagerank(edges).collect()}
     assert ranks[1] == pytest.approx(0.5)
     assert ranks[2] == pytest.approx(0.5)
 
@@ -184,7 +186,7 @@ def test_pagerank_two_node_cycle_and_mass(spark):
 def test_pagerank_dangling_mass_conserved(spark):
     # 1 -> 2, 2 dangling: total rank must stay 1.0 per iteration
     edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    ranks = pagerank(edges, iterations=3)
+    ranks = pagerank(edges)
     total = ranks.agg(F.sum("rank")).collect()[0][0]
     assert total == pytest.approx(1.0)
     by = {r.node: r.rank for r in ranks.collect()}
@@ -205,13 +207,13 @@ def test_pagerank_dangling_exact_recurrence(spark):
         dm = r[3]  # node 3 is the only dangling node
         inc = {1: 0.0, 2: r[1] / 2, 3: r[1] / 2 + r[2]}
         r = {v: (1 - d) / n + d * (inc[v] + dm / n) for v in r}
-    got = {row.node: row.rank for row in pagerank(edges, iterations=3).collect()}
+    got = {row.node: row.rank for row in pagerank(edges).collect()}
     for v in (1, 2, 3):
         assert got[v] == pytest.approx(r[v], abs=1e-12)
     assert sum(got.values()) == pytest.approx(1.0)
 
 
-def test_pagerank_one_materialization_per_round(spark):
+def test_pagerank_one_materialization_per_round(spark, monkeypatch):
     # Scale contract: the per-round cost is ONE edge-scale
     # materialization (the incoming aggregate's checkpoint) plus
     # node-scale broadcast builds — never a second aggregate or pass
@@ -232,7 +234,8 @@ def test_pagerank_one_materialization_per_round(spark):
 
         def jobs_for(edges, iters: int) -> int:
             j0 = last_job()
-            pagerank(edges, iterations=iters).collect()
+            monkeypatch.setattr(components, "_PAGERANK_ITERATIONS", iters)
+            pagerank(edges).collect()
             return last_job() - j0
 
         dangling = spark.createDataFrame(
@@ -263,14 +266,14 @@ def test_pagerank_null_endpoint_edges_ignored(spark):
         [(1, 2), (2, 3), (1, 3), (1, None), (None, 2), (None, None)],
         "src long, dst long",
     )
-    want = {r.node: r.rank for r in pagerank(clean, iterations=3).collect()}
-    got = {r.node: r.rank for r in pagerank(dirty, iterations=3).collect()}
+    want = {r.node: r.rank for r in pagerank(clean).collect()}
+    got = {r.node: r.rank for r in pagerank(dirty).collect()}
     assert set(got) == set(want)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-12)
 
 
-def test_pagerank_checkpoint_storage_bounded(spark):
+def test_pagerank_checkpoint_storage_bounded(spark, monkeypatch):
     # Storage contract: per-round checkpoints are unpersisted once the
     # next round materializes, so the number of persistent RDDs a run
     # leaves behind is a constant (static edges/verts + the LAST
@@ -285,7 +288,8 @@ def test_pagerank_checkpoint_storage_bounded(spark):
 
     def leftover(iters: int) -> int:
         before = persistent_rdd_ids(spark)
-        pagerank(edges, iterations=iters).collect()
+        monkeypatch.setattr(components, "_PAGERANK_ITERATIONS", iters)
+        pagerank(edges).collect()
         return len(persistent_rdd_ids(spark) - before)
 
     assert leftover(8) == leftover(2)
@@ -294,12 +298,13 @@ def test_pagerank_checkpoint_storage_bounded(spark):
 # ---------------------------------------------- sorted neighborhood
 
 
-def test_sorted_neighborhood_pair_budget_and_blocking(spark):
+def test_sorted_neighborhood_pair_budget_and_blocking(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_SNM_WINDOW", 3)
     df = spark.createDataFrame(
         [(i, f"aa{i:03d}") for i in range(5)] + [(99, "zz999")],
         "id long, key string",
     )
-    out = sorted_neighborhood_pairs(df, "id", "key", window=3).collect()
+    out = sorted_neighborhood_pairs(df, "id", "key").collect()
     pairs = {(r.id_a, r.id_b) for r in out}
     # each row pairs with <= 2 successors inside its block
     assert pairs == {(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}

@@ -16,6 +16,7 @@ from htmlentityextraction_spark.operators.setjoin import (
     HotPrefixTokenError,
     prefix_jaccard_pairs,
 )
+from htmlentityextraction_spark.operators import textanalysis
 from htmlentityextraction_spark.operators.tablediff import checksum_diff
 from htmlentityextraction_spark.operators.textanalysis import pmi_bigram_collocations
 from htmlentityextraction_spark.operators.zorder import zvalue
@@ -30,8 +31,8 @@ def test_bloom_no_false_negatives_and_prunes(spark):
     property that matters at scale."""
     dim = spark.range(0, 100).select((F.col("id") * 7).alias("k"))
     fact = spark.range(0, 10_000).select(F.col("id").alias("k"))
-    words = bloom_build(dim, "k", num_bits=1 << 14, num_hashes=5)
-    survivors = bloom_prefilter(fact, "k", words, num_bits=1 << 14, num_hashes=5)
+    words = bloom_build(dim, "k", num_bits=1 << 14)
+    survivors = bloom_prefilter(fact, "k", words, num_bits=1 << 14)
     surv_keys = {r["k"] for r in survivors.collect()}
     true_keys = {r["k"] for r in dim.collect() if r["k"] < 10_000}
     assert true_keys <= surv_keys, "bloom dropped a true member"
@@ -140,14 +141,15 @@ def test_prefix_join_guard_screen_matches_exact(spark):
 # ------------------------------------------------------------------ pmi
 
 
-def test_pmi_known_values(spark):
+def test_pmi_known_values(spark, monkeypatch):
+    monkeypatch.setattr(textanalysis, "_PMI_MIN_COUNT", 2)
     # corpus: "a b" x6, "a c" x2 -> bigrams: (a,b):6, (a,c):2, N=8
     docs = spark.createDataFrame(
         [(["a", "b"],)] * 6 + [(["a", "c"],)] * 2, "ft array<string>"
     )
     out = {
         (r["w1"], r["w2"]): (r["c12"], r["pmi"])
-        for r in pmi_bigram_collocations(docs, "ft", min_count=2).collect()
+        for r in pmi_bigram_collocations(docs, "ft").collect()
     }
     import math
 
@@ -162,7 +164,7 @@ def test_pmi_known_values(spark):
     )
     out2 = {
         (r["w1"], r["w2"]): r["pmi"]
-        for r in pmi_bigram_collocations(docs2, "ft", min_count=2).collect()
+        for r in pmi_bigram_collocations(docs2, "ft").collect()
     }
     # c(x,y)=4, c1(x)=4, c2(y)=4, N=8 -> pmi = ln(4*8/16) = ln 2
     assert out2[("x", "y")] == pytest.approx(math.log(2))
@@ -180,15 +182,15 @@ def test_checksum_diff_classifies_and_prunes(spark):
         .withColumn("v", F.when(F.col("k") == 11, F.lit(-1)).otherwise(F.col("v")))
         .unionAll(spark.createDataFrame([(5000, 1)], "k long, v long"))  # added
     )
-    changed, row_diff = checksum_diff(left, right, ["k"], n_buckets=64)
+    changed, row_diff = checksum_diff(left, right, ["k"])
     diffs = {r["k"]: r["change_type"] for r in row_diff.collect()}
     assert diffs == {7: "removed", 11: "changed", 5000: "added"}
-    # 3 touched keys -> at most 3 of 64 buckets flagged (phase-2 pruning)
+    # 3 touched keys -> at most 3 buckets flagged (phase-2 pruning)
     assert changed.count() <= 3
 
 
 def test_checksum_diff_identical_tables_flag_nothing(spark):
     t = spark.range(0, 500).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
-    changed, row_diff = checksum_diff(t, t, ["k"], n_buckets=32)
+    changed, row_diff = checksum_diff(t, t, ["k"])
     assert changed.count() == 0
     assert row_diff.count() == 0

@@ -1,32 +1,24 @@
 """Row-level diff between a registered query and its DuckDB oracle on
 one fixture dir — the finding-triage companion to check_correctness.
 
-Canonicalizes both sides the same way the gate does (6dp floats,
-stringified rows), then prints rows unique to each side (up to
---limit), so a hash mismatch becomes a visible value delta.
+Canonicalizes both sides with the gate's own ``frame_canon_lines``
+over the same pandas frames the gate hashes (``toPandas()`` and DuckDB
+``.df()``, HUGEINT → float64 included), then prints rows unique to
+each side (up to --limit), so a hash mismatch becomes a visible value
+delta.
 
 Usage: python tools/query_diff.py QUERY --sf-dir /tmp/fuzzdir [--limit 20]
 """
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if math.isinf(v):
-            return "inf" if v > 0 else "-inf"
-        return f"{v:.6f}"
-    return str(v)
+from tools.check_correctness import TABLES, frame_canon_lines  # noqa: E402
 
 
 def main() -> None:
@@ -42,25 +34,20 @@ def main() -> None:
     from htmlentityextraction_spark.session import get_spark
 
     spark = get_spark("query_diff")
-    sdf = entrymod.queries()[args.name](spark, args.sf_dir)
-    cols = sorted(sdf.columns)
-    srows = [tuple(canon(r[c]) for c in cols) for r in sdf.collect()]
+    spdf = entrymod.queries()[args.name](spark, args.sf_dir).toPandas()
+    srows = frame_canon_lines(spdf)
 
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+    for t in TABLES:
         p = os.path.join(args.sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    cur = con.execute(entrymod.oracle_sql()[args.name])
-    ocols = [d[0] for d in cur.description]
-    order = [ocols.index(c) for c in sorted(ocols)]
-    orows = [tuple(canon(row[i]) for i in order) for row in cur.fetchall()]
+    orows = frame_canon_lines(con.execute(entrymod.oracle_sql()[args.name]).df())
 
-    from collections import Counter
     sc, oc = Counter(srows), Counter(orows)
     only_s = list((sc - oc).elements())
     only_o = list((oc - sc).elements())
-    print(f"spark rows={len(srows)} oracle rows={len(orows)} cols={cols}")
+    print(f"spark rows={len(srows)} oracle rows={len(orows)} cols={sorted(spdf.columns)}")
     print(f"only-in-spark: {len(only_s)}  only-in-oracle: {len(only_o)}")
     for tag, rows in (("SPARK", only_s), ("ORACLE", only_o)):
         for r in sorted(rows)[: args.limit]:
