@@ -41,8 +41,22 @@ def finite_measure_sql(expr: str) -> str:
     """DuckDB twin of :func:`finite_measure` for oracle SQL strings."""
     return (
         f"({expr} IS NOT NULL AND NOT isnan({expr})"
-        f" AND {expr} > -1e10 AND {expr} < 1e10)"
+        f" AND {expr} > -{MAX_ABS_MEASURE:g} AND {expr} < {MAX_ABS_MEASURE:g})"
     )
+
+
+def measure_cents(col: Column | str) -> Column:
+    """Exact cents of a measurement: ``floor(v*100 + 0.5)`` as a long,
+    NULL unless :func:`finite_measure` holds (Spark's floor(NaN) is 0
+    and floor(±inf) clamps, so the guard comes first). Sums of cents
+    are exact on both engines where sums of doubles are not."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.when(finite_measure(c), F.floor(c * 100 + F.lit(0.5)).cast("long"))
+
+
+def measure_cents_sql(expr: str) -> str:
+    """DuckDB twin of :func:`measure_cents`."""
+    return f"(CASE WHEN {finite_measure_sql(expr)} THEN CAST(floor({expr} * 100 + 0.5) AS BIGINT) END)"
 
 
 def descretize(cont: Column) -> Column:
@@ -97,6 +111,18 @@ def rel_place_rank(rel_place: Column) -> Column:
     )
 
 
+# The statuses whose rows reach the realtime sink, and the statuses
+# whose selected price is the model's or the pattern's (the rest,
+# bothFailed, select 0.0).
+PASSING = ("modeledPatternEquals", "minorModelPatternConflict", "majorModelPatternConflict")
+_MODEL_PRICED = ("modeledPatternEquals", "minorModelPatternConflict", "patternFailed")
+_PATTERN_PRICED = ("majorModelPatternConflict", "missingModel", "allFalseCandids")
+
+
+def _sql_in(expr: str, values: tuple[str, ...]) -> str:
+    return f"{expr} IN (" + ", ".join(f"'{v}'" for v in values) + ")"
+
+
 def price_status(model_price: Column, updated_price: Column) -> Column:
     """Model-vs-pattern reconciliation status.
 
@@ -141,7 +167,37 @@ def selected_price(status: Column, model_price: Column, updated_price: Column) -
     bothFailed.
     """
     return (
-        F.when(status.isin("modeledPatternEquals", "minorModelPatternConflict", "patternFailed"), model_price)
-        .when(status.isin("majorModelPatternConflict", "missingModel", "allFalseCandids"), updated_price)
+        F.when(status.isin(*_MODEL_PRICED), model_price)
+        .when(status.isin(*_PATTERN_PRICED), updated_price)
         .otherwise(F.lit(0.0))
     )
+
+
+def price_status_sql(model_price: str, updated_price: str) -> str:
+    """DuckDB twin of :func:`price_status`, branch for branch."""
+    pattern_failed = f"(isnan({updated_price}) OR ({updated_price} > -1.0 AND {updated_price} < 1.0))"
+    model_ok = f"NOT ({model_price} = -1.0) AND NOT ({model_price} = -2.0) AND NOT {pattern_failed}"
+    return (
+        f"(CASE WHEN {model_ok} AND abs({model_price} - {updated_price}) < 0.009"
+        " THEN 'modeledPatternEquals'"
+        f" WHEN {model_ok} AND abs({updated_price} - {model_price})"
+        f" / greatest({updated_price}, {model_price}) <= 0.1 THEN 'minorModelPatternConflict'"
+        f" WHEN {model_ok} THEN 'majorModelPatternConflict'"
+        f" WHEN ({model_price} = -1.0 OR {model_price} = -2.0) AND {pattern_failed} THEN 'bothFailed'"
+        f" WHEN {pattern_failed} THEN 'patternFailed'"
+        f" WHEN {model_price} = -2.0 THEN 'missingModel'"
+        " ELSE 'allFalseCandids' END)"
+    )
+
+
+def selected_price_sql(status: str, model_price: str, updated_price: str) -> str:
+    """DuckDB twin of :func:`selected_price`."""
+    return (
+        f"(CASE WHEN {_sql_in(status, _MODEL_PRICED)} THEN {model_price}"
+        f" WHEN {_sql_in(status, _PATTERN_PRICED)} THEN {updated_price} ELSE 0.0 END)"
+    )
+
+
+def passing_sql(status: str) -> str:
+    """SQL predicate: ``status`` is one of :data:`PASSING`."""
+    return f"({_sql_in(status, PASSING)})"

@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 # Bit positions derive from xxhash64(key, seed_i); the salt column
 # makes the k hash functions independent.
 _NUM_HASHES = 5
+# Bit-set size of ``bloom_semi_join`` (8 KiB of bits).
+_SEMI_JOIN_BITS = 1 << 16
 _WORD_COL = "__bloom_word"
 _BITS_COL = "__bloom_bits"
 
@@ -105,12 +107,11 @@ def bloom_semi_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    num_bits: int = 1 << 20,
 ) -> DataFrame:
     """Exact inner join of fact ⋈ dim on the keys, with a Bloom
     pre-filter cutting the fact rows that reach the shuffle. Result
     is identical to the plain join (false positives are removed by
     the exact join; false negatives cannot occur)."""
-    words = bloom_build(dim, dim_key, num_bits)
-    pruned = bloom_prefilter(fact, fact_key, words, num_bits)
+    words = bloom_build(dim, dim_key, _SEMI_JOIN_BITS)
+    pruned = bloom_prefilter(fact, fact_key, words, _SEMI_JOIN_BITS)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], "inner")

@@ -63,6 +63,10 @@ _MAX_RECORDS_PER_FILE = 5_000_000
 _STALE_LOCK_SEC = 600.0
 _LOCK_TIMEOUT_SEC = 5.0
 
+# parquet.block.size of an optimize rewrite: the row group is the unit
+# a pushed-down predicate skips. Read at call time, so tests patch it.
+_ZORDER_ROW_GROUP_BYTES = 256 * 1024
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer published a snapshot between staging and commit;
@@ -561,7 +565,7 @@ class ParquetMergeTable:
         c = F.col(self._phys(m, col))  # predicate on the physical column
         return self._to_logical_df(df.filter(c.between(F.lit(lo), F.lit(hi))), m)
 
-    def optimize(self, zorder_by: list[str], row_group_bytes: int | None = None) -> dict:
+    def optimize(self, zorder_by: list[str]) -> dict:
         """Delta's ``OPTIMIZE ... ZORDER BY``: rewrite EVERY bucket into
         one file with rows ordered by the Morton interleave of the
         ``zorder_by`` columns (at least two, each scaled onto a grid of
@@ -571,9 +575,7 @@ class ParquetMergeTable:
         of the columns skips row groups at scan time (Spark's parquet
         filter pushdown does the skipping — no reader change needed;
         evidence in tests/test_zorder_optimize.py via footer metadata).
-        ``row_group_bytes`` sets ``parquet.block.size`` for the rewrite
-        so row-group granularity (the skipping unit) can be tuned to
-        the scan pattern.
+        Row groups are ``_ZORDER_ROW_GROUP_BYTES`` (the skipping unit).
 
         The rewrite also compacts each bucket to one file and is
         published like any other commit: old snapshots still
@@ -619,10 +621,9 @@ class ParquetMergeTable:
                 .sortWithinPartitions("__z")
                 .drop("__z")
             )
-            writer = df.write.mode("overwrite")
-            if row_group_bytes:
-                writer = writer.option("parquet.block.size", row_group_bytes)
-            writer.parquet(os.path.join(self.path, out_rel))
+            df.write.mode("overwrite").option("parquet.block.size", _ZORDER_ROW_GROUP_BYTES).parquet(
+                os.path.join(self.path, out_rel)
+            )
             entries[b] = out_rel
         if not entries:
             return {"version": m["version"], "compacted": []}

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from htmlentityextraction_spark.functions.pricing import MAX_ABS_MEASURE
+
 # Queries are collected to the driver and shipped in the task closure
 # (the broadcast-dim-join shape). A query batch beyond this cap means
 # the caller wants a pair join / ANN index, not a broadcast scan.
@@ -62,7 +64,7 @@ _KMEANS_ITERS = 25
 # DuckDB-oracle twin of ``valid_vectors`` (interpolate with .format(c=col)).
 VALID_VEC_SQL = (
     "{c} IS NOT NULL AND len({c}) > 0 AND len(list_filter({c},"
-    " x -> x IS NULL OR isnan(x) OR abs(x) >= 1e10)) = 0"
+    f" x -> x IS NULL OR isnan(x) OR abs(x) >= {MAX_ABS_MEASURE:g})) = 0"
 )
 
 
@@ -86,7 +88,7 @@ def valid_vectors(df: DataFrame) -> DataFrame:
         c.isNotNull()
         & (F.size(c) > 0)
         & ~F.exists(
-            c, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) >= F.lit(1e10))
+            c, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) >= F.lit(MAX_ABS_MEASURE))
         )
     )
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators import extraction as ex
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
@@ -52,7 +52,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "price_candidate_extraction",
-    """
+    f"""
     WITH o AS (
         SELECT CAST(o_orderkey AS VARCHAR) AS url,
                CAST(o_orderkey AS VARCHAR) AS k,
@@ -60,7 +60,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
                o_orderkey % 3 AS bucket
         FROM (SELECT o_orderkey, max(o_totalprice) AS o_totalprice
               FROM orders WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
-        WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10
+        WHERE {finite_measure_sql('o_totalprice')}
     )
     SELECT url,
            p2 AS candidate,
@@ -83,7 +83,7 @@ def price_candidate_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "candidate_labeling",
-    """
+    f"""
     WITH o AS (
         SELECT CAST(o_orderkey AS VARCHAR) AS url,
                CAST(o_orderkey AS VARCHAR) AS k,
@@ -92,7 +92,7 @@ def price_candidate_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                o_orderkey % 3 AS bucket, o_orderkey % 2 AS flip
         FROM (SELECT o_orderkey, max(o_totalprice) AS o_totalprice
               FROM orders WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
-        WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10
+        WHERE {finite_measure_sql('o_totalprice')}
     )
     SELECT url, p2 AS candidate,
            CAST(flip = 0 AS BOOLEAN) AS label,

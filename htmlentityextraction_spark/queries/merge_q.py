@@ -25,7 +25,12 @@ from htmlentityextraction_spark.operators.incremental import (
     ParquetMergeTable,
 )
 from htmlentityextraction_spark.functions.keys import valid_id
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import (
+    finite_measure,
+    finite_measure_sql,
+    measure_cents,
+    measure_cents_sql,
+)
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
@@ -50,13 +55,13 @@ def _orders_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "merge_incremental_orders",
-    """
+    f"""
     WITH o AS (SELECT o_orderkey AS k, max(o_totalprice) AS p FROM orders
                WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
     SELECT k AS o_orderkey,
-           CASE WHEN ((((k) % 7) + 7) % 7) = 1 AND (p IS NOT NULL AND NOT isnan(p) AND p > -1e10 AND p < 1e10) THEN floor(p * 1.05 * 100) / 100
+           CASE WHEN ((((k) % 7) + 7) % 7) = 1 AND {finite_measure_sql('p')} THEN floor(p * 1.05 * 100) / 100
                 WHEN ((((k) % 14) + 14) % 14) = 2 THEN 1.0
-                WHEN ((((k) % 7) + 7) % 7) = 3 AND (p IS NOT NULL AND NOT isnan(p) AND p > -1e10 AND p < 1e10) THEN floor(p * 0.9 * 100) / 100
+                WHEN ((((k) % 7) + 7) % 7) = 3 AND {finite_measure_sql('p')} THEN floor(p * 0.9 * 100) / 100
                 ELSE p END AS price
     FROM o WHERE ((((k) % 14) + 14) % 14) <> 9
     UNION ALL
@@ -187,7 +192,7 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mergetable_cdc_changes",
-    """
+    f"""
     WITH o AS (SELECT o_orderkey AS k, max(o_totalprice) AS p FROM orders
                WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
     -- p IS NOT NULL on the derived-update branches: a NULL price
@@ -199,14 +204,14 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT k AS o_orderkey, 'update' AS change_type,
            round(p + 1e-9, 6) AS old_price,
            round(floor(p * 1.05 * 100) / 100 + 1e-9, 6) AS new_price
-    FROM o WHERE ((((k) % 7) + 7) % 7) = 1 AND (p IS NOT NULL AND NOT isnan(p) AND p > -1e10 AND p < 1e10)
+    FROM o WHERE ((((k) % 7) + 7) % 7) = 1 AND {finite_measure_sql('p')}
       AND NOT (floor(p * 1.05 * 100) / 100 = p)
     UNION ALL
     SELECT k, 'update', round(p + 1e-9, 6), 1.0 FROM o WHERE ((((k) % 14) + 14) % 14) = 2
     UNION ALL
     SELECT k, 'update', round(p + 1e-9, 6),
            round(floor(p * 0.9 * 100) / 100 + 1e-9, 6)
-    FROM o WHERE ((((k) % 7) + 7) % 7) = 3 AND (p IS NOT NULL AND NOT isnan(p) AND p > -1e10 AND p < 1e10)
+    FROM o WHERE ((((k) % 7) + 7) % 7) = 3 AND {finite_measure_sql('p')}
       AND NOT (floor(p * 0.9 * 100) / 100 = p)
     UNION ALL
     SELECT k, 'delete', round(p + 1e-9, 6), CAST(NULL AS DOUBLE) FROM o WHERE ((((k) % 14) + 14) % 14) = 9
@@ -235,7 +240,7 @@ def mergetable_cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_rollup_maintenance",
-    """
+    f"""
     WITH final AS (
         SELECT o_orderkey, price FROM (
             WITH o AS (SELECT o_orderkey AS k, max(o_totalprice) AS p FROM orders
@@ -253,7 +258,7 @@ def mergetable_cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT ((((o_orderkey) % 100) + 100) % 100) AS price_group,
            count(*) AS n_orders,
            -- NaN contributes no cents (same as NULL) on both engines
-           CAST(sum(CASE WHEN NOT (price IS NOT NULL AND NOT isnan(price) AND price > -1e10 AND price < 1e10) THEN NULL ELSE CAST(floor(price * 100 + 0.5) AS BIGINT) END) AS BIGINT) AS sum_cents
+           CAST(sum({measure_cents_sql('price')}) AS BIGINT) AS sum_cents
     FROM final GROUP BY price_group
     """,
 )
@@ -268,10 +273,6 @@ def incremental_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     touching the table on every refresh; exact integer sums make the
     algebra safe under any partitioning."""
     tbl = _merged_orders_table(spark, sf_dir)
-    # NaN -> NULL before the floor: Spark's floor(NaN) is silently 0,
-    # so a corrupt price would otherwise contribute 0 cents instead
-    # of nothing (NaN-fuzz aligned)
-    cents = lambda c: F.when(finite_measure(c), F.floor(c * 100 + F.lit(0.5)))  # noqa: E731
     grp = lambda c: F.pmod(c, F.lit(100)).alias("price_group")  # noqa: E731
 
     base = (
@@ -279,7 +280,7 @@ def incremental_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy(grp(F.col("o_orderkey")))
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(cents(F.col("price"))).alias("sum_cents"),
+            F.sum(measure_cents("price")).alias("sum_cents"),
         )
     )
     cdc = tbl.table_changes(1)
@@ -287,8 +288,8 @@ def incremental_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     is_del = F.col("change_type") == "delete"
     d_cnt = F.when(is_ins, 1).when(is_del, -1).otherwise(0)
     d_sum = F.coalesce(
-        F.when(~is_del, cents(F.col("new_price"))), F.lit(0)
-    ) - F.coalesce(F.when(~is_ins, cents(F.col("old_price"))), F.lit(0))
+        F.when(~is_del, measure_cents("new_price")), F.lit(0)
+    ) - F.coalesce(F.when(~is_ins, measure_cents("old_price")), F.lit(0))
     delta = cdc.groupBy(grp(F.col("o_orderkey"))).agg(
         F.sum(d_cnt).alias("d_cnt"), F.sum(d_sum).alias("d_sum")
     )
@@ -309,10 +310,9 @@ def incremental_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "mergetable_zorder_read",
-    """
+    f"""
     SELECT l_partkey, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CASE WHEN NOT (l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10) THEN NULL
-                    ELSE CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END)
+           CAST(sum({measure_cents_sql('l_extendedprice')})
                 AS BIGINT) AS sum_cents
     FROM lineitem
     WHERE l_partkey BETWEEN 40 AND 180 AND l_suppkey BETWEEN 2 AND 8
@@ -336,26 +336,19 @@ def mergetable_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="zorder_tbl_")
     tbl = ParquetMergeTable(spark, path, key_col="rid", num_buckets=4)
     tbl.create(li)
-    tbl.optimize(zorder_by=["l_partkey", "l_suppkey"], row_group_bytes=256 * 1024)
+    tbl.optimize(zorder_by=["l_partkey", "l_suppkey"])
     out = tbl.read().where(
         F.col("l_partkey").between(40, 180) & F.col("l_suppkey").between(2, 8)
     )
     return out.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                finite_measure("l_extendedprice"),
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long"),
-            )
-        ).alias(
-            "sum_cents"
-        ),
+        F.sum(measure_cents("l_extendedprice")).alias("sum_cents"),
     )
 
 
 @register(
     "matview_variance_incremental",
-    """
+    f"""
     WITH final AS (
         SELECT o_orderkey, price FROM (
             WITH o AS (SELECT o_orderkey AS k, max(o_totalprice) AS p FROM orders
@@ -372,9 +365,9 @@ def mergetable_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), agg AS (
         SELECT ((((o_orderkey) % 100) + 100) % 100) AS price_group,
                CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(sum(CASE WHEN NOT (price IS NOT NULL AND NOT isnan(price) AND price > -1e10 AND price < 1e10) THEN NULL ELSE CAST(floor(price * 100 + 0.5) AS BIGINT) END) AS BIGINT) AS s,
-               CAST(sum((CASE WHEN NOT (price IS NOT NULL AND NOT isnan(price) AND price > -1e10 AND price < 1e10) THEN NULL ELSE CAST(floor(price * 100 + 0.5) AS BIGINT) END)
-                        * (CASE WHEN NOT (price IS NOT NULL AND NOT isnan(price) AND price > -1e10 AND price < 1e10) THEN NULL ELSE CAST(floor(price * 100 + 0.5) AS BIGINT) END)) AS BIGINT) AS s2
+               CAST(sum({measure_cents_sql('price')}) AS BIGINT) AS s,
+               CAST(sum({measure_cents_sql('price')}
+                        * {measure_cents_sql('price')}) AS BIGINT) AS s2
         FROM final GROUP BY price_group
     )
     SELECT price_group, n_orders, s AS sum_cents, s2 AS sum_sq_cents FROM agg
@@ -394,9 +387,6 @@ def matview_variance_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond-count/sum statistic. Only |changes| rows are touched per
     refresh."""
     tbl = _merged_orders_table(spark, sf_dir)
-    cents = lambda c: F.when(  # noqa: E731 — NaN cents are NULL, see rollup
-        finite_measure(c), F.floor(c * 100 + F.lit(0.5)).cast("long")
-    )
     grp = lambda c: F.pmod(c, F.lit(100)).alias("price_group")  # noqa: E731
 
     base = (
@@ -404,15 +394,15 @@ def matview_variance_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(grp(F.col("o_orderkey")))
         .agg(
             F.count("*").alias("n"),
-            F.sum(cents(F.col("price"))).alias("s"),
-            F.sum(cents(F.col("price")) * cents(F.col("price"))).alias("s2"),
+            F.sum(measure_cents("price")).alias("s"),
+            F.sum(measure_cents("price") * measure_cents("price")).alias("s2"),
         )
     )
     cdc = tbl.table_changes(1)
     is_ins = F.col("change_type") == "insert"
     is_del = F.col("change_type") == "delete"
-    new_c = cents(F.col("new_price"))
-    old_c = cents(F.col("old_price"))
+    new_c = measure_cents("new_price")
+    old_c = measure_cents("old_price")
     d_n = F.when(is_ins, 1).when(is_del, -1).otherwise(0)
     d_s = F.coalesce(F.when(~is_del, new_c), F.lit(0)) - F.coalesce(
         F.when(~is_ins, old_c), F.lit(0)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from htmlentityextraction_spark.functions.text import get_domain
 from htmlentityextraction_spark.operators import extraction as ex
 from htmlentityextraction_spark.operators import models as md
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
@@ -125,7 +125,7 @@ def _picked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return picked.filter(F.col("max_pred").isNotNull())
 
 
-_ORACLE_BASE = """
+_ORACLE_BASE = f"""
     WITH o AS (
         SELECT o_orderkey AS k,
                'http://d' || (o_orderkey % 8) || '.example.com/p/' || o_orderkey AS url,
@@ -134,7 +134,7 @@ _ORACLE_BASE = """
                (o_orderkey // 16) % 3 AS bucket, (o_orderkey // 8) % 2 AS flip
         FROM (SELECT o_orderkey, max(o_totalprice) AS o_totalprice
               FROM orders WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
-        WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10
+        WHERE {finite_measure_sql('o_totalprice')}
     ), pages AS (SELECT * FROM o WHERE bucket <> 1)
 """
 

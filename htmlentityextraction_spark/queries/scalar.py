@@ -9,8 +9,11 @@ from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.pricing import (
     finite_measure,
+    finite_measure_sql,
     price_status,
+    price_status_sql,
     selected_price,
+    selected_price_sql,
 )
 from htmlentityextraction_spark.functions.text import get_domain, shrink_string, text_only
 from htmlentityextraction_spark.registry import register
@@ -20,13 +23,12 @@ from htmlentityextraction_spark.sources.tables import load_table
 # --- F15: date parse/truncate + daily rollup ---
 @register(
     "date_trunc_daily_events",
-    """
+    f"""
     SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
            count(*) AS n,
-           -- corrupt values (NULL/NaN/|v|>=1e10) are excluded from the
+           -- corrupt values (not finite_measure) are excluded from the
            -- rollup, not from the event count; all-corrupt group -> NULL
-           floor(sum(CASE WHEN value IS NOT NULL AND NOT isnan(value)
-                           AND value > -1e10 AND value < 1e10
+           floor(sum(CASE WHEN {finite_measure_sql('value')}
                           THEN value END) * 100 + 0.5) / 100 AS total_value
     FROM events GROUP BY 1, 2
     """,
@@ -177,7 +179,7 @@ def url_domain_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- F13/F14: status derivation + price reconciliation CASE ---
 @register(
     "price_status_reconcile",
-    """
+    f"""
     WITH msgs AS (
         SELECT l_orderkey AS msg_id,
                CASE WHEN l_orderkey % 11 = 0 THEN -1.0
@@ -191,31 +193,11 @@ def url_domain_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem WHERE l_linenumber = 1
     ), statused AS (
         SELECT msg_id, model_price, updated_price,
-           CASE
-             WHEN model_price <> -1.0 AND model_price <> -2.0
-                  AND NOT (isnan(updated_price) OR (updated_price > -1.0 AND updated_price < 1.0))
-                  AND abs(model_price - updated_price) < 0.009 THEN 'modeledPatternEquals'
-             WHEN model_price <> -1.0 AND model_price <> -2.0
-                  AND NOT (isnan(updated_price) OR (updated_price > -1.0 AND updated_price < 1.0))
-                  AND abs(updated_price - model_price) / greatest(updated_price, model_price) <= 0.1
-                  THEN 'minorModelPatternConflict'
-             WHEN model_price <> -1.0 AND model_price <> -2.0
-                  AND NOT (isnan(updated_price) OR (updated_price > -1.0 AND updated_price < 1.0))
-                  THEN 'majorModelPatternConflict'
-             WHEN (model_price = -1.0 OR model_price = -2.0)
-                  AND (isnan(updated_price) OR (updated_price > -1.0 AND updated_price < 1.0)) THEN 'bothFailed'
-             WHEN (isnan(updated_price) OR (updated_price > -1.0 AND updated_price < 1.0)) THEN 'patternFailed'
-             WHEN model_price = -2.0 THEN 'missingModel'
-             ELSE 'allFalseCandids'
-           END AS issue
+               {price_status_sql('model_price', 'updated_price')} AS issue
         FROM msgs
     )
     SELECT msg_id, issue,
-           round(CASE WHEN issue IN ('modeledPatternEquals', 'minorModelPatternConflict',
-                                     'patternFailed') THEN model_price
-                      WHEN issue IN ('majorModelPatternConflict', 'missingModel',
-                                     'allFalseCandids') THEN updated_price
-                      ELSE 0.0 END + 1e-9, 2) AS selected_price
+           round({selected_price_sql('issue', 'model_price', 'updated_price')} + 1e-9, 2) AS selected_price
     FROM statused
     """,
 )

@@ -9,7 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import (
+    finite_measure,
+    finite_measure_sql,
+    measure_cents,
+    measure_cents_sql,
+)
 from htmlentityextraction_spark.functions.text import (
     json_escape_free_text,
     json_escape_free_text_sql,
@@ -66,13 +71,13 @@ def topk_percent_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "exact_price_percentiles",
-    """
+    f"""
     SELECT l_returnflag,
            round(CAST(quantile_cont(l_extendedprice, 0.25) AS DOUBLE) + 1e-9, 6) AS p25,
            round(CAST(quantile_cont(l_extendedprice, 0.50) AS DOUBLE) + 1e-9, 6) AS p50,
            round(CAST(quantile_cont(l_extendedprice, 0.95) AS DOUBLE) + 1e-9, 6) AS p95
     FROM lineitem
-    WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+    WHERE {finite_measure_sql('l_extendedprice')}
     GROUP BY l_returnflag
     """,
 )
@@ -104,7 +109,7 @@ def exact_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                          CAST(floor(p_retailprice * 0.9) AS BIGINT) || '.00</sale_price>'
                     ELSE '' END || '</item>' AS xml
         FROM part
-        WHERE p_retailprice IS NOT NULL AND NOT isnan(p_retailprice) AND p_retailprice > -1e10 AND p_retailprice < 1e10
+        WHERE {finite_measure_sql('p_retailprice')}
     )
     SELECT p_partkey,
            regexp_extract(xml, '<gtin>([^<]*)</gtin>', 1) AS gtin,
@@ -220,18 +225,30 @@ def hll_distinct_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFra
     return agg.select("supplier", "exact_parts", within.alias("within_5pct"))
 
 
+# the rank-tolerance contract of approx_percentile_accuracy needs REAL
+# slack: approx returns an ELEMENT while the exact bounds interpolate,
+# so at eps*n ~ 1.4 (a ~700-member group) the band spans barely one
+# element and the booleans flap — the r11 full-interaction sweep at
+# sf0.1 created exactly such groups (pool-string junk flags) and two
+# failed. n >= 1750 gives eps*n >= 3.5 element gaps, twice the
+# sketch's n/1000 rank-error bound, admits every real flag of the
+# smallest fixture (1,962-2,070 rows each at sf0.001), and keeps
+# fuzz-sized junk flags out at every sweep rate in use (the largest
+# seen: 1,276 rows, text poison at rate 0.03 on sf0.1).
+_PERCENTILE_MIN_ROWS = 1750
+
+
 @register(
     "approx_percentile_accuracy",
-    """
+    f"""
     SELECT l_returnflag AS flag,
            round(quantile_cont(l_extendedprice, 0.5), 6) AS exact_p50,
            true AS ok_p25, true AS ok_p50, true AS ok_p90
     FROM lineitem
     WHERE l_returnflag IS NOT NULL
-      AND l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice)
-      AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+      AND {finite_measure_sql('l_extendedprice')}
     GROUP BY l_returnflag
-    HAVING count(*) >= 2500
+    HAVING count(*) >= {_PERCENTILE_MIN_ROWS}
     """,
 )
 def approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,18 +286,10 @@ def approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (0.9 - eps, "p90_lo"), (0.9 + eps, "p90_hi"),
                      (0.5, "p50"))
     ]
-    # the rank-tolerance contract needs REAL slack: approx returns an
-    # ELEMENT while the exact bounds interpolate, so at eps*n ~ 1.4
-    # (a ~700-member group) the band spans barely one element and the
-    # booleans flap — the r11 full-interaction sweep at sf0.1 created
-    # exactly such groups (pool-string junk flags) and two failed.
-    # n >= 2500 gives eps*n >= 5 element gaps, comfortably above the
-    # sketch's n/1000 rank-error bound, and keeps fuzz-sized junk
-    # flags out at every sweep rate in use.
     agg = (
         li.groupBy(F.col("l_returnflag").alias("flag"))
         .agg(F.count(F.lit(1)).alias("__n"), *aggs)
-        .filter(F.col("__n") >= 2500)
+        .filter(F.col("__n") >= _PERCENTILE_MIN_ROWS)
     )
     ok = lambda n: (F.col(f"ap_{n}") >= F.col(f"ex_{n}_lo")) & (  # noqa: E731
         F.col(f"ap_{n}") <= F.col(f"ex_{n}_hi")
@@ -294,12 +303,12 @@ def approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corr_covar_qty_price",
-    """
+    f"""
     WITH b AS (
         SELECT l_returnflag AS flag,
-               (CASE WHEN NOT (l_quantity IS NOT NULL AND NOT isnan(l_quantity) AND l_quantity > -1e10 AND l_quantity < 1e10) THEN NULL
+               (CASE WHEN NOT {finite_measure_sql('l_quantity')} THEN NULL
                 ELSE CAST(l_quantity AS BIGINT) END) AS x,
-               (CASE WHEN NOT (l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10) THEN NULL ELSE CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END) AS y
+               {measure_cents_sql('l_extendedprice')} AS y
         FROM lineitem
     ), m AS (
         SELECT flag, count(*)::BIGINT AS n,
@@ -336,7 +345,7 @@ def corr_covar_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_returnflag").alias("flag"),
         F.when(finite_measure("l_quantity"), F.col("l_quantity").cast("long")).alias("x"),
-        F.when(finite_measure("l_extendedprice"), F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))).alias("y"),
+        measure_cents("l_extendedprice").alias("y"),
     )
     m = b.groupBy("flag").agg(
         F.count("*").alias("n"),
@@ -362,14 +371,14 @@ def corr_covar_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mode_discount_per_flag",
-    """
+    f"""
     SELECT flag, discount_cents, n_obs FROM (
         SELECT l_returnflag AS flag,
-               (CASE WHEN NOT (l_discount IS NOT NULL AND NOT isnan(l_discount) AND l_discount > -1e10 AND l_discount < 1e10) THEN NULL ELSE CAST(floor(l_discount * 100 + 0.5) AS BIGINT) END) AS discount_cents,
+               {measure_cents_sql('l_discount')} AS discount_cents,
                count(*) AS n_obs,
                row_number() OVER (PARTITION BY l_returnflag
                                   ORDER BY count(*) DESC,
-                                           (CASE WHEN NOT (l_discount IS NOT NULL AND NOT isnan(l_discount) AND l_discount > -1e10 AND l_discount < 1e10) THEN NULL ELSE CAST(floor(l_discount * 100 + 0.5) AS BIGINT) END))
+                                           {measure_cents_sql('l_discount')})
                    AS rn
         FROM lineitem GROUP BY 1, 2
     ) WHERE rn = 1
@@ -384,7 +393,7 @@ def mode_discount_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         li.select(
             F.col("l_returnflag").alias("flag"),
-            F.when(finite_measure("l_discount"), F.floor(F.col("l_discount") * 100 + F.lit(0.5))).alias("discount_cents"),
+            measure_cents("l_discount").alias("discount_cents"),
         )
         .groupBy("flag", "discount_cents")
         .agg(F.count("*").alias("n_obs"))
@@ -628,12 +637,12 @@ def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ols_trend_qty_price",
-    """
+    f"""
     WITH b AS (
         SELECT l_returnflag AS flag,
-               (CASE WHEN NOT (l_quantity IS NOT NULL AND NOT isnan(l_quantity) AND l_quantity > -1e10 AND l_quantity < 1e10) THEN NULL
+               (CASE WHEN NOT {finite_measure_sql('l_quantity')} THEN NULL
                 ELSE CAST(l_quantity AS BIGINT) END) AS x,
-               (CASE WHEN NOT (l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10) THEN NULL ELSE CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) END) AS y
+               {measure_cents_sql('l_extendedprice')} AS y
         FROM lineitem
     ), m AS (
         SELECT flag, count(*)::BIGINT AS n,
@@ -669,7 +678,7 @@ def ols_trend_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select(
         F.col("l_returnflag").alias("flag"),
         F.when(finite_measure("l_quantity"), F.col("l_quantity").cast("long")).alias("x"),
-        F.when(finite_measure("l_extendedprice"), F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))).alias("y"),
+        measure_cents("l_extendedprice").alias("y"),
     )
     m = b.groupBy("flag").agg(
         F.count("*").alias("n"),
@@ -697,10 +706,10 @@ def ols_trend_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "seasonality_dow_profile",
-    """
+    f"""
     SELECT CAST(EXTRACT(dow FROM ts) AS BIGINT) AS dow, event_type,
            count(*) AS n_events,
-           CAST(sum((CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END)) AS BIGINT) AS sum_cents
+           CAST(sum({measure_cents_sql('value')}) AS BIGINT) AS sum_cents
     FROM events GROUP BY dow, event_type
     """,
 )
@@ -715,15 +724,15 @@ def seasonality_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.dayofweek("ts") - 1).cast("long").alias("dow"), "event_type"
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.when(finite_measure("value"), F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))).alias("sum_cents"),
+        F.sum(measure_cents("value")).alias("sum_cents"),
     )
 
 
 @register(
     "multiformat_source_parity",
-    """
+    f"""
     SELECT fmt, count(*) AS n_rows,
-           CAST(sum((CASE WHEN NOT (o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10) THEN NULL ELSE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END)) AS BIGINT)
+           CAST(sum({measure_cents_sql('o_totalprice')}) AS BIGINT)
                AS sum_cents,
            count(DISTINCT o_orderstatus) AS n_statuses
     FROM orders
@@ -774,9 +783,7 @@ def multiformat_source_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.agg(
                 F.lit(fmt).alias("fmt"),
                 F.count("*").alias("n_rows"),
-                F.sum(F.when(finite_measure("o_totalprice"), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))).alias(
-                    "sum_cents"
-                ),
+                F.sum(measure_cents("o_totalprice")).alias("sum_cents"),
                 F.countDistinct("o_orderstatus").alias("n_statuses"),
             )
         )
@@ -896,7 +903,7 @@ def revenue_contribution_by_nation(spark: SparkSession, sf_dir: str) -> DataFram
                     ELSE '' END ||
                ', "tags": ["t0", "t' || p_partkey % 3 || '"]}}' AS js
         FROM part
-        WHERE p_retailprice IS NOT NULL AND NOT isnan(p_retailprice) AND p_retailprice > -1e10 AND p_retailprice < 1e10
+        WHERE {finite_measure_sql('p_retailprice')}
     )
     SELECT p_partkey,
            CAST(json_extract(js, '$.id') AS BIGINT) AS id,
@@ -955,13 +962,13 @@ def variant_semistructured_extraction(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "winsorized_price_stats",
-    """
+    f"""
     WITH cuts AS (
         SELECT l_returnflag AS flag,
                CAST(quantile_cont(l_extendedprice, 0.01) AS DOUBLE) AS lo,
                CAST(quantile_cont(l_extendedprice, 0.99) AS DOUBLE) AS hi
         FROM lineitem
-        WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+        WHERE {finite_measure_sql('l_extendedprice')}
         GROUP BY flag
     )
     SELECT b.l_returnflag AS flag, count(*) AS n_rows,
@@ -973,7 +980,7 @@ def variant_semistructured_extraction(spark: SparkSession, sf_dir: str) -> DataF
                     ELSE b.l_extendedprice END * 100 + 0.5) AS BIGINT)) AS BIGINT)
                AS winsorized_sum_cents
     FROM (SELECT * FROM lineitem
-          WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10) b JOIN cuts c ON b.l_returnflag = c.flag
+          WHERE {finite_measure_sql('l_extendedprice')}) b JOIN cuts c ON b.l_returnflag = c.flag
     GROUP BY b.l_returnflag
     """,
 )

@@ -14,6 +14,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.functions.pricing import (
+    finite_measure_sql,
+    price_status_sql,
+    selected_price_sql,
+)
 from htmlentityextraction_spark.queries.ml import fit_once, model_pages
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.streaming import serve
@@ -29,7 +34,7 @@ def _page_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_serve_pipeline",
-    """
+    f"""
     WITH o AS (
         SELECT 'http://d' || (o_orderkey % 8) || '.example.com/p/' || o_orderkey AS url,
                'd' || (o_orderkey % 8) || '.example.com' AS domain,
@@ -37,7 +42,7 @@ def _page_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
                (o_orderkey // 16) % 3 AS bucket, (o_orderkey // 8) % 2 AS flip
         FROM (SELECT o_orderkey, max(o_totalprice) AS o_totalprice
               FROM orders WHERE o_orderkey IS NOT NULL GROUP BY o_orderkey)
-        WHERE o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10
+        WHERE {finite_measure_sql('o_totalprice')}
     )
     , m AS (
         SELECT url, domain,
@@ -45,35 +50,14 @@ def _page_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN flip = 0 THEN p2 ELSE p2 + 1.0 END AS pattern_price
         FROM o
     ), s AS (
-        -- full price_status truth table (functions/pricing.py):
         -- a planted price inside (-1, 1) (floor(-0.0/subnormal).99
-        -- = 0.99) hits the reference's toInt==0 patternFailed branch
+        -- = 0.99) hits the reference's toInt==0 pattern-failed branch
         SELECT url, domain, model_price, pattern_price,
-               CASE WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-                         AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-                         AND abs(model_price - pattern_price) < 0.009 THEN 'modeledPatternEquals'
-                    WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-                         AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-                         AND abs(pattern_price - model_price) / greatest(pattern_price, model_price) <= 0.1
-                         THEN 'minorModelPatternConflict'
-                    WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-                         AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-                         THEN 'majorModelPatternConflict'
-                    WHEN (model_price = -1.0 OR model_price = -2.0)
-                         AND (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-                         THEN 'bothFailed'
-                    WHEN isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0)
-                         THEN 'patternFailed'
-                    WHEN model_price = -2.0 THEN 'missingModel'
-                    ELSE 'allFalseCandids' END AS status
+               {price_status_sql('model_price', 'pattern_price')} AS status
         FROM m
     )
     SELECT url, domain, model_price, pattern_price, status,
-           CASE WHEN status IN ('modeledPatternEquals', 'minorModelPatternConflict',
-                                'patternFailed') THEN model_price
-                WHEN status IN ('majorModelPatternConflict', 'missingModel',
-                                'allFalseCandids') THEN pattern_price
-                ELSE 0.0 END AS final_price
+           {selected_price_sql('status', 'model_price', 'pattern_price')} AS final_price
     FROM s
     """,
 )

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.operators import skew
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.temporal import valid_event_time
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
@@ -47,7 +47,7 @@ _SESS_SQL = """
 
 @register(
     "salted_skew_group_stats",
-    """
+    f"""
     SELECT l_returnflag,
            count(l_extendedprice) AS n,
            floor(sum(l_extendedprice) * 100 + 0.5) / 100 AS total,
@@ -55,8 +55,7 @@ _SESS_SQL = """
            min(l_extendedprice) AS vmin,
            max(l_extendedprice) AS vmax
     FROM lineitem
-    WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice)
-      AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+    WHERE {finite_measure_sql('l_extendedprice')}
     GROUP BY l_returnflag
     """,
 )

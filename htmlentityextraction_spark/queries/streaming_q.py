@@ -13,29 +13,18 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import (
+    finite_measure_sql,
+    measure_cents,
+    measure_cents_sql,
+    price_status_sql,
+    selected_price_sql,
+    passing_sql,
+)
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 from htmlentityextraction_spark.streaming import pipeline as sp
-
-# Shared status CASE for the oracles (mirror of functions.pricing).
-_STATUS_SQL = """
-    CASE WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-              AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-              AND abs(model_price - pattern_price) < 0.009 THEN 'modeledPatternEquals'
-         WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-              AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0))
-              AND abs(pattern_price - model_price) / greatest(pattern_price, model_price) <= 0.1
-              THEN 'minorModelPatternConflict'
-         WHEN NOT (model_price = -1.0) AND NOT (model_price = -2.0)
-              AND NOT (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0)) THEN 'majorModelPatternConflict'
-         WHEN (model_price = -1.0 OR model_price = -2.0)
-              AND (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0)) THEN 'bothFailed'
-         WHEN (isnan(pattern_price) OR (pattern_price > -1.0 AND pattern_price < 1.0)) THEN 'patternFailed'
-         WHEN model_price = -2.0 THEN 'missingModel'
-         ELSE 'allFalseCandids' END
-"""
 
 _ENRICH_SQL = f"""
     WITH base AS (
@@ -45,20 +34,16 @@ _ENRICH_SQL = f"""
                END AS props_k,
                CASE WHEN event_id % 7 = 0 THEN -1.0
                     WHEN event_id % 11 = 0 THEN -2.0
-                    WHEN event_id % 3 = 0 AND (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN floor(value * 1.05 * 100) / 100
+                    WHEN event_id % 3 = 0 AND {finite_measure_sql('value')} THEN floor(value * 1.05 * 100) / 100
                     ELSE value END AS model_price,
                CASE WHEN event_id % 5 = 0 THEN 0.0 ELSE value END AS pattern_price
         FROM events
     ), st AS (
-        SELECT *, {_STATUS_SQL} AS status FROM base
+        SELECT *, {price_status_sql('model_price', 'pattern_price')} AS status FROM base
     )
     SELECT event_id, ts, user_id, event_type, value, props_k,
            model_price, pattern_price, status,
-           CASE WHEN status IN ('modeledPatternEquals','minorModelPatternConflict','patternFailed')
-                THEN model_price
-                WHEN status IN ('majorModelPatternConflict','missingModel','allFalseCandids')
-                THEN pattern_price
-                ELSE 0.0 END AS final_price
+           {selected_price_sql('status', 'model_price', 'pattern_price')} AS final_price
     FROM st
 """
 
@@ -81,10 +66,10 @@ def stream_enrich_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'historical' AS sink, count(*) AS n FROM enr
     UNION ALL
     SELECT 'realtime', count(*) FROM enr
-    WHERE status IN ('modeledPatternEquals','minorModelPatternConflict','majorModelPatternConflict')
+    WHERE {passing_sql('status')}
     UNION ALL
     SELECT 'logs', count(*) FROM enr
-    WHERE status NOT IN ('modeledPatternEquals','minorModelPatternConflict','majorModelPatternConflict')
+    WHERE NOT {passing_sql('status')}
     """,
 )
 def stream_multiplex_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,11 +240,10 @@ def stream_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "stream_merge_upsert_per_user",
-    """
+    f"""
     SELECT user_id,
            count(*) AS n_events,
-           CAST(sum(CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL
-                    ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END) AS BIGINT)
+           CAST(sum({measure_cents_sql('value')}) AS BIGINT)
                AS sum_cents,
            epoch_us(max(ts)) AS last_us
     -- valid_id: the merge-table key is an identity — a NULL user id
@@ -300,16 +284,14 @@ def stream_merge_upsert_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_bloom_prefilter_route",
-    """
+    f"""
     WITH vip AS (
         SELECT user_id,
-               CAST(sum(CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL
-                        ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END) AS BIGINT)
+               CAST(sum({measure_cents_sql('value')}) AS BIGINT)
                    AS spend_cents
         FROM events WHERE event_type = 'purchase'
         GROUP BY user_id
-        HAVING sum(CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL
-                   ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END) >= 75000
+        HAVING sum({measure_cents_sql('value')}) >= 75000
     )
     SELECT e.event_id, e.user_id, vip.spend_cents
     FROM events e JOIN vip ON e.user_id = vip.user_id
@@ -335,16 +317,7 @@ def stream_bloom_prefilter_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     vip = (
         ev.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    finite_measure("value"),
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"),
-                )
-            ).alias(
-                "spend_cents"
-            )
-        )
+        .agg(F.sum(measure_cents("value")).alias("spend_cents"))
         .where(F.col("spend_cents") >= 75000)
     )
     # build once, reuse across micro-batches. localCheckpoint, not

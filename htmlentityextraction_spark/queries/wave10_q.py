@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.operators.similarity import (
     VALID_VEC_SQL,
     valid_vectors,
@@ -69,11 +69,11 @@ def embedding_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "psi_value_drift",
-    """
+    f"""
     WITH b AS (
         SELECT event_type,
                ts < TIMESTAMP '2024-01-16 00:00:00' AS is_ref,
-               (CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL
+               (CASE WHEN NOT {finite_measure_sql('value')} THEN NULL
                 ELSE least(CAST(floor(value / 50) AS BIGINT), 9) END) AS bin
         FROM events
     ), c AS (

@@ -13,19 +13,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import (
+    MAX_ABS_MEASURE,
+    finite_measure,
+    finite_measure_sql,
+)
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
 
 @register(
     "benford_first_digit_audit",
-    """
+    f"""
     WITH d AS (
         SELECT CAST(floor(o_totalprice / power(10, floor(log10(o_totalprice))))
                     AS BIGINT) AS digit
         FROM orders WHERE o_totalprice >= 0.01 AND NOT isnan(o_totalprice)
-          AND o_totalprice < 1e10
+          AND o_totalprice < {MAX_ABS_MEASURE:g}
     ), c AS (
         SELECT digit, CAST(count(*) AS BIGINT) AS n_obs FROM d GROUP BY digit
     ), t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS tot FROM c)
@@ -53,7 +57,7 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no meaning in a price feed (extreme-fuzz aligned)
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_totalprice") >= 0.01) & ~F.isnan("o_totalprice")
-        & (F.col("o_totalprice") < 1e10)
+        & (F.col("o_totalprice") < MAX_ABS_MEASURE)
     )
     digit = F.floor(
         F.col("o_totalprice") / F.pow(F.lit(10.0), F.floor(F.log10("o_totalprice")))

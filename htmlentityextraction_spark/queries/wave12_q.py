@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
@@ -97,14 +97,14 @@ def ks_two_sample_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "theil_sen_price_trend",
-    """
+    f"""
     WITH obs AS (
         SELECT l_partkey AS prodid,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00', l_shipdate) AS d,
                l_extendedprice AS p,
                l_orderkey, l_linenumber
         FROM lineitem WHERE l_partkey % 20 = 3
-          AND l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+          AND {finite_measure_sql('l_extendedprice')}
     ), pairs AS (
         SELECT a.prodid, (b.p - a.p) / (b.d - a.d) AS slope
         FROM obs a JOIN obs b

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.queries.llmdata import _FT
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import measure_cents, measure_cents_sql
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
@@ -190,11 +190,10 @@ def sql_lateral_topn_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "pareto_revenue_concentration",
-    """
+    f"""
     WITH r AS (
         SELECT o_custkey,
-               sum(CASE WHEN NOT (o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10) THEN NULL
-                   ELSE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END) AS cents
+               sum({measure_cents_sql('o_totalprice')}) AS cents
         FROM orders GROUP BY o_custkey
     ), t AS (SELECT CAST(sum(cents) AS BIGINT) AS tot, CAST(count(*) AS BIGINT) AS n FROM r),
     c AS (
@@ -225,12 +224,7 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar broadcast — no iteration, no collect."""
     orders = load_table(spark, sf_dir, "orders")
     r = orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.when(
-                finite_measure("o_totalprice"),
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"),
-            )
-        ).alias("cents")
+        F.sum(measure_cents("o_totalprice")).alias("cents")
     )
     t = r.agg(F.sum("cents").alias("tot"), F.count(F.lit(1)).alias("n"))
     c = r.withColumn("cum", F.sum("cents").over(

@@ -9,7 +9,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.keys import pmod_sql, valid_id
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import (
+    finite_measure,
+    finite_measure_sql,
+    measure_cents,
+    measure_cents_sql,
+)
 from htmlentityextraction_spark.functions.temporal import valid_date_axis
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
@@ -154,15 +159,13 @@ def match_recognize_lite_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ewma_control_chart",
-    """
+    f"""
     WITH obs AS (
         SELECT l_partkey AS prodid, l_suppkey AS store, l_extendedprice AS p,
                row_number() OVER (PARTITION BY l_partkey, l_suppkey
                                   ORDER BY l_shipdate, l_orderkey, l_linenumber) AS t
         FROM lineitem
-        WHERE l_partkey % 25 = 7 AND l_extendedprice IS NOT NULL
-          AND NOT isnan(l_extendedprice)
-          AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+        WHERE l_partkey % 25 = 7 AND {finite_measure_sql('l_extendedprice')}
           AND l_shipdate >= TIMESTAMP '1990-01-01' AND l_shipdate < TIMESTAMP '2100-01-01'
     ), stats AS (
         SELECT prodid, store, stddev_pop(p) AS sigma
@@ -257,14 +260,13 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_median_price_per_flag",
-    """
+    f"""
     WITH c AS (
         SELECT l_returnflag AS flag, l_extendedprice AS p,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS wt
         FROM lineitem
-        WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
-          AND (l_quantity IS NULL OR (NOT isnan(l_quantity)
-               AND l_quantity > -1e10 AND l_quantity < 1e10))
+        WHERE {finite_measure_sql('l_extendedprice')}
+          AND (l_quantity IS NULL OR {finite_measure_sql('l_quantity')})
         GROUP BY l_returnflag, l_extendedprice
     ), t AS (
         SELECT flag, CAST(sum(wt) AS BIGINT) AS tot FROM c GROUP BY flag
@@ -315,9 +317,9 @@ def weighted_median_price_per_flag(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "gini_coefficient_revenue",
-    """
+    f"""
     WITH r AS (
-        SELECT o_custkey, CAST(sum((CASE WHEN NOT (o_totalprice IS NOT NULL AND NOT isnan(o_totalprice) AND o_totalprice > -1e10 AND o_totalprice < 1e10) THEN NULL ELSE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) END)) AS BIGINT) AS cents
+        SELECT o_custkey, CAST(sum({measure_cents_sql('o_totalprice')}) AS BIGINT) AS cents
         FROM orders GROUP BY o_custkey
     ), rk AS (
         SELECT cents, row_number() OVER (ORDER BY cents, o_custkey) AS i FROM r
@@ -343,7 +345,7 @@ def gini_coefficient_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer rollup does)."""
     orders = load_table(spark, sf_dir, "orders")
     r = orders.groupBy("o_custkey").agg(
-        F.sum(F.when(finite_measure("o_totalprice"), F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))).alias("cents")
+        F.sum(measure_cents("o_totalprice")).alias("cents")
     )
     rk = r.select(
         "cents",
@@ -368,10 +370,10 @@ def gini_coefficient_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "herfindahl_supplier_concentration",
-    """
+    f"""
     WITH s AS (
         SELECT s.s_nationkey AS nation, l.l_suppkey AS supp,
-               CAST(sum((CASE WHEN l.l_extendedprice IS NOT NULL AND NOT isnan(l.l_extendedprice) AND l.l_extendedprice > -1e10 AND l.l_extendedprice < 1e10 THEN CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) END)) AS BIGINT) AS cents
+               CAST(sum({measure_cents_sql('l.l_extendedprice')}) AS BIGINT) AS cents
         FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
         GROUP BY s.s_nationkey, l.l_suppkey
     ), t AS (
@@ -397,7 +399,7 @@ def herfindahl_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataF
         li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"])
         .groupBy(F.col("s_nationkey").alias("nation"), F.col("l_suppkey").alias("supp"))
         .agg(
-            F.sum(F.when(finite_measure("l_extendedprice"), F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long"))).alias("cents")
+            F.sum(measure_cents("l_extendedprice")).alias("cents")
         )
     )
     t = s.groupBy("nation").agg(
@@ -417,7 +419,7 @@ def herfindahl_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "cohort_ltv_curve",
-    """
+    f"""
     WITH su AS (
         SELECT user_id,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00',
@@ -427,7 +429,7 @@ def herfindahl_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataF
         SELECT e.user_id,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00',
                          date_trunc('day', e.ts)) - su.cohort_d AS age_d,
-               (CASE WHEN e.value IS NOT NULL AND NOT isnan(e.value) AND e.value > -1e10 AND e.value < 1e10 THEN CAST(floor(e.value * 100 + 0.5) AS BIGINT) END) AS cents
+               {measure_cents_sql('e.value')} AS cents
         FROM events e JOIN su ON su.user_id = e.user_id
         WHERE e.event_type = 'purchase'
           AND date_diff('day', TIMESTAMP '1970-01-01 00:00:00',
@@ -473,7 +475,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id", "cohort_d",
             (day(F.col("ts")) - F.col("cohort_d")).alias("age_d"),
-            F.when(finite_measure("value"), F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("cents"),
+            measure_cents("value").alias("cents"),
         )
     )
     sz = su.groupBy("cohort_d").agg(F.count(F.lit(1)).alias("cohort_users"))
@@ -498,12 +500,12 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "forecast_backtest_daily",
-    """
+    f"""
     WITH daily AS (
         SELECT event_type,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00', date_trunc('day', ts)) AS d,
                avg(value) AS v
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY 1, 2
     ), preds AS (
         SELECT a.event_type, a.d, a.v,
@@ -807,12 +809,12 @@ def fulfillment_lead_time_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "seasonal_decomposition_daily",
-    """
+    f"""
     WITH daily AS (
         SELECT event_type,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00', date_trunc('day', ts)) AS d,
                avg(value) AS v
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY 1, 2
     ), tr AS (
         SELECT event_type, d, v,
@@ -878,7 +880,7 @@ def seasonal_decomposition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rfm_customer_segments",
-    """
+    f"""
     WITH mx AS (
         SELECT max(date_diff('day', TIMESTAMP '1970-01-01 00:00:00',
                              date_trunc('day', ts))) AS horizon
@@ -888,7 +890,7 @@ def seasonal_decomposition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(mx.horizon - max(date_diff('day', TIMESTAMP '1970-01-01 00:00:00',
                                                date_trunc('day', ts))) AS BIGINT) AS recency_days,
                CAST(count(*) AS BIGINT) AS frequency,
-               CAST(sum((CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END)) AS BIGINT) AS monetary_cents
+               CAST(sum({measure_cents_sql('value')}) AS BIGINT) AS monetary_cents
         FROM events CROSS JOIN mx
         -- valid_id: RFM is per-customer; a NULL id is not a customer,
         -- and as an ntile tie-break it orders NULLS FIRST in Spark vs
@@ -921,9 +923,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(day).alias("last_d"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.when(finite_measure("value"), F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))).alias(
-                "monetary_cents"
-            ),
+            F.sum(measure_cents("value")).alias("monetary_cents"),
         )
         .select(
             "user_id",
@@ -950,7 +950,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                value
         FROM events WHERE event_type = 'purchase'
           AND user_id IS NOT NULL
-          AND value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+          AND {fv}
     ), m AS (
         SELECT treated, post, CAST(count(*) AS BIGINT) AS n,
                avg(value) AS mean_value
@@ -963,7 +963,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND NOT cp.treated AND cp.post AND NOT cb.treated AND NOT cb.post)
                  + 1e-9, 6) AS did_estimate
     FROM m
-    """.format(p2=pmod_sql("user_id", 2)),
+    """.format(p2=pmod_sql("user_id", 2), fv=finite_measure_sql("value")),
 )
 def did_aa_experiment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences machinery validated as an A/A test:
@@ -1007,12 +1007,12 @@ def did_aa_experiment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jackknife_se_daily_mean",
-    """
+    f"""
     WITH daily AS (
         SELECT event_type,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00', date_trunc('day', ts)) AS d,
                avg(value) AS v
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY 1, 2
     ), s AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n,

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.keys import pmod_sql, valid_id, valid_id_sql
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
@@ -92,8 +92,7 @@ _UID_PARITY = pmod_sql("user_id", 2)
                avg(CASE WHEN ts <  TIMESTAMP '{_CUT}' THEN value END) AS x,
                avg(CASE WHEN ts >= TIMESTAMP '{_CUT}' THEN value END) AS y
         FROM events WHERE user_id IS NOT NULL
-          AND value IS NOT NULL AND NOT isnan(value)
-          AND value > -1e10 AND value < 1e10 GROUP BY user_id
+          AND {finite_measure_sql('value')} GROUP BY user_id
     ), both_periods AS (
         SELECT * FROM per_user WHERE x IS NOT NULL AND y IS NOT NULL
     ), pooled AS (
@@ -257,7 +256,7 @@ _N_BOOT = 200
     WITH per_user AS (
         SELECT event_type, user_id,
                sum(value) AS su, CAST(count(*) AS BIGINT) AS cu
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY event_type, user_id
     ), reps AS (
         SELECT p.event_type, r.r,
@@ -361,13 +360,13 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "holt_linear_forecast_backtest",
-    """
+    f"""
     WITH RECURSIVE daily AS (
         -- a day whose every value is NULL is a MISSING observation,
         -- not a zero: it must not enter the fold (one NULL level
         -- poisons every subsequent Holt step) nor the scoring join
         SELECT event_type, date_trunc('day', ts) AS d, avg(value) AS v
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY 1, 2
         HAVING avg(value) IS NOT NULL
     ), bounds AS (

@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
+from htmlentityextraction_spark.functions.pricing import measure_cents, measure_cents_sql
 from htmlentityextraction_spark.functions.temporal import epoch_micros
 from htmlentityextraction_spark.operators.asof import asof_join
 from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
@@ -243,8 +243,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c.c_nationkey AS nk,
                CAST(year(o.o_orderdate) * 100 + month(o.o_orderdate) AS BIGINT)
                    AS yyyymm,
-               (CASE WHEN {fp}
-                THEN CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) END) AS cents
+               {cents} AS cents
         -- c_nationkey IS NOT NULL: a customer without a nation has
         -- no (nation, month) cell — and a NULL merge key would split
         -- base/delta into two unmergeable rows (keyfuzz r12). BIGINT
@@ -256,7 +255,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(nk AS BIGINT) AS c_nationkey, yyyymm,
            count(*) AS n_orders, CAST(sum(cents) AS BIGINT) AS sum_cents
     FROM j GROUP BY 1, 2, 3
-    """.format(fp=finite_measure_sql("o.o_totalprice"),
+    """.format(cents=measure_cents_sql("o.o_totalprice"),
                vt=valid_date_axis_sql("o.o_orderdate")),
 )
 def matview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,10 +290,7 @@ def matview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             j.select(
                 F.col("c_nationkey").cast("long").alias("c_nationkey"),
                 yyyymm.alias("yyyymm"),
-                F.when(
-                    finite_measure("o_totalprice"),
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"),
-                ).alias("cents"),
+                measure_cents("o_totalprice").alias("cents"),
             )
             .groupBy("c_nationkey", "yyyymm")
             .agg(F.count("*").alias("n_orders"), F.sum("cents").alias("sum_cents"))

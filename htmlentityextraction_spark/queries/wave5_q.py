@@ -36,7 +36,7 @@ from htmlentityextraction_spark.operators.survivorship import (
     latest_nonnull,
 )
 from htmlentityextraction_spark.operators.timeseries import gap_fill_forward
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.temporal import valid_date_axis
 from htmlentityextraction_spark.functions.text import WS_CLASS
 from htmlentityextraction_spark.functions.keys import valid_id
@@ -46,13 +46,11 @@ from htmlentityextraction_spark.sources.tables import load_table
 
 @register(
     "skyline_size_price_frontier",
-    """
+    f"""
     WITH m AS (
         SELECT p_size, max(p_retailprice) AS best_price
         FROM part
-        WHERE p_size IS NOT NULL AND p_retailprice IS NOT NULL
-          AND NOT isnan(p_retailprice)
-          AND p_retailprice > -1e10 AND p_retailprice < 1e10
+        WHERE p_size IS NOT NULL AND {finite_measure_sql('p_retailprice')}
         GROUP BY p_size)
     SELECT p_size, best_price FROM m a
     WHERE NOT EXISTS (
@@ -205,13 +203,13 @@ def golden_user_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gap_fill_user_purchase_value",
-    """
+    f"""
     WITH daily AS (
         SELECT user_id, CAST(ts AS DATE) AS day,
                sum(value) AS day_value
         FROM events WHERE event_type = 'purchase'
           AND ts >= TIMESTAMP '2000-01-01 00:00:00' AND ts < TIMESTAMP '2100-01-01 00:00:00'
-          AND value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10
+          AND {finite_measure_sql('value')}
         GROUP BY user_id, CAST(ts AS DATE)),
     spine AS (
         SELECT user_id,
@@ -350,10 +348,10 @@ def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mad_price_outliers_per_brand",
-    """
+    f"""
     WITH pp AS (
         SELECT p_brand, p_retailprice FROM part
-        WHERE p_retailprice IS NOT NULL AND NOT isnan(p_retailprice) AND p_retailprice > -1e10 AND p_retailprice < 1e10),
+        WHERE {finite_measure_sql('p_retailprice')}),
     med AS (
         SELECT p_brand,
                quantile_cont(CAST(p_retailprice AS DOUBLE), 0.5) AS med
@@ -757,7 +755,7 @@ def item_item_similarity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "linear_interp_user_value",
-    """
+    f"""
     WITH daily AS (
         SELECT user_id, CAST(ts AS DATE) AS day,
                -- corrupt values drop at ingestion: a 2^53-scale
@@ -765,8 +763,7 @@ def item_item_similarity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
                -- across engines (mixed-fuzz seed-11 aligned)
                sum(value) AS v
         FROM events WHERE event_type = 'purchase'
-          AND value IS NOT NULL AND NOT isnan(value)
-          AND value > -1e10 AND value < 1e10
+          AND {finite_measure_sql('value')}
           AND ts >= TIMESTAMP '2000-01-01 00:00:00' AND ts < TIMESTAMP '2100-01-01 00:00:00'
         GROUP BY user_id, CAST(ts AS DATE)),
     spine AS (
@@ -831,17 +828,16 @@ def linear_interp_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "max_drawdown_per_product",
-    """
+    f"""
     WITH g AS (
         SELECT l_partkey AS prodid,
                list_transform(
-                   list_sort(list({'ts': floor(epoch(l_shipdate)), 'ok': l_orderkey,
+                   list_sort(list({{'ts': floor(epoch(l_shipdate)), 'ok': l_orderkey,
                                    'ln': l_linenumber,
-                                   'p': CAST(l_extendedprice AS DOUBLE)})),
+                                   'p': CAST(l_extendedprice AS DOUBLE)}})),
                    s -> s.p) AS ps
         FROM lineitem
-        WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice)
-          AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+        WHERE {finite_measure_sql('l_extendedprice')}
           AND l_shipdate >= TIMESTAMP '1990-01-01' AND l_shipdate < TIMESTAMP '2100-01-01'
           -- valid_id on the sort-struct tie-breaks (keyfuzz r12):
           -- same class as cusum_price_shift_per_product
@@ -1042,17 +1038,16 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cusum_price_shift_per_product",
-    """
+    f"""
     WITH g AS (
         SELECT l_partkey AS prodid,
                list_transform(
-                   list_sort(list({'ts': floor(epoch(l_shipdate)), 'ok': l_orderkey,
+                   list_sort(list({{'ts': floor(epoch(l_shipdate)), 'ok': l_orderkey,
                                    'ln': l_linenumber,
-                                   'p': CAST(l_extendedprice AS DOUBLE)})),
+                                   'p': CAST(l_extendedprice AS DOUBLE)}})),
                    s -> s.p) AS ps
         FROM lineitem
-        WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice)
-          AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+        WHERE {finite_measure_sql('l_extendedprice')}
           AND l_shipdate >= TIMESTAMP '1990-01-01' AND l_shipdate < TIMESTAMP '2100-01-01'
           -- valid_id on the sort-struct tie-breaks: a NULL id field
           -- orders differently inside the two engines' struct sorts,

@@ -57,7 +57,7 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     ).filter(finite_measure("o_totalprice"))
-    joined = bloom_semi_join(orders, customer, "o_custkey", "c_custkey", num_bits=1 << 16)
+    joined = bloom_semi_join(orders, customer, "o_custkey", "c_custkey")
     return joined.groupBy("c_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice") + F.lit(1e-9), 2).alias("revenue"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
@@ -136,13 +136,12 @@ def largest_remainder_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sax_symbolization_events",
-    """
+    f"""
     WITH daily AS (
         SELECT event_type,
                date_diff('day', TIMESTAMP '1970-01-01 00:00:00', date_trunc('day', ts)) AS d,
                avg(value) AS v
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-          AND value > -1e10 AND value < 1e10
+        FROM events WHERE {finite_measure_sql('value')}
         GROUP BY 1, 2
     ), rng AS (
         SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM daily GROUP BY 1

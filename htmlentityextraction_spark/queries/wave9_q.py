@@ -16,18 +16,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.registry import register
 from htmlentityextraction_spark.sources.tables import load_table
 
 
 @register(
     "kanonymous_user_value_release",
-    """
+    f"""
     WITH p AS (
         SELECT substr(md5('s4lt:' || CAST(user_id AS VARCHAR)), 1, 16) AS pseudo_id,
                date_trunc('day', ts) AS day,
-               (CASE WHEN NOT (value IS NOT NULL AND NOT isnan(value) AND value > -1e10 AND value < 1e10) THEN NULL
+               (CASE WHEN NOT {finite_measure_sql('value')} THEN NULL
                 ELSE CAST(floor(value / 50) * 50 AS BIGINT) END) AS value_band
         FROM events WHERE event_type = 'purchase'
     ), g AS (

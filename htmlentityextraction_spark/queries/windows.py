@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.keys import valid_id, valid_id_sql
-from htmlentityextraction_spark.functions.pricing import finite_measure
+from htmlentityextraction_spark.functions.pricing import finite_measure, finite_measure_sql
 from htmlentityextraction_spark.functions.temporal import (
     valid_date_axis,
     valid_date_axis_sql,
@@ -56,10 +56,10 @@ _OBS_SQL = """
     SELECT l_partkey AS prod, l_suppkey AS store, l_shipdate AS tmsp,
            l_extendedprice AS price, l_orderkey AS k1, l_linenumber AS k2
     FROM lineitem
-    WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice)
-      AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+    WHERE {fp}
       AND {vt} AND {k1} AND {k2}
 """.format(
+    fp=finite_measure_sql("l_extendedprice"),
     vt=valid_date_axis_sql("l_shipdate"),
     k1=valid_id_sql("l_orderkey"),
     k2=valid_id_sql("l_linenumber"),
@@ -259,9 +259,10 @@ def ntile_cume_dist_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS DOUBLE) + 1e-9, 6)
                AS rolling_median
     FROM lineitem
-    WHERE l_extendedprice IS NOT NULL AND NOT isnan(l_extendedprice) AND l_extendedprice > -1e10 AND l_extendedprice < 1e10
+    WHERE {fp}
       AND {vt} AND {k1} AND {k2}
     """.format(
+        fp=finite_measure_sql("l_extendedprice"),
         vt=valid_date_axis_sql("l_shipdate"),
         k1=valid_id_sql("l_orderkey"),
         k2=valid_id_sql("l_linenumber"),

@@ -44,6 +44,8 @@ _DRIVER_UNCONFIRMED: tuple[str, ...] = (
     # plans yet — front-load them. Queries whose plans change in THIS
     # round are prepended here as they change. The 50 names sampled in
     # CORRECTNESS_r12.json were all full-green and rotate out.
+    # plan change after r13 (row floor 2500 -> 1750):
+    "approx_percentile_accuracy",
     # r13 plan changes (materialization shape):
     "table_diff_reconciliation",
     "stream_bloom_prefilter_route",

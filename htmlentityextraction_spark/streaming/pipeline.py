@@ -42,7 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from htmlentityextraction_spark.functions.pricing import finite_measure, price_status, selected_price
+from htmlentityextraction_spark.functions.pricing import (
+    PASSING,
+    finite_measure,
+    measure_cents,
+    price_status,
+    selected_price,
+)
 from htmlentityextraction_spark.functions.temporal import (
     SESSION_GAP_MINUTES,
     epoch_seconds,
@@ -252,9 +258,6 @@ def enrich_events(stream: DataFrame) -> DataFrame:
     )
 
 
-PASSING = ("modeledPatternEquals", "minorModelPatternConflict", "majorModelPatternConflict")
-
-
 _STATUS_SINKS = ("historical", "realtime", "logs")
 
 # One row per writer task: what it routed (the reference's per-batch
@@ -362,20 +365,13 @@ def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
     fan-out — through ``write_sinks``'s one writer pass. Per-batch
     counters (A11 — the reference's accumulators,
     `streaming/Htmls2PredsPipe.scala:74-84`) accumulate on the holder
-    from that pass's counter rows, with no job of their own."""
+    from that pass's counter rows, with no job of their own: one dict
+    per micro-batch, ``write_sinks``'s counters plus batch_id, as
+    ``serve.serve_stream`` records them."""
     holder_metrics: list[dict] = []
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        counts = write_sinks(batch, out_dir, batch_id)
-        n_passing = sum(counts["status"].get(s, 0) for s in PASSING)
-        holder_metrics.append(
-            {
-                "batch_id": batch_id,
-                "n_total": counts["rows"],
-                "n_passing": n_passing,
-                "n_errored": counts["rows"] - n_passing,
-            }
-        )
+        holder_metrics.append({"batch_id": batch_id, **write_sinks(batch, out_dir, batch_id)})
 
     q = (
         enriched.writeStream.foreachBatch(write_batch)
@@ -619,9 +615,7 @@ def stream_merge_into(stream: DataFrame, tbl) -> "StreamingQueryHolder":
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         agg = batch.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
-            F.sum(
-                F.when(finite_measure("value"), F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            ).alias("sum_cents"),
+            F.sum(measure_cents("value")).alias("sum_cents"),
             F.max(epoch_micros("ts")).alias("last_us"),
         ).withColumn("op", F.lit(OP_UPSERT))
         tbl.merge(agg, combine={"n_events": "sum", "sum_cents": "sum", "last_us": "max"})

@@ -21,17 +21,20 @@ Options: every defaulted parameter of a package function or method
 takes at least two distinct values across the calls the same roots
 make (the reached definitions' bodies, module-level code and the root
 files), or is named in ``KEEP_OPTIONS`` with its reason. A call that
-omits the option gives its default; a literal, a module-constant name
-or a value of a module-level dict passed as ``**NAME`` gives itself; an
-option the caller hands on (``f(x=x)``) gives the caller's values; any
-other expression gives an unknown value, which can only keep the option
-alive. An option with one value in use is a constant (or, when its
+omits the option gives its default; a constant expression (literals,
+module-constant names, arithmetic over them) gives the value it
+computes, and a value of a module-level dict passed as ``**NAME``
+gives the same; a constant name that is bound to no constant
+expression gives itself; an option the caller hands on (``f(x=x)``)
+gives the caller's values; any other expression gives an unknown
+value, which can only keep the option alive. An option with one value in use is a constant (or, when its
 default selects a branch no call takes, a required input), and a
 branch only tests select is not carried."""
 
 from __future__ import annotations
 
 import ast
+import operator
 import pathlib
 import re
 
@@ -75,6 +78,7 @@ KEEP_OPTIONS = {
     "operators/setjoin.py:prefix_jaccard_pairs(max_block_rows)": "guard limit: a block too big for the quadratic verify fails loudly",
     "operators/extraction.py:extract_candidates(html_col)": "perfbench's serve workload passes it; the benchmark's calls keep their signatures",
     "operators/extraction.py:extract_candidates(url_col)": "perfbench's serve workload passes it; the benchmark's calls keep their signatures",
+    "operators/extraction.py:extract_candidates(snippet_size)": "perfbench's serve workload passes it; the benchmark's calls keep their signatures",
     "operators/models.py:train_per_domain(n_estimators)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
     "operators/models.py:train_per_domain(max_depth)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
     "operators/models.py:train_per_domain(min_doc_freq)": "perfbench's registry fit passes its FIT keys; the benchmark's calls keep their signatures",
@@ -206,33 +210,78 @@ def unused_imports(package: pathlib.Path) -> list[str]:
 CONSTANT_NAME = re.compile(r"_*[A-Z][A-Z0-9_]*")
 
 
-def module_constants(trees) -> set[str]:
-    """Upper-case names a module-level assignment binds."""
-    return {
-        t.id
-        for tree in trees
-        for node in tree.body
-        if isinstance(node, (ast.Assign, ast.AnnAssign))
-        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
-        if isinstance(t, ast.Name) and CONSTANT_NAME.fullmatch(t.id)
-    }
+_ARITHMETIC = {
+    ast.Add: operator.add, ast.Sub: operator.sub, ast.Mult: operator.mul,
+    ast.Div: operator.truediv, ast.FloorDiv: operator.floordiv, ast.Mod: operator.mod,
+    ast.Pow: operator.pow, ast.LShift: operator.lshift, ast.RShift: operator.rshift,
+    ast.BitOr: operator.or_, ast.BitAnd: operator.and_, ast.BitXor: operator.xor,
+    ast.USub: operator.neg, ast.UAdd: operator.pos, ast.Invert: operator.invert,
+}
+
+
+def fold(node: ast.AST, consts: dict):
+    """The value of a constant expression: a literal, a module-constant
+    name bound to one (``consts`` maps it, ``None`` when it has no
+    single value), or arithmetic over those. Anything else raises
+    ``ValueError``."""
+    name = getattr(node, "id", getattr(node, "attr", None))
+    if isinstance(node, (ast.Name, ast.Attribute)) and consts.get(name) is not None:
+        return ast.literal_eval(consts[name])
+    if isinstance(node, ast.BinOp) and type(node.op) in _ARITHMETIC:
+        return _ARITHMETIC[type(node.op)](fold(node.left, consts), fold(node.right, consts))
+    if isinstance(node, ast.UnaryOp) and type(node.op) in _ARITHMETIC:
+        return _ARITHMETIC[type(node.op)](fold(node.operand, consts))
+    try:
+        return ast.literal_eval(node)
+    except TypeError as e:
+        raise ValueError(node) from e
+
+
+def module_constants(trees) -> dict[str, str | None]:
+    """Upper-case names a module-level assignment binds, each with the
+    ``repr`` of the constant expression it is bound to, or ``None``
+    when it is bound to anything else or to two different values.
+    Constants defined from constants resolve to a fixed point."""
+    bound: dict[str, list[ast.AST]] = {}
+    for tree in trees:
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+                for t in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                    if isinstance(t, ast.Name) and CONSTANT_NAME.fullmatch(t.id):
+                        bound.setdefault(t.id, []).append(node.value)
+    consts: dict[str, str | None] = dict.fromkeys(bound)
+    grew = True
+    while grew:
+        grew = False
+        for name, nodes in bound.items():
+            if consts[name] is not None:
+                continue
+            try:
+                vals = {repr(fold(n, consts)) for n in nodes}
+            except (ValueError, ArithmeticError):
+                continue
+            if len(vals) == 1:
+                consts[name] = vals.pop()
+                grew = True
+    return consts
 
 
 def value(node: ast.AST, params, consts) -> tuple:
     """What one argument (or default) gives an option: ``("=", text)``
-    for a literal or a module-constant name (``LIMIT``, ``mod.LIMIT``),
-    ``("fwd", param)`` for the enclosing function's own option handed
-    on, else ``("?", node)``, an unknown value distinct from every
-    other."""
+    for a constant expression (the ``repr`` of what it computes) or a
+    module-constant name bound to none (the name), ``("fwd", param)``
+    for the enclosing function's own option handed on, else
+    ``("?", node)``, an unknown value distinct from every other."""
     if isinstance(node, ast.Name) and node.id in params:
         return ("fwd", node.id)
+    try:
+        return ("=", repr(fold(node, consts)))
+    except (ValueError, ArithmeticError):
+        pass
     name = getattr(node, "id", getattr(node, "attr", None))
     if isinstance(node, (ast.Name, ast.Attribute)) and name in consts:
         return ("=", name)
-    try:
-        return ("=", repr(ast.literal_eval(node)))
-    except (ValueError, TypeError):
-        return ("?", node)
+    return ("?", node)
 
 
 def splat_values(trees, consts) -> dict[str, dict]:
@@ -471,6 +520,9 @@ def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
         "from registry import register\n"
         "CONF = dict(depth=3)\n"
         "LIMIT = 10\n"
+        "KB = 1024\n"
+        "SIZE = 150\n"
+        "SCHEMA = make_schema()\n"
         "def kw(x, a=1, b=2):\n    return x\n"
         "def pos(x, a=1, b=2):\n    return x\n"
         "def splat(x, depth=1, width=2):\n    return x\n"
@@ -482,6 +534,10 @@ def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
         "def same(x, a=1):\n    return x\n"
         "def repeated(x, n=1):\n    return x\n"
         "def const(x, w=2):\n    return x\n"
+        "def shifted(x, bits=1 << 20):\n    return x\n"
+        "def sized(x, size=SIZE):\n    return x\n"
+        "def derived(x, n=None):\n    return x\n"
+        "def opaque(x, s=None):\n    return x\n"
         "class Table:\n"
         "    def __init__(self, path, mode='r'):\n        self.path = path\n"
         "    def read(self, col, version=None):\n        return col\n"
@@ -501,24 +557,40 @@ def test_option_scan_follows_keywords_positions_splats_and_forwarding(tmp_path):
         "    repeated(2, n=7)\n"
         "    const(1, w=LIMIT)\n"
         "    const(2, w=LIMIT)\n"
+        "    shifted(1, bits=1 << 16)\n"
+        "    shifted(2, bits=65536)\n"
+        "    sized(1, size=150)\n"
+        "    sized(2)\n"
+        "    derived(1, n=KB * 4)\n"
+        "    derived(2, n=4096)\n"
+        "    opaque(1, s=SCHEMA)\n"
+        "    opaque(2, s=SCHEMA)\n"
         "    Table('p', 'w').read('c')\n"
         "    Table('q')\n"
     )
     single, options = option_scan(pkg, [])
-    assert len(options) == 17
+    assert len(options) == 21
     assert list(single) == [
         "mod.py:Table.read(version)",  # positions skip self
-        "mod.py:const(w)",  # a constant name is one value
+        "mod.py:const(w)",  # a constant name gives its value
+        "mod.py:derived(n)",  # arithmetic over a constant equals a literal
         "mod.py:inner(fwd)",  # forwarded from an option with one value
         "mod.py:kw(a)",  # only ever omitted: its default
+        "mod.py:opaque(s)",  # a constant bound to a call gives its name
         "mod.py:outer(fwd)",
         "mod.py:pos(b)",
         "mod.py:repeated(n)",  # one non-default literal, twice
         "mod.py:same(a)",  # a literal equal to the default
+        "mod.py:shifted(bits)",  # constant arithmetic folds
+        "mod.py:sized(size)",  # a constant default equals the literal
         "mod.py:splat(depth)",  # **CONF gives its own value
         "mod.py:splat(width)",  # **CONF passes only its own keys
     ]
-    assert single["mod.py:const(w)"] == {("=", "LIMIT")}
+    assert single["mod.py:const(w)"] == {("=", "10")}
+    assert single["mod.py:derived(n)"] == {("=", "4096")}
+    assert single["mod.py:opaque(s)"] == {("=", "SCHEMA")}
+    assert single["mod.py:shifted(bits)"] == {("=", "65536")}
+    assert single["mod.py:sized(size)"] == {("=", "150")}
     assert single["mod.py:repeated(n)"] == {("=", "7")}
     assert single["mod.py:splat(depth)"] == {("=", "3")}
     # inner2(fwd) takes outer2's two values (3 and the default None);

@@ -4,43 +4,70 @@ semantics across restarts (checkpoint recovery)."""
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import tempfile
 
+import duckdb
 from pyspark.sql import functions as F
 
-from htmlentityextraction_spark.functions.pricing import price_status, selected_price
+from htmlentityextraction_spark.functions.pricing import (
+    PASSING,
+    price_status,
+    price_status_sql,
+    selected_price,
+    selected_price_sql,
+)
 from htmlentityextraction_spark.streaming import pipeline as sp
 
 SF = "/root/testdata/sf0.001"
 
 
+# (model, pattern, expected_status, expected_price), after
+# `streaming/Htmls2Cassandra.scala:183-227` and `utils/Utils.scala:408-432`:
+# the pattern price fails when Scala's toInt is 0 (NaN, -1 < v < 1).
+TRUTH_TABLE = [
+    (100.0, 100.0, "modeledPatternEquals", 100.0),
+    (100.0, 105.0, "minorModelPatternConflict", 100.0),
+    (100.0, 200.0, "majorModelPatternConflict", 200.0),
+    (-1.0, 100.0, "allFalseCandids", 100.0),
+    (-2.0, 100.0, "missingModel", 100.0),
+    (100.0, 0.0, "patternFailed", 100.0),
+    (100.0, math.nan, "patternFailed", 100.0),
+    (100.0, 0.5, "patternFailed", 100.0),
+    (100.0, -0.0, "patternFailed", 100.0),
+    # inf.toInt is Int.MaxValue: a usable pattern price, and the
+    # relative gap (inf/inf = NaN, or inf) is no minor conflict
+    (100.0, math.inf, "majorModelPatternConflict", math.inf),
+    (100.0, -math.inf, "majorModelPatternConflict", -math.inf),
+    (-1.0, 0.0, "bothFailed", 0.0),
+    (-2.0, 0.0, "bothFailed", 0.0),
+    (-1.0, math.nan, "bothFailed", 0.0),
+    (-2.0, math.nan, "bothFailed", 0.0),
+    (-1.0, 0.5, "bothFailed", 0.0),
+    (-2.0, -0.0, "bothFailed", 0.0),
+]
+
+
 def test_price_status_truth_table(spark):
-    rows = [
-        # (model, pattern, expected_status, expected_price)
-        (100.0, 100.0, "modeledPatternEquals", 100.0),
-        (100.0, 105.0, "minorModelPatternConflict", 100.0),
-        (100.0, 200.0, "majorModelPatternConflict", 200.0),
-        (-1.0, 100.0, "allFalseCandids", 100.0),
-        (-2.0, 100.0, "missingModel", 100.0),
-        (100.0, 0.0, "patternFailed", 100.0),
-        (-1.0, 0.0, "bothFailed", 0.0),
-        (-2.0, 0.0, "bothFailed", 0.0),
-    ]
     df = spark.createDataFrame(
-        [(m, p, s, fp) for m, p, s, fp in rows],
-        "model double, pattern double, exp_status string, exp_price double",
+        [(i, m, p) for i, (m, p, _, _) in enumerate(TRUTH_TABLE)], "i int, model double, pattern double"
     )
     status = price_status(F.col("model"), F.col("pattern"))
-    got = df.select(
-        "exp_status", "exp_price",
-        status.alias("status"),
-        selected_price(status, F.col("model"), F.col("pattern")).alias("price"),
+    spark_rows = df.select(
+        "i", status.alias("status"), selected_price(status, F.col("model"), F.col("pattern")).alias("price")
     ).collect()
-    for r in got:
-        assert r.status == r.exp_status, r
-        assert r.price == r.exp_price, r
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, model DOUBLE, pattern DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", [(i, m, p) for i, (m, p, _, _) in enumerate(TRUTH_TABLE)])
+    duck_rows = con.execute(
+        f"SELECT i, status, {selected_price_sql('status', 'model', 'pattern')} AS price FROM"
+        f" (SELECT i, model, pattern, {price_status_sql('model', 'pattern')} AS status FROM t)"
+    ).fetchall()
+    want = {i: (s, fp) for i, (_, _, s, fp) in enumerate(TRUTH_TABLE)}
+    for engine, rows in (("spark", spark_rows), ("duckdb", duck_rows)):
+        assert {i: (s, fp) for i, s, fp in rows} == want, engine
 
 
 def test_route_to_sinks_partitions_rows(spark):
@@ -51,8 +78,8 @@ def test_route_to_sinks_partitions_rows(spark):
     rt = spark.read.parquet(f"{out}/realtime")
     logs = spark.read.parquet(f"{out}/logs")
     assert hist.count() == rt.count() + logs.count() == 1000
-    assert rt.filter(~F.col("status").isin(*sp.PASSING)).count() == 0
-    assert logs.filter(F.col("status").isin(*sp.PASSING)).count() == 0
+    assert rt.filter(~F.col("status").isin(*PASSING)).count() == 0
+    assert logs.filter(F.col("status").isin(*PASSING)).count() == 0
     shutil.rmtree(out)
 
 
@@ -63,11 +90,12 @@ def test_route_to_sinks_metrics_counters(spark):
     holder = sp.route_to_sinks(enriched, out)
     holder.await_done()
     assert holder.metrics, "at least one micro-batch recorded"
-    total = sum(m["n_total"] for m in holder.metrics)
-    passing = sum(m["n_passing"] for m in holder.metrics)
-    errored = sum(m["n_errored"] for m in holder.metrics)
-    assert total == 1000 and passing + errored == 1000
+    total = sum(m["rows"] for m in holder.metrics)
+    passing = sum(m["status"].get(s, 0) for m in holder.metrics for s in PASSING)
+    statuses = sum(sum(m["status"].values()) for m in holder.metrics)
+    assert total == statuses == 1000 and 0 < passing < 1000
     assert spark.read.parquet(f"{out}/realtime").count() == passing
+    assert spark.read.parquet(f"{out}/logs").count() == total - passing
     shutil.rmtree(out)
 
 

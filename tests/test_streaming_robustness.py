@@ -97,8 +97,9 @@ def test_processing_time_trigger_and_stop(spark):
 
 
 def _three_message_drain(spark):
-    """One micro-batch of a good page, a null-html page and a corrupt
-    message through ``serve_stream``: (holder, src, out)."""
+    """One micro-batch of a good page, a null-html page, a corrupt
+    message and a priced page of a domain the registry has no model
+    for, through ``serve_stream``: (holder, src, out)."""
     from htmlentityextraction_spark.operators import models as md
     from htmlentityextraction_spark.streaming import serve
 
@@ -119,6 +120,8 @@ def _three_message_drain(spark):
         ('{"url":"http://good.com/p/2","html":null,'
          '"price":7.0,"updatedPrice":7.0}',),          # null html
         ("{broken json!!",),                            # corrupt
+        ('{"url":"http://other.com/p/3","html":"buy other price 55.50 deal",'
+         '"price":55.5,"updatedPrice":55.5}',),         # no model for the domain
     ]
     src = tempfile.mkdtemp(prefix="serve_rob_src_")
     out = tempfile.mkdtemp(prefix="serve_rob_out_")
@@ -139,7 +142,7 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
     by_url = {r.url: r for r in hist}
     # corrupt message kept out of scoring but routed to the error side
     # output with its payload intact (reference error-topic behavior)
-    assert set(by_url) == {"http://good.com/p/1", "http://good.com/p/2"}
+    assert set(by_url) == {"http://good.com/p/1", "http://good.com/p/2", "http://other.com/p/3"}
     corrupt = spark.read.parquet(os.path.join(out, "logs_corrupt")).collect()
     assert len(corrupt) == 1
     assert corrupt[0].raw_payload == "{broken json!!"
@@ -148,18 +151,24 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
     r2 = by_url["http://good.com/p/2"]
     assert r2.model_price == -1.0 and r2.status == "allFalseCandids"
     assert r2.final_price == 7.0
+    # a domain without a model takes the -2 sentinel, pattern price wins
+    r3 = by_url["http://other.com/p/3"]
+    assert r3.model_price == -2.0 and r3.status == "missingModel"
+    assert r3.final_price == 55.5
     shutil.rmtree(src); shutil.rmtree(out)
 
 
 def test_serve_counters_of_the_three_message_batch(spark):
     """The per-batch counters come from the sink writer's own pass: two
-    pages and one corrupt message. The toy registry cannot separate its
-    alternating labels (every training row has the same features), so
-    no candidate is positive and both pages take the -1 sentinel."""
+    good.com pages, one corrupt message and one page of a domain the
+    registry lacks. The toy registry cannot separate its alternating
+    labels (every training row has the same features), so no candidate
+    is positive and both good.com pages take the -1 sentinel; the
+    other domain's page takes the -2 missing-model sentinel."""
     holder, src, out = _three_message_drain(spark)
     assert holder.metrics == [{
-        "batch_id": 0, "rows": 2, "corrupt": 1, "no_candidate": 2, "missing_model": 0,
-        "status": {"allFalseCandids": 2},
+        "batch_id": 0, "rows": 3, "corrupt": 1, "no_candidate": 2, "missing_model": 1,
+        "status": {"allFalseCandids": 2, "missingModel": 1},
     }]
     shutil.rmtree(src); shutil.rmtree(out)
 

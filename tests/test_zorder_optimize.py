@@ -12,6 +12,7 @@ import tempfile
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.operators import incremental
 from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
 
 SF_DENSE = "/root/testdata/sf0.01"  # enough rows for multiple row groups
@@ -45,14 +46,15 @@ def _make_table(spark, path: str):
     return li, tbl
 
 
-def test_zorder_optimize_tightens_row_group_stats(spark):
+def test_zorder_optimize_tightens_row_group_stats(spark, monkeypatch):
+    monkeypatch.setattr(incremental, "_ZORDER_ROW_GROUP_BYTES", 64 * 1024)
     path = tempfile.mkdtemp(prefix="zopt_")
     li, tbl = _make_table(spark, path)
     m0 = tbl._read_manifest()
     before_a, _ = _avg_span(path, m0["buckets"], "l_partkey")
     before_b, _ = _avg_span(path, m0["buckets"], "l_suppkey")
 
-    res = tbl.optimize(zorder_by=["l_partkey", "l_suppkey"], row_group_bytes=64 * 1024)
+    res = tbl.optimize(zorder_by=["l_partkey", "l_suppkey"])
     assert res["compacted"], "zorder optimize must rewrite buckets"
     m1 = tbl._read_manifest()
     after_a, n_a = _avg_span(path, m1["buckets"], "l_partkey")
@@ -84,7 +86,8 @@ def test_zvalue_n_three_columns(spark):
     assert df.collect()[0]["z"] == 0b101011
 
 
-def test_zorder_optimize_three_columns(spark):
+def test_zorder_optimize_three_columns(spark, monkeypatch):
+    monkeypatch.setattr(incremental, "_ZORDER_ROW_GROUP_BYTES", 64 * 1024)
     path = tempfile.mkdtemp(prefix="zopt4_")
     li = spark.read.parquet(os.path.join(SF_DENSE, "lineitem.parquet")).select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("rid"),
@@ -93,9 +96,7 @@ def test_zorder_optimize_three_columns(spark):
     tbl = ParquetMergeTable(spark, path, key_col="rid", num_buckets=2)
     tbl.create(li)
     before_a, _ = _avg_span(path, tbl._read_manifest()["buckets"], "l_partkey")
-    res = tbl.optimize(
-        zorder_by=["l_partkey", "l_suppkey", "l_quantity"], row_group_bytes=64 * 1024
-    )
+    res = tbl.optimize(zorder_by=["l_partkey", "l_suppkey", "l_quantity"])
     assert res["compacted"]
     after_a, n = _avg_span(path, tbl._read_manifest()["buckets"], "l_partkey")
     assert n >= 4 and after_a < before_a

@@ -54,7 +54,8 @@ GATE_RE = re.compile(r"finite_measure|valid_vectors|isnan\(")
 # Call-level gate names (AST match): a function is gated when it CALLS
 # one of these, not when its docstring/comment mentions one (r11 ADVICE:
 # raw-source GATE_RE matching let a comment satisfy the audit).
-GATE_FUNCS = {"finite_measure", "valid_vectors", "isnan"}
+# ``measure_cents`` applies ``finite_measure`` itself.
+GATE_FUNCS = {"finite_measure", "measure_cents", "valid_vectors", "isnan"}
 # Argument texts that are exact integer arithmetic (order-insensitive):
 # 0/1 indicator casts, casted longs/ints, count-like literals.
 INT_FOLD_RE = re.compile(
