@@ -1,7 +1,6 @@
 from htmlentityextraction_spark.operators.relational import (
-    argmax_per_group,
     dedup_keep_latest,
     top_k,
 )
 
-__all__ = ["argmax_per_group", "dedup_keep_latest", "top_k"]
+__all__ = ["dedup_keep_latest", "top_k"]

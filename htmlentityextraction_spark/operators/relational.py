@@ -28,15 +28,6 @@ def dedup_keep_latest(df: DataFrame, keys: Sequence[str], order: Sequence[Column
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def argmax_per_group(
-    df: DataFrame, keys: Sequence[str], order: Sequence[Column]
-) -> DataFrame:
-    """Per-group extreme row (argmax/argmin via the ordering), the
-    reference's sort-group-head (`analytics/ProdMetricsV7.scala:116-151`).
-    Same shape as dedup_keep_latest; kept separate for intent."""
-    return dedup_keep_latest(df, keys, order)
-
-
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """Global top-k with deterministic ordering — Spark plans this as
     TakeOrderedAndProject (no full sort materialization), the

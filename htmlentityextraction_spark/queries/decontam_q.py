@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from htmlentityextraction_spark.operators import decontam as dc
 from htmlentityextraction_spark.functions.keys import keep_one_per_id, keep_one_per_id_sql
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.sources.tables import load_table
 
 # Same normalization as functions.text.tokenize (letters-only, single
@@ -231,9 +232,6 @@ def incremental_dedup_via_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition exactly: batch-2 acceptances include docs whose
     fingerprints were RETIRED by the deletes — a stale index (or one
     rebuilt from the wrong version window) diverges immediately."""
-    import os as _os
-    import tempfile as _tempfile
-
     from htmlentityextraction_spark.operators.dedup import normalized_fingerprint
     from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
 
@@ -242,13 +240,9 @@ def incremental_dedup_via_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.col("text").isNotNull())
     )
-    base = _tempfile.mkdtemp(prefix="cdcdedup_")
-    corpus = ParquetMergeTable(
-        spark, _os.path.join(base, "corpus"), key_col="doc_id", num_buckets=8
-    )
-    index = ParquetMergeTable(
-        spark, _os.path.join(base, "index"), key_col="fingerprint", num_buckets=8
-    )
+    base = scratch("cdcdedup_")
+    corpus = ParquetMergeTable(spark, f"{base}/corpus", key_col="doc_id", num_buckets=8)
+    index = ParquetMergeTable(spark, f"{base}/index", key_col="fingerprint", num_buckets=8)
     fps = docs.select(
         "doc_id", normalized_fingerprint(F.col("text")).alias("fingerprint")
     ).filter(F.col("fingerprint").isNotNull())

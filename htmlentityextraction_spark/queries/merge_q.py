@@ -14,8 +14,6 @@ INSERT … ON DUPLICATE KEY UPDATE), `emr/SwapIDs.scala:119-128`
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +30,7 @@ from htmlentityextraction_spark.functions.pricing import (
     measure_cents_sql,
 )
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.sources.tables import load_table
 
 
@@ -92,7 +91,7 @@ def _merged_orders_table(spark: SparkSession, sf_dir: str) -> ParquetMergeTable:
     orders = _orders_source(spark, sf_dir).persist()
     try:
         k = F.col("o_orderkey")
-        path = tempfile.mkdtemp(prefix="merge_tbl_")
+        path = scratch("merge_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)
 
@@ -169,7 +168,7 @@ def mergetable_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _orders_source(spark, sf_dir).persist()
     try:
         k = F.col("o_orderkey")
-        path = tempfile.mkdtemp(prefix="merge_rng_")
+        path = scratch("merge_rng_")
         tbl = ParquetMergeTable(
             spark, path, key_col="o_orderkey", bucketing="range", range_width=2000
         )
@@ -333,7 +332,7 @@ def mergetable_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("rid"),
         "l_partkey", "l_suppkey", "l_extendedprice",
     )
-    path = tempfile.mkdtemp(prefix="zorder_tbl_")
+    path = scratch("zorder_tbl_")
     tbl = ParquetMergeTable(spark, path, key_col="rid", num_buckets=4)
     tbl.create(li)
     tbl.optimize(zorder_by=["l_partkey", "l_suppkey"])
@@ -495,7 +494,7 @@ def mergetable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spine persisted across create + update batch (see _merged_orders_table)
     orders = _orders_source(spark, sf_dir).persist()
     try:
-        path = tempfile.mkdtemp(prefix="evo_tbl_")
+        path = scratch("evo_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)
         tbl.rename_column("price", "unit_price")
@@ -570,7 +569,7 @@ def mergetable_schema_drop_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     try:
-        path = tempfile.mkdtemp(prefix="dw_tbl_")
+        path = scratch("dw_tbl_")
         tbl = ParquetMergeTable(spark, path, key_col="o_orderkey", num_buckets=16)
         tbl.create(orders)  # v1
         tbl.drop_column("tag")  # v2: metadata-only

@@ -23,6 +23,7 @@ from htmlentityextraction_spark.functions.text import (
     xml_escape_free_text_sql,
 )
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.sources.tables import load_table
 
 
@@ -748,12 +749,10 @@ def multiformat_source_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     schemas (schema inference at 100 TB is a full extra pass); ORC
     carries its own. The oracle states the parquet ground truth once
     per format, so the hash proves every decode path is lossless."""
-    import tempfile
-
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    root = tempfile.mkdtemp(prefix="multifmt_")
+    root = scratch("multifmt_")
     schema = "o_orderkey long, o_totalprice double, o_orderstatus string"
     outs = []
     # lossless CSV needs four deliberate choices (text-fuzz lessons):

@@ -8,8 +8,6 @@ The planted-token construction keeps the output closed-form SQL.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +19,7 @@ from htmlentityextraction_spark.functions.pricing import (
 )
 from htmlentityextraction_spark.queries.ml import fit_once, model_pages
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.streaming import serve
 
 
@@ -67,8 +66,8 @@ def stream_serve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages fall to the -1 sentinel → allFalseCandids → pattern price."""
     registry = fit_once(spark, sf_dir)
 
-    src = tempfile.mkdtemp(prefix="serve_src_")
-    out = tempfile.mkdtemp(prefix="serve_out_")
+    src = scratch("serve_src_")
+    out = scratch("serve_out_")
     # NOT repartitioned to defaultParallelism before the write: moving
     # the batch_fn parallelism guard's shuffle upstream (source files
     # >= cores, the documented 100 TB posture) was ABBA-measured in
@@ -78,6 +77,4 @@ def stream_serve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _page_messages(spark, sf_dir).write.mode("overwrite").parquet(src)
     raw = spark.readStream.schema("value string").parquet(src)
     serve.serve_stream(spark, raw, registry, out).await_done()
-    # the returned frame reads only the historical sink
-    shutil.rmtree(src)
     return spark.read.parquet(os.path.join(out, "historical"))

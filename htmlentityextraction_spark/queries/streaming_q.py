@@ -8,8 +8,6 @@ the same hash-match bar as the batch ones.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +21,7 @@ from htmlentityextraction_spark.functions.pricing import (
 )
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.sources.tables import load_table
 from htmlentityextraction_spark.streaming import pipeline as sp
 
@@ -77,7 +76,7 @@ def stream_multiplex_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     realtime (passing), logs (errored) parquet sinks; returns per-sink
     row counts read back from disk."""
     enriched = sp.enrich_events(sp.read_events_stream(spark, sf_dir))
-    out_dir = tempfile.mkdtemp(prefix="mux_")
+    out_dir = scratch("mux_")
     sp.route_to_sinks(enriched, out_dir).await_done()
     parts = []
     for sink in ("historical", "realtime", "logs"):
@@ -259,18 +258,15 @@ def stream_merge_upsert_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain batch groupBy, so the hash match proves the
     incremental per-batch merges converge to exactly the one-shot
     answer regardless of batch boundaries."""
-    import tempfile
-
     from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
-    from htmlentityextraction_spark.sources.tables import load_table
 
     # 4-file topic dir → 4 micro-batches; coalesce, not repartition:
     # any 4-way cut is a valid micro-batch split (the merge combine is
     # batch-boundary-independent), so don't pay a full shuffle for it
-    topic = tempfile.mkdtemp(prefix="merge_topic_")
+    topic = scratch("merge_topic_")
     load_table(spark, sf_dir, "events").coalesce(4).write.mode("overwrite").parquet(topic)
 
-    tpath = tempfile.mkdtemp(prefix="stream_merge_tbl_")
+    tpath = scratch("stream_merge_tbl_")
     tbl = ParquetMergeTable(spark, tpath, key_col="user_id", num_buckets=8)
     tbl.create(
         spark.createDataFrame([], "user_id long, n_events long, sum_cents long, last_us long")
@@ -372,8 +368,6 @@ def stream_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     every sink's cardinality in batch; the hash match proves routing
     is exhaustive and exclusive (passed + quarantined = all) across
     arbitrary batch boundaries."""
-    import tempfile as _tf
-
     stream = sp.read_events_stream(spark, sf_dir)
     ok_value = ~F.isnan("value") & F.col("value").between(0, 400)
     ok_type = F.col("event_type").isin("view", "click", "purchase", "signup", "error")
@@ -382,7 +376,7 @@ def stream_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__viol_value", ~ok_value
     ).withColumn("__viol_type", ~ok_type)
 
-    out_dir = _tf.mkdtemp(prefix="dqq_")
+    out_dir = scratch("dqq_")
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
@@ -396,17 +390,7 @@ def stream_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch.unpersist()
 
-    import os as _os
-    import uuid as _uuid
-
-    ckpt = _os.path.join(_tf.gettempdir(), "ckpt_dqq_" + _uuid.uuid4().hex[:12])
-    (
-        checked.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    sp.start_bounded(checked.writeStream.foreachBatch(write_batch), f"{out_dir}/_checkpoint", []).await_done()
     passed = spark.read.parquet(f"{out_dir}/passed")
     try:
         quarantined = spark.read.parquet(f"{out_dir}/quarantined")

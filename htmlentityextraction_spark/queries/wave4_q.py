@@ -10,8 +10,6 @@ degree-oriented triangle join, delta-merge view maintenance).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +24,7 @@ from htmlentityextraction_spark.functions.temporal import (
 )
 from htmlentityextraction_spark.functions.keys import valid_id
 from htmlentityextraction_spark.registry import register
+from htmlentityextraction_spark.runner import scratch
 from htmlentityextraction_spark.sources.tables import load_table
 
 
@@ -301,7 +300,7 @@ def matview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cutoff = F.lit("1999-01-01").cast("timestamp")
-    path = tempfile.mkdtemp(prefix="matview_")
+    path = scratch("matview_")
     tbl = ParquetMergeTable(spark, path, key_col="view_key", num_buckets=8)
     tbl.create(view_rows(orders.filter(F.col("o_orderdate") < cutoff)))
     delta = view_rows(orders.filter(F.col("o_orderdate") >= cutoff)).withColumn(
@@ -332,7 +331,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     from htmlentityextraction_spark.streaming import pipeline as sp
 
     ev = load_table(spark, sf_dir, "events")
-    topic = tempfile.mkdtemp(prefix="dup_topic_")
+    topic = scratch("dup_topic_")
     ev.unionByName(ev).coalesce(1).write.mode("overwrite").parquet(topic)
     from htmlentityextraction_spark.functions.temporal import valid_event_time
 

@@ -15,6 +15,7 @@ import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -112,29 +113,28 @@ def load_table(
     (module note above) — pass it only at call sites whose narrow work
     above the scan measured a win in the in-session A/B.
 
-    ``events`` is written with TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects; read nanos as long (legacy conf, set dynamically so
-    it also works on a driver-owned session) and truncate to
-    microsecond timestamps — the same value DuckDB returns after its
-    ns→us cast.
+    ``events`` may be written with TIMESTAMP(NANOS), which Spark's
+    parquet reader rejects; read nanos as long (legacy conf, set
+    dynamically so it also works on a session built elsewhere) and
+    decode them with ``decode_event_ts``.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if fan_out:
-            df = scan_parallelism_floor(spark, df, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
-
-            # integer DIV, not floor(double /): nanos exceed double's
-            # 53-bit mantissa and round up by 1 us on ~13% of rows
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
     df = spark.read.parquet(path)
     if fan_out:
         df = scan_parallelism_floor(spark, df, path)
-    return df
+    return decode_event_ts(df) if name == "events" else df
+
+
+def decode_event_ts(df: DataFrame) -> DataFrame:
+    """Events ``ts`` read as a nanos long, as a microsecond timestamp
+    (DuckDB's ns→us cast); any other ``ts`` type is left as it is.
+    Integer DIV, not floor(double /): nanos exceed double's 53-bit
+    mantissa and round up by 1 us on ~13% of rows."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

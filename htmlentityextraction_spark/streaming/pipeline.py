@@ -27,7 +27,6 @@ keep O(open windows × keys) state, bounded by the watermark horizon.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections import Counter
 from typing import Iterator
@@ -41,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.streaming import DataStreamWriter
 
 from htmlentityextraction_spark.functions.pricing import (
     PASSING,
@@ -54,6 +54,8 @@ from htmlentityextraction_spark.functions.temporal import (
     epoch_seconds,
     valid_event_time,
 )
+from htmlentityextraction_spark.runner import scratch
+from htmlentityextraction_spark.sources.tables import decode_event_ts
 
 # events.parquet physical schema (ts is TIMESTAMP(NANOS) stored as
 # long; see sources/tables.load_table)
@@ -71,18 +73,12 @@ EVENTS_RAW_SCHEMA = T.StructType(
 PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
 
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
 def _events_dir(sf_dir: str) -> str:
     """The file streaming source requires a DIRECTORY; the fixture is a
-    single parquet file. Symlink it into a per-sf temp dir once
-    (testdata stays untouched)."""
-    d = _STREAM_DIRS.get(sf_dir)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet"))
-        _STREAM_DIRS[sf_dir] = d
+    single parquet file. Symlink it into a scratch dir (testdata stays
+    untouched)."""
+    d = scratch("events_stream_")
+    os.symlink(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet"))
     return d
 
 
@@ -109,25 +105,21 @@ def read_events_stream(
     maxFilesPerTrigger — the micro-batch sizing knob standing in for
     Kafka's partition/batch assignment (T1).
 
-    Nanos→micros conversion matches the batch loader."""
+    ts is decoded by ``tables.decode_event_ts``, as in the batch loader."""
     if starting_offset not in ("smallest", "largest"):
         raise ValueError(f"starting_offset must be smallest|largest, got {starting_offset!r}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # events_dir: a FLAT dir of parquet files acting as the topic (the
     # file stream source does not recurse into subdirectories)
     d = events_dir if events_dir is not None else _events_dir(sf_dir)
-    # The file stream source needs an explicit schema; the fixture's ts
-    # physical type varies by generator version (TIMESTAMP(NANOS) read
-    # as long under the legacy conf, vs plain TIMESTAMP(MICROS)).
-    # Probe with a batch read and adapt, like sources/tables.load_table.
-    # The encoding is decided ONCE, from the files present at stream
-    # creation — a topic dir must stay single-encoding for its
-    # lifetime (mixing generator versions in one dir would misdecode
-    # the minority encoding; Kafka topics have the same one-serializer
-    # contract). An empty topic (the empty-then-produce pattern the
-    # `largest` offset stand-in models) defaults to the micros/
-    # TimestampType encoding, which is what Spark's own writers
-    # produce for files appended later.
+    # The file stream source needs an explicit schema, and the fixture's
+    # ts physical type varies by generator version (TIMESTAMP(NANOS),
+    # read as long under the legacy conf, or TIMESTAMP(MICROS)). A batch
+    # read probes it ONCE, from the files present at stream creation, so
+    # a topic dir must stay single-encoding for its lifetime (Kafka's
+    # one-serializer contract). An empty topic (the empty-then-produce
+    # pattern of the `largest` stand-in) takes the micros encoding that
+    # Spark's own writers produce. The decode is the batch loader's.
     try:
         ts_is_nanos = dict(spark.read.parquet(d).dtypes).get("ts") == "bigint"
     except Exception:  # AnalysisException: UNABLE_TO_INFER_SCHEMA on empty dir
@@ -139,21 +131,15 @@ def read_events_stream(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = reader.parquet(d)
-    if ts_is_nanos:
-        # integer DIV (not floor of a double divide — nanos overflow the
-        # double mantissa and round 1 us high), matching the batch loader
-        out = out.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    out = decode_event_ts(reader.parquet(d))
     if starting_offset == "largest":
         head = (
-            spark.read.schema(schema)
-            .parquet(d)
-            .agg(F.max(F.expr("ts div 1000") if ts_is_nanos else F.col("ts")).alias("mx"))
-            .first()["mx"]
+            decode_event_ts(spark.read.schema(schema).parquet(d))
+            .agg(F.max(F.unix_micros("ts")))
+            .first()[0]
         )
         if head is not None:
-            lit_head = F.timestamp_micros(F.lit(head)) if ts_is_nanos else F.lit(head)
-            out = out.filter(F.col("ts") > lit_head)
+            out = out.filter(F.col("ts") > F.timestamp_micros(F.lit(head)))
     return out
 
 
@@ -373,13 +359,11 @@ def route_to_sinks(enriched: DataFrame, out_dir: str) -> "StreamingQueryHolder":
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         holder_metrics.append({"batch_id": batch_id, **write_sinks(batch, out_dir, batch_id)})
 
-    q = (
-        enriched.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    return start_bounded(
+        enriched.writeStream.foreachBatch(write_batch),
+        os.path.join(out_dir, "_checkpoint"),
+        holder_metrics,
     )
-    return StreamingQueryHolder(q, holder_metrics)
 
 
 class StreamingQueryHolder:
@@ -390,8 +374,22 @@ class StreamingQueryHolder:
         self.query = query
         self.metrics = metrics
 
-    def await_done(self, timeout_sec: int = 300) -> None:
-        self.query.awaitTermination(timeout_sec)
+    def await_done(self, timeout_sec: int = 600) -> None:
+        """Wait for the bounded query to end. One still running after
+        ``timeout_sec`` is stopped and raises, so no caller reads a
+        partial sink; a failed query raises its own error."""
+        if not self.query.awaitTermination(timeout_sec):
+            self.query.stop()
+            raise TimeoutError(f"streaming query {self.query.id} still running after {timeout_sec} s")
+
+
+def start_bounded(writer: DataStreamWriter, checkpoint: str, metrics: list[dict]) -> StreamingQueryHolder:
+    """Start ``writer`` as a bounded run (T9): an ``availableNow``
+    trigger, so the query drains what its source holds and ends, with
+    its checkpoint at ``checkpoint``. ``metrics`` is the list the
+    writer's batch function fills, or empty."""
+    query = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
+    return StreamingQueryHolder(query, metrics)
 
 
 def windowed_counts(enriched: DataFrame) -> DataFrame:
@@ -620,14 +618,7 @@ def stream_merge_into(stream: DataFrame, tbl) -> "StreamingQueryHolder":
         ).withColumn("op", F.lit(OP_UPSERT))
         tbl.merge(agg, combine={"n_events": "sum", "sum_cents": "sum", "last_us": "max"})
 
-    ckpt = os.path.join(tempfile.gettempdir(), "ckpt_merge_" + uuid.uuid4().hex[:12])
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return StreamingQueryHolder(q, [])
+    return start_bounded(stream.writeStream.foreachBatch(write_batch), scratch("ckpt_merge_"), [])
 
 
 def run_to_memory(spark: SparkSession, df: DataFrame, complete: bool = False) -> DataFrame:
@@ -640,29 +631,16 @@ def run_to_memory(spark: SparkSession, df: DataFrame, complete: bool = False) ->
     driver, which is both the slow path at sf0.1 (~2x the pure
     streaming execution) and a non-starter at scale. Complete-mode
     (unsupported by file sinks) keeps the memory sink — complete
-    output is a re-emitted aggregate, small by construction."""
-    name = "s_" + uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "ckpt_" + name)
+    output is a re-emitted aggregate, small by construction; its view
+    is named after the run's scratch dir."""
+    out_dir = scratch("stream_")
+    ckpt = os.path.join(out_dir, "_checkpoint")
     if complete:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+        name = os.path.basename(out_dir)
+        sink = df.writeStream.format("memory").queryName(name).outputMode("complete")
+        start_bounded(sink, ckpt, []).await_done()
         return spark.table(name)
-    out_dir = os.path.join(tempfile.gettempdir(), "out_" + name)
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    start_bounded(df.writeStream.format("parquet").option("path", out_dir), ckpt, []).await_done()
     # explicit schema: a zero-row run leaves only _spark_metadata and
     # schema inference would fail; the streaming plan already knows it
     return spark.read.schema(df.schema).parquet(out_dir)

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from htmlentityextraction_spark import schemas
 from htmlentityextraction_spark.functions.pricing import price_status, selected_price
 from htmlentityextraction_spark.operators import models as md
-from htmlentityextraction_spark.streaming.pipeline import StreamingQueryHolder, write_sinks
+from htmlentityextraction_spark.streaming.pipeline import StreamingQueryHolder, start_bounded, write_sinks
 
 
 def _score_pages(pages: DataFrame, registry: Broadcast, forward: tuple[str, ...]) -> DataFrame:
@@ -146,10 +146,6 @@ def serve_stream(
         scored = serve_batch(batch, registry_bc, want_parallelism)
         metrics.append({"batch_id": batch_id, **write_sinks(scored, out_dir, batch_id)})
 
-    q = (
-        raw_stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    return start_bounded(
+        raw_stream.writeStream.foreachBatch(batch_fn), os.path.join(out_dir, "_checkpoint"), metrics
     )
-    return StreamingQueryHolder(q, metrics)

@@ -49,16 +49,14 @@ def test_approx_count_distinct_within_tolerance(spark):
     assert abs(approx - exact) / exact < 0.05
 
 
-def test_partition_pruning_on_partitioned_write(spark):
+def test_partition_pruning_on_partitioned_write(spark, tmp_path):
     """Date-partitioned writes + a partition-key filter must prune at
     the source (PartitionFilters, not post-scan Filter) — the layout
     strategy for time-series tables at 100 TB."""
-    import shutil
-    import tempfile
     from pyspark.sql import functions as F
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    d = tempfile.mkdtemp(prefix="part_pq_")
+    d = str(tmp_path)
     (li.withColumn("ship_month", F.date_format("l_shipdate", "yyyy-MM"))
        .write.partitionBy("ship_month").mode("overwrite").parquet(d))
     back = spark.read.parquet(d)
@@ -69,7 +67,6 @@ def test_partition_pruning_on_partitioned_write(spark):
     assert "PartitionFilters: [" in plan and "ship_month" in plan.split("PartitionFilters: [")[1][:120]
     # pruned scan reads only the one partition
     assert q.count() == li.filter(F.date_format("l_shipdate", "yyyy-MM") == target).count()
-    shutil.rmtree(d)
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

@@ -96,17 +96,16 @@ def test_round3_operators_empty(spark):
 
 
 def test_stream_merge_into_empty_stream(spark, tmp_path):
-    import tempfile
-
     from htmlentityextraction_spark.operators.incremental import ParquetMergeTable
     from htmlentityextraction_spark.streaming import pipeline as sp
 
-    topic = tempfile.mkdtemp(prefix="empty_merge_topic_")
+    topic = tmp_path / "topic"
+    topic.mkdir()
     tbl = ParquetMergeTable(spark, str(tmp_path / "t"), key_col="user_id", num_buckets=4)
     tbl.create(
         spark.createDataFrame([], "user_id long, n_events long, sum_cents long, last_us long")
     )
-    stream = sp.read_events_stream(spark, "unused", events_dir=topic)
+    stream = sp.read_events_stream(spark, "unused", events_dir=str(topic))
     sp.stream_merge_into(stream, tbl).await_done()
     assert tbl.read().count() == 0
 

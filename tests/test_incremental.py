@@ -315,11 +315,9 @@ def test_read_buckets_and_affected_buckets_prune_paths(spark, tmp_path):
 def test_stream_merge_never_reads_full_state_table(spark, tmp_path):
     """The streaming MERGE sink's per-batch combine must use the
     bucket-pruned read path, never a full-table read()."""
-    import tempfile
-
     from htmlentityextraction_spark.streaming import pipeline as sp
 
-    topic = tempfile.mkdtemp(prefix="pruned_merge_topic_")
+    topic = str(tmp_path / "topic")
     spark.createDataFrame(
         [(1, 2.0, "2024-01-01 00:00:00"), (2, 3.0, "2024-01-01 00:01:00")],
         "user_id long, value double, ts string",

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -19,23 +18,23 @@ def _table(spark, path):
     return tbl
 
 
-def test_healthy_table_audits_clean(spark):
-    tbl = _table(spark, tempfile.mkdtemp(prefix="integ_"))
+def test_healthy_table_audits_clean(spark, tmp_path):
+    tbl = _table(spark, str(tmp_path))
     rep = tbl.verify_integrity()
     assert rep["ok"] and not rep["missing"] and not rep["mismatched"]
     assert not rep["unverified"]  # counts recorded at write time
 
 
-def test_merge_keeps_audit_clean(spark):
-    tbl = _table(spark, tempfile.mkdtemp(prefix="integ2_"))
+def test_merge_keeps_audit_clean(spark, tmp_path):
+    tbl = _table(spark, str(tmp_path))
     upd = spark.createDataFrame([(1, 99, OP_UPSERT), (5000, 1, OP_UPSERT)],
                                 "k long, v long, op string")
     tbl.merge(upd)
     assert tbl.verify_integrity()["ok"]
 
 
-def test_missing_bucket_detected(spark):
-    path = tempfile.mkdtemp(prefix="integ3_")
+def test_missing_bucket_detected(spark, tmp_path):
+    path = str(tmp_path)
     tbl = _table(spark, path)
     m = tbl._read_manifest()
     victim_rel = next(iter(sorted(m["buckets"].values())))
@@ -44,8 +43,8 @@ def test_missing_bucket_detected(spark):
     assert not rep["ok"] and len(rep["missing"]) == 1
 
 
-def test_row_drift_detected(spark):
-    path = tempfile.mkdtemp(prefix="integ4_")
+def test_row_drift_detected(spark, tmp_path):
+    path = str(tmp_path)
     tbl = _table(spark, path)
     m = tbl._read_manifest()
     victim_rel = next(iter(sorted(m["buckets"].values())))
@@ -58,8 +57,8 @@ def test_row_drift_detected(spark):
     assert rep["mismatched"] and rep["mismatched"][0]["actual"] > rep["mismatched"][0]["expected"]
 
 
-def test_snapshots_and_files_metadata_tables(spark):
-    tbl = _table(spark, tempfile.mkdtemp(prefix="meta_"))
+def test_snapshots_and_files_metadata_tables(spark, tmp_path):
+    tbl = _table(spark, str(tmp_path))
     upd = spark.createDataFrame([(1, 99, OP_UPSERT)], "k long, v long, op string")
     tbl.merge(upd)
     snaps = {r["version"]: r for r in tbl.snapshots().collect()}

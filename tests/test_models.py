@@ -158,14 +158,11 @@ def test_class_union_vocab_mode(spark):
     assert all(v >= 0 for v in picked.values())
 
 
-def test_registry_parquet_roundtrip_serves_identically(spark):
-    import shutil
-    import tempfile
-
+def test_registry_parquet_roundtrip_serves_identically(spark, tmp_path):
     cand = _toy_candidates(spark)
     feats = md.featurize_candidates(cand)
     reg = md.train_per_domain(feats, n_estimators=5, max_depth=2, min_doc_freq=2)
-    d = tempfile.mkdtemp(prefix="registry_")
+    d = str(tmp_path)
     md.save_registry(reg, d)
     reloaded = md.load_registry(spark, d)
     p1 = {r.url: r.model_price for r in md.pick_model_price(
@@ -173,7 +170,6 @@ def test_registry_parquet_roundtrip_serves_identically(spark):
     p2 = {r.url: r.model_price for r in md.pick_model_price(
         md.score_candidates(feats, reloaded)).collect()}
     assert p1 == p2
-    shutil.rmtree(d)
 
 
 # --- the serve path's Python featurize twin and top-k kernel ---

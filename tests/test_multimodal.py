@@ -61,16 +61,13 @@ def test_sample_frames_partitions_payload(spark):
         assert r.tot == (r.n_bytes // r.n_frames) * r.n_frames
 
 
-def test_metadata_query_prunes_payload_column(spark):
+def test_metadata_query_prunes_payload_column(spark, tmp_path):
     """The metadata profile must scan only doc_id/text-derived columns
     — with media materialized to parquet, the payload column must be
     absent from ReadSchema."""
-    import tempfile, shutil
-
-    d = tempfile.mkdtemp(prefix="media_pq_")
+    d = str(tmp_path)
     _media(spark).write.mode("overwrite").parquet(d)
     media = spark.read.parquet(d)
     q = media.groupBy(F.col("media.media_type")).agg(F.sum("media.n_bytes"))
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "payload" not in plan, "payload column must be pruned from the scan"
-    shutil.rmtree(d)

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 import pytest
 
@@ -60,11 +59,11 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 
 @pytest.fixture(scope="module")
-def shuffled_dir(spark) -> str:
+def shuffled_dir(spark, tmp_path_factory) -> str:
     """SF_SMOKE rewritten with shuffled row order and 7 files/table."""
     from pyspark.sql import functions as F
 
-    dst = tempfile.mkdtemp(prefix="layout_inv_")
+    dst = str(tmp_path_factory.mktemp("layout_inv"))
     for t in TABLES:
         df = spark.read.parquet(os.path.join(SF_SMOKE, f"{t}.parquet"))
         (

@@ -7,8 +7,6 @@ broadcast per stream."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark import SparkContext
 from pyspark.sql import functions as F
@@ -132,10 +130,9 @@ def test_duplicate_url_is_scored_per_message(spark):
     assert got == [(-1.0, 40.25, "allFalseCandids"), (12.5, 12.5, "modeledPatternEquals")]
 
 
-def test_serve_stream_broadcasts_the_registry_once(spark):
+def test_serve_stream_broadcasts_the_registry_once(spark, tmp_path):
     reg = _registry(spark)
-    src = tempfile.mkdtemp(prefix="serve_bc_src_")
-    out = tempfile.mkdtemp(prefix="serve_bc_out_")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
     for f in range(3):
         msgs = [(f'{{"url":"http://a.com/p/{f}-{i}","html":"good price {10 + i}.50 now",'
                  f'"price":{10 + i}.5,"updatedPrice":{10 + i}.5}}',) for i in range(5)]
@@ -154,19 +151,15 @@ def test_serve_stream_broadcasts_the_registry_once(spark):
         holder.await_done()
     finally:
         SparkContext.broadcast = original
-    try:
-        batches = [p for p in holder.query.recentProgress if p["numInputRows"] > 0]
-        assert len(batches) == 3
-        assert len(created) == 1
-        # every sink dir is readable, the ones no row reached included
-        for sink, rows in (("historical", 15), ("realtime", 15), ("logs", 0), ("logs_corrupt", 0)):
-            assert spark.read.parquet(os.path.join(out, sink)).count() == rows, sink
-    finally:
-        shutil.rmtree(src)
-        shutil.rmtree(out)
+    batches = [p for p in holder.query.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 3
+    assert len(created) == 1
+    # every sink dir is readable, the ones no row reached included
+    for sink, rows in (("historical", 15), ("realtime", 15), ("logs", 0), ("logs_corrupt", 0)):
+        assert spark.read.parquet(os.path.join(out, sink)).count() == rows, sink
 
 
-def test_serve_replayed_batch_overwrites_its_own_output(spark):
+def test_serve_replayed_batch_overwrites_its_own_output(spark, tmp_path):
     # a restart after a batch's output was written but before its
     # commit replays that batch; its deterministic file names let it
     # overwrite its own files, so every sink still holds each message
@@ -174,8 +167,7 @@ def test_serve_replayed_batch_overwrites_its_own_output(spark):
     from collections import Counter
 
     reg = _registry(spark)
-    src = tempfile.mkdtemp(prefix="serve_replay_src_")
-    out = tempfile.mkdtemp(prefix="serve_replay_out_")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
     for f in range(3):
         msgs = [(f'{{"url":"http://a.com/p/{f}-{i}","html":"good price {10 + i}.50 now",'
                  f'"price":{10 + i}.5,"updatedPrice":{10 + i}.5}}',) for i in range(5)]
@@ -189,28 +181,24 @@ def test_serve_replayed_batch_overwrites_its_own_output(spark):
         holder.await_done()
         return [p["batchId"] for p in holder.query.recentProgress if p["numInputRows"] > 0]
 
-    try:
-        assert drain() == [0, 1, 2]
-        commits = os.path.join(out, "_checkpoint", "commits")
-        os.remove(os.path.join(commits, "2"))
-        crc = os.path.join(commits, ".2.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        assert drain() == [2]
+    assert drain() == [0, 1, 2]
+    commits = os.path.join(out, "_checkpoint", "commits")
+    os.remove(os.path.join(commits, "2"))
+    crc = os.path.join(commits, ".2.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert drain() == [2]
 
-        def sink(name):
-            return spark.read.parquet(os.path.join(out, name)).collect()
+    def sink(name):
+        return spark.read.parquet(os.path.join(out, name)).collect()
 
-        hist, rt, logs = sink("historical"), sink("realtime"), sink("logs")
-        urls = Counter(r.url for r in hist)
-        assert len(urls) == 18 and set(urls.values()) == {1}
-        assert Counter(rt + logs) == Counter(hist)
-        assert {r.url for r in logs} == {f"http://b.com/p/{f}" for f in range(3)}
-        corrupt = Counter(r.raw_payload for r in sink("logs_corrupt"))
-        assert corrupt == Counter(f"{{broken {f}" for f in range(3))
-    finally:
-        shutil.rmtree(src)
-        shutil.rmtree(out)
+    hist, rt, logs = sink("historical"), sink("realtime"), sink("logs")
+    urls = Counter(r.url for r in hist)
+    assert len(urls) == 18 and set(urls.values()) == {1}
+    assert Counter(rt + logs) == Counter(hist)
+    assert {r.url for r in logs} == {f"http://b.com/p/{f}" for f in range(3)}
+    corrupt = Counter(r.raw_payload for r in sink("logs_corrupt"))
+    assert corrupt == Counter(f"{{broken {f}" for f in range(3))
 
 
 def test_serve_counters_equal_the_oracle_counts_at_sf001(spark, tmp_path):

@@ -7,9 +7,10 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import tempfile
+import time
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions.pricing import (
@@ -70,9 +71,9 @@ def test_price_status_truth_table(spark):
         assert {i: (s, fp) for i, s, fp in rows} == want, engine
 
 
-def test_route_to_sinks_partitions_rows(spark):
+def test_route_to_sinks_partitions_rows(spark, tmp_path):
     enriched = sp.enrich_events(sp.read_events_stream(spark, SF))
-    out = tempfile.mkdtemp(prefix="routes_")
+    out = str(tmp_path)
     sp.route_to_sinks(enriched, out).await_done()
     hist = spark.read.parquet(f"{out}/historical")
     rt = spark.read.parquet(f"{out}/realtime")
@@ -80,13 +81,12 @@ def test_route_to_sinks_partitions_rows(spark):
     assert hist.count() == rt.count() + logs.count() == 1000
     assert rt.filter(~F.col("status").isin(*PASSING)).count() == 0
     assert logs.filter(F.col("status").isin(*PASSING)).count() == 0
-    shutil.rmtree(out)
 
 
-def test_route_to_sinks_metrics_counters(spark):
+def test_route_to_sinks_metrics_counters(spark, tmp_path):
     # A11: per-batch counters accumulate on the holder
     enriched = sp.enrich_events(sp.read_events_stream(spark, SF))
-    out = tempfile.mkdtemp(prefix="metrics_")
+    out = str(tmp_path)
     holder = sp.route_to_sinks(enriched, out)
     holder.await_done()
     assert holder.metrics, "at least one micro-batch recorded"
@@ -96,7 +96,6 @@ def test_route_to_sinks_metrics_counters(spark):
     assert total == statuses == 1000 and 0 < passing < 1000
     assert spark.read.parquet(f"{out}/realtime").count() == passing
     assert spark.read.parquet(f"{out}/logs").count() == total - passing
-    shutil.rmtree(out)
 
 
 def test_stream_dedup_restores_exactly_once(spark):
@@ -107,13 +106,11 @@ def test_stream_dedup_restores_exactly_once(spark):
     assert deduped.select("event_id").distinct().count() == 1000
 
 
-def test_watermark_drops_late_data_across_restart(spark):
+def test_watermark_drops_late_data_across_restart(spark, tmp_path):
     """Two availableNow runs over one checkpoint: run 1 advances the
     watermark to (max ts - 10 min); run 2 delivers an event 2 hours
     older, which must be dropped from the windowed aggregation."""
-    src = tempfile.mkdtemp(prefix="late_src_")
-    ckpt = tempfile.mkdtemp(prefix="late_ckpt_")
-    sink = tempfile.mkdtemp(prefix="late_sink_")
+    src, ckpt, sink = (str(tmp_path / d) for d in ("src", "ckpt", "sink"))
 
     def write_batchfile(name, rows):
         spark.createDataFrame(
@@ -160,7 +157,6 @@ def test_watermark_drops_late_data_across_restart(spark):
     # 10:00 event contributed nothing anywhere
     assert sums.get(12) == 3.0
     assert 10 not in sums
-    shutil.rmtree(src); shutil.rmtree(ckpt); shutil.rmtree(sink)
 
 
 def _write_events(spark, flat_dir, ids_ts, tag):
@@ -242,3 +238,22 @@ def test_stream_stream_attribution_horizon(spark, tmp_path):
         spark, sp.stream_stream_attribution(views, clicks, "inner")
     ).collect()
     assert [(r["view_id"], r["click_id"], r["lag_seconds"]) for r in out] == [(1, 3, 300)]
+
+
+def test_await_done_stops_and_raises_on_timeout(spark, tmp_path):
+    """A bounded stream still running at its timeout fails instead of
+    handing its caller a partial sink: ``await_done`` stops the query
+    and raises."""
+
+    def slow_batch(batch, batch_id):
+        time.sleep(4)
+
+    stream = sp.read_events_stream(spark, SF)
+    holder = sp.start_bounded(
+        stream.writeStream.foreachBatch(slow_batch), str(tmp_path / "ckpt"), []
+    )
+    t0 = time.time()
+    with pytest.raises(TimeoutError):
+        holder.await_done(1)
+    assert not holder.query.isActive
+    assert time.time() - t0 < 60

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -21,10 +19,8 @@ def _write_batches(spark, src, n_files=4, rows_per=250):
         ).coalesce(1).write.mode("append").parquet(os.path.join(src, f"b{b}"))
 
 
-def test_multi_microbatch_and_restart_exactly_once(spark):
-    src = tempfile.mkdtemp(prefix="mb_src_")
-    ckpt = tempfile.mkdtemp(prefix="mb_ckpt_")
-    sink = tempfile.mkdtemp(prefix="mb_sink_")
+def test_multi_microbatch_and_restart_exactly_once(spark, tmp_path):
+    src, ckpt, sink = (str(tmp_path / d) for d in ("src", "ckpt", "sink"))
     _write_batches(spark, src, n_files=2)
 
     def run():
@@ -59,10 +55,9 @@ def test_multi_microbatch_and_restart_exactly_once(spark):
     # FILES, so assert no file processed twice rather than id uniqueness
     assert total == 500 + 1000
     assert dup == 0
-    shutil.rmtree(src); shutil.rmtree(ckpt); shutil.rmtree(sink)
 
 
-def test_processing_time_trigger_and_stop(spark):
+def test_processing_time_trigger_and_stop(spark, tmp_path_factory):
     """T1/T10: a processingTime-triggered continuous query runs
     micro-batches until stopped on a condition (the reference's
     stop-threshold draft, Htmls2Cassandra.scala:288-296)."""
@@ -71,8 +66,8 @@ def test_processing_time_trigger_and_stop(spark):
     from htmlentityextraction_spark.streaming import pipeline as sp
 
     stream = sp.read_events_stream(spark, "/root/testdata/sf0.001")
-    out = tempfile.mkdtemp(prefix="pt_sink_")
-    ckpt = tempfile.mkdtemp(prefix="pt_ckpt_")
+    out = str(tmp_path_factory.mktemp("pt_sink"))
+    ckpt = str(tmp_path_factory.mktemp("pt_ckpt"))
     q = (
         stream.select("event_id", "value")
         .writeStream.format("parquet")
@@ -93,13 +88,12 @@ def test_processing_time_trigger_and_stop(spark):
         q.stop()
     assert not q.isActive
     assert spark.read.schema("event_id long, value double").parquet(out).count() == 1000
-    shutil.rmtree(out); shutil.rmtree(ckpt)
 
 
-def _three_message_drain(spark):
+def _three_message_drain(spark, tmp_path):
     """One micro-batch of a good page, a null-html page, a corrupt
     message and a priced page of a domain the registry has no model
-    for, through ``serve_stream``: (holder, src, out)."""
+    for, through ``serve_stream``: (holder, out)."""
     from htmlentityextraction_spark.operators import models as md
     from htmlentityextraction_spark.streaming import serve
 
@@ -123,20 +117,19 @@ def _three_message_drain(spark):
         ('{"url":"http://other.com/p/3","html":"buy other price 55.50 deal",'
          '"price":55.5,"updatedPrice":55.5}',),         # no model for the domain
     ]
-    src = tempfile.mkdtemp(prefix="serve_rob_src_")
-    out = tempfile.mkdtemp(prefix="serve_rob_out_")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
     spark.createDataFrame(msgs, "value string").write.mode("overwrite").parquet(src)
     raw = spark.readStream.schema("value string").parquet(src)
     holder = serve.serve_stream(spark, raw, reg, out)
     holder.await_done()
-    return holder, src, out
+    return holder, out
 
 
-def test_serve_path_survives_corrupt_and_null_messages(spark):
+def test_serve_path_survives_corrupt_and_null_messages(spark, tmp_path):
     """The serve pipeline must route corrupt JSON out, sentinel
     null-html pages, and still score the good ones — one poisoned
     Kafka message must never kill the stream."""
-    _, src, out = _three_message_drain(spark)
+    _, out = _three_message_drain(spark, tmp_path)
 
     hist = spark.read.parquet(os.path.join(out, "historical")).collect()
     by_url = {r.url: r for r in hist}
@@ -155,25 +148,23 @@ def test_serve_path_survives_corrupt_and_null_messages(spark):
     r3 = by_url["http://other.com/p/3"]
     assert r3.model_price == -2.0 and r3.status == "missingModel"
     assert r3.final_price == 55.5
-    shutil.rmtree(src); shutil.rmtree(out)
 
 
-def test_serve_counters_of_the_three_message_batch(spark):
+def test_serve_counters_of_the_three_message_batch(spark, tmp_path):
     """The per-batch counters come from the sink writer's own pass: two
     good.com pages, one corrupt message and one page of a domain the
     registry lacks. The toy registry cannot separate its alternating
     labels (every training row has the same features), so no candidate
     is positive and both good.com pages take the -1 sentinel; the
     other domain's page takes the -2 missing-model sentinel."""
-    holder, src, out = _three_message_drain(spark)
+    holder, _ = _three_message_drain(spark, tmp_path)
     assert holder.metrics == [{
         "batch_id": 0, "rows": 3, "corrupt": 1, "no_candidate": 2, "missing_model": 1,
         "status": {"allFalseCandids": 2, "missingModel": 1},
     }]
-    shutil.rmtree(src); shutil.rmtree(out)
 
 
-def test_serve_backpressure_bounds_microbatches(spark):
+def test_serve_backpressure_bounds_microbatches(spark, tmp_path):
     """Bounded-ingest contract on the SERVE path (T9 analogue of the
     Kafka maxOffsetsPerTrigger knob, which `read_events_kafka` wires
     and the broker-gated test covers): with maxFilesPerTrigger=1 over
@@ -196,8 +187,7 @@ def test_serve_backpressure_bounds_microbatches(spark):
     )
 
     rows_per_file = 25
-    src = tempfile.mkdtemp(prefix="serve_bp_src_")
-    out = tempfile.mkdtemp(prefix="serve_bp_out_")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
     for f in range(4):
         msgs = [
             (f'{{"url":"http://good.com/p/{f * rows_per_file + i}",'
@@ -223,4 +213,3 @@ def test_serve_backpressure_bounds_microbatches(spark):
     )
     hist = spark.read.parquet(os.path.join(out, "historical"))
     assert hist.count() == 4 * rows_per_file, "every page must land exactly once"
-    shutil.rmtree(src); shutil.rmtree(out)

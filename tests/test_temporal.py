@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import shutil
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,8 +30,7 @@ _EXPECT_US = [
 ]
 
 
-def _write_events(unit: str) -> str:
-    d = tempfile.mkdtemp(prefix=f"enc_{unit}_")
+def _write_events(unit: str, d) -> str:
     tbl = pa.table(
         {
             "event_id": pa.array([1, 2, 3], pa.int64()),
@@ -42,72 +39,61 @@ def _write_events(unit: str) -> str:
         }
     )
     pq.write_table(tbl, os.path.join(d, "events.parquet"), version="2.6")
-    return d
+    return str(d)
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
-def test_epoch_helpers_both_encodings(spark, unit):
-    d = _write_events(unit)
-    try:
-        ev = load_table(spark, d, "events").orderBy("event_id")
-        got = ev.select(
-            epoch_micros("ts").alias("us"), epoch_seconds("ts").alias("s")
-        ).collect()
-        assert [r.us for r in got] == _EXPECT_US
-        assert [r.s for r in got] == [u // 1_000_000 for u in _EXPECT_US]
-    finally:
-        shutil.rmtree(d)
+def test_epoch_helpers_both_encodings(spark, unit, tmp_path):
+    d = _write_events(unit, tmp_path)
+    ev = load_table(spark, d, "events").orderBy("event_id")
+    got = ev.select(
+        epoch_micros("ts").alias("us"), epoch_seconds("ts").alias("s")
+    ).collect()
+    assert [r.us for r in got] == _EXPECT_US
+    assert [r.s for r in got] == [u // 1_000_000 for u in _EXPECT_US]
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
-def test_stream_source_both_encodings(spark, unit):
+def test_stream_source_both_encodings(spark, unit, tmp_path):
     from htmlentityextraction_spark.streaming.pipeline import read_events_stream
 
-    d = _write_events(unit)
-    out = tempfile.mkdtemp(prefix="enc_out_")
-    try:
-        stream = read_events_stream(spark, sf_dir="unused", events_dir=d)
-        q = (
-            stream.select("event_id", epoch_micros("ts").alias("us"))
-            .writeStream.format("memory")
-            .queryName(f"enc_{unit}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(f"select * from enc_{unit} order by event_id").collect()
-        assert [r.us for r in rows] == _EXPECT_US
-    finally:
-        shutil.rmtree(d)
-        shutil.rmtree(out)
+    d = _write_events(unit, tmp_path)
+    stream = read_events_stream(spark, sf_dir="unused", events_dir=d)
+    q = (
+        stream.select("event_id", epoch_micros("ts").alias("us"))
+        .writeStream.format("memory")
+        .queryName(f"enc_{unit}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = spark.sql(f"select * from enc_{unit} order by event_id").collect()
+    assert [r.us for r in rows] == _EXPECT_US
 
 
-def test_stream_source_empty_topic_then_produce(spark):
+def test_stream_source_empty_topic_then_produce(spark, tmp_path):
     """Stream creation on an as-yet-empty topic dir must not raise
     (UNABLE_TO_INFER_SCHEMA regression): the probe falls back to the
     micros encoding, which is what Spark-written files use."""
     from htmlentityextraction_spark.streaming.pipeline import read_events_stream
 
-    d = tempfile.mkdtemp(prefix="empty_topic_")
-    try:
-        stream = read_events_stream(spark, sf_dir="unused", events_dir=d, starting_offset="largest")
-        # produce AFTER creation, Spark-written (micros) — the documented
-        # single-encoding-per-topic arrival pattern
-        spark.createDataFrame(
-            [(1, _TS[0], 10)], "event_id long, ts timestamp, user_id long"
-        ).write.mode("append").parquet(d)
-        q = (
-            stream.select("event_id", epoch_micros("ts").alias("us"))
-            .writeStream.format("memory")
-            .queryName("empty_topic")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("select * from empty_topic").collect()
-        assert [r.us for r in rows] == [_EXPECT_US[0]]
-    finally:
-        shutil.rmtree(d)
+    d = str(tmp_path)
+    stream = read_events_stream(spark, sf_dir="unused", events_dir=d, starting_offset="largest")
+    # produce AFTER creation, Spark-written (micros) — the documented
+    # single-encoding-per-topic arrival pattern
+    spark.createDataFrame(
+        [(1, _TS[0], 10)], "event_id long, ts timestamp, user_id long"
+    ).write.mode("append").parquet(d)
+    q = (
+        stream.select("event_id", epoch_micros("ts").alias("us"))
+        .writeStream.format("memory")
+        .queryName("empty_topic")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = spark.sql("select * from empty_topic").collect()
+    assert [r.us for r in rows] == [_EXPECT_US[0]]
 
 
 def test_assert_timestamp_col_rejects_numeric(spark):

@@ -21,8 +21,6 @@ Covered classes:
 
 from __future__ import annotations
 
-import tempfile
-
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -48,11 +46,11 @@ CSV_OPTS = {
 }
 
 
-def test_csv_roundtrip_lossless_with_contract_options(spark):
+def test_csv_roundtrip_lossless_with_contract_options(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(ADVERSARIAL)], "id long, st string"
     )
-    root = tempfile.mkdtemp(prefix="csv_rt_")
+    root = str(tmp_path)
     df.write.mode("overwrite").options(**CSV_OPTS).csv(root)
     back = (
         spark.read.schema("id long, st string")
@@ -64,12 +62,12 @@ def test_csv_roundtrip_lossless_with_contract_options(spark):
         assert got[i] == s, f"row {i}: {s!r} -> {got[i]!r}"
 
 
-def test_csv_default_read_splits_embedded_newlines(spark):
+def test_csv_default_read_splits_embedded_newlines(spark, tmp_path):
     """The negative control: WITHOUT multiLine, a quoted embedded
     newline splits the record — the silent corruption the contract
     options exist to prevent."""
     df = spark.createDataFrame([(1, "a\nb")], "id long, st string")
-    root = tempfile.mkdtemp(prefix="csv_neg_")
+    root = str(tmp_path)
     df.write.mode("overwrite").option("header", "true").csv(root)
     n = spark.read.option("header", "true").schema("id long, st string").csv(root).count()
     assert n == 2  # one logical row read back as two physical rows

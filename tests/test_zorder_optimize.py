@@ -7,7 +7,6 @@ not inferred."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -46,9 +45,9 @@ def _make_table(spark, path: str):
     return li, tbl
 
 
-def test_zorder_optimize_tightens_row_group_stats(spark, monkeypatch):
+def test_zorder_optimize_tightens_row_group_stats(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(incremental, "_ZORDER_ROW_GROUP_BYTES", 64 * 1024)
-    path = tempfile.mkdtemp(prefix="zopt_")
+    path = str(tmp_path)
     li, tbl = _make_table(spark, path)
     m0 = tbl._read_manifest()
     before_a, _ = _avg_span(path, m0["buckets"], "l_partkey")
@@ -86,9 +85,9 @@ def test_zvalue_n_three_columns(spark):
     assert df.collect()[0]["z"] == 0b101011
 
 
-def test_zorder_optimize_three_columns(spark, monkeypatch):
+def test_zorder_optimize_three_columns(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(incremental, "_ZORDER_ROW_GROUP_BYTES", 64 * 1024)
-    path = tempfile.mkdtemp(prefix="zopt4_")
+    path = str(tmp_path)
     li = spark.read.parquet(os.path.join(SF_DENSE, "lineitem.parquet")).select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("rid"),
         "l_partkey", "l_suppkey", "l_quantity",

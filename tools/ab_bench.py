@@ -50,7 +50,7 @@ def main() -> None:
 
     def run_once(name: str, arm: str) -> float:
         setattr(module, const, args.a if arm == "a" else args.b)
-        return timed_noop_write(lambda: qs[name](spark, args.sf_dir))
+        return timed_noop_write(spark, lambda: qs[name](spark, args.sf_dir))
 
     # arm order: ABBA BAAB ... (balanced within every pair of rounds)
     order = []

@@ -99,6 +99,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from htmlentityextraction_spark.runner import run_scope
 
     if args.plain_session:
         from pyspark.sql import SparkSession
@@ -138,8 +139,8 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, args.sf_dir)
-            spdf = sdf.toPandas()
+            with run_scope(spark):
+                spdf = qs[name](spark, args.sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             # mirror the driver: a crashed query is a recorded failure,
             # not the end of the run

@@ -18,9 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,7 +32,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from htmlentityextraction_spark.runner import timed_noop_write, warm_up
+    from htmlentityextraction_spark.runner import run_scope, scratch, timed_noop_write, warm_up
     from htmlentityextraction_spark.session import get_spark
     from htmlentityextraction_spark.queries.ml import fit_once
     from htmlentityextraction_spark.queries.serve_q import _page_messages
@@ -50,21 +48,17 @@ def main() -> None:
             t0 = time.time()
             registry = fit_once(spark, sf_dir)
             t1 = time.time()
-            src = tempfile.mkdtemp(prefix="serve_probe_src_")
-            out = tempfile.mkdtemp(prefix="serve_probe_out_")
-            try:
+            with run_scope(spark):
+                src = scratch("serve_probe_src_")
+                out = scratch("serve_probe_out_")
                 _page_messages(spark, sf_dir).write.mode("overwrite").parquet(src)
                 t2 = time.time()
                 raw = spark.readStream.schema("value string").parquet(src)
                 serve.serve_stream(spark, raw, registry, out).await_done()
                 t3 = time.time()
                 readback = timed_noop_write(
-                    lambda: spark.read.parquet(os.path.join(out, "historical"))
+                    spark, lambda: spark.read.parquet(os.path.join(out, "historical"))
                 )
-            finally:
-                # ADVICE r12: clean up even when a run dies mid-iteration
-                shutil.rmtree(src, ignore_errors=True)
-                shutil.rmtree(out, ignore_errors=True)
             rec = {
                 "run": i + 1,
                 "registry": round(t1 - t0, 3),

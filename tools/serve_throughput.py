@@ -29,9 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -82,15 +80,14 @@ def build_fixture(spark, sf_dir: str, kind: str, pages: int, files: int, dst: st
 
 
 def run_serve(spark, src: str, registry_rows) -> float:
+    from htmlentityextraction_spark.runner import run_scope, scratch
     from htmlentityextraction_spark.streaming import serve
 
-    out = tempfile.mkdtemp(prefix="thr_out_")
-    raw = spark.readStream.schema("value string").parquet(src)
-    t0 = time.time()
-    serve.serve_stream(spark, raw, registry_rows, out).await_done()
-    dt = time.time() - t0
-    shutil.rmtree(out, ignore_errors=True)
-    return round(dt, 2)
+    with run_scope(spark):
+        raw = spark.readStream.schema("value string").parquet(src)
+        t0 = time.time()
+        serve.serve_stream(spark, raw, registry_rows, scratch("thr_out_")).await_done()
+        return round(time.time() - t0, 2)
 
 
 def main() -> None:
@@ -102,6 +99,7 @@ def main() -> None:
 
     from htmlentityextraction_spark.session import get_spark
     from htmlentityextraction_spark.queries.ml import fit_once
+    from htmlentityextraction_spark.runner import run_scope, scratch
 
     spark = get_spark("serve-throughput")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -109,10 +107,11 @@ def main() -> None:
 
     results = {}
     for kind in ("tiny", "text", "digit"):
-        src = tempfile.mkdtemp(prefix=f"thr_src_{kind}_")
-        n, nbytes = build_fixture(spark, args.sf_dir, kind, args.pages, args.files, src)
-        cold = run_serve(spark, src, registry_rows)
-        warm = run_serve(spark, src, registry_rows)
+        with run_scope(spark):
+            src = scratch(f"thr_src_{kind}_")
+            n, nbytes = build_fixture(spark, args.sf_dir, kind, args.pages, args.files, src)
+            cold = run_serve(spark, src, registry_rows)
+            warm = run_serve(spark, src, registry_rows)
         results[kind] = {
             "pages": n,
             "mb": round(nbytes / 1e6, 1),
@@ -121,7 +120,6 @@ def main() -> None:
             "pages_per_s": round(n / warm, 1),
             "mb_per_s": round(nbytes / 1e6 / warm, 2),
         }
-        shutil.rmtree(src, ignore_errors=True)
         print(f"# {kind}: {results[kind]}", file=sys.stderr)
 
     for kind in ("text", "digit"):
