@@ -145,11 +145,10 @@ def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("__li_gs")
     return spark.sql(
-        "SELECT l_returnflag, l_linestatus, count(*) AS n FROM __li_gs "
-        "GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))"
+        "SELECT l_returnflag, l_linestatus, count(*) AS n FROM {lineitem} "
+        "GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))",
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -164,28 +164,31 @@ def quantile_normalize_chars_by_source(spark: SparkSession, sf_dir: str) -> Data
 
 _LATERAL_SQL = """
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-    FROM customer c,
-    LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+    FROM {customer} c,
+    LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
              WHERE o.o_custkey = c.c_custkey
              ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) t
     WHERE c.c_custkey % 4 = 1
 """
 
 
-@register("sql_lateral_topn_per_customer", _LATERAL_SQL)
+@register("sql_lateral_topn_per_customer", _LATERAL_SQL.format(customer="customer", orders="orders"))
 def sql_lateral_topn_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modern SQL-surface parity (S10 upgraded): the top-3 orders per
     customer as a correlated LATERAL subquery with ORDER BY/LIMIT,
-    executed by Spark SQL over the registered catalog views — the
-    IDENTICAL SQL text runs on both engines (the one query here whose
-    oracle string IS its implementation). Catalyst rewrites the
-    lateral into a ranked window join, so the per-group top-n costs
-    one shuffle — asserted equivalent to the window formulation used
-    across the windows family."""
-    from htmlentityextraction_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    executed by Spark SQL over the customer and orders frames, passed
+    as ``spark.sql`` arguments so no caller's view is replaced — the
+    IDENTICAL SQL text runs on both engines, with the table names
+    filled in for DuckDB (the one query here whose oracle string IS
+    its implementation). Catalyst rewrites the lateral into a ranked
+    window join, so the per-group top-n costs one shuffle — asserted
+    equivalent to the window formulation used across the windows
+    family."""
+    return spark.sql(
+        _LATERAL_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 @register(

@@ -1,3 +1,3 @@
-from htmlentityextraction_spark.sources.tables import TABLES, load_table, load_tables, register_views
+from htmlentityextraction_spark.sources.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]

@@ -135,16 +135,3 @@ def decode_event_ts(df: DataFrame) -> DataFrame:
     if dict(df.dtypes).get("ts") != "bigint":
         return df
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register all tables as temp views for ``spark.sql`` entry points
-    (the reference's CassandraSQLContext path, SURVEY.md §2.1 S10)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -173,3 +173,23 @@ def test_scratch_left_outside_a_scope_goes_with_its_process(tmp_path):
     )
     assert out.stdout.strip() == "1"  # the root existed while it ran
     assert os.listdir(tmp_path) == []
+
+
+def test_sql_queries_leave_a_callers_views_alone(spark, sf_dir):
+    """The queries that run SQL text pass their frames to ``spark.sql``
+    as arguments: a caller's own views named like their tables stay
+    as they were."""
+    import __spark_entry__ as entry
+
+    names = ("orders", "customer", "lineitem", "__li_gs")
+    for name in names:
+        spark.createDataFrame([(1, name)], "k int, v string").createOrReplaceTempView(name)
+    try:
+        for query in ("grouping_sets_mixed", "sql_lateral_topn_per_customer"):
+            assert entry.queries()[query](spark, sf_dir).count() > 0
+        assert {n: [tuple(r) for r in spark.table(n).collect()] for n in names} == {
+            n: [(1, n)] for n in names
+        }
+    finally:
+        for name in names:
+            spark.catalog.dropTempView(name)

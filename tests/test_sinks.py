@@ -90,7 +90,10 @@ def test_write_sinks_replay_holds_each_row_once(spark, tmp_path):
     out = str(tmp_path)
     first = write_sinks(batch(rows[:5], [], rows[5:] + corrupt), out, 7)
     assert sorted(os.listdir(f"{out}/historical")) == ["part-7-0.parquet", "part-7-2.parquet"]
+    # a task killed between its write and its move leaves its dot-temp
+    open(f"{out}/historical/.part-7-2.parquet", "w").write("partial")
     replay = write_sinks(batch(rows[:9] + corrupt, rows[9:]), out, 7)
+    assert sorted(os.listdir(f"{out}/historical")) == ["part-7-0.parquet", "part-7-1.parquet"]
     assert first == replay
     assert replay["rows"] == 12 and replay["corrupt"] == 2
 
