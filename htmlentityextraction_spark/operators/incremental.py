@@ -7,13 +7,21 @@ reads the change feed between two versions from the manifest diff.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import os
 import re
+import shutil
+import threading
+import time
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from htmlentityextraction_spark.operators.zorder import scale_to_bits, zvalue_n
 
 
 # ---------------------------------------------------------------------------
@@ -86,8 +94,12 @@ class ParquetMergeTable:
     parts:
 
     - data lives in key buckets (hash or range), one parquet dir per
-      (bucket, version); a JSON manifest maps bucket → current dir and
-      records each bucket's key zone map and row count.
+      (bucket, version) under a ``v<N>-<hex>`` staging dir; a JSON
+      manifest records its ``version``, ``buckets`` (bucket → current
+      dir), ``stats`` (each bucket's key zone map and ``__rows``
+      count), the physical ``schema``, the bucket ``spec`` and, after
+      a rename or drop, ``mapping``/``dropped``. Every writer writes
+      all of these; the readers rely on them.
     - MERGE (``merge`` = ``staged_merge`` + ``commit``) rewrites ONLY
       the buckets that contain updated keys (copy-on-write file reuse
       for the rest) — at 100 TB a trickle merge touches
@@ -139,25 +151,76 @@ class ParquetMergeTable:
         self.range_width = range_width
         # the bucket SPEC belongs to the table, not the client
         # (Iceberg partition-spec semantics): an existing manifest's
-        # recorded spec overrides constructor defaults, so every later
+        # recorded spec overrides constructor arguments, so every later
         # opener buckets and prunes like the creator regardless of the
         # arguments it passes
         if os.path.exists(self._manifest_file):
-            spec = self._read_manifest().get("spec")
-            if spec:
-                self.num_buckets = spec.get("num_buckets", self.num_buckets)
-                self.bucketing = spec.get("bucketing", self.bucketing)
-                self.range_width = spec.get("range_width", self.range_width)
-                self.key_col = spec.get("key_col", self.key_col)
+            spec = self._read_manifest()["spec"]
+            self.num_buckets = spec["num_buckets"]
+            self.bucketing = spec["bucketing"]
+            self.range_width = spec["range_width"]
+            self.key_col = spec["key_col"]
 
     # -- manifest ----------------------------------------------------------
     @property
     def _manifest_file(self) -> str:
         return os.path.join(self.path, "manifest.json")
 
+    def _version_file(self, version: int) -> str:
+        return os.path.join(self.path, f"manifest-v{version}.json")
+
     def _read_manifest(self) -> dict:
         with open(self._manifest_file) as f:
             return json.load(f)
+
+    def _versions(self) -> list[int]:
+        """Every version with a ``manifest-v<N>.json`` file, oldest
+        first: the published ones and, beyond the current pointer,
+        crash residue (see ``_manifest_for``)."""
+        return sorted(
+            int(mm.group(1))
+            for name in os.listdir(self.path)
+            if (mm := re.fullmatch(r"manifest-v(\d+)\.json", name))
+        )
+
+    def _published(self) -> list[dict]:
+        """The retained published manifests, oldest first: the version
+        files up to the current pointer. Listed rather than scanned
+        from v1, so the tail a vacuum keeps is still found."""
+        current = self._read_manifest()["version"]
+        out = []
+        for v in self._versions():
+            if v <= current:
+                with open(self._version_file(v)) as f:
+                    out.append(json.load(f))
+        return out
+
+    @staticmethod
+    def _successor(manifest: dict, **changes) -> dict:
+        """The manifest that follows ``manifest``: the next version,
+        carrying every entry (copied) that ``changes`` does not
+        replace. A replaced ``mapping`` keeps only its renames."""
+        if "mapping" in changes:
+            changes["mapping"] = {l: p for l, p in changes["mapping"].items() if l != p} or None
+        return {
+            "version": manifest["version"] + 1,
+            "buckets": dict(manifest["buckets"]),
+            "stats": dict(manifest["stats"]),
+            "schema": manifest["schema"],
+            "mapping": manifest.get("mapping"),
+            "dropped": manifest.get("dropped"),
+            **changes,
+        }
+
+    @staticmethod
+    def _schema(manifest: dict) -> T.StructType:
+        """The snapshot's recorded schema, in physical names."""
+        return T.StructType.fromJson(json.loads(manifest["schema"]))
+
+    def _manifest_types(self, manifest: dict) -> dict:
+        """col → DataType from the manifest's recorded schema
+        (authoritative for its version)."""
+        return {f.name: f.dataType for f in self._schema(manifest).fields}
 
     def _swap_manifest(self, manifest: dict) -> None:
         # Retain every published snapshot: the versioned manifest is
@@ -178,8 +241,7 @@ class ParquetMergeTable:
                 "key_col": self.key_col,
             },
         )
-        vfile = os.path.join(self.path, f"manifest-v{manifest['version']}.json")
-        with open(vfile, "w") as f:
+        with open(self._version_file(manifest["version"]), "w") as f:
             json.dump(manifest, f)
         tmp = self._manifest_file + ".tmp"
         with open(tmp, "w") as f:
@@ -210,7 +272,7 @@ class ParquetMergeTable:
         dropped = set(manifest.get("dropped") or [])
         return {
             inv.get(p, p)
-            for p in self._physical_cols(manifest)
+            for p in self._schema(manifest).fieldNames()
             if p not in dropped
         }
 
@@ -227,15 +289,14 @@ class ParquetMergeTable:
         mp = self._mapping(manifest)
         if logical in mp:
             return mp[logical]
-        if self._physical_cols(manifest):
-            have = self._logical_cols(manifest)
-            if logical not in have:
-                retired = set(manifest.get("dropped") or ()) | set(mp.values())
-                if logical in retired:
-                    raise ValueError(
-                        f"column {logical!r} was renamed or dropped; "
-                        f"current columns: {sorted(have)}"
-                    )
+        have = self._logical_cols(manifest)
+        if logical not in have:
+            retired = set(manifest.get("dropped") or ()) | set(mp.values())
+            if logical in retired:
+                raise ValueError(
+                    f"column {logical!r} was renamed or dropped; "
+                    f"current columns: {sorted(have)}"
+                )
         return logical
 
     def _to_logical_df(self, df: DataFrame, manifest: dict) -> DataFrame:
@@ -251,27 +312,25 @@ class ParquetMergeTable:
             ]
         )
 
-    def _read_physical(self, manifest: dict, paths: list[str]) -> DataFrame:
-        """Bucket-file read pinned to the manifest's recorded
-        (physical) schema — the authority for what this snapshot's
-        columns ARE: files that predate an added column null-fill it,
-        files narrower than a widened column upcast at scan time
-        (Parquet widening reads, SPARK-40876), and physical columns
-        retired by a DROP are simply never selected. Pre-schema
-        manifests fall back to mergeSchema."""
-        from pyspark.sql import types as T
-
-        sj = manifest.get("schema")
-        if sj:
-            st = T.StructType.fromJson(json.loads(sj))
-            return self.spark.read.schema(st).parquet(*paths)
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
-
-    def _to_physical_df(self, df: DataFrame, manifest: dict) -> DataFrame:
-        mp = self._mapping(manifest)
-        if not mp:
-            return df
-        return df.select(*[F.col(c).alias(mp.get(c, c)) for c in df.columns])
+    def _scan(self, manifest: dict, bucket_ids) -> DataFrame:
+        """The given buckets of a snapshot (ids it does not hold are
+        skipped) in physical names, pinned to its recorded schema —
+        the authority for what this snapshot's columns ARE: files that
+        predate an added column null-fill it, files narrower than a
+        widened column upcast at scan time (Parquet widening reads,
+        SPARK-40876), and physical columns retired by a DROP are
+        simply never selected. An empty selection reads no file: it is
+        an empty frame with the recorded schema."""
+        schema = self._schema(manifest)
+        want = set(bucket_ids)
+        paths = [
+            os.path.join(self.path, rel)
+            for b, rel in manifest["buckets"].items()
+            if b in want
+        ]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def rename_column(self, old: str, new: str) -> dict:
         """Metadata-only column rename (no data rewrite): publishes a
@@ -291,16 +350,8 @@ class ParquetMergeTable:
             raise ValueError(f"no such column {old!r} (have {sorted(logical_cols)})")
         if new in logical_cols or new == self.key_col:
             raise ValueError(f"column {new!r} already exists")
-        phys = mapping.pop(old, old)
-        mapping[new] = phys
-        staged = {
-            "version": m["version"] + 1,
-            "buckets": dict(m["buckets"]),
-            "stats": dict(m.get("stats", {})),
-            "schema": m.get("schema"),
-            "mapping": {l: p for l, p in mapping.items() if l != p},
-            "dropped": m.get("dropped"),
-        }
+        mapping[new] = mapping.pop(old, old)
+        staged = self._successor(m, mapping=mapping)
         self.commit(staged)
         return staged
 
@@ -317,11 +368,7 @@ class ParquetMergeTable:
         resurrecting old storage (`staged_merge`'s collision guard).
         Old snapshots still time-travel with the column. The bucketing
         key cannot be dropped."""
-        from pyspark.sql import types as T
-
         m = self._read_manifest()
-        if not m.get("schema"):
-            raise ValueError("cannot drop a column from a pre-schema manifest")
         mapping = self._mapping(m)
         logical_cols = self._logical_cols(m)
         if col == self.key_col:
@@ -329,26 +376,15 @@ class ParquetMergeTable:
         if col not in logical_cols:
             raise ValueError(f"no such column {col!r} (have {sorted(logical_cols)})")
         phys = mapping.pop(col, col)
-        st = T.StructType.fromJson(json.loads(m["schema"]))
-        new_schema = T.StructType([f for f in st.fields if f.name != phys])
-        staged = {
-            "version": m["version"] + 1,
-            "buckets": dict(m["buckets"]),
-            "stats": dict(m.get("stats", {})),
-            "schema": new_schema.json(),
-            "mapping": {l: p for l, p in mapping.items() if l != p} or None,
-            "dropped": list(m.get("dropped") or []) + [phys],
-        }
+        schema = T.StructType([f for f in self._schema(m).fields if f.name != phys])
+        staged = self._successor(
+            m,
+            schema=schema.json(),
+            mapping=mapping,
+            dropped=[*(m.get("dropped") or []), phys],
+        )
         self.commit(staged)
         return staged
-
-    def _physical_cols(self, manifest: dict) -> list[str]:
-        sj = manifest.get("schema")
-        if not sj:
-            return []
-        from pyspark.sql import types as T
-
-        return [f.name for f in T.StructType.fromJson(json.loads(sj)).fields]
 
     def _bucket(self, key: Column) -> Column:
         if self.bucketing == "range":
@@ -357,9 +393,6 @@ class ParquetMergeTable:
         return F.pmod(F.xxhash64(key), F.lit(self.num_buckets))
 
     def _json_scalar(self, v):
-        import datetime
-        import decimal
-
         if isinstance(v, (int, float, str)) or v is None:
             return v
         if isinstance(v, decimal.Decimal):
@@ -391,6 +424,12 @@ class ParquetMergeTable:
             for r in rows
         }
 
+    @staticmethod
+    def _staging_dir(version: int) -> str:
+        """A new ``v<version>-<hex>`` dir name, unique per writer (see
+        ``_write_buckets``)."""
+        return f"v{version}-{uuid.uuid4().hex[:8]}"
+
     def _write_buckets(self, df: DataFrame, version: int) -> tuple[dict[str, str], dict]:
         """Write one dir per bucket under v{version}-{uuid}/; return
         (bucket → relative path for every bucket actually written,
@@ -406,7 +445,7 @@ class ParquetMergeTable:
         suffix, the loser's mode('overwrite') into the shared v{N}
         dir would delete files the winner's published manifest points
         at (readers of the current snapshot would see missing data)."""
-        vdir = f"v{version}-{uuid.uuid4().hex[:8]}"
+        vdir = self._staging_dir(version)
         out = (
             df.withColumn("__bucket", self._bucket(F.col(self.key_col)))
             .repartition("__bucket")
@@ -419,6 +458,10 @@ class ParquetMergeTable:
             stats = self._bucket_stats(out)
         finally:
             out.unpersist()
+        if "None" in stats:
+            # a null key has no range bucket: its rows would land in a
+            # dir the manifest has no stats for; refuse before publishing
+            raise ValueError(f"key column {self.key_col!r} holds nulls; a range bucket needs a key")
         written = {
             d.split("=", 1)[1]: os.path.join(vdir, d)
             for d in os.listdir(os.path.join(self.path, vdir))
@@ -434,15 +477,10 @@ class ParquetMergeTable:
         required by streaming MERGE sinks that create the table
         before the first micro-batch arrives."""
         os.makedirs(self.path, exist_ok=True)
-        if not df.take(1):
-            # empty initial snapshot (the streaming-MERGE bootstrap
-            # path): no buckets to write — skip the partitioned write
-            # + stats jobs and publish a bucketless manifest directly
-            self._swap_manifest(
-                {"version": 1, "buckets": {}, "stats": {}, "schema": df.schema.json()}
-            )
-            return
-        entries, stats = self._write_buckets(df, 1)
+        # an empty initial snapshot (the streaming-MERGE bootstrap path)
+        # has no buckets to write: skip the partitioned write + stats
+        # jobs and publish a bucketless manifest directly
+        entries, stats = self._write_buckets(df, 1) if df.take(1) else ({}, {})
         self._swap_manifest(
             {"version": 1, "buckets": entries, "stats": stats, "schema": df.schema.json()}
         )
@@ -459,7 +497,7 @@ class ParquetMergeTable:
             raise FileNotFoundError(
                 f"version {version} not published (current is {current})"
             )
-        vfile = os.path.join(self.path, f"manifest-v{version}.json")
+        vfile = self._version_file(version)
         if not os.path.exists(vfile):
             raise FileNotFoundError(
                 f"version {version} not available (never published, or vacuumed)"
@@ -473,14 +511,11 @@ class ParquetMergeTable:
         holding version N is unaffected by later merges (and by
         vacuum, until vacuum drops N)."""
         m = self._manifest_for(version)
-        paths = [os.path.join(self.path, p) for p in m["buckets"].values()]
-        if not paths:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
         # schema-pinned read: after column-adding merges, untouched
         # buckets null-fill; after widening they upcast; after drops
         # the retired column is never selected. _to_logical_df applies
         # this snapshot's column mapping
-        return self._to_logical_df(self._read_physical(m, paths), m)
+        return self._to_logical_df(self._scan(m, m["buckets"]), m)
 
     def affected_buckets(self, keys: DataFrame) -> list[str]:
         """Distinct bucket ids the table's key column in ``keys`` lands
@@ -502,15 +537,7 @@ class ParquetMergeTable:
         written / emptied) are skipped. An empty selection reads back
         as an empty frame with the manifest schema."""
         m = self._read_manifest()
-        want = {str(b) for b in bucket_ids}
-        paths = [
-            os.path.join(self.path, rel)
-            for b, rel in m["buckets"].items()
-            if b in want
-        ]
-        if not paths:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
-        return self._to_logical_df(self._read_physical(m, paths), m)
+        return self._to_logical_df(self._scan(m, {str(b) for b in bucket_ids}), m)
 
     # -- pruned reads (zone maps / bucket transform) -----------------------
     def prune_report(self, col: str, lo, hi) -> dict:
@@ -532,7 +559,7 @@ class ParquetMergeTable:
         hi = self._json_scalar(hi)
         kept, pruned = [], []
         for b in m["buckets"]:
-            st = (m.get("stats") or {}).get(b, {}).get(col)
+            st = m["stats"][b].get(col)
             if st is not None and st[0] is not None and st[1] is not None:
                 try:
                     if st[0] > hi or st[1] < lo:
@@ -551,17 +578,10 @@ class ParquetMergeTable:
         applies exactly, so results never depend on stats. At 100 TB
         this is the difference between listing a few bucket dirs and
         scanning the table — the same file-skipping contract
-        Delta/Iceberg readers get from their manifests."""
+        Delta/Iceberg readers get from their manifests. When every
+        bucket is pruned, no file is read."""
         m = self._read_manifest()
-        if not m["buckets"]:
-            return self.spark.createDataFrame([], self._schema_of_empty(m))
-        kept = self.prune_report(col, lo, hi)["scanned"]
-        # all-pruned: scan one bucket for the schema; the predicate
-        # below returns zero rows from it
-        paths = [os.path.join(self.path, m["buckets"][b]) for b in kept] or [
-            os.path.join(self.path, next(iter(m["buckets"].values())))
-        ]
-        df = self._read_physical(m, paths)
+        df = self._scan(m, self.prune_report(col, lo, hi)["scanned"])
         c = F.col(self._phys(m, col))  # predicate on the physical column
         return self._to_logical_df(df.filter(c.between(F.lit(lo), F.lit(hi))), m)
 
@@ -582,13 +602,11 @@ class ParquetMergeTable:
         time-travel, vacuum reclaims the old dirs once unreferenced.
         One job per bucket, run one after another; the commit is one
         atomic swap."""
-        from htmlentityextraction_spark.operators.zorder import scale_to_bits, zvalue_n
-
         if len(zorder_by) < 2:
             raise ValueError("zorder_by takes at least two columns")
         m = self._read_manifest()
         version = m["version"] + 1
-        vdir = f"v{version}-{uuid.uuid4().hex[:8]}"  # unique: see _write_buckets
+        vdir = self._staging_dir(version)
         zbits = min(8, 63 // len(zorder_by))
         aggs = []
         for i, c in enumerate(zorder_by):
@@ -609,13 +627,13 @@ class ParquetMergeTable:
             zbits,
         )
         entries: dict[str, str] = {}
-        for b, rel in sorted(m["buckets"].items()):
+        for b in sorted(m["buckets"]):
             out_rel = os.path.join(vdir, f"__bucket={b}")
             # schema-pinned: the rewrite materializes the CURRENT
             # schema — retired (dropped) columns leave the rewritten
             # files physically, widened columns land at the wide type
             df = (
-                self._read_physical(m, [os.path.join(self.path, rel)])
+                self._scan(m, [b])
                 .withColumn("__z", z)
                 .coalesce(1)
                 .sortWithinPartitions("__z")
@@ -629,54 +647,26 @@ class ParquetMergeTable:
             return {"version": m["version"], "compacted": []}
         # publish through commit() so a merge racing the rewrite
         # cannot be silently clobbered
-        self.commit(
-            {
-                "version": version,
-                "buckets": entries,
-                "stats": dict(m.get("stats", {})),
-                "schema": m.get("schema"),
-                "mapping": m.get("mapping"),
-                "dropped": m.get("dropped"),
-            }
-        )
+        self.commit(self._successor(m, buckets=entries))
         return {"version": version, "compacted": sorted(entries)}
 
     def snapshots(self) -> DataFrame:
         """Metadata table (Iceberg's ``snapshots``, Delta's DESCRIBE
         HISTORY — distinct from the driver-side ``history()`` list):
-        one row per retained snapshot — version, bucket count, total
-        rows (from the manifest's ``__rows`` stats; null for
-        pre-count manifests), and the bucket spec it was written
-        under. Reads only manifests (kilobytes), never data files."""
-        rows = []
-        current = self._read_manifest()["version"]
-        # list retained version files rather than scanning contiguously
-        # from v1: after vacuum drops old versions the retained tail
-        # must still be listed. Versions beyond the current pointer are
-        # un-published crash residue and excluded (see _manifest_for).
-        versions = sorted(
-            int(mm.group(1))
-            for name in os.listdir(self.path)
-            if (mm := re.fullmatch(r"manifest-v(\d+)\.json", name))
-            and int(mm.group(1)) <= current
-        )
-        for v in versions:
-            vfile = os.path.join(self.path, f"manifest-v{v}.json")
-            with open(vfile) as f:
-                m = json.load(f)
-            stats = m.get("stats") or {}
-            counts = [stats.get(b, {}).get("__rows") for b in m["buckets"]]
-            total = sum(c for c in counts if c is not None) if counts else 0
-            spec = m.get("spec") or {}
-            rows.append(
-                (
-                    v,
-                    len(m["buckets"]),
-                    None if any(c is None for c in counts) else total,
-                    spec.get("bucketing"),
-                    spec.get("num_buckets"),
-                )
+        one row per retained published snapshot — version, bucket
+        count, total rows (the sum of the manifest's ``__rows``
+        stats), and the bucket spec it was written under. Reads only
+        manifests (kilobytes), never data files."""
+        rows = [
+            (
+                m["version"],
+                len(m["buckets"]),
+                sum(m["stats"][b]["__rows"] for b in m["buckets"]),
+                m["spec"]["bucketing"],
+                m["spec"]["num_buckets"],
             )
+            for m in self._published()
+        ]
         return self.spark.createDataFrame(
             rows,
             "version int, n_buckets int, total_rows long, bucketing string, num_buckets int",
@@ -686,19 +676,17 @@ class ParquetMergeTable:
         """Storage-vs-manifest audit of the current snapshot: every referenced
         bucket dir must exist with data files, and its row count must
         equal the manifest's recorded ``__rows`` expectation. Returns
-        ``{"ok", "missing", "mismatched", "unverified"}`` — missing =
-        path gone (premature vacuum, partial copy), mismatched =
-        count drift (corruption, manual edits), unverified = buckets
-        from manifests written before counts were recorded. One
-        bounded read per bucket (a count over one dir); at production
-        bucket counts run the recount as one job over all paths.
+        ``{"ok", "missing", "mismatched"}`` — missing = path gone
+        (premature vacuum, partial copy), mismatched = count drift
+        (corruption, manual edits). One bounded read per bucket (a
+        count over one dir); at production bucket counts run the
+        recount as one job over all paths.
         This is the routine a migration/replication pipeline runs
         before flipping readers to a copied table — the audit-side
         complement of ``tablediff.checksum_diff``."""
         m = self._read_manifest()
         missing: list[str] = []
         mismatched: list[dict] = []
-        unverified: list[str] = []
         for b, rel in sorted(m["buckets"].items()):
             full = os.path.join(self.path, rel)
             if not os.path.isdir(full) or not any(
@@ -706,10 +694,7 @@ class ParquetMergeTable:
             ):
                 missing.append(b)
                 continue
-            expect = (m.get("stats") or {}).get(b, {}).get("__rows")
-            if expect is None:
-                unverified.append(b)
-                continue
+            expect = m["stats"][b]["__rows"]
             actual = self.spark.read.parquet(full).count()
             if actual != expect:
                 mismatched.append({"bucket": b, "expected": expect, "actual": actual})
@@ -717,7 +702,6 @@ class ParquetMergeTable:
             "ok": not missing and not mismatched,
             "missing": missing,
             "mismatched": mismatched,
-            "unverified": unverified,
         }
 
     def table_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -745,14 +729,13 @@ class ParquetMergeTable:
         # renames, so old/new stay column-aligned even when the two
         # snapshots straddle a rename boundary; output switches to the
         # TO-version's logical names at the end (Delta CDF convention)
-        old = self._read_buckets_physical(m_old, [b for b in changed if b in ob])
-        new = self._read_buckets_physical(m_new, [b for b in changed if b in nb])
+        old = self._scan(m_old, changed)
+        new = self._scan(m_new, changed)
         k = self.key_col
-        # column union from the manifest schemas (authoritative at
-        # each version): a changed-bucket subset may predate a
-        # schema-evolving merge and lack its added columns
-        old_types = self._manifest_types(m_old, old)
-        new_types = self._manifest_types(m_new, new)
+        # each side reads under its version's recorded schema; a
+        # column added between the versions null-fills the old side
+        old_types = self._manifest_types(m_old)
+        new_types = self._manifest_types(m_new)
         # diff under the TO version's column set (Delta CDF
         # convention): a column DROPPED between the versions leaves
         # the feed entirely — the metadata-only drop commit itself has
@@ -762,11 +745,9 @@ class ParquetMergeTable:
         data_cols = [c for c in old_types if c != k and c in new_types] + [
             c for c in new_types if c != k and c not in old_types
         ]
-        for c in data_cols:  # null-fill across schema evolution
-            if c not in old.columns:
-                old = old.withColumn(c, F.lit(None).cast(new_types.get(c) or old_types[c]))
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(old_types.get(c) or new_types[c]))
+        for c in data_cols:
+            if c not in old_types:
+                old = old.withColumn(c, F.lit(None).cast(new_types[c]))
         o = old.select(F.col(k).alias("__ok"), *[F.col(c).alias(f"old_{c}") for c in data_cols])
         n = new.select(F.col(k).alias("__nk"), *[F.col(c).alias(f"new_{c}") for c in data_cols])
         j = o.join(n, o["__ok"] == n["__nk"], "full_outer")
@@ -790,41 +771,12 @@ class ParquetMergeTable:
             )
         )
 
-    def _read_buckets_physical(self, m: dict, bucket_ids: list[str]) -> DataFrame:
-        """``read_buckets`` without the logical-name translation — the
-        CDC diff path compares snapshots under their stable physical
-        columns."""
-        from pyspark.sql import types as T
-
-        want = {str(b) for b in bucket_ids}
-        paths = [
-            os.path.join(self.path, rel)
-            for b, rel in m["buckets"].items()
-            if b in want
-        ]
-        if not paths:
-            sj = m.get("schema")
-            if sj is None:
-                raise ValueError("cannot read an empty table with no recorded schema")
-            return self.spark.createDataFrame([], T.StructType.fromJson(json.loads(sj)))
-        return self._read_physical(m, paths)
-
     def history(self) -> list[dict]:
         """Published versions, oldest first: [{version, n_buckets}].
         Versions beyond the current pointer (crash residue of a commit
         that never swapped the pointer) are not published and are
         excluded."""
-        current = self._read_manifest()["version"]
-        out = []
-        for name in sorted(os.listdir(self.path)):
-            if name.startswith("manifest-v") and name.endswith(".json"):
-                with open(os.path.join(self.path, name)) as f:
-                    m = json.load(f)
-                if m["version"] <= current:
-                    out.append(
-                        {"version": m["version"], "n_buckets": len(m["buckets"])}
-                    )
-        return sorted(out, key=lambda r: r["version"])
+        return [{"version": m["version"], "n_buckets": len(m["buckets"])} for m in self._published()]
 
     def vacuum(self, keep_last: int = 1, min_age_sec: float | None = None) -> list[str]:
         """Drop snapshots older than the newest ``keep_last`` versions
@@ -853,11 +805,8 @@ class ParquetMergeTable:
         only signal that separates that in-flight work from crash
         residue; manifest files need no horizon because they are only
         ever written under the lock vacuum already holds."""
-        import shutil
-        import time as _time
-
         age_floor = _STALE_LOCK_SEC if min_age_sec is None else min_age_sec
-        now = _time.time()
+        now = time.time()
 
         def _old_enough(p: str) -> bool:
             try:
@@ -867,32 +816,21 @@ class ParquetMergeTable:
 
         lease = self._acquire_lock()
         try:
-            current = self._read_manifest()["version"]
-            hist = self.history()
-            keep_versions = {h["version"] for h in hist[-max(keep_last, 1):]}
-            keep_versions.add(current)
-            referenced: set[str] = set()
-            for v in keep_versions:
-                vfile = os.path.join(self.path, f"manifest-v{v}.json")
-                if os.path.exists(vfile):
-                    with open(vfile) as f:
-                        referenced.update(json.load(f)["buckets"].values())
+            current = self._read_manifest()
+            kept = [current, *self._published()[-max(keep_last, 1):]]
+            keep_versions = {m["version"] for m in kept}
+            referenced = {rel for m in kept for rel in m["buckets"].values()}
+            # dropped snapshots, and orphan version files ahead of the
+            # pointer
+            for v in self._versions():
+                if v not in keep_versions:
+                    os.remove(self._version_file(v))
             deleted = []
-            for h in hist:
-                if h["version"] not in keep_versions:
-                    os.remove(
-                        os.path.join(self.path, f"manifest-v{h['version']}.json")
-                    )
-            for name in os.listdir(self.path):  # orphan version files
-                mm = re.fullmatch(r"manifest-v(\d+)\.json", name)
-                if mm and int(mm.group(1)) > current:
-                    os.remove(os.path.join(self.path, name))
             for vdir in sorted(os.listdir(self.path)):
-                # v{N} (pre-unique-staging layout) or v{N}-{uuid}
-                mv = re.fullmatch(r"v(\d+)(-[0-9a-f]+)?", vdir)
+                mv = re.fullmatch(r"v(\d+)-[0-9a-f]+", vdir)
                 if not mv:
                     continue
-                if int(mv.group(1)) > current:
+                if int(mv.group(1)) > current["version"]:
                     continue  # in-flight staging by a live writer
                 for bdir in sorted(os.listdir(os.path.join(self.path, vdir))):
                     rel = os.path.join(vdir, bdir)
@@ -950,7 +888,7 @@ class ParquetMergeTable:
         # occupied storage in old bucket files — a new logical column
         # reusing it must mint a fresh physical name
         retired = set(m.get("dropped") or [])
-        phys_cols = set(self._physical_cols(m)) | retired
+        phys_cols = set(self._schema(m).fieldNames()) | retired
         logical_cols = self._logical_cols(m)
         for c in updates.columns:
             if c in ("op", self.key_col) or c in logical_cols:
@@ -960,191 +898,162 @@ class ParquetMergeTable:
                 while minted in phys_cols:
                     minted += "x"
                 mapping[c] = minted
-        m_view = {**m, "mapping": {l: p for l, p in mapping.items() if l != p}}
-        updates = self._to_physical_df(updates, m_view)
+        inv_mapping = {p: l for l, p in mapping.items()}
+        if mapping:
+            updates = updates.select(*[F.col(c).alias(mapping.get(c, c)) for c in updates.columns])
         # lenient translation for combine: its columns may be ADDED by
         # this very batch (not yet in the snapshot), which strict
         # _phys would reject
-        mp_view = self._mapping(m_view)
-        combine = {mp_view.get(c, c): how for c, how in (combine or {}).items()} or None
+        combine = {mapping.get(c, c): how for c, how in (combine or {}).items()}
         # the bucket transform hashes by TYPE (xxhash64(int 57) !=
         # xxhash64(long 57)): a batch carrying the key at a narrower
         # type than the table stores must be upcast BEFORE bucketing,
         # and a wider-than-table key is refused — widening the key
         # would relocate every existing row's bucket
-        tbl_types = self._manifest_types(m, updates) if m.get("schema") else {}
-        k_t = tbl_types.get(self.key_col)
-        if k_t is not None:
-            u_kt = updates.schema[self.key_col].dataType
-            if u_kt != k_t:
-                pair = (u_kt.simpleString(), k_t.simpleString())
-                if pair not in _WIDENINGS:
-                    raise ValueError(
-                        f"update batch key {self.key_col!r} is "
-                        f"{u_kt.simpleString()} but the table stores "
-                        f"{k_t.simpleString()}; the bucket hash is "
-                        "type-sensitive, so key types cannot widen"
-                    )
-                updates = updates.withColumn(
-                    self.key_col, F.col(self.key_col).cast(k_t)
+        k_t = self._manifest_types(m)[self.key_col]
+        u_kt = updates.schema[self.key_col].dataType
+        if u_kt != k_t:
+            pair = (u_kt.simpleString(), k_t.simpleString())
+            if pair not in _WIDENINGS:
+                raise ValueError(
+                    f"update batch key {self.key_col!r} is "
+                    f"{u_kt.simpleString()} but the table stores "
+                    f"{k_t.simpleString()}; the bucket hash is "
+                    "type-sensitive, so key types cannot widen"
                 )
-        upd = updates.withColumn("__bucket", self._bucket(F.col(self.key_col))).cache()
-        # one action yields the affected-bucket set AND the batch row
-        # count (optimization r12, guide §1.3/§3.2): the count costs
-        # nothing extra over the old distinct() and lets the merge
-        # join pick its strategy from a KNOWN delta size below
-        per_bucket = upd.groupBy("__bucket").count().collect()
-        affected = sorted(r["__bucket"] for r in per_bucket)
-        n_upd_rows = sum(r["count"] for r in per_bucket)
-        if not affected:
-            # no-op batch (empty stream trigger): carry the recorded
-            # schema forward — dropping it left an empty table
-            # unreadable after any empty micro-batch (empty-fuzz axis)
-            return {
-                "version": version,
-                "buckets": dict(m["buckets"]),
-                "stats": dict(m.get("stats", {})),
-                "schema": m.get("schema"),
-                "mapping": m.get("mapping"),
-                "dropped": m.get("dropped"),
-            }
+            updates = updates.withColumn(self.key_col, F.col(self.key_col).cast(k_t))
+        batch = updates.withColumn("__bucket", self._bucket(F.col(self.key_col))).cache()
+        try:  # the cached batch is released on every exit, refusals included
+            upd = batch
+            # one action yields the affected-bucket set AND the batch row
+            # count (optimization r12, guide §1.3/§3.2): the count costs
+            # nothing extra over the old distinct() and lets the merge
+            # join pick its strategy from a KNOWN delta size below
+            per_bucket = upd.groupBy("__bucket").count().collect()
+            affected = sorted(str(r["__bucket"]) for r in per_bucket)
+            n_upd_rows = sum(r["count"] for r in per_bucket)
+            if not affected:
+                # no-op batch (empty stream trigger): the next version,
+                # carrying the recorded schema forward
+                return self._successor(m)
 
-        old_paths = [
-            os.path.join(self.path, m["buckets"][str(b)])
-            for b in affected
-            if str(b) in m["buckets"]
-        ]
-        data_cols = [c for c in upd.columns if c not in ("op", "__bucket")]
-        if old_paths:
+            data_cols = [c for c in upd.columns if c not in ("op", "__bucket")]
             # schema-pinned read: dropped physical columns are never
             # selected (this rewrite retires them physically for the
             # affected buckets), narrow files upcast if the table
-            # already widened
-            old = self._read_physical(m, old_paths)
-        else:
-            old = self.spark.createDataFrame([], updates.drop("op").schema)
+            # already widened; buckets new to the table read as an
+            # empty frame with the recorded schema
+            old = self._scan(m, affected)
 
-        # schema evolution (Delta mergeSchema shape): an update batch
-        # may ADD columns — existing rows take null for them, and the
-        # manifest schema evolves so empty/pruned reads stay typed.
-        # Updates are full-row upserts, so they must still carry every
-        # existing column; silently dropping one would fork the schema
-        # between rewritten and untouched buckets.
-        missing_in_upd = [c for c in old.columns if c not in data_cols]
-        if missing_in_upd:
-            inv_view = {p: l for l, p in self._mapping(m_view).items()}
-            raise ValueError(
-                "update batch is missing existing columns "
-                f"{[inv_view.get(c, c) for c in missing_in_upd]}; "
-                "upserts are full-row (schema evolution only ADDS columns)"
-            )
-        evolved = [c for c in data_cols if c not in old.columns]
-        for c in evolved:
-            old = old.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-
-        # TYPE WIDENING (Delta type-widening shape): a batch may carry
-        # an existing column at a WIDER type — the table's schema
-        # widens (lossless casts only), existing narrow bucket files
-        # upcast at scan time (SPARK-40876), and only the affected
-        # buckets rewrite. A batch NARROWER than the table upcasts
-        # into the stored type; anything else (string vs int,
-        # long -> int, ...) fails loudly rather than corrupting.
-        widened: list[str] = []
-        for c in data_cols:
-            if c == self.key_col or c not in old.columns or c in evolved:
-                continue
-            o_t = old.schema[c].dataType
-            u_t = upd.schema[c].dataType
-            if o_t == u_t:
-                continue
-            pair = (o_t.simpleString(), u_t.simpleString())
-            if pair in _WIDENINGS:  # batch widens the table
-                old = old.withColumn(c, F.col(c).cast(u_t))
-                widened.append(c)
-            elif (pair[1], pair[0]) in _WIDENINGS:  # batch is narrower
-                upd = upd.withColumn(c, F.col(c).cast(o_t))
-            else:
-                inv_view = {p: l for l, p in self._mapping(m_view).items()}
+            # schema evolution (Delta schema-merge shape): an update batch
+            # may ADD columns — existing rows take null for them, and the
+            # manifest schema evolves so empty/pruned reads stay typed.
+            # Updates are full-row upserts, so they must still carry every
+            # existing column; silently dropping one would fork the schema
+            # between rewritten and untouched buckets.
+            missing_in_upd = [c for c in old.columns if c not in data_cols]
+            if missing_in_upd:
                 raise ValueError(
-                    f"column {inv_view.get(c, c)!r} is {pair[0]} in the "
-                    f"table but {pair[1]} in the update batch; only "
-                    f"lossless widenings are supported: {sorted(_WIDENINGS)}"
+                    "update batch is missing existing columns "
+                    f"{[inv_mapping.get(c, c) for c in missing_in_upd]}; "
+                    "upserts are full-row (schema evolution only ADDS columns)"
                 )
+            evolved = [c for c in data_cols if c not in old.columns]
+            for c in evolved:
+                old = old.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
 
-        k = self.key_col
-        upd_named = upd.select(
-            F.col(k).alias("__uk"),
-            F.col("op").alias("__op"),
-            *[F.col(c).alias(f"__u_{c}") for c in data_cols if c != k],
-        )
-        # full-outer SMJ sorts BOTH sides; when the update batch is
-        # provably small (the trickle-merge norm: delta << table), a
-        # shuffled-hash join building on the delta skips both sorts
-        # (optimization r12, guide §3.2 — broadcast is not an option:
-        # Spark has no full-outer BHJ). Gated on the measured batch
-        # row count so a bulk load the size of the table keeps the
-        # sort-based, spill-safe plan: the hash build must fit task
-        # memory, so require est. build bytes per shuffle partition
-        # <= _SHJ_BUILD_BYTES_PER_PART (row width estimated
-        # conservatively at 32B + 16B/col). The r12 A/B kill switch
-        # (SPARK_GRAFT_MERGE_SHJ) was pruned in r13 after adjudication;
-        # tests force the sort-merge arm by patching the constant.
-        est_build = n_upd_rows * (32 + 16 * len(data_cols))
-        try:
-            n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except ValueError:
-            n_parts = 200
-        if est_build <= _SHJ_BUILD_BYTES_PER_PART * max(1, n_parts):
-            upd_named = upd_named.hint("shuffle_hash")
-        joined = old.join(upd_named, old[k] == upd_named["__uk"], "full_outer")
+            # TYPE WIDENING (Delta type-widening shape): a batch may carry
+            # an existing column at a WIDER type — the table's schema
+            # widens (lossless casts only), existing narrow bucket files
+            # upcast at scan time (SPARK-40876), and only the affected
+            # buckets rewrite. A batch NARROWER than the table upcasts
+            # into the stored type; anything else (string vs int,
+            # long -> int, ...) fails loudly rather than corrupting.
+            widened: list[str] = []
+            for c in data_cols:
+                if c == self.key_col or c in evolved:
+                    continue
+                o_t = old.schema[c].dataType
+                u_t = upd.schema[c].dataType
+                if o_t == u_t:
+                    continue
+                pair = (o_t.simpleString(), u_t.simpleString())
+                if pair in _WIDENINGS:  # batch widens the table
+                    old = old.withColumn(c, F.col(c).cast(u_t))
+                    widened.append(c)
+                elif (pair[1], pair[0]) in _WIDENINGS:  # batch is narrower
+                    upd = upd.withColumn(c, F.col(c).cast(o_t))
+                else:
+                    raise ValueError(
+                        f"column {inv_mapping.get(c, c)!r} is {pair[0]} in the "
+                        f"table but {pair[1]} in the update batch; only "
+                        f"lossless widenings are supported: {sorted(_WIDENINGS)}"
+                    )
 
-        def merged_value(c: str) -> Column:
-            o, u = F.col(c), F.col(f"__u_{c}")
-            how = (combine or {}).get(c)
-            if how is None:
-                new_val = u  # replace (full-row upsert)
-            elif how == "sum":  # null old state (insert / evolved) = identity
-                new_val = F.when(o.isNull(), u).otherwise(o + u)
-            elif how == "max":
-                new_val = F.greatest(o, u)  # greatest/least skip nulls
-            elif how == "min":
-                new_val = F.least(o, u)
-            else:
-                raise ValueError(f"combine[{c!r}] must be sum|max|min, got {how!r}")
-            return F.when(F.col("__uk").isNotNull(), new_val).otherwise(o).alias(c)
+            k = self.key_col
+            upd_named = upd.select(
+                F.col(k).alias("__uk"),
+                F.col("op").alias("__op"),
+                *[F.col(c).alias(f"__u_{c}") for c in data_cols if c != k],
+            )
+            # full-outer SMJ sorts BOTH sides; when the update batch is
+            # provably small (the trickle-merge norm: delta << table), a
+            # shuffled-hash join building on the delta skips both sorts
+            # (optimization r12, guide §3.2 — broadcast is not an option:
+            # Spark has no full-outer BHJ). Gated on the measured batch
+            # row count so a bulk load the size of the table keeps the
+            # sort-based, spill-safe plan: the hash build must fit task
+            # memory, so require est. build bytes per shuffle partition
+            # <= _SHJ_BUILD_BYTES_PER_PART (row width estimated
+            # conservatively at 32B + 16B/col). The r12 A/B kill switch
+            # (SPARK_GRAFT_MERGE_SHJ) was pruned in r13 after adjudication;
+            # tests force the sort-merge arm by patching the constant.
+            est_build = n_upd_rows * (32 + 16 * len(data_cols))
+            try:
+                n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
+            except ValueError:
+                n_parts = 200
+            if est_build <= _SHJ_BUILD_BYTES_PER_PART * max(1, n_parts):
+                upd_named = upd_named.hint("shuffle_hash")
+            joined = old.join(upd_named, old[k] == upd_named["__uk"], "full_outer")
 
-        merged_cols = [
-            F.coalesce(F.col(k), F.col("__uk")).alias(k),
-            *[merged_value(c) for c in data_cols if c != k],
-        ]
-        merged = joined.filter(
-            F.col("__op").isNull() | (F.col("__op") == OP_UPSERT)
-        ).select(*merged_cols)
+            def merged_value(c: str) -> Column:
+                o, u = F.col(c), F.col(f"__u_{c}")
+                how = combine.get(c)
+                if how is None:
+                    new_val = u  # replace (full-row upsert)
+                elif how == "sum":  # null old state (insert / evolved) = identity
+                    new_val = F.when(o.isNull(), u).otherwise(o + u)
+                elif how == "max":
+                    new_val = F.greatest(o, u)  # greatest/least skip nulls
+                elif how == "min":
+                    new_val = F.least(o, u)
+                else:
+                    raise ValueError(f"combine[{c!r}] must be sum|max|min, got {how!r}")
+                return F.when(F.col("__uk").isNotNull(), new_val).otherwise(o).alias(c)
 
-        entries = dict(m["buckets"])
-        stats = dict(m.get("stats", {}))
-        new_entries, new_stats = self._write_buckets(merged, version)
-        for b in affected:
-            b = str(b)
-            if b in new_entries:
-                entries[b] = new_entries[b]
-                if b in new_stats:
-                    stats[b] = new_stats[b]
-            else:  # bucket emptied by deletes
-                entries.pop(b, None)
-                stats.pop(b, None)
-        upd.unpersist()
-        schema_json = (
-            merged.schema.json() if (evolved or widened) else m.get("schema")
-        )
-        return {
-            "version": version,
-            "buckets": entries,
-            "stats": stats,
-            "schema": schema_json,
-            "mapping": m_view["mapping"] or None,
-            "dropped": m.get("dropped"),
-        }
+            merged_cols = [
+                F.coalesce(F.col(k), F.col("__uk")).alias(k),
+                *[merged_value(c) for c in data_cols if c != k],
+            ]
+            merged = joined.filter(
+                F.col("__op").isNull() | (F.col("__op") == OP_UPSERT)
+            ).select(*merged_cols)
+
+            staged = self._successor(m, mapping=mapping)
+            new_entries, new_stats = self._write_buckets(merged, version)
+            for b in affected:
+                if b in new_entries:
+                    staged["buckets"][b] = new_entries[b]
+                    staged["stats"][b] = new_stats[b]
+                else:  # bucket emptied by deletes
+                    staged["buckets"].pop(b, None)
+                    staged["stats"].pop(b, None)
+            if evolved or widened:
+                staged["schema"] = merged.schema.json()
+            return staged
+        finally:
+            batch.unpersist()
 
     def _acquire_lock(self):
         """Take the table's commit lock (O_CREAT|O_EXCL — a
@@ -1181,10 +1090,6 @@ class ParquetMergeTable:
         lock waits the intended duration rather than burning an
         iteration budget in microseconds. Returns a lease for
         ``_release_lock``."""
-        import threading
-        import time
-        import uuid
-
         lock = os.path.join(self.path, "_commit.lock")
         token = f"{os.getpid()}-{uuid.uuid4().hex}"
         deadline = time.monotonic() + max(_LOCK_TIMEOUT_SEC, 0.0)
@@ -1310,37 +1215,3 @@ class ParquetMergeTable:
             self._swap_manifest(manifest)
         finally:
             self._release_lock(lease)
-
-    def _manifest_types(self, manifest: dict, df: DataFrame) -> dict:
-        """col → DataType from the manifest's recorded schema
-        (authoritative for its version), falling back to the given
-        frame's schema for tables created before schemas were
-        recorded."""
-        from pyspark.sql import types as T
-
-        sj = manifest.get("schema")
-        if sj:
-            st = T.StructType.fromJson(json.loads(sj))
-            return {f.name: f.dataType for f in st.fields}
-        return {f.name: f.dataType for f in df.schema.fields}
-
-    def _schema_of_empty(self, manifest: dict):
-        import json as _json
-
-        from pyspark.sql import types as T
-
-        sj = manifest.get("schema")
-        if sj is None:  # table created before schemas were recorded
-            raise ValueError("cannot read an empty table with no recorded schema")
-        st = T.StructType.fromJson(_json.loads(sj))
-        inv = {p: l for l, p in self._mapping(manifest).items()}
-        dropped = set(manifest.get("dropped") or [])
-        if inv or dropped:  # recorded schema is physical; empty reads are logical
-            st = T.StructType(
-                [
-                    T.StructField(inv.get(f.name, f.name), f.dataType, f.nullable)
-                    for f in st.fields
-                    if f.name not in dropped
-                ]
-            )
-        return st

@@ -462,20 +462,15 @@ def _picked_batches(
         )
 
 
-def pick_pages(pages: DataFrame, registry: Broadcast) -> DataFrame:
+def pick_pages(pages: DataFrame, registry: Broadcast, forward: tuple[str, ...]) -> DataFrame:
     """The production page scorer: pages with the page-message fields
     (url, html, updatedPrice) → one (url, domain, updatedPrice, best,
-    max_pred) row per page, from one ``mapInArrow`` over the
+    max_pred) row per page, then each page's ``forward`` columns
+    carried through unchanged, from one ``mapInArrow`` over the
     ``shrunk_pages`` projection with a broadcast ``registry_models``
     value — the reference's one per-record map
     (`streaming/Htmls2PredsPipe.scala:104-159`), with no shuffle.
     ``model_price(max_pred, best)`` is the page's model price."""
-    return pick_pages_with(pages, registry, ())
-
-
-def pick_pages_with(pages: DataFrame, registry: Broadcast, forward: tuple[str, ...]) -> DataFrame:
-    """``pick_pages``, with each page's ``forward`` columns carried
-    through the map unchanged after the _PICKED ones."""
     projected = ex.shrunk_pages(
         pages.withColumn("domain", get_domain(F.col("url"))),
         "html", "url", "domain", "updatedPrice", *forward,

@@ -121,7 +121,7 @@ def _picked_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``models.pick_pages``), keeping the pages that have candidates
     (non-null max_pred): the pages the model oracles cover."""
     registry = spark.sparkContext.broadcast(md.registry_models(fit_once(spark, sf_dir)))
-    picked = md.pick_pages(model_pages(spark, sf_dir), registry)
+    picked = md.pick_pages(model_pages(spark, sf_dir), registry, ())
     return picked.filter(F.col("max_pred").isNotNull())
 
 

@@ -32,11 +32,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 # Queries with NO full-green driver verdict yet (registry minus the
 # rows+schema+hash-green union of CORRECTNESS_r01..rN.json). The
 # driver samples ~50 queries per round in dict order without repeats,
-# so these are surfaced FIRST. As of CORRECTNESS_r05.json the
-# cumulative driver-green union covers ALL 222 registered queries —
-# the round-4 evidence gap is closed and this list is empty. Any new
-# query added from round 6 onward goes here until its first driver
-# verdict lands.
+# so these are surfaced FIRST, in the order below (the sampling
+# order: do not sort it). A new query, or one whose plan changes,
+# goes here until its first driver verdict lands.
 _DRIVER_UNCONFIRMED: tuple[str, ...] = (
     # round-13 rotation (VERDICT r12 item 1): the r12 optimizer's
     # semantics-preserving rewrites landed AFTER the r12 rotation was

@@ -9,8 +9,8 @@ foreachBatch — the reference's transform(rdd => …) shape (T3) with
 typed DataFrames instead of string maps.
 
 The per-page work is ONE ``mapInArrow``, the production page scorer
-``models.pick_pages`` (through ``pick_pages_with``, which carries the
-corrupt messages' payload past it), like the reference's one per-record map
+``models.pick_pages`` (its forward columns carry the corrupt
+messages' payload past it), like the reference's one per-record map
 (`streaming/Htmls2PredsPipe.scala:104-159`): for each Arrow batch it
 runs the extraction reference ``extract_candidates_py``, hashes the
 candidate context of each domain's pages in one ``models.term_ids_py``
@@ -59,7 +59,7 @@ def _score_pages(pages: DataFrame, registry: Broadcast, forward: tuple[str, ...]
     """``score_pages_batch`` against an already-broadcast
     ``models.registry_models`` value, with each page's ``forward``
     columns carried through."""
-    picked = md.pick_pages_with(pages, registry, forward)
+    picked = md.pick_pages(pages, registry, forward)
     model_price = md.model_price(F.col("max_pred"), F.col("best"))
     status = price_status(F.col("model_price"), F.col("pattern_price"))
     return (

@@ -479,3 +479,47 @@ def test_read_band_selects_rows_at_the_smallest_scale(spark, sf_dir, name):
     import __spark_entry__ as entry
 
     assert entry.queries()[name](spark, sf_dir).count() > 0
+
+
+def test_merge_releases_its_cached_batch_on_every_exit(spark, tmp_path):
+    """staged_merge caches the update batch for its two passes; a no-op
+    merge, a refused one and one that casts a narrow batch up must each
+    leave Spark's cache as they found it."""
+    tbl = _mk_table(spark, tmp_path, [(i, float(i)) for i in range(8)])
+    before = cached_plans(spark)
+    tbl.merge(spark.createDataFrame([], "o_orderkey long, price double, op string"))
+    assert cached_plans(spark) == before, "no-op merge"
+    refusals = [
+        ("missing existing columns", "o_orderkey long, op string", [(1, "upsert")], None),
+        ("lossless widenings", "o_orderkey long, price string, op string", [(1, "x", "upsert")], None),
+        ("sum\\|max\\|min", "o_orderkey long, price double, op string", [(1, 2.0, "upsert")], {"price": "avg"}),
+    ]
+    for match, schema, rows, combine in refusals:
+        with pytest.raises(ValueError, match=match):
+            tbl.merge(spark.createDataFrame(rows, schema), combine)
+        assert cached_plans(spark) == before, match
+    tbl.merge(spark.createDataFrame([(1, 1.5, "upsert")], "o_orderkey long, price float, op string"))
+    assert cached_plans(spark) == before, "merge of a narrower batch"
+    assert {r.o_orderkey: r.price for r in tbl.read().collect()}[1] == 1.5
+
+
+def test_merge_into_new_buckets_checks_the_recorded_schema(spark, tmp_path):
+    """A merge whose keys land only in buckets the table does not hold
+    yet (every merge into an empty table) evolves, widens and checks
+    the batch against the recorded schema like any other merge."""
+    def empty_table(name, schema):
+        tbl = inc.ParquetMergeTable(spark, str(tmp_path / name), "k", num_buckets=4)
+        tbl.create(spark.createDataFrame([], schema))
+        return tbl
+
+    added = empty_table("added", "k long, price double")
+    added.merge(spark.createDataFrame([(1, 1.0, "x", "upsert")], "k long, price double, tag string, op string"))
+    assert [tuple(r) for r in added.read().collect()] == [(1, 1.0, "x")]
+
+    widened = empty_table("widened", "k long, qty int")
+    widened.merge(spark.createDataFrame([(1, 2**40, "upsert")], "k long, qty long, op string"))
+    assert [tuple(r) for r in widened.read().collect()] == [(1, 2**40)]
+
+    missing = empty_table("missing", "k long, price double")
+    with pytest.raises(ValueError, match="missing existing columns"):
+        missing.merge(spark.createDataFrame([(1, "upsert")], "k long, op string"))

@@ -1,7 +1,8 @@
 """Source contract: every top-level package definition and every class
 method is reached from what runs in production or measurement, or is
-named in ``KEEP`` with its reason. Code that only tests call is
-deleted, not carried. No package module imports a name it never uses.
+named in ``KEEP`` with its reason; an entry goes once the roots reach
+what it names. Code that only tests call is deleted, not carried. No
+package module imports a name it never uses.
 
 Reachability is a name-level fixed point over the AST. The roots are
 the ``@register``ed query functions, module-level code of every package
@@ -181,8 +182,19 @@ def root_files(repo: pathlib.Path) -> list[pathlib.Path]:
     ]
 
 
+def covers(entry: str, key: str) -> bool:
+    """Whether a ``KEEP`` entry exempts the definition ``key``."""
+    return entry in (key, f"{key.split(':')[0]}:*")
+
+
 def kept(key: str) -> bool:
-    return key in KEEP or f"{key.split(':')[0]}:*" in KEEP
+    return any(covers(entry, key) for entry in KEEP)
+
+
+def stale_keep(keep, unreached) -> list[str]:
+    """``keep`` entries that exempt no unreached definition: what they
+    name is gone, or the roots now reach it."""
+    return [e for e in keep if not any(covers(e, key) for key in unreached)]
 
 
 def unused_imports(package: pathlib.Path) -> list[str]:
@@ -446,10 +458,9 @@ def test_no_package_module_imports_a_name_it_never_uses():
 
 
 def test_keep_names_live_definitions():
-    _, spans = scan(PACKAGE, root_files(REPO))
-    modules = {k.split(":")[0] for k in spans}
-    stale = [k for k in KEEP if k not in spans and k.removesuffix(":*") not in modules]
-    assert not stale, "KEEP names definitions that no longer exist: " + ", ".join(stale)
+    unreached, _ = scan(PACKAGE, root_files(REPO))
+    stale = stale_keep(KEEP, unreached)
+    assert not stale, "KEEP names definitions that are gone or now reached: " + ", ".join(stale)
 
 
 def test_scan_follows_names_and_ignores_docstrings(tmp_path):
@@ -497,6 +508,8 @@ def test_scan_reaches_methods_by_name_and_dunders_with_their_class(tmp_path):
     # a shared method name keeps every method of that name alive; a
     # bare variable of the same name reaches no method
     assert sorted(unreached) == ["mod.py:Table.test_only", "mod.py:Unused"]
+    keep = ["mod.py:Table.test_only", "mod.py:Table.used", "mod.py:gone", "mod.py:*", "other.py:*"]
+    assert stale_keep(keep, unreached) == ["mod.py:Table.used", "mod.py:gone", "other.py:*"]
 
 
 def test_unused_imports_flags_bindings_the_module_never_reads(tmp_path):
