@@ -184,7 +184,7 @@ def main() -> None:
     def run_set(set_names: list[str], tag: str) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in set_names:
-            t1, t2, t3 = (timed_noop_write(spark, lambda: qs[name](spark, sf_dir)) for _ in range(3))
+            t1, t2, t3 = (timed_noop_write(spark, name, lambda: qs[name](spark, sf_dir)) for _ in range(3))
             cold[name] = t1
             out[name] = sorted((t1, t2, t3))[1]
             print(f"# {name}: {out[name]}s (runs {t1}/{t2}/{t3}){tag}", file=sys.stderr)

@@ -37,20 +37,18 @@ def java_lower_sql(expr: str) -> str:
 
 
 def shrink_string(s: Column) -> Column:
-    """Collapse 3+ blanks, strip thousands-commas between digits, drop
-    tabs/newlines/commas.
+    """Collapse 3+ blanks, then drop tabs/newlines and every comma
+    (thousands-commas between digits among them).
 
     Reference: `utils/Utils.scala:208-210` (``shrinkString``).
 
-    Measured note (round 5): alternatives (capture+lookahead instead
-    of the lookbehind; ``translate`` for the final char-drop) were
-    benchmarked interleaved on 300 MB of 10 KB pages and came out
-    SLOWER steady-state (1.1 s vs 0.85 s) — Java's regex engine
-    handles this lookbehind fine and three passes run at ~350 MB/s
-    on 32 cores, so shrink is not the serve path's bottleneck.
+    Two passes, not the reference's three: its middle pass deletes the
+    commas between digits (``(?<=\\d),(?=\\d)``), and the last pass
+    deletes every comma, so the middle one can change nothing and costs
+    one more regex scan of every page. `tests/test_text_functions.py`
+    pins the result to the three-pass form.
     """
     s = F.regexp_replace(s, r"[ \t]{3,}", " ")
-    s = F.regexp_replace(s, r"(?<=\d),(?=\d)", "")
     return F.regexp_replace(s, r"[\t\n\r,]", "")
 
 

@@ -16,6 +16,11 @@ at `:22-27`:
   snippet (before+candidate+after) has neither a currency symbol
   (\\p{Sc}) nor the literal word price/Price/PRICE.
 
+The scan does not iterate that pattern: it searches for the anchor
+``[.,][0-9]`` and grows the maximal ``[0-9,.]`` run around each hit,
+because a match that survives the has-separator rejection is exactly
+such a run (see ``_ANCHOR``). Bare integer runs never reach Python.
+
 Spark-first shape: positional regex over large strings is the one
 place built-ins genuinely can't express the semantics
 (``regexp_extract_all`` drops positions), so this is ONE flat
@@ -42,39 +47,16 @@ from htmlentityextraction_spark.functions.text import shrink_string
 from htmlentityextraction_spark.schemas import PRICE_CANDIDATE_SCHEMA
 
 NUM_PATTERN = re.compile(r"([0-9,.]*[0-9])(?:[^0-9,.])")
-# r5's hot-path scan: NUM_PATTERN + the "must contain . or ," rejection
-# folded into ONE pattern, so bare integer runs (the vast majority of
-# digit runs in real HTML — ids, counts, dimensions) never surface as
-# Python Match objects at all. Provably the same match set: a
-# NUM_PATTERN match's group always runs to the final digit of its
-# maximal [0-9,.] run (a group ending earlier would be followed by a
-# class char, which the trailing [^0-9,.] forbids), so
-# group-contains-separator <=> run-contains-separator — exactly what
-# the lookahead tests; and a skipped bare run consumes nothing a
-# later match could start inside (matches start on digits only).
-# Equivalence property-tested against the plain two-step reference in
-# tests/test_extraction.py.
-FAST_NUM_PATTERN = re.compile(r"((?=[0-9.,]*[.,])[0-9,.]*[0-9])(?:[^0-9,.])")
-# r7's scan (the one the hot path uses): digits* separator rest*
-# final-digit, plus one next-char check in Python, is equivalent to a
-# FAST_NUM_PATTERN match — and it keeps sre's first-charset skip loop
-# (the leading lookahead above defeats it: measured 25 MB/s/core on
-# digit-free 10 KB text vs 33 for this pattern) while still rejecting
-# BARE integer runs inside C (a plain [0-9,.]+ run-scan was 2x faster
-# still on prose but surfaced every bare id/count as a Python Match —
-# a measured regression on digit-heavy pages). Equivalence: a
-# FAST/NUM match's group always spans run-start..run-final-digit with
-# the trailing char outside the class, which forces the group to be
-# its ENTIRE maximal [0-9,.] run (any digit earlier in the run is
-# followed by a class char); greedy matching makes this pattern
-# produce exactly that run when the run ends in a digit and contains
-# a separator, and the next-char check enforces the trailing
-# [^0-9,.] (the reference's findFast quirk, `utils/PriceParcer.scala:
-# 15-37`: a number at end-of-input never matches — and a match whose
-# next char is still in-class means the run went on past its last
-# digit, which FAST/NUM reject). Property-tested against the frozen
-# two-step reference in tests/test_extraction.py.
-SEP_RUN_PATTERN = re.compile(r"[0-9,.]*[.,][0-9,.]*[0-9]")
+# The anchored scan: a NUM_PATTERN match that survives the has-separator
+# rejection is exactly a maximal [0-9,.] run that contains a separator,
+# ends in a digit and has a char after it. Such a run's last separator is
+# followed by a digit, so the run holds this anchor; conversely the run
+# around any anchor has a separator. Searching for the anchor skips bare
+# integer runs (ids, counts) inside C, and the run is then grown to its
+# maximal extent around it. Property-tested against the frozen
+# NUM_PATTERN reference in tests/test_extraction.py.
+_ANCHOR = re.compile(r"[.,][0-9]")
+_RUN_TAIL = re.compile(r"[0-9,.]*")
 _RUN_CLASS = frozenset("0123456789,.")
 # \p{Sc} in Java; the common currency symbols + the Sc block in BMP
 CURRENCY = re.compile("[$¢-¥֏؋৲৳૱௹฿"
@@ -96,26 +78,28 @@ def extract_candidates_py(html: str, snippet_size: int = SNIPPET_SIZE) -> list[d
         return []
     out = []
     n = len(html)
-    # SEP_RUN_PATTERN already enforces ends-in-digit + has-separator
-    # inside C; the next-char check reconstructs the trailing
-    # [^0-9,.] (see the pattern comment), then the remaining
-    # rejections run cheapest-first (candidate-only string scans
-    # before any snippet slicing). Locals bound once: this loop is
-    # the serve path's per-byte cost.
+    # A run is short, so it is grown backward one char at a time; the
+    # rejections run cheapest-first (candidate-only string scans before
+    # any snippet slicing). Locals bound once: this loop is the serve
+    # path's per-byte cost.
     in_class = _RUN_CLASS.__contains__
+    anchor = _ANCHOR.search
+    tail = _RUN_TAIL.match
     search = CURRENCY_OR_PRICE.search
     append = out.append
-    for m in SEP_RUN_PATTERN.finditer(html):
-        end = m.end()
-        # number at end-of-input never matches (parity quirk), and a
-        # next char still in-class means the maximal run continued
-        # past its last digit — FAST/NUM reject both
-        if end >= n or in_class(html[end]):
+    pos = 0
+    while (a := anchor(html, pos)) is not None:
+        start = a.start()
+        while start > pos and in_class(html[start - 1]):
+            start -= 1
+        end = pos = tail(html, a.end()).end()
+        # a number at end of input never matches (parity quirk), and a
+        # run ending in a separator has no final digit
+        if end >= n or html[end - 1] in ",.":
             continue
-        price = m.group()
+        price = html[start:end]
         if ",," in price or ".," in price or ",." in price or ".." in price:
             continue
-        start = m.start()
         before = html[max(start - snippet_size, 0) : start]
         after = html[end : end + snippet_size]
         if not search(before + price + after):

@@ -76,11 +76,18 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
 
 
-def timed_noop_write(spark: SparkSession, build: Callable[[], DataFrame]) -> float:
+def timed_noop_write(spark: SparkSession, name: str, build: Callable[[], DataFrame]) -> float:
     """Wall seconds, rounded to 3, to call ``build`` and write its
-    DataFrame to the noop sink. The run's scope is released after the
-    clock stops."""
-    with run_scope(spark):
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
+    DataFrame to the noop sink. Every job of the call runs in job
+    group ``name`` (the query's registry name), so the status store
+    and any event log attribute it to the query; the group is cleared
+    afterwards. The run's scope is released after the clock stops."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        with run_scope(spark):
+            t0 = time.time()
+            build().write.format("noop").mode("overwrite").save()
+            return round(time.time() - t0, 3)
+    finally:
+        sc._jsc.clearJobGroup()

@@ -38,6 +38,13 @@ _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
+    # PySpark's call-site capture: when on, every Column or function
+    # call walks the Python stack and makes extra py4j round trips, so
+    # that a DataFrame-API error can name its Python file:line. Off,
+    # building and analysing one serve micro-batch plan took 0.14 s
+    # instead of 0.24 s (local[4]); errors still name the failing
+    # expression, only without the Python file:line.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # Local master only: the Python workers fork from

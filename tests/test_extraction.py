@@ -150,12 +150,12 @@ def test_parse_price_locale_commas(spark):
     assert vals == [1234.56, 12.5, None]
 
 
-# --- scan-equivalence property: FAST_NUM_PATTERN == NUM_PATTERN + filter ---
+# --- scan-equivalence property: the anchored scan == NUM_PATTERN + filter ---
 
 def _reference_extract(html: str, snippet_size: int = 150) -> list[dict]:
     """The plain two-step reference scan (NUM_PATTERN, then the
-    has-separator rejection in Python) — frozen here so the folded
-    FAST_NUM_PATTERN hot path is pinned to it forever."""
+    has-separator rejection in Python) — frozen here so the anchored
+    scan of ``extract_candidates_py`` is pinned to it forever."""
     out = []
     for m in ex.NUM_PATTERN.finditer(html):
         price = m.group(1)
@@ -181,6 +181,9 @@ def test_fast_scan_equivalence_property(html):
 
 
 def test_fast_scan_equivalence_fixed_quirks():
+    """The anchored scan on the reference's quirks and on its own edge
+    cases: growing a run backward from an anchor, forward to its end,
+    and resuming the anchor search after it."""
     cases = [
         "1.2,x",          # run ends in separator: no match either way
         "12,abc",         # trailing separator excluded by the class
@@ -192,6 +195,11 @@ def test_fast_scan_equivalence_fixed_quirks():
         "$ 99",           # bare integer with currency: still nothing
         ".5 price",       # leading separator run
         "..,,..",         # separators only
+        "price 1.5",      # run ends at end of input: nothing
+        "..1.5 x",        # separator-only prefix inside one run
+        "1.5x2.5 price",  # two runs one char apart
+        "1.5. price",     # run ends in a separator
+        "1,5 $",          # anchor at offset 1 of the input
     ]
     for html in cases:
         assert ex.extract_candidates_py(html, 7) == _reference_extract(html, 7), html

@@ -1,7 +1,8 @@
 """The Python workers' daemon (``htmlentityextraction_spark.pydaemon``):
 the session's local workers run it, so a zip importer's
 ``invalidate_caches`` does nothing in them; they find it whatever the
-driver's cwd is; and a session on an external master does not get it."""
+driver's cwd is; and a session on an external master does not get it.
+Every session, on any master, turns PySpark's call-site capture off."""
 
 from __future__ import annotations
 
@@ -88,3 +89,22 @@ def test_only_a_local_master_gets_the_worker_settings(monkeypatch):
     assert cluster.url is None
     assert not worker_keys & cluster.conf.keys()
     assert cluster.conf.keys() == session._DEFAULTS.keys()
+
+
+def test_every_master_turns_off_call_site_capture(monkeypatch):
+    """The call-site capture setting is a session default, not a local
+    worker setting: local and external masters both get it."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert _built(monkeypatch).conf[key] == "false"
+    assert _built(monkeypatch, SPARK_MASTER="spark://cluster:7077").conf[key] == "false"
+
+
+def test_live_session_skips_call_site_capture(spark, monkeypatch):
+    """PySpark reads the setting once per process and caches it; the
+    cache is cleared so the live session's value is read again."""
+    from pyspark.errors import utils
+    from pyspark.sql import SparkSession
+
+    assert SparkSession.getActiveSession() is not None
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False

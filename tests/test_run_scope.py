@@ -144,7 +144,7 @@ def test_every_query_run_releases_what_it_made(spark, sf_dir, tmp_path, monkeypa
     left = []
     for name, fn in sorted(entry.queries().items()):
         try:
-            runner.timed_noop_write(spark, lambda: fn(spark, sf_dir))
+            runner.timed_noop_write(spark, name, lambda: fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
             left.append(f"{name}: raised {type(e).__name__}")
         now = _census(spark, str(tmp_path))
@@ -193,3 +193,32 @@ def test_sql_queries_leave_a_callers_views_alone(spark, sf_dir):
     finally:
         for name in names:
             spark.catalog.dropTempView(name)
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job the status store holds, once the listener bus
+    has delivered every event."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_timed_write_runs_in_its_query_job_group(spark):
+    """Every job of one timed write is in the job group named after the
+    query: the ones AQE submits for the shuffle, the write's and the
+    run scope's own catalog reads. The group is unset once the write
+    returns."""
+    from pyspark.sql import functions as F
+
+    def build():
+        keyed = spark.range(2000, numPartitions=4).mapInArrow(lambda it: it, "id long")
+        return keyed.groupBy((F.col("id") % 7).alias("k")).count()
+
+    tracker = spark.sparkContext.statusTracker()
+    before = _job_ids(spark)
+    runner.timed_noop_write(spark, "job_group_probe", build)
+    ran = _job_ids(spark) - before
+    assert len(ran) >= 2  # at least the shuffle map stage's job and the write's
+    assert ran == set(tracker.getJobIdsForGroup("job_group_probe"))
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from htmlentityextraction_spark.functions import text as T
@@ -21,6 +23,38 @@ def test_shrink_string(spark):
     assert _one(spark, col, "a\tb\nc,d") == "abcd"
     # two blanks are NOT collapsed (threshold is 3+)
     assert _one(spark, col, "a  b") == "a  b"
+
+
+def _three_pass_shrink(s):
+    """``shrink_string`` as the reference spells it
+    (`utils/Utils.scala:208-210`), frozen here: the middle pass the
+    engine drops must never have changed a result."""
+    s = F.regexp_replace(s, r"[ \t]{3,}", " ")
+    s = F.regexp_replace(s, r"(?<=\d),(?=\d)", "")
+    return F.regexp_replace(s, r"[\t\n\r,]", "")
+
+
+SHRINK_TEXTS = st.text(alphabet="0123456789,. \t\n\rabXY", max_size=40)
+
+
+def test_shrink_string_equals_the_three_pass_reference(spark):
+    """Every drawn string shrinks the same both ways. Hypothesis only
+    draws the strings; one Spark job checks them all."""
+    drawn = ["1,234,567", " ,\t,  ,1", "1,\n,2"]
+
+    @settings(max_examples=400, deadline=None, database=None)
+    @given(SHRINK_TEXTS)
+    def draw(s):
+        drawn.append(s)
+
+    draw()
+    rows = (
+        spark.createDataFrame([(s,) for s in drawn], "s string")
+        .select("s", T.shrink_string(F.col("s")).alias("two"), _three_pass_shrink(F.col("s")).alias("three"))
+        .collect()
+    )
+    assert len(rows) == len(drawn)
+    assert [(r.s, r.two) for r in rows if r.two != r.three] == []
 
 
 def test_text_only_and_text_num(spark):

@@ -50,7 +50,7 @@ def main() -> None:
 
     def run_once(name: str, arm: str) -> float:
         setattr(module, const, args.a if arm == "a" else args.b)
-        return timed_noop_write(spark, lambda: qs[name](spark, args.sf_dir))
+        return timed_noop_write(spark, name, lambda: qs[name](spark, args.sf_dir))
 
     # arm order: ABBA BAAB ... (balanced within every pair of rounds)
     order = []
@@ -61,7 +61,6 @@ def main() -> None:
     results: dict[str, dict[str, list[float]]] = {}
     try:
         for name in names:
-            spark.sparkContext.setJobDescription(f"ab:{name}")
             run_once(name, "a")  # warmup (arm a shape), not recorded
             run_once(name, "b")  # warmup (arm b shape), not recorded
             times: dict[str, list[float]] = {"a": [], "b": []}

@@ -59,7 +59,7 @@ def main() -> None:
         for sf in SFS:
             sf_dir = f"/root/testdata/sf{sf}"
             results[name][sf] = min(
-                timed_noop_write(spark, lambda: qs[name](spark, sf_dir)) for _ in range(args.reps)
+                timed_noop_write(spark, name, lambda: qs[name](spark, sf_dir)) for _ in range(args.reps)
             )
             print(f"# {name} sf{sf}: {results[name][sf]}s", file=sys.stderr)
 

@@ -57,7 +57,7 @@ def main() -> None:
                 serve.serve_stream(spark, raw, registry, out).await_done()
                 t3 = time.time()
                 readback = timed_noop_write(
-                    spark, lambda: spark.read.parquet(os.path.join(out, "historical"))
+                    spark, "stream_serve_pipeline", lambda: spark.read.parquet(os.path.join(out, "historical"))
                 )
             rec = {
                 "run": i + 1,

@@ -47,7 +47,7 @@ def main() -> None:
     warm_up(spark, sf_dir)
 
     def run_once(name: str) -> float:
-        return timed_noop_write(spark, lambda: qs[name](spark, sf_dir))
+        return timed_noop_write(spark, name, lambda: qs[name](spark, sf_dir))
 
     out = []
 
